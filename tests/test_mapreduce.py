@@ -1,106 +1,96 @@
-"""Layer A golden-output parity tests against the reference's own test
-corpus and correct/ files (mirrors tests/test_integration_0{0,1,2}.py
-in /root/reference)."""
+"""Layer A: ``run_job`` against an independent model.
+
+Every job runs the self-authored executables and corpus in
+``tests/fixtures/mapreduce`` and must publish part files byte-identical
+to ``tests/mr_model.py`` (md5 bucket, byte-order whole-line sort,
+reduce). The reference's own goldens are compared as an extra check
+when its test data is present.
+"""
 
 import filecmp
-import glob
 import os
+import random
+import shutil
+import textwrap
+
+import pytest
 
 from engine.mapreduce import run_job
+from tests import mr_model
 from tests.conftest import REFDATA
 
-EXEC = f"{REFDATA}/exec"
-INPUT = f"{REFDATA}/input"
-CORRECT = f"{REFDATA}/correct"
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "mapreduce")
+EXEC = os.path.join(FIXTURES, "exec")
+INPUT = os.path.join(FIXTURES, "input")
+WC_MAP = f"{EXEC}/wc_map.sh"
+WC_REDUCE = f"{EXEC}/wc_reduce.py"
+GREP_MAP = f"{EXEC}/grep_map.py"
+GREP_REDUCE = f"{EXEC}/grep_reduce.py"
 
 
-def _read_sorted(path: str) -> list[str]:
-    with open(path, encoding="utf-8") as f:
-        return sorted(f.readlines())
-
-
-def test_wordcount_golden(spark, tmp_path):
-    """Reference test_integration_01: wc job, 2 mappers / 1 reducer,
-    sorted-line equality with word_count_correct.txt."""
-    out = str(tmp_path / "out")
-    parts = run_job(
-        spark, INPUT, out,
-        mapper=f"{EXEC}/wc_map.sh", reducer=f"{EXEC}/wc_reduce.sh",
-        num_mappers=2, num_reducers=1,
+def _assert_matches_model(parts, input_dir, map_fn, reduce_fn, n_reducers):
+    assert [os.path.basename(p) for p in parts] == mr_model.part_names(n_reducers)
+    want = mr_model.expected_parts(
+        mr_model.read_input_dir(input_dir), map_fn, reduce_fn, n_reducers
     )
-    assert [os.path.basename(p) for p in parts] == ["part-00000"]
-    assert _read_sorted(parts[0]) == _read_sorted(f"{CORRECT}/word_count_correct.txt")
+    assert mr_model.read_parts(parts) == want
 
 
-def test_wordcount_two_reducers(spark, tmp_path):
-    """Reference test_integration_02: 4 mappers / 2 reducers — exactly
-    two part files whose merged sorted content matches the golden."""
-    out = str(tmp_path / "out")
-    parts = run_job(
-        spark, INPUT, out,
-        mapper=f"{EXEC}/wc_map.sh", reducer=f"{EXEC}/wc_reduce.sh",
-        num_mappers=4, num_reducers=2,
-    )
-    assert [os.path.basename(p) for p in parts] == ["part-00000", "part-00001"]
-    assert len(list(os.listdir(out))) == 2
-    merged = sorted(
-        line for p in parts for line in open(p, encoding="utf-8").readlines()
-    )
-    assert merged == _read_sorted(f"{CORRECT}/word_count_correct.txt")
+def _script(path, body):
+    path.write_text(textwrap.dedent(body))
+    path.chmod(0o755)
+    return str(path)
 
 
-def test_grep_golden(spark, tmp_path):
-    """Reference test_integration_00: grep job, exact filecmp — also
-    pins the whole-line sort order inside a partition."""
-    out = str(tmp_path / "out")
-    parts = run_job(
-        spark, INPUT, out,
-        mapper=f"{EXEC}/grep_map.py", reducer=f"{EXEC}/grep_reduce.py",
-        num_mappers=2, num_reducers=1,
-    )
-    assert filecmp.cmp(f"{CORRECT}/grep_correct.txt", parts[0], shallow=False)
-
-
-def test_grep_query_argv(spark, tmp_path):
-    """grep_map.py takes the query via argv (grep_map.py:14-17)."""
-    out = str(tmp_path / "out")
-    parts = run_job(
-        spark, INPUT, out,
-        mapper=[f"{EXEC}/grep_map.py", "hadoop"], reducer=f"{EXEC}/grep_reduce.py",
-        num_mappers=2, num_reducers=1,
-    )
-    lines = open(parts[0], encoding="utf-8").read().splitlines()
-    assert lines, "expected at least one matching line for 'hadoop'"
-    assert all("hadoop" in line.lower() for line in lines)
-
-
-def test_native_mode_wordcount(spark, tmp_path):
-    """Native mode: mapper/reducer as Python callables with the same
-    line-contract — W2/W4 semantics (wc_map.py / wc_reduce.py)."""
+def _native_wordcount():
+    """Python-callable twins of wc_map.sh / wc_reduce.py. Nested, so
+    cloudpickle ships them by value to the Python workers."""
     import itertools
+    import re
 
     def mapper(lines):
+        lower = str.maketrans("ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz")
         for line in lines:
-            for word in line.split():
-                yield f"{word}\t1"
+            for tok in re.split("[ \t]", line):
+                yield tok.translate(lower) + "\t1"
 
     def reducer(lines):
         parsed = (line.partition("\t") for line in lines)
-        for word, group in itertools.groupby(parsed, key=lambda t: t[0]):
-            yield f"{word} {sum(int(v) for _, _, v in group)}"
+        for key, group in itertools.groupby(parsed, key=lambda t: t[0]):
+            yield f"{key}\t{sum(int(v) for _, _, v in group)}"
 
-    out = str(tmp_path / "out")
+    return mapper, reducer
+
+
+@pytest.mark.parametrize("n_reducers", [1, 3, 4, 7])
+@pytest.mark.parametrize("mode", ["exec", "native", "native_map", "native_reduce"])
+def test_wordcount_matches_model(spark, tmp_path, mode, n_reducers):
+    """Executable, callable and mixed jobs all go through the same
+    shuffle: bucket b is part-0000b, sorted by the whole line's bytes."""
+    native_map, native_reduce = _native_wordcount()
+    mapper = native_map if mode in ("native", "native_map") else WC_MAP
+    reducer = native_reduce if mode in ("native", "native_reduce") else WC_REDUCE
     parts = run_job(
-        spark, INPUT, out, mapper=mapper, reducer=reducer,
-        num_mappers=2, num_reducers=2,
+        spark, INPUT, str(tmp_path / "out"), mapper, reducer,
+        num_mappers=3, num_reducers=n_reducers,
     )
-    counts = {}
-    for p in parts:
-        for line in open(p, encoding="utf-8"):
-            w, _, c = line.rstrip("\n").rpartition(" ")
-            counts[w] = counts.get(w, 0) + int(c)
-    assert counts["Hello"] == 2  # file01 + file02, case preserved in W2
-    assert counts["Hadoop"] == 2
+    _assert_matches_model(parts, INPUT, mr_model.wc_map, mr_model.wc_reduce, n_reducers)
+
+
+@pytest.mark.parametrize("n_reducers", [1, 2])
+def test_grep_matches_model(spark, tmp_path, n_reducers):
+    """The grep mapper takes its query from argv; the reducer keeps every
+    matched line, so the part files pin the whole-line sort order (the
+    three matches are not in byte order in the input)."""
+    parts = run_job(
+        spark, INPUT, str(tmp_path / "out"),
+        mapper=[GREP_MAP, "the"], reducer=GREP_REDUCE,
+        num_mappers=2, num_reducers=n_reducers,
+    )
+    _assert_matches_model(
+        parts, INPUT, mr_model.grep_map("the"), mr_model.grep_reduce, n_reducers
+    )
+    assert b"".join(mr_model.read_parts(parts)).count(b"\n") == 3
 
 
 def test_empty_key_partitioning(spark, tmp_path):
@@ -110,47 +100,110 @@ def test_empty_key_partitioning(spark, tmp_path):
     inp.mkdir()
     (inp / "f1").write_text("  leading spaces\nA  B\n", encoding="utf-8")
 
-    out = str(tmp_path / "out")
     parts = run_job(
-        spark, str(inp), out,
-        mapper=f"{REFDATA}/exec/wc_map.sh", reducer=f"{REFDATA}/exec/wc_reduce.sh",
+        spark, str(inp), str(tmp_path / "out"), mapper=WC_MAP, reducer=WC_REDUCE,
         num_mappers=1, num_reducers=1,
     )
-    text = open(parts[0], encoding="utf-8").read()
     # tokens: '', '', 'leading', 'spaces', 'a', '', 'b' → empty key ×3
-    assert "\t3\n" in text
+    assert mr_model.read_parts(parts) == [b"\t3\na\t1\nb\t1\nleading\t1\nspaces\t1\n"]
+    _assert_matches_model(parts, str(inp), mr_model.wc_map, mr_model.wc_reduce, 1)
 
 
-def test_cli_submit_wordcount_golden(spark, tmp_path):
+def test_more_reducers_than_keys(spark, tmp_path):
+    """Every one of the R part files is published; buckets no key hashed
+    to are empty files, also when the mappers emit nothing at all."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "f1").write_text("b a\nc\n", encoding="utf-8")
+    parts = run_job(
+        spark, str(inp), str(tmp_path / "out"), mapper=WC_MAP, reducer=WC_REDUCE,
+        num_mappers=2, num_reducers=9,
+    )
+    got = mr_model.read_parts(parts)
+    assert got.count(b"") >= 6
+    _assert_matches_model(parts, str(inp), mr_model.wc_map, mr_model.wc_reduce, 9)
+
+    parts = run_job(
+        spark, str(inp), str(tmp_path / "out_empty"),
+        mapper=["sh", "-c", "cat >/dev/null"], reducer=WC_REDUCE,
+        num_mappers=2, num_reducers=3,
+    )
+    assert [os.path.basename(p) for p in parts] == mr_model.part_names(3)
+    assert mr_model.read_parts(parts) == [b"", b"", b""]
+
+
+def test_invalid_utf8_input_reads_as_replacement_char(spark, tmp_path):
+    """Input bytes that are not UTF-8 reach the mapper as U+FFFD."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "f1").write_bytes(b"ok\xffok\nplain\n")
+    parts = run_job(
+        spark, str(inp), str(tmp_path / "out"), mapper="cat", reducer="cat",
+        num_mappers=1, num_reducers=1,
+    )
+    assert mr_model.read_parts(parts) == ["ok�ok\nplain\n".encode("utf-8")]
+    _assert_matches_model(parts, str(inp), lambda line: [line], lambda lines: lines, 1)
+
+
+def test_executable_output_line_endings(spark, tmp_path):
+    """Executable output is read line by line like the input: a lone
+    '\\r' or a '\\r\\n' ends a record, on the map and the reduce side."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "f1").write_text("x\n", encoding="utf-8")
+    cr_map = _script(tmp_path / "cr_map.sh", """\
+        #!/bin/sh
+        cat >/dev/null
+        printf 'a\\rb\\t1\\nc\\r\\n'
+        """)
+    parts = run_job(
+        spark, str(inp), str(tmp_path / "map_side"), mapper=cr_map, reducer="cat",
+        num_mappers=1, num_reducers=1,
+    )
+    assert mr_model.read_parts(parts) == [b"a\nb\t1\nc\n"]
+
+    cr_reduce = _script(tmp_path / "cr_reduce.sh", """\
+        #!/bin/sh
+        cat >/dev/null
+        printf 'x\\ry\\r\\nz\\n'
+        """)
+    parts = run_job(
+        spark, str(inp), str(tmp_path / "reduce_side"), mapper="cat",
+        reducer=cr_reduce, num_mappers=1, num_reducers=1,
+    )
+    assert mr_model.read_parts(parts) == [b"x\ny\nz\n"]
+
+
+def test_executable_path_and_argv_with_spaces(spark, tmp_path, monkeypatch):
+    """The argv reaches the executable unsplit, and a relative path is
+    resolved against the caller's working directory."""
+    exec_dir = tmp_path / "exec dir"
+    exec_dir.mkdir()
+    shutil.copy(GREP_MAP, exec_dir / "grep map.py")
+    monkeypatch.chdir(tmp_path)
+    parts = run_job(
+        spark, INPUT, str(tmp_path / "out"),
+        mapper=["exec dir/grep map.py", "hello world"], reducer=GREP_REDUCE,
+        num_mappers=2, num_reducers=2,
+    )
+    _assert_matches_model(
+        parts, INPUT, mr_model.grep_map("hello world"), mr_model.grep_reduce, 2
+    )
+    assert b"".join(mr_model.read_parts(parts)) == b"Hello World Bye World\n"
+
+
+def test_cli_submit_wordcount_matches_model(spark, tmp_path):
     """`python -m engine submit` (the mapreduce-submit parity surface,
-    reference submit.py:37-58) reproduces the wordcount golden output."""
+    reference submit.py:37-58) publishes the model's part files."""
     from engine.__main__ import main
 
     out = str(tmp_path / "wc_cli")
     rc = main(
-        [
-            "submit",
-            "-i", f"{REFDATA}/input",
-            "-o", out,
-            "-m", f"{REFDATA}/exec/wc_map.sh",
-            "-r", f"{REFDATA}/exec/wc_reduce.sh",
-            "--nreducers", "1",
-        ]
+        ["submit", "-i", INPUT, "-o", out, "-m", WC_MAP, "-r", WC_REDUCE, "--nreducers", "3"]
     )
     assert rc == 0
-    got = sorted(
-        line
-        for p in sorted(glob.glob(f"{out}/part-*"))
-        for line in open(p, encoding="utf-8").read().splitlines()
-    )
-    want = sorted(
-        open(
-            f"{REFDATA}/correct/word_count_correct.txt", encoding="utf-8"
-        )
-        .read()
-        .splitlines()
-    )
-    assert got == want
+    parts = [os.path.join(out, n) for n in sorted(os.listdir(out))]
+    _assert_matches_model(parts, INPUT, mr_model.wc_map, mr_model.wc_reduce, 3)
 
 
 def test_cli_list_and_query(capsys):
@@ -167,180 +220,131 @@ def test_chained_two_round_jobs(spark, tmp_path):
     greps the corpus, round 2 wordcounts the grep output by feeding
     round 1's output directory as round 2's input directory — the
     reference supports the same chaining through its job queue
-    (output dirs are valid input dirs). Expected counts computed
-    directly from the round-1 output lines."""
-    from collections import Counter
-
+    (output dirs are valid input dirs)."""
     out1 = str(tmp_path / "round1")
     parts1 = run_job(
-        spark, INPUT, out1,
-        mapper=f"{EXEC}/grep_map.py", reducer=f"{EXEC}/grep_reduce.py",
+        spark, INPUT, out1, mapper=[GREP_MAP, "the"], reducer=GREP_REDUCE,
         num_mappers=2, num_reducers=2,
     )
-    assert parts1
-
-    out2 = str(tmp_path / "round2")
+    _assert_matches_model(
+        parts1, INPUT, mr_model.grep_map("the"), mr_model.grep_reduce, 2
+    )
     parts2 = run_job(
-        spark, out1, out2,
-        mapper=f"{EXEC}/wc_map.sh", reducer=f"{EXEC}/wc_reduce.sh",
+        spark, out1, str(tmp_path / "round2"), mapper=WC_MAP, reducer=WC_REDUCE,
         num_mappers=2, num_reducers=2,
     )
-
-    # Expected: wc_map.sh semantics (lowercase, split on [ \t], keep
-    # empty tokens) over every line of round 1's output.
-    expected = Counter()
-    for p in parts1:
-        with open(p, encoding="utf-8") as f:
-            for line in f:
-                import re as _re
-
-                for tok in _re.split(r"[ \t]", line.rstrip("\n").lower()):
-                    expected[tok] += 1
-    got = Counter()
-    for p in parts2:
-        with open(p, encoding="utf-8") as f:
-            for line in f:
-                tok, _, cnt = line.rstrip("\n").rpartition("\t")
-                got[tok] += int(cnt)
-    assert got == expected
+    _assert_matches_model(parts2, out1, mr_model.wc_map, mr_model.wc_reduce, 2)
 
 
-def test_exec_command_quotes_spaces(tmp_path):
-    """Executable paths containing spaces must survive RDD.pipe's
-    shlex.split tokenization (round-1 advice)."""
-    import shlex
-
+def test_exec_command_quotes_spaces(tmp_path, monkeypatch):
+    """The JVM pipe takes an argv list and does no shell tokenizing:
+    paths and arguments with spaces stay single entries, a relative
+    path becomes absolute, and a script without the executable bit runs
+    through its shebang interpreter."""
     from engine.mapreduce.runner import _exec_command
 
     script = tmp_path / "my mapper.sh"
     script.write_text("#!/bin/sh\ncat\n")
     cmd = _exec_command([str(script), "arg with space"])
-    assert shlex.split(cmd)[-2:] == [str(script), "arg with space"]
+    assert cmd == ["/bin/sh", str(script), "arg with space"]
+
+    monkeypatch.chdir(tmp_path)
+    assert _exec_command("./my mapper.sh") == ["/bin/sh", str(script)]
+    assert _exec_command(["cat", "-u"]) == ["cat", "-u"]
 
 
 def test_run_job_rejects_comma_paths(spark, tmp_path):
     """Comma-bearing input filenames would silently split sc.textFile's
     comma-joined path list; run_job refuses them loudly."""
-    import pytest
-
     d = tmp_path / "in"
     d.mkdir()
     (d / "a,b.txt").write_text("hello\n")
     with pytest.raises(ValueError, match="comma"):
-        run_job(
-            spark, str(d), str(tmp_path / "out"),
-            mapper=f"{EXEC}/wc_map.sh", reducer=f"{EXEC}/wc_reduce.sh",
-        )
+        run_job(spark, str(d), str(tmp_path / "out"), mapper=WC_MAP, reducer=WC_REDUCE)
+
+
+def _assert_job_fails(spark, tmp_path, mapper, reducer):
+    ind = tmp_path / "in"
+    ind.mkdir()
+    (ind / "f0.txt").write_text("hello world\n")
+    out = tmp_path / "out"
+    with pytest.raises(Exception, match="exited with status 3"):
+        run_job(spark, str(ind), str(out), mapper, reducer, num_mappers=1, num_reducers=2)
+    assert not [n for n in os.listdir(out) if n.startswith("part-")]
 
 
 def test_crashing_executable_fails_the_job(spark, tmp_path):
     """A mapper that exits non-zero after emitting lines must FAIL the
-    job (reference Hadoop-Streaming semantics) — without checkCode the
-    partial output would publish as success."""
-    import textwrap
-
-    import pytest
-
-    from engine.mapreduce.runner import run_job
-
-    ind = tmp_path / "in"
-    ind.mkdir()
-    (ind / "f0.txt").write_text("hello world\n")
-    bad = tmp_path / "bad_map.sh"
-    bad.write_text(
-        textwrap.dedent(
-            """\
-            #!/bin/sh
-            cat
-            exit 3
-            """
-        )
-    )
-    bad.chmod(0o755)
-    with pytest.raises(Exception, match="3|Pipe|pipe"):
-        run_job(
-            spark,
-            str(ind),
-            str(tmp_path / "out"),
-            str(bad),
-            str(bad),
-            num_mappers=1,
-            num_reducers=1,
-        )
+    job (reference Hadoop-Streaming semantics) and publish no part
+    file, rather than publish its partial output as success."""
+    bad = _script(tmp_path / "bad_map.sh", """\
+        #!/bin/sh
+        cat
+        exit 3
+        """)
+    _assert_job_fails(spark, tmp_path, bad, "cat")
 
 
-def test_wordcount_large_corpus_golden(spark, tmp_path):
-    """Large-corpus parity over the reference's input_large fixtures
-    (the corpus its memory-profile tests test_worker_07/11 stream):
+def test_crashing_reducer_fails_the_job(spark, tmp_path):
+    """The same holds for a reducer that exits non-zero."""
+    bad = _script(tmp_path / "bad_reduce.sh", """\
+        #!/bin/sh
+        cat
+        exit 3
+        """)
+    _assert_job_fails(spark, tmp_path, "cat", bad)
 
-    (a) our map stage over input_large reproduces the reference's
-        checked-in input_large_intermediate (multiset of
-        '<token>\\t1' lines at ~700k tokens, where the 36 KB `input`
-        goldens could hide corpus-scale edge cases). Non-empty tokens
-        only: every input_large file ends with a trailing space and
-        NO final newline, and a raw byte stream (how the intermediate
-        was generated) yields no empty record there while a
-        line-record pipe does — the in-line empty-token contract is
-        already pinned exactly by test_empty_key_partitioning;
-    (b) the full executable wordcount pipeline's per-token counts
-        equal an independent pure-Python recount implementing
-        wc_map.sh's exact semantics (tr space/tab→newline, lowercase,
-        empty tokens kept)."""
-    import glob
 
-    large = f"{REFDATA}/input_large"
-    inter = f"{REFDATA}/input_large_intermediate"
-
-    # (a) map-only: a case-preserving tr-tokenizer (the mapper the
-    # intermediate was generated with — wc_map.sh minus the lowercase
-    # stage), identity reduce, one partition.
-    raw_map = tmp_path / "raw_map.sh"
-    raw_map.write_text(
-        "#!/bin/bash\nset -Eeuo pipefail\n"
-        "cat | tr '[ \\t]' '\\n' | awk '{print $1\"\\t1\"}'\n"
-    )
-    raw_map.chmod(0o755)
-    out_map = str(tmp_path / "map_only")
+def test_wordcount_large_corpus_model(spark, tmp_path):
+    """A seeded corpus of about 200k tokens in 6 files (mixed case,
+    tabs, runs of separators, non-ASCII words): the executable wordcount
+    publishes the model's part files byte for byte."""
+    rng = random.Random(20261017)
+    vocab = [
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(1, 9)))
+        for _ in range(3000)
+    ] + ["Straße", "café", "日本", "naïve", "ÆON", "10", "010", "1.0"]
+    inp = tmp_path / "in"
+    inp.mkdir()
+    for i in range(6):
+        lines = []
+        for _ in range(3000):
+            toks = [rng.choice(vocab) for _ in range(rng.randint(0, 20))]
+            toks = [t.upper() if rng.random() < 0.1 else t for t in toks]
+            lines.append("".join(rng.choice(["", " ", "\t", "  "]) + t for t in toks))
+        (inp / f"file{i:02d}").write_text("\n".join(lines) + "\n", encoding="utf-8")
     parts = run_job(
-        spark, large, out_map,
-        mapper=str(raw_map), reducer="/bin/cat",
-        num_mappers=4, num_reducers=1,
+        spark, str(inp), str(tmp_path / "out"), mapper=WC_MAP, reducer=WC_REDUCE,
+        num_mappers=4, num_reducers=3,
     )
-    got_lines = sorted(
-        line
-        for p in parts
-        for line in open(p, encoding="utf-8").read().splitlines()
-        if not line.startswith("\t")
-    )
-    want_lines = sorted(
-        line
-        for p in sorted(glob.glob(f"{inter}/file0*"))
-        for line in open(p, encoding="utf-8").read().splitlines()
-        if not line.startswith("\t")
-    )
-    assert got_lines == want_lines
+    _assert_matches_model(parts, str(inp), mr_model.wc_map, mr_model.wc_reduce, 3)
+    total = sum(int(line.rpartition(b"\t")[2]) for part in mr_model.read_parts(parts)
+                for line in part.splitlines())
+    assert total > 150_000
 
-    # (b) full pipeline vs independent recount
-    out_wc = str(tmp_path / "wc")
+
+@pytest.mark.skipif(not os.path.isdir(REFDATA), reason="reference test data absent")
+def test_reference_goldens(spark, tmp_path):
+    """The reference's integration goldens (test_integration_0{0,1,2}):
+    wordcount with 1 and 2 reducers (sorted-line equality) and grep
+    (exact file equality)."""
+    ref_exec, ref_input = f"{REFDATA}/exec", f"{REFDATA}/input"
+    with open(f"{REFDATA}/correct/word_count_correct.txt", encoding="utf-8") as f:
+        want_wc = sorted(f.read().splitlines())
+    for n_reducers in (1, 2):
+        parts = run_job(
+            spark, ref_input, str(tmp_path / f"wc{n_reducers}"),
+            mapper=f"{ref_exec}/wc_map.sh", reducer=f"{ref_exec}/wc_reduce.sh",
+            num_mappers=2 * n_reducers, num_reducers=n_reducers,
+        )
+        got = sorted(
+            line for part in mr_model.read_parts(parts)
+            for line in part.decode("utf-8").splitlines()
+        )
+        assert got == want_wc
     parts = run_job(
-        spark, large, out_wc,
-        mapper=f"{REFDATA}/exec/wc_map.sh",
-        reducer=f"{REFDATA}/exec/wc_reduce.sh",
-        num_mappers=4, num_reducers=2,
+        spark, ref_input, str(tmp_path / "grep"),
+        mapper=f"{ref_exec}/grep_map.py", reducer=f"{ref_exec}/grep_reduce.py",
+        num_mappers=2, num_reducers=1,
     )
-    got = {}
-    for p in parts:
-        for line in open(p, encoding="utf-8").read().splitlines():
-            tok, _, c = line.rpartition("\t")
-            got[tok] = got.get(tok, 0) + int(c)
-
-    import re
-
-    want = {}
-    for p in sorted(glob.glob(f"{large}/file0*")):
-        for line in open(p, encoding="utf-8").read().splitlines():
-            for piece in re.split(r"[ \t]", line):
-                tok = piece.lower()
-                want[tok] = want.get(tok, 0) + 1
-    assert got == want
-    assert sum(want.values()) > 50_000  # the corpus is actually large
+    assert filecmp.cmp(f"{REFDATA}/correct/grep_correct.txt", parts[0], shallow=False)
