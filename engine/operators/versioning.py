@@ -1230,7 +1230,7 @@ def streaming_refresh_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- z-ordered compaction (round 8) -------------------------------------------
 #
 # The store's OPTIMIZE ZORDER: churny upserts leave touched partitions
-# fragmented into task-count files in arrival order — exactly the
+# fragmented into one file per commit in arrival order — exactly the
 # layout whose footers prune nothing. `compact_version(zorder_cols=…)`
 # rewrites the CURRENT snapshot clustered on a Morton curve over the
 # named columns (engine/versioned_store.py docstring for the

@@ -104,6 +104,27 @@ _MANIFESTS = "_manifests"
 _DATA = "data"
 
 
+def _local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A driver-built frame (``rows`` of tuples in ``ddl`` column
+    order) that never runs Python workers. ``createDataFrame`` on a
+    list goes through ``parallelize`` in classic PySpark (a
+    ``LogicalRDD`` whose every scan is a Python-worker job); an Arrow
+    table becomes a ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold`` and a
+    JVM-side RDD above it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = spark._parse_ddl(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def _mdir(store: str) -> str:
     return os.path.join(store, _MANIFESTS)
 
@@ -728,7 +749,14 @@ def _stage_files(
     real table format's commit protocol does to populate its log.
     With a ``column_map`` the frame arrives under LOGICAL names and is
     staged under the frozen PHYSICAL ones (stats keys included), so
-    renamed tables keep one on-disk name space."""
+    renamed tables keep one on-disk name space.
+
+    The layout is the caller's: every write task opens one file per
+    partition value it holds. ``commit_upsert`` hands in a
+    ``rebalance``-hinted frame, so it writes one file per touched
+    partition, split at AQE's ``advisoryPartitionSizeInBytes``;
+    ``commit_merge``, ``commit_delete``, ``commit_overwrite`` and the
+    compactions (which cluster explicitly) keep their own layout."""
     df = _apply_column_map(df, column_map, dropped)
     pcols = _norm_pcols(partition_col)
     os.makedirs(os.path.join(store, _DATA), exist_ok=True)
@@ -1241,13 +1269,13 @@ def _plan_file_rewrite(
     prev: dict,
     store: str,
     prev_v: int,
-) -> tuple[set, list[dict], list[dict], list | None]:
+) -> tuple[set, list[dict], list[dict], DataFrame]:
     """Decide which of the head's files a keyed commit must rewrite:
     returns (touched partitions, entries to rewrite, entries in
-    touched partitions carried forward verbatim, and — when the exact
-    tier ran — the collected distinct key rows, so the caller's
-    anti-join can broadcast them as a LOCAL relation instead of
-    recomputing the changeset a second time for its distinct()).
+    touched partitions carried forward verbatim, and the distinct keys
+    for the caller's anti-join: a ``LocalRelation`` when the exact tier
+    ran, so the changeset — which may itself be an expensive query — is
+    not recomputed a second time for its distinct()).
 
     Two tiers, both O(metadata) on the driver, no table scan:
 
@@ -1271,16 +1299,24 @@ def _plan_file_rewrite(
     falls back to stats alone."""
     vcols = [c for c in key_cols if c not in pcols]
     cmap = prev.get("column_map") or {}
+    keys = keys_df.select(*key_cols)
+    key_frame = keys.distinct()
     key_rows = None
     if vcols:
-        key_rows = (
-            keys_df.select(*key_cols)
-            .distinct()
-            .limit(_REWRITE_KEY_CAP + 1)
-            .collect()
-        )
-        if len(key_rows) > _REWRITE_KEY_CAP:
-            key_rows = None  # too many keys: range-fallback tier
+        # the distinct keys stay in the JVM: collectAsList runs the one
+        # job, and wrapping the Java rows is a LocalRelation, so the
+        # Python rows below come from a job-free collect and the
+        # anti-join side never round-trips a timestamp, decimal or date
+        # value through Python
+        spark = keys_df.sparkSession
+        jrows = key_frame.limit(_REWRITE_KEY_CAP + 1)._jdf.collectAsList()
+        if jrows.size() <= _REWRITE_KEY_CAP:
+            key_frame = DataFrame(
+                spark._jsparkSession.createDataFrame(jrows, keys._jdf.schema()),
+                spark,
+            )
+            key_rows = key_frame.collect()
+        # else too many keys: range-fallback tier
     ranges: dict[tuple, dict] | None = None
     if key_rows is not None:
         touched = {tuple(str(r[c]) for c in pcols) for r in key_rows}
@@ -1311,7 +1347,7 @@ def _plan_file_rewrite(
     if not vcols:
         # key == partition columns: every row of a touched partition
         # matches by definition — whole-partition rewrite is exact
-        return touched, old_touched, [], key_rows
+        return touched, old_touched, [], key_frame
     rewrite: list[dict] = []
     carried: list[dict] = []
     if key_rows is not None:
@@ -1356,7 +1392,7 @@ def _plan_file_rewrite(
                     admit = True
                     break
             (rewrite if admit else carried).append(e)
-        return touched, rewrite, carried, key_rows
+        return touched, rewrite, carried, key_frame
     for e in old_touched:
         rng = ranges.get(_norm_pval(e["partition"]))
         stats = e.get("stats") or {}
@@ -1372,7 +1408,7 @@ def _plan_file_rewrite(
             except TypeError:
                 continue
         (rewrite if admit else carried).append(e)
-    return touched, rewrite, carried, None
+    return touched, rewrite, carried, key_frame
 
 
 def commit_upsert(
@@ -1390,7 +1426,12 @@ def commit_upsert(
     into NEW files; every other entry — untouched partitions AND
     provably key-free files inside touched ones — carries over
     verbatim. The previous version keeps reading its own (immutable)
-    files.
+    files. The rewrite is staged with a ``rebalance`` hint on the
+    partition columns (Spark's optimized write): each touched
+    partition gets one new file, or several of about AQE's
+    ``advisoryPartitionSizeInBytes`` when it is larger, never one per
+    write task. The price is a shuffle of the rewritten rows, and a
+    touched partition below the advisory size is written by one task.
 
     ``key_cols`` MUST include the partition column: the touched set is
     computed from the changeset's partition values, so a key whose
@@ -1430,7 +1471,7 @@ def commit_upsert(
     # file-granular planning (round 11): only files whose stats/bloom
     # ADMIT a changed key are rewritten; the rest of the touched
     # partitions carry forward like untouched partitions
-    touched, to_rewrite, _, key_rows = _plan_file_rewrite(
+    touched, to_rewrite, _, key_frame = _plan_file_rewrite(
         changeset, key_cols, pcols, prev, store, prev_v
     )
     version = prev_v + 1
@@ -1443,18 +1484,8 @@ def commit_upsert(
             spark, store, to_rewrite, prev["partition_col"],
             prev.get("columns"), prev.get("column_map"),
         )
-        # the planner already collected the distinct keys (exact
-        # tier): broadcast them as a local relation instead of
-        # recomputing the changeset — which may itself be an expensive
-        # query — a second time just for its distinct()
-        if key_rows is not None:
-            anti_keys = spark.createDataFrame(
-                key_rows, changeset.select(*key_cols).schema
-            )
-        else:
-            anti_keys = changeset.select(*key_cols).distinct()
         survivors = base.join(
-            F.broadcast(anti_keys), key_cols, "left_anti"
+            F.broadcast(key_frame), key_cols, "left_anti"
         )
         # allowMissingColumns = additive schema evolution: a changeset
         # introducing a new column null-fills the survivors (and a
@@ -1465,8 +1496,8 @@ def commit_upsert(
     # type change raises here with zero orphan files written
     columns = _merge_ddl(prev.get("columns"), _columns_ddl(merged, pcols))
     new_entries = _stage_files(
-        merged, store, version, pcols, prev.get("column_map"),
-        prev.get("dropped_physical"),
+        merged.hint("rebalance", *pcols), store, version, pcols,
+        prev.get("column_map"), prev.get("dropped_physical"),
     )
     return _publish_incremental(
         spark,
@@ -1701,11 +1732,9 @@ def _load_entries(
             else ddl
         )
         paths = [os.path.join(store, _DATA, e["file"]) for e in entries]
-        fmap = spark.createDataFrame(
-            [
-                (e["file"], *_norm_pval(e["partition"]))
-                for e in entries
-            ],
+        fmap = _local_frame(
+            spark,
+            [(e["file"], *_norm_pval(e["partition"])) for e in entries],
             "__vs_file string, "
             + ", ".join(f"{c} string" for c in pcols),
         )
@@ -1742,8 +1771,8 @@ def _load_entries(
             F.element_at(F.split(F.input_file_name(), "/"), -1),
         ).join(F.broadcast(fmap), "__vs_file")
         if dv_pairs:
-            dvdf = spark.createDataFrame(
-                dv_pairs, "__vs_file string, __vs_pos bigint"
+            dvdf = _local_frame(
+                spark, dv_pairs, "__vs_file string, __vs_pos bigint"
             )
             out = out.join(
                 F.broadcast(dvdf), ["__vs_file", "__vs_pos"], "left_anti"
@@ -2368,7 +2397,7 @@ def read_version(
         if ddl is not None:
             pddl = ", ".join(f"{c} string" for c in pcols)
             full = f"{ddl}, {pddl}" if ddl else pddl
-            return spark.createDataFrame([], full)
+            return _local_frame(spark, [], full)
         raise ValueError(
             f"version {version} is an empty snapshot with no recorded"
             " schema (manifest predates schema recording)"
@@ -2795,10 +2824,10 @@ def version_diff(
         mb.get("column_map"),
     )
     if a_df is None and b_df is None:
-        d = spark.createDataFrame([], schema)
+        d = _local_frame(spark, [], schema)
     else:
-        empty = spark.createDataFrame(
-            [], f"{pcol} string, doc_id long, n_tokens long, h long"
+        empty = _local_frame(
+            spark, [], f"{pcol} string, doc_id long, n_tokens long, h long"
         )
         cols = ["source", "doc_id", "n_tokens", "h"]
         a_df = (a_df if a_df is not None else empty).withColumnRenamed(
@@ -2818,8 +2847,8 @@ def version_diff(
             )
     if not shared_counts:
         return d
-    sc = spark.createDataFrame(
-        sorted(shared_counts.items()), "source string, n_shared bigint"
+    sc = _local_frame(
+        spark, sorted(shared_counts.items()), "source string, n_shared bigint"
     )
     zero = F.lit(0).cast("bigint")
     return (
@@ -2941,8 +2970,8 @@ def table_changes(
         pddl = ", ".join(
             f"{c} string" for c in _norm_pcols(pcol)
         )
-        return spark.createDataFrame(
-            [], f"{ddl}, {pddl}, _change_type string"
+        return _local_frame(
+            spark, [], f"{ddl}, {pddl}, _change_type string"
         )
     if a_df is None or b_df is None:
         # One-sided window (round 12, guide §2.4 — remove the shuffle
@@ -3241,7 +3270,8 @@ def optimize_auto(
         if max(per_k.values()) <= 1:
             compacted = df.repartition(n_out, *pcols)
         else:
-            kmap = spark.createDataFrame(
+            kmap = _local_frame(
+                spark,
                 [(*p, k) for p, k in sorted(per_k.items())],
                 ", ".join(f"{c} string" for c in pcols)
                 + ", __vs_k int",
@@ -3292,8 +3322,8 @@ def compact_version(
 ) -> int:
     """Commit a compacted copy of the CURRENT version: same rows, fewer
     files (the small-file problem is the versioned store's natural
-    failure mode — every upsert adds task-count files to touched
-    partitions). Contents are identical by construction (one
+    failure mode — every upsert adds at least one file to each
+    touched partition). Contents are identical by construction (one
     repartition by the partition column, no row transformation); the
     previous version keeps its own files, so compaction is as safe —
     and as reversible — as any other commit.
@@ -3472,7 +3502,7 @@ def commit_delete(
     # admit a doomed key are rewritten — a one-key delete on a
     # many-file partition rewrites one file (plus bloom false
     # positives), not the partition
-    touched, to_rewrite, _, key_rows = _plan_file_rewrite(
+    touched, to_rewrite, _, key_frame = _plan_file_rewrite(
         keys, key_cols, pcols, prev, store, prev_v
     )
     if merge_on_read:
@@ -3488,16 +3518,8 @@ def commit_delete(
             spark, store, to_rewrite, prev["partition_col"],
             prev.get("columns"), prev.get("column_map"),
         )
-        # same local-relation reuse as commit_upsert: the planner's
-        # exact tier already holds the distinct doomed keys
-        if key_rows is not None:
-            anti_keys = spark.createDataFrame(
-                key_rows, keys.select(*key_cols).schema
-            )
-        else:
-            anti_keys = keys.select(*key_cols).distinct()
         survivors = base.join(
-            F.broadcast(anti_keys), key_cols, "left_anti"
+            F.broadcast(key_frame), key_cols, "left_anti"
         )
         columns = _columns_ddl(survivors, pcols)
         new_entries = _stage_files(

@@ -109,12 +109,16 @@ def test_optimize_auto_compacts_only_targets(spark, tmp_path):
         "part string, k long, v string",
     ).repartition(2)
     vs.commit_overwrite(healthy, store, "part")
-    frag = spark.createDataFrame(
-        [("frag", k, f"x:{k}") for k in range(40)],
-        "part string, k long, v string",
-    ).repartition(10, "k")
-    vs.commit_upsert(spark, store, frag, ["part", "k"])
-    man = vs._read_manifest(store, 2)
+    # keyed commits write one file per touched partition, so fragment
+    # `frag` with 6 upserts of disjoint new keys: each adds one file
+    # and the planner's stats prove no earlier file needs a rewrite
+    for i in range(6):
+        frag = spark.createDataFrame(
+            [("frag", k, f"x:{k}") for k in range(10 * i, 10 * i + 10)],
+            "part string, k long, v string",
+        )
+        head = vs.commit_upsert(spark, store, frag, ["part", "k"])
+    man = vs._read_manifest(store, head)
     frag_files = sum(
         1 for e in man["files"] if e["partition"] == "frag"
     )
@@ -126,7 +130,7 @@ def test_optimize_auto_compacts_only_targets(spark, tmp_path):
     v3 = vs.optimize_auto(
         spark, store, max_files=5, target_file_bytes=1
     )
-    assert v3 == 3
+    assert v3 == head + 1
     m3 = vs._read_manifest(store, v3)
     assert m3["optimized_partitions"] == 1
     healthy2 = {
