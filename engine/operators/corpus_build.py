@@ -364,24 +364,21 @@ def _with_zf(spark: SparkSession, sf_dir: str, rows: DataFrame) -> DataFrame:
 def build_corpus(spark: SparkSession, sf_dir: str, out: str | None = None) -> str:
     """Run the build lineage and PUBLISH the corpus at ``out`` (default
     `corpus_out_dir(sf_dir)`) — written to a staging directory first,
-    then atomically renamed in (sinks._publish_via_rename), so a reader
+    then atomically renamed in (``sinks.publish_dir``), so a reader
     only ever sees a complete corpus. Files are z-order clustered on
     (doc_id, bucket) within each split (section comment above): one
     file per (split, zf) cell, so footer rectangles are tight and
     range predicates on either dimension skip most files. Returns the
     published path."""
     from engine.session import static_planning
-    from engine.sinks import _publish_via_rename
+    from engine.sinks import publish_dir
 
     out = out or corpus_out_dir(sf_dir)
-    os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
     n_docs = load_table(spark, sf_dir, "documents").count()  # metadata-only
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     width = max(1, min(conf_parts, -(-n_docs // 1000)))
-    staging = tempfile.mkdtemp(
-        prefix="corpus-", dir=os.path.dirname(out) or "."
-    )
-    try:
+
+    def write(staging: str) -> None:
         # Static planning at a measured width: every stage cardinality
         # is corpus-bounded (the decontam_pack/ngram_jaccard
         # discipline), so AQE re-planning would only add driver round
@@ -405,9 +402,8 @@ def build_corpus(spark: SparkSession, sf_dir: str, out: str | None = None) -> st
             )
         for c in caches:
             c.unpersist(False)
-        _publish_via_rename(staging, out, "corpus")
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+
+    publish_dir(out, "corpus", write)
     return out
 
 

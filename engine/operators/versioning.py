@@ -90,15 +90,15 @@ def _publish_snapshot(spark: SparkSession, rows: DataFrame, out: str) -> str:
     """Write a snapshot (schema: source, doc_id, n_tokens, h, text) to
     ``out``, partitioned by source, via staging + atomic rename — a
     reader only ever sees a complete version."""
-    from engine.sinks import _publish_via_rename
+    from engine.sinks import publish_dir
 
-    os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
-    staging = tempfile.mkdtemp(prefix="snap-", dir=os.path.dirname(out) or ".")
-    try:
-        rows.write.mode("overwrite").partitionBy("source").parquet(staging)
-        _publish_via_rename(staging, out, "snap")
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    publish_dir(
+        out,
+        "snap",
+        lambda staging: rows.write.mode("overwrite")
+        .partitionBy("source")
+        .parquet(staging),
+    )
     return out
 
 
@@ -560,19 +560,16 @@ def run_stream_refresh(
     (source, doc_id, text)."""
     from pyspark.sql import Window as W
 
-    from engine.sinks import _publish_via_rename, apply_changeset_partitioned
+    from engine.sinks import apply_changeset_partitioned, publish_dir
 
-    os.makedirs(os.path.dirname(store) or ".", exist_ok=True)
-    staging = tempfile.mkdtemp(
-        prefix="srefresh-", dir=os.path.dirname(store) or "."
+    publish_dir(
+        store,
+        "srefresh",
+        lambda staging: _corpus_store_rows(base_docs)
+        .write.mode("overwrite")
+        .partitionBy("source")
+        .parquet(staging),
     )
-    try:
-        _corpus_store_rows(base_docs).write.mode(
-            "overwrite"
-        ).partitionBy("source").parquet(staging)
-        _publish_via_rename(staging, store, "srefresh")
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
 
     schema = base_docs.select("source", "doc_id", "text").schema
 

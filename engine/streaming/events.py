@@ -741,6 +741,7 @@ def build_late_replay(
 
     from engine.functions.hashing import SPARK_H60
     from engine.io import load_table
+    from engine.sinks import publish_dir
 
     out = os.path.join(
         tempfile.gettempdir(),
@@ -753,18 +754,16 @@ def build_late_replay(
         % late_mod
         == 0
     )
-    staging = out + ".__staging__"
-    shutil.rmtree(staging, ignore_errors=True)
-    os.makedirs(staging)
-    for i, part in enumerate((ev.filter(~is_late), ev.filter(is_late))):
-        tmp = os.path.join(staging, f"w{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        (src,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dst = os.path.join(staging, f"batch{i}.parquet")
-        os.rename(src, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (1_000_000 * (i + 1), 1_000_000 * (i + 1)))
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    os.rename(staging, out)
+
+    def write(staging: str) -> None:
+        for i, part in enumerate((ev.filter(~is_late), ev.filter(is_late))):
+            tmp = os.path.join(staging, f"w{i}")
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            (src,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
+            dst = os.path.join(staging, f"batch{i}.parquet")
+            os.rename(src, dst)
+            shutil.rmtree(tmp)
+            os.utime(dst, (1_000_000 * (i + 1), 1_000_000 * (i + 1)))
+
+    publish_dir(out, "replay", write)
     return out

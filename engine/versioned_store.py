@@ -2,7 +2,7 @@
 time travel and vacuum (the operational floor under the versioning
 layer in ``engine/operators/versioning.py``).
 
-``_publish_via_rename`` gives atomic REPLACEMENT: readers see the old
+``engine.sinks.publish_dir`` gives atomic REPLACEMENT: readers see the old
 corpus or the new one, but the old one is gone the moment the rename
 lands. Production corpus management needs the previous versions to
 stay READABLE (diff a candidate against what trained last month, roll
@@ -1854,8 +1854,8 @@ def _prune_entries(
 # are useless for a POINT probe of a high-cardinality, unclustered key
 # (a content hash lands anywhere). The standard answer is a per-file
 # bloom filter kept OUTSIDE the data files — Iceberg's puffin sidecar;
-# parquet's own column blooms (engine/sinks.py) still require opening
-# every footer. Here each version may carry a sidecar
+# parquet's own column blooms still require opening every footer. Here
+# each version may carry a sidecar
 # (_manifests/bloom-vNNNNN.json — named so the v*.json manifest glob
 # in `versions()` never matches it) mapping file → column → bloom
 # words; `read_version(point_filters=…)` drops files whose bloom

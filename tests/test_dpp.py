@@ -1,10 +1,12 @@
 """Dynamic partition pruning (DPP) evidence.
 
-Static partition pruning (tests/test_sinks.py) covers literal
-predicates; at 100 TB the common shape is a JOIN against a filtered
-dim — there the partition values are only known at runtime, and
-Spark's DPP rule turns the broadcast build side into a pruning
-subquery on the fact scan so non-matching partitions are never read.
+Static partition pruning
+(tests/test_versioning.py::test_versioned_store_time_travel_pruning_and_vacuum)
+covers literal predicates; at 100 TB the common shape is a JOIN
+against a filtered dim — there the partition values are only known
+at runtime, and Spark's DPP rule turns the broadcast build side into
+a pruning subquery on the fact scan so non-matching partitions are
+never read.
 This test pins that the engine's partitioned-parquet layout actually
 triggers DPP (config on in the session factory by default) — if a
 layout or session change ever silently disabled it, every dim-filtered

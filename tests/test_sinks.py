@@ -1,278 +1,92 @@
-"""Sink tests: partitioned parquet round-trip with partition pruning,
-and the bucketed co-located join (zero shuffle exchanges)."""
+"""Sink tests: the staged rename publish (success, failed write, failed
+swap), the keyed parquet upsert, dynamic partition overwrite and the
+partition-scoped changeset merge."""
 
+import os
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
 from engine.io import load_table
-from engine.plans import formatted_plan, n_exchanges
-from engine.sinks import read_table, write_bucketed_table, write_parquet
+from engine.sinks import publish_dir
 from tests.conftest import SF_SMOKE
 
 
-def test_partitioned_parquet_roundtrip_and_pruning(spark, tmp_path):
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    out = str(tmp_path / "li_part")
-    write_parquet(li, out, partition_by=["l_returnflag"])
-
-    back = spark.read.parquet(out)
-    assert back.count() == li.count()
-
-    pruned = back.filter(F.col("l_returnflag") == "R")
-    want = li.filter(F.col("l_returnflag") == "R").count()
-    assert pruned.count() == want
-    # Partition pruning: the scan must carry a partition filter, and
-    # only the matching directory is read.
-    plan = formatted_plan(pruned)
-    assert "PartitionFilters" in plan and "l_returnflag" in plan
+def _tree(root) -> dict:
+    """Relative path -> bytes of every file under ``root``."""
+    return {
+        p.relative_to(root).as_posix(): p.read_bytes()
+        for p in Path(root).rglob("*")
+        if p.is_file()
+    }
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    li = load_table(spark, SF_SMOKE, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
+def _old_table(tmp_path):
+    path = tmp_path / "table"
+    (path / "k=1").mkdir(parents=True)
+    (path / "k=1" / "part-0.parquet").write_bytes(b"old rows")
+    (path / "_SUCCESS").write_bytes(b"")
+    return str(path), _tree(path)
+
+
+def test_publish_dir_creates_missing_path_then_replaces(tmp_path):
+    """The first publish creates the path (and its parents); a second
+    one replaces it whole. Neither leaves a staging or retired
+    directory beside it."""
+    parent = tmp_path / "a" / "b"
+    path = str(parent / "table")
+    n = publish_dir(
+        path, "t", lambda staging: Path(staging, "part-0").write_bytes(b"v1")
     )
-    orders = load_table(spark, SF_SMOKE, "orders")
-    try:
-        write_bucketed_table(
-            li, "li_b", str(tmp_path / "li_b"), "l_orderkey", 8, sort_col="l_orderkey"
+    assert n == 2  # write's result is returned
+    assert _tree(path) == {"part-0": b"v1"}
+    assert os.listdir(parent) == ["table"]
+
+    publish_dir(
+        path, "t", lambda staging: Path(staging, "part-9").write_bytes(b"v2")
+    )
+    assert _tree(path) == {"part-9": b"v2"}
+    assert os.listdir(parent) == ["table"]
+
+
+def test_publish_dir_failed_write_keeps_old_dir(tmp_path):
+    """A write that raises leaves the published directory
+    byte-identical and removes its half-written staging directory."""
+    path, before = _old_table(tmp_path)
+
+    def write(staging):
+        Path(staging, "part-0.parquet").write_bytes(b"half")
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        publish_dir(path, "t", write)
+    assert _tree(path) == before
+    assert os.listdir(tmp_path) == ["table"]
+
+
+def test_publish_dir_failed_swap_rolls_back(tmp_path, monkeypatch):
+    """When the staging -> path rename fails after the old directory
+    moved aside, the old directory is renamed back and the error
+    propagates."""
+    path, before = _old_table(tmp_path)
+    real_rename = os.rename
+    swaps = []
+
+    def rename(src, dst):
+        if dst == path and "-old-" not in os.path.basename(src):
+            swaps.append(src)
+            raise OSError("swap failed")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="swap failed"):
+        publish_dir(
+            path, "t", lambda staging: Path(staging, "new").write_bytes(b"new")
         )
-        write_bucketed_table(
-            orders.withColumnRenamed("o_orderkey", "l_orderkey"),
-            "ord_b",
-            str(tmp_path / "ord_b"),
-            "l_orderkey",
-            8,
-            sort_col="l_orderkey",
-        )
-        a, b = read_table(spark, "li_b"), read_table(spark, "ord_b")
-        # Disable broadcast so the join would otherwise shuffle both sides.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = a.join(b, "l_orderkey")
-            assert n_exchanges(joined) == 0, formatted_plan(joined)
-            assert joined.count() > 0
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS ord_b")
-
-
-def test_compact_parquet_small_files(spark, tmp_path):
-    """1000 tiny files → a handful of target-sized ones, same rows."""
-    from engine.sinks import compact_parquet
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    out = str(tmp_path / "li_small")
-    li.repartition(64).write.parquet(out)
-    import glob
-
-    before = len(glob.glob(f"{out}/*.parquet"))
-    assert before >= 64
-    want = li.count()
-
-    n_files = compact_parquet(spark, out, target_file_bytes=1024 * 1024)
-    after = len(glob.glob(f"{out}/*.parquet"))
-    assert after == n_files < before
-    back = spark.read.parquet(out)
-    assert back.count() == want
-    assert set(back.columns) == set(li.columns)
-
-
-def test_compact_parquet_preserves_hive_partitions(spark, tmp_path):
-    """Compacting a partitionBy layout must keep the key=value dirs
-    (a flat rewrite would read the partition column back as data and
-    silently destroy partition pruning for every layout-dependent
-    sibling: dynamic overwrite, targeted deletion, streaming sinks)."""
-    import glob
-
-    from engine.sinks import compact_parquet
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    out = str(tmp_path / "li_part_small")
-    li.repartition(16).write.partitionBy("l_returnflag").parquet(out)
-    want = li.count()
-    dirs_before = sorted(
-        p.split("/")[-1] for p in glob.glob(f"{out}/l_returnflag=*")
-    )
-    files_before = len(glob.glob(f"{out}/l_returnflag=*/*.parquet"))
-
-    compact_parquet(spark, out, target_file_bytes=64 * 1024 * 1024)
-    dirs_after = sorted(
-        p.split("/")[-1] for p in glob.glob(f"{out}/l_returnflag=*")
-    )
-    files_after = len(glob.glob(f"{out}/l_returnflag=*/*.parquet"))
-    assert dirs_after == dirs_before  # layout preserved
-    assert files_after < files_before  # and actually compacted
-    back = spark.read.parquet(out)
-    assert back.count() == want
-    assert set(back.columns) == set(li.columns)
-    # pruning still works: the partition filter reaches the scan
-    pruned = back.filter(F.col("l_returnflag") == "R")
-    assert pruned.count() == li.filter(F.col("l_returnflag") == "R").count()
-
-
-def test_compact_parquet_salts_hot_partitions(spark, tmp_path):
-    """A hot Hive partition must compact to MULTIPLE ~target files (one
-    per salt bucket), not funnel through one task into one oversized
-    file — while cold partitions still compact to exactly one file."""
-    import glob
-
-    from engine.sinks import compact_parquet
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    # Skew: bucket 'hot' holds ~¾ of rows, the rest spread thin.
-    skewed = li.withColumn(
-        "bkt",
-        F.when(F.col("l_orderkey") % 4 != 0, "hot").otherwise(
-            F.concat(F.lit("cold"), (F.col("l_orderkey") % 7).cast("string"))
-        ),
-    )
-    out = str(tmp_path / "li_skew")
-    skewed.repartition(16).write.partitionBy("bkt").parquet(out)
-    want = skewed.count()
-
-    # Target sized so the hot partition needs several files but each
-    # cold partition fits in one.
-    hot_bytes = sum(
-        __import__("os").path.getsize(f)
-        for f in glob.glob(f"{out}/bkt=hot/*.parquet")
-    )
-    compact_parquet(spark, out, target_file_bytes=max(hot_bytes // 4, 1))
-    hot_files = len(glob.glob(f"{out}/bkt=hot/*.parquet"))
-    cold_counts = [
-        len(glob.glob(f"{d}/*.parquet"))
-        for d in glob.glob(f"{out}/bkt=cold*")
-    ]
-    assert hot_files > 1  # salted: the hot dir fans out
-    assert cold_counts and all(c == 1 for c in cold_counts)
-    back = spark.read.parquet(out)
-    assert back.count() == want
-
-
-def test_compact_parquet_encoded_partition_value_still_salts(spark, tmp_path):
-    """A partition VALUE containing URI-encodable characters (space,
-    '%', '+') is percent-encoded in _metadata.file_path but raw in the
-    listing walk — if the width join key is not decoded, every row of
-    that directory misses the broadcast join, coalesces to width 1 and
-    funnels through a single task.  The hot directory here has a space
-    (and a literal '+', which naive form-decoding would corrupt into a
-    space) in its value and must still fan out across salt buckets."""
-    import glob
-    import os
-
-    from engine.sinks import compact_parquet
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    skewed = li.withColumn(
-        "bkt",
-        F.when(F.col("l_orderkey") % 4 != 0, "hot part+x").otherwise(
-            F.concat(F.lit("cold "), (F.col("l_orderkey") % 7).cast("string"))
-        ),
-    )
-    out = str(tmp_path / "li_enc")
-    skewed.repartition(16).write.partitionBy("bkt").parquet(out)
-    want = skewed.count()
-
-    hot_dirs = glob.glob(f"{out}/bkt=hot*")
-    assert len(hot_dirs) == 1
-    hot_bytes = sum(
-        os.path.getsize(f) for f in glob.glob(f"{hot_dirs[0]}/*.parquet")
-    )
-    # max_driver_files=0 routes the byte-gather through the binaryFile
-    # listing, whose URIs percent-encode the space — so this also pins
-    # the distributed path's unquote (and '+' must NOT form-decode).
-    compact_parquet(
-        spark, out, target_file_bytes=max(hot_bytes // 4, 1), max_driver_files=0
-    )
-    hot_files = len(glob.glob(f"{glob.glob(f'{out}/bkt=hot*')[0]}/*.parquet"))
-    assert hot_files > 1  # decoded join key: the hot dir still fans out
-    back = spark.read.parquet(out)
-    assert back.count() == want
-    # the '+' survived round-trip: the partition value is unchanged
-    assert back.filter(F.col("bkt") == "hot part+x").count() > 0
-
-
-def test_compact_parquet_distributed_footer_listing(spark, tmp_path):
-    """Past the file-count threshold the footer reads move off the
-    driver: the distributed (executor-side mapInPandas) byte-gather
-    must agree byte-for-byte with the driver-side walk on the same
-    many-file fixture, and compaction through the distributed path
-    must still salt the hot directory identically."""
-    import glob
-    import os
-    from pathlib import Path
-
-    from engine.sinks import (
-        _dir_bytes_distributed,
-        _dir_bytes_driver,
-        compact_parquet,
-    )
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    skewed = li.withColumn(
-        "bkt",
-        F.when(F.col("l_orderkey") % 4 != 0, "hot").otherwise(
-            F.concat(F.lit("cold"), (F.col("l_orderkey") % 7).cast("string"))
-        ),
-    )
-    out = str(tmp_path / "li_dist")
-    # many small files per directory: the exact shape the threshold targets
-    skewed.repartition(24).write.partitionBy("bkt").parquet(out)
-    files = list(Path(out).rglob("*.parquet"))
-    assert len(files) > 8
-
-    a = _dir_bytes_driver(out, files)
-    b = _dir_bytes_distributed(spark, out)
-    assert a == b  # identical widths follow from identical bytes
-
-    hot_bytes = sum(
-        os.path.getsize(f) for f in glob.glob(f"{out}/bkt=hot/*.parquet")
-    )
-    # max_driver_files=0 forces every footer read through the
-    # distributed path end-to-end.
-    compact_parquet(
-        spark,
-        out,
-        target_file_bytes=max(hot_bytes // 4, 1),
-        max_driver_files=0,
-    )
-    hot_files = len(glob.glob(f"{out}/bkt=hot/*.parquet"))
-    cold_counts = [
-        len(glob.glob(f"{d}/*.parquet"))
-        for d in glob.glob(f"{out}/bkt=cold*")
-    ]
-    assert hot_files > 1
-    assert cold_counts and all(c == 1 for c in cold_counts)
-    assert spark.read.parquet(out).count() == skewed.count()
-
-
-def test_compact_parquet_keeps_null_partition(spark, tmp_path):
-    """A __HIVE_DEFAULT_PARTITION__ (NULL-valued) directory must
-    survive compaction row-for-row: the salting width lookup joins on
-    the partition columns, and a plain equi-join would silently drop
-    every NULL-partition row."""
-    import glob
-
-    from engine.sinks import compact_parquet
-
-    li = load_table(spark, SF_SMOKE, "lineitem").limit(500)
-    part = li.withColumn(
-        "bkt",
-        F.when(F.col("l_orderkey") % 3 == 0, F.lit(None).cast("string"))
-        .otherwise(F.concat(F.lit("b"), (F.col("l_orderkey") % 2).cast("string"))),
-    )
-    out = str(tmp_path / "li_nullpart")
-    part.repartition(4).write.partitionBy("bkt").parquet(out)
-    want_total = part.count()
-    want_null = part.filter(F.col("bkt").isNull()).count()
-    assert want_null > 0
-    assert glob.glob(f"{out}/bkt=__HIVE_DEFAULT_PARTITION__")
-
-    compact_parquet(spark, out, target_file_bytes=64 * 1024 * 1024)
-    back = spark.read.parquet(out)
-    assert back.count() == want_total
-    assert back.filter(F.col("bkt").isNull()).count() == want_null
-    assert glob.glob(f"{out}/bkt=__HIVE_DEFAULT_PARTITION__")
+    assert len(swaps) == 1
+    assert _tree(path) == before
+    assert os.listdir(tmp_path) == ["table"]
 
 
 def test_upsert_parquet_merge_semantics(spark, tmp_path):
@@ -302,33 +116,19 @@ def test_upsert_parquet_merge_semantics(spark, tmp_path):
     assert got[2] == "b2-rerun"
 
 
-def test_parquet_bloom_filter_write(spark, tmp_path):
-    docs = load_table(spark, SF_SMOKE, "documents").coalesce(1)
-    plain, bloomed = str(tmp_path / "plain"), str(tmp_path / "bloomed")
-    write_parquet(docs, plain)
-    write_parquet(docs, bloomed, bloom_filter_cols=["doc_id"], bloom_filter_ndv=1000)
-
-    # The bloom filter occupies real bytes in the file (pyarrow/duckdb
-    # here don't surface bloom_filter_offset, so presence is asserted
-    # via the size delta — a filter sized for 1000 NDV adds ~1 KB+).
-    size = lambda p: sum(
-        f.stat().st_size for f in __import__("pathlib").Path(p).rglob("*.parquet")
-    )
-    assert size(bloomed) > size(plain)
-
-    # Point-lookup reads stay exact through the bloom-filtered file.
-    some_id = docs.select("doc_id").head()[0]
-    got = spark.read.parquet(bloomed).filter(F.col("doc_id") == some_id)
-    assert got.count() == docs.filter(F.col("doc_id") == some_id).count() == 1
-
-
-def test_dynamic_partition_overwrite(spark, tmp_path):
+def test_dynamic_partition_overwrite(spark, tmp_path, monkeypatch):
     """Dynamic overwrite replaces only the partitions present in the
-    incoming frame; static overwrite would truncate the rest."""
+    incoming frame; static overwrite would truncate the rest. The mode
+    is a per-write option: the session conf, shared by every thread,
+    is never set."""
     from engine.sinks import overwrite_partitions_dynamic
+
+    def no_conf_set(*args):
+        raise AssertionError(f"session conf set: {args}")
 
     out = str(tmp_path / "events_by_type")
     ev = load_table(spark, SF_SMOKE, "events")
+    monkeypatch.setattr(spark.conf, "set", no_conf_set)
     overwrite_partitions_dynamic(ev, out, ["event_type"])
     before = {
         r["event_type"]: r["n"]
@@ -354,214 +154,6 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
     for t, n in before.items():
         if t != some_type:
             assert after[t] == n
-
-
-def test_range_clustered_layout_stats_disjoint(spark, tmp_path):
-    """Files written by write_range_clustered carry pairwise-disjoint
-    user_id ranges in their footers (the property scan-time skipping
-    relies on), and the data round-trips completely."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from engine.sinks import write_range_clustered
-
-    out = str(tmp_path / "events_clustered")
-    ev = load_table(spark, SF_SMOKE, "events")
-    write_range_clustered(ev, out, ["user_id"], n_files=4)
-    assert spark.read.parquet(out).count() == ev.count()
-
-    spans = []
-    for f in glob.glob(out + "/part-*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        los, his = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx["user_id"]).statistics
-            los.append(st.min)
-            his.append(st.max)
-        spans.append((min(los), max(his)))
-    assert len(spans) >= 2
-    spans.sort()
-    for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2  # disjoint up to the range boundary
-
-
-def test_zorder_clustered_skips_on_every_dimension(spark, tmp_path):
-    """Z-ordering by (user_id, value) yields footer stats that skip
-    files for a predicate on EITHER column — the multi-column property
-    the single-column range layout lacks (its value spans are global in
-    every file). Also: exact roundtrip, and >=4 real output files."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from engine.sinks import write_range_clustered, write_zorder_clustered
-
-    ev = load_table(spark, SF_SMOKE, "events").where("value IS NOT NULL")
-    zdir = str(tmp_path / "ev_zorder")
-    rdir = str(tmp_path / "ev_range")
-    write_zorder_clustered(ev, zdir, ["user_id", "value"], n_files=8)
-    write_range_clustered(ev, rdir, ["user_id"], n_files=8)
-    assert spark.read.parquet(zdir).count() == ev.count()
-
-    def file_spans(d, col):
-        spans = []
-        for f in sorted(glob.glob(d + "/part-*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            st = [
-                md.row_group(rg).column(idx[col]).statistics
-                for rg in range(md.num_row_groups)
-            ]
-            spans.append((min(s.min for s in st), max(s.max for s in st)))
-        return spans
-
-    def overlapping(spans, lo, hi):
-        return sum(1 for (mn, mx) in spans if mx >= lo and mn <= hi)
-
-    zu, zv = file_spans(zdir, "user_id"), file_spans(zdir, "value")
-    assert len(zu) >= 4
-    # Query boxes: the TOP quarter of each dimension's global span
-    # (value is right-skewed, so low-value cells appear in every file;
-    # the sparse top of the range is where footer skipping shows).
-    glo_u = (min(s[0] for s in zu), max(s[1] for s in zu))
-    glo_v = (min(s[0] for s in zv), max(s[1] for s in zv))
-    qu = (glo_u[1] - (glo_u[1] - glo_u[0]) / 4, glo_u[1])
-    qv = (glo_v[1] - (glo_v[1] - glo_v[0]) / 4, glo_v[1])
-
-    # The z layout skips files on BOTH single-column boxes at once.
-    assert overlapping(zu, *qu) < len(zu)
-    assert overlapping(zv, *qv) < len(zv)
-    # And on the dimension the range layout did NOT sort by, z-order
-    # skips strictly more: user_id-sorted files each span most of the
-    # value range (skew means a few may still luck into skipping).
-    rv = file_spans(rdir, "value")
-    assert overlapping(zv, *qv) < overlapping(rv, *qv)
-    # And the 2-D box prunes strictly harder than either 1-D check in
-    # the z layout: files must overlap on both dimensions at once.
-    both = sum(
-        1
-        for (su, sv) in zip(zu, zv)
-        if su[1] >= qu[0] and su[0] <= qu[1] and sv[1] >= qv[0] and sv[0] <= qv[1]
-    )
-    assert both <= min(overlapping(zu, *qu), overlapping(zv, *qv))
-
-
-def test_materialize_checkpoint_truncates_lineage(spark, tmp_path):
-    from engine.sinks import materialize_checkpoint
-
-    out = str(tmp_path / "barrier")
-    ev = load_table(spark, SF_SMOKE, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    back = materialize_checkpoint(ev, out)
-    assert sorted(r["event_id"] for r in back.collect()) == sorted(
-        r["event_id"] for r in ev.collect()
-    )
-    # The barrier's plan scans the checkpoint path, not the fixture —
-    # lineage upstream of the barrier is gone.
-    files = back.inputFiles()
-    assert files and all("barrier" in f for f in files)
-    assert not any("testdata" in f for f in files)
-
-
-def test_delete_keys_partitioned(spark, tmp_path):
-    """GDPR-style targeted delete: doomed keys vanish, untouched
-    partitions keep their exact files, fully-emptied partitions
-    disappear."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from engine.sinks import delete_keys_partitioned
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [
-            ("2024-01-01", 1, "a"), ("2024-01-01", 2, "b"),
-            ("2024-01-02", 2, "c"), ("2024-01-02", 3, "d"),
-            ("2024-01-03", 2, "e"),  # partition fully owned by key 2
-            ("2024-01-04", 9, "f"),  # untouched partition
-        ],
-        "day string, user_id long, payload string",
-    )
-    df.write.partitionBy("day").parquet(path)
-
-    def files(day):
-        d = os.path.join(path, f"day={day}")
-        return sorted(os.listdir(d)) if os.path.isdir(d) else None
-
-    before_untouched = files("2024-01-04")
-    keys = spark.createDataFrame([(2,)], "user_id long")
-    n = delete_keys_partitioned(spark, path, ["day"], "user_id", keys)
-    assert n == 3  # three partitions contained key 2
-
-    def contents():
-        # partition-column type inference reads `day` back as DATE
-        return {
-            (str(r.day), r.user_id, r.payload)
-            for r in spark.read.parquet(path).collect()
-        }
-
-    got = contents()
-    assert got == {
-        ("2024-01-01", 1, "a"),
-        ("2024-01-02", 3, "d"),
-        ("2024-01-04", 9, "f"),
-    }
-    assert files("2024-01-03") is None  # fully-emptied partition dropped
-    assert files("2024-01-04") == before_untouched  # untouched files intact
-    # idempotent: re-running is a no-op on contents
-    n2 = delete_keys_partitioned(spark, path, ["day"], "user_id", keys)
-    assert n2 == 0
-    assert contents() == got
-
-
-def test_delete_keys_partitioned_escaped_and_null_partitions(spark, tmp_path):
-    """The two silent-no-op surfaces of the GDPR delete: partition
-    values Hive must escape in directory names (':' → '%3A') and NULL
-    partition values (__HIVE_DEFAULT_PARTITION__). Doomed keys in both
-    must actually vanish, and a fully-doomed escaped partition's
-    directory must be removed (name taken from the scan, not rebuilt
-    from the Python value)."""
-    import os
-
-    from engine.sinks import delete_keys_partitioned
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [
-            ("2024-01-01 00:00:00", 2, "a"),  # escaped dir, fully doomed
-            ("2024-01-02 00:00:00", 2, "b"),  # escaped dir, mixed
-            ("2024-01-02 00:00:00", 3, "c"),
-            (None, 2, "d"),                   # NULL partition, mixed
-            (None, 4, "e"),
-        ],
-        "stamp string, user_id long, payload string",
-    )
-    df.write.partitionBy("stamp").parquet(path)
-    # precondition: Hive really escapes the value in the dir name
-    assert any("%3A" in d for d in os.listdir(path)), os.listdir(path)
-
-    keys = spark.createDataFrame([(2,)], "user_id long")
-    n = delete_keys_partitioned(spark, path, ["stamp"], "user_id", keys)
-    assert n == 3  # three partitions contained key 2
-
-    got = {
-        # partition-column type inference reads `stamp` back as a
-        # TIMESTAMP — compare its string form
-        (str(r.stamp) if r.stamp is not None else None, r.user_id, r.payload)
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {
-        ("2024-01-02 00:00:00", 3, "c"),
-        (None, 4, "e"),
-    }
-    # the fully-doomed escaped partition's directory is gone
-    assert not any(
-        "2024-01-01" in d for d in os.listdir(path)
-    ), os.listdir(path)
 
 
 def _stored_rollup_schema(df):

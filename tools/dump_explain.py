@@ -1,16 +1,18 @@
-"""Dump .explain('formatted') for the named queries into plans/r11/.
+"""Dump .explain('formatted') for the named queries into one directory,
+one ``<name>_<suffix>.txt`` file each (before/after plan pairs).
 
-Usage: python tools/dump_r11_plans.py <suffix> [names...]
+Usage: python tools/dump_explain.py --out plans/rNN <suffix> [names...]
   suffix: 'before' or 'after'
   names: default = the 13 bench headliners
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
 import io
 import os
 import sys
-import contextlib
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -18,24 +20,27 @@ from engine.registry import all_queries_including_library  # noqa: E402
 from engine.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11")
 
 
 def main() -> None:
-    suffix = sys.argv[1]
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--out", required=True, help="output directory")
+    ap.add_argument("suffix")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
     specs = all_queries_including_library()
-    names = sys.argv[2:] or [n for n, s in specs.items() if "headline" in s.tags]
-    os.makedirs(OUT, exist_ok=True)
-    spark = get_spark("plans-r11")
+    names = args.names or [n for n, s in specs.items() if "headline" in s.tags]
+    os.makedirs(args.out, exist_ok=True)
+    spark = get_spark("dump-explain")
     for name in names:
         df = specs[name].fn(spark, SF_DIR)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        with open(os.path.join(OUT, f"{name}_{suffix}.txt"), "w") as f:
+        with open(os.path.join(args.out, f"{name}_{args.suffix}.txt"), "w") as f:
             f.write(buf.getvalue())
         spark.catalog.clearCache()
-        print(f"wrote {name}_{suffix}.txt", file=sys.stderr)
+        print(f"wrote {name}_{args.suffix}.txt", file=sys.stderr)
 
 
 if __name__ == "__main__":
