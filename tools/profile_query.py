@@ -32,32 +32,16 @@ def _get(url: str):
 def main() -> None:
     names = [a for a in sys.argv[1:] if not a.startswith("--")]
 
-    # UI must be on before the session exists; engine.session disables
-    # it, so replicate its conf here with the UI enabled (engine
-    # queries only depend on the session-level SQL confs below).
-    from engine._vendor import ensure_vendor_path
-    from pyspark.sql import SparkSession
+    # The UI (and its REST API) must be on before the session exists;
+    # everything else is the engine's own builder.
+    from engine.session import _builder
 
-    ensure_vendor_path()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        _builder("profile")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4050")
         .config("spark.ui.retainedJobs", "4000")
         .config("spark.ui.retainedStages", "4000")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
