@@ -4,20 +4,21 @@ Same consolidation pattern as ``tpch_merged``: the driver's
 correctness gate records ~50 entries, so kindred single-operator
 queries are federated under a ``facet`` column.  Every component stays
 registered (``exported=False``) with its own oracle, so the local gate
-keeps checking each one individually; the federated oracle wraps the
-unchanged component oracles as subqueries, so the driver's value hash
-still pins every component's values exactly.
+keeps checking each one individually.  Each federation is declared
+once as a ``registry.Federation`` — the shared schema plus each
+facet's column mapping — which generates both the Spark union and the
+oracle that wraps the unchanged component oracles as subqueries, so
+the driver's value hash still pins every component's values exactly.
 
 Where a component's columns don't fit the shared schema, they are
 mapped positionally and the mapping is documented in the query
-docstring (the judge-facing contract).  NULL-padding uses explicit
-casts on both engines so the schemas align bit-for-bit.
+docstring (the judge-facing contract).  Unmapped columns are
+NULL-padded with the schema's declared type on both engines.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # Importing the component modules registers their specs (and oracles).
 from engine.operators import (  # noqa: F401
@@ -29,51 +30,24 @@ from engine.operators import (  # noqa: F401
     relational3,
     windows,
 )
-from engine.registry import _REGISTRY, query
+from engine.registry import Federation, query
 
-
-def _oracle(name: str) -> str:
-    return _REGISTRY[name].oracle
-
-
-_NB = "CAST(NULL AS BIGINT)"
-_ND = "CAST(NULL AS DOUBLE)"
-_NV = "CAST(NULL AS VARCHAR)"
-_NT = "CAST(NULL AS TIMESTAMP)"
-
-
-def _nb():
-    return F.lit(None).cast("bigint")
-
-
-def _nd():
-    return F.lit(None).cast("double")
-
-
-def _nt():
-    return F.lit(None).cast("timestamp")
-
-
-def _nv():
-    return F.lit(None).cast("string")
+SETOPS_COHORTS = Federation(
+    "facet STRING, key STRING, kind STRING, n BIGINT",
+    [
+        ("lapsed", "setop_lapsed_customers", {"key": "CAST(custkey AS STRING)"}),
+        ("repeat", "setop_repeat_customers", {"key": "CAST(custkey AS STRING)"}),
+        ("activity", "union_all_activity",
+         {"key": "CAST(actor_id AS STRING)", "kind": "kind", "n": "n"}),
+        ("no_orders", "customers_without_orders",
+         {"key": "c_mktsegment", "n": "n_customers"}),
+    ],
+)
 
 
 @query(
     "setops_cohorts",
-    oracle=f"""
-SELECT 'lapsed' AS facet, CAST(custkey AS VARCHAR) AS key, {_NV} AS kind,
-       {_NB} AS n
-FROM ({_oracle('setop_lapsed_customers')}) a
-UNION ALL
-SELECT 'repeat', CAST(custkey AS VARCHAR), {_NV}, {_NB}
-FROM ({_oracle('setop_repeat_customers')}) b
-UNION ALL
-SELECT 'activity', CAST(actor_id AS VARCHAR), kind, n
-FROM ({_oracle('union_all_activity')}) c
-UNION ALL
-SELECT 'no_orders', c_mktsegment, {_NV}, n_customers
-FROM ({_oracle('customers_without_orders')}) d
-""",
+    oracle=SETOPS_COHORTS.oracle,
     tags=("relational", "setop", "antijoin"),
     exported=False,  # driver-visible via facets2.scalar_setops_facets
 )
@@ -83,51 +57,30 @@ def setops_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (UNION ALL of heterogeneous activity streams with a kind tag and
     per-actor counts), `no_orders` (anti-join: customer segments with
     their order-less counts). key = the cohort member / segment."""
-    lapsed = relational.setop_lapsed_customers(spark, sf_dir).selectExpr(
-        "'lapsed' AS facet",
-        "CAST(custkey AS STRING) AS key",
-        "CAST(NULL AS STRING) AS kind",
-        "CAST(NULL AS BIGINT) AS n",
-    )
-    rep = relational.setop_repeat_customers(spark, sf_dir).selectExpr(
-        "'repeat' AS facet",
-        "CAST(custkey AS STRING) AS key",
-        "CAST(NULL AS STRING) AS kind",
-        "CAST(NULL AS BIGINT) AS n",
-    )
-    act = relational2.union_all_activity(spark, sf_dir).selectExpr(
-        "'activity' AS facet",
-        "CAST(actor_id AS STRING) AS key",
-        "kind",
-        "n",
-    )
-    cwo = relational.customers_without_orders(spark, sf_dir).selectExpr(
-        "'no_orders' AS facet",
-        "c_mktsegment AS key",
-        "CAST(NULL AS STRING) AS kind",
-        "n_customers AS n",
-    )
-    return lapsed.unionAll(rep).unionAll(act).unionAll(cwo)
+    return SETOPS_COHORTS.build(spark, sf_dir)
+
+
+MULTI_GRAIN_PIVOT = Federation(
+    "facet STRING, k1 STRING, k2 STRING, n BIGINT, x DOUBLE, "
+    "p1 DOUBLE, p2 DOUBLE, p3 DOUBLE",
+    [
+        ("grouping_sets", "grouping_sets_sql",
+         {"k1": "l_returnflag", "k2": "l_linestatus", "n": "n", "x": "total"}),
+        ("cube", "cube_lineitem_flags",
+         {"k1": "l_returnflag", "k2": "l_linestatus", "n": "n_lines",
+          "x": "total_qty"}),
+        ("rollup", "rollup_order_status",
+         {"k1": "o_orderstatus", "k2": "o_orderpriority", "n": "n_orders",
+          "x": "total_price"}),
+        ("pivot", "pivot_priority_by_status",
+         {"k1": "o_orderstatus", "p1": "urgent", "p2": "high", "p3": "low"}),
+    ],
+)
 
 
 @query(
     "multi_grain_pivot",
-    oracle=f"""
-SELECT 'grouping_sets' AS facet, l_returnflag AS k1, l_linestatus AS k2,
-       n, total AS x, {_NB} AS p1, {_NB} AS p2, {_NB} AS p3
-FROM ({_oracle('grouping_sets_sql')}) gs
-UNION ALL
-SELECT 'cube', l_returnflag, l_linestatus, n_lines, total_qty,
-       {_NB}, {_NB}, {_NB}
-FROM ({_oracle('cube_lineitem_flags')}) cu
-UNION ALL
-SELECT 'rollup', o_orderstatus, o_orderpriority, n_orders, total_price,
-       {_NB}, {_NB}, {_NB}
-FROM ({_oracle('rollup_order_status')}) ro
-UNION ALL
-SELECT 'pivot', o_orderstatus, {_NV}, {_NB}, {_ND}, urgent, high, low
-FROM ({_oracle('pivot_priority_by_status')}) pv
-""",
+    oracle=MULTI_GRAIN_PIVOT.oracle,
     tags=("relational", "grouping-sets", "cube", "rollup", "pivot"),
     exported=False,  # driver-visible via facets2.grains_distribution_stats
 )
@@ -138,61 +91,26 @@ def multi_grain_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     `pivot` (priority columns per status: p1/p2/p3 = urgent/high/low
     o_totalprice sums). k1/k2 = the grain keys (NULL marks subtotal rows for the
     lattice facets — the facet tag keeps them from colliding)."""
-    gs = relational2.grouping_sets_sql(spark, sf_dir).selectExpr(
-        "'grouping_sets' AS facet",
-        "l_returnflag AS k1",
-        "l_linestatus AS k2",
-        "n",
-        "total AS x",
-        "CAST(NULL AS BIGINT) AS p1",
-        "CAST(NULL AS BIGINT) AS p2",
-        "CAST(NULL AS BIGINT) AS p3",
-    )
-    cu = relational.cube_lineitem_flags(spark, sf_dir).selectExpr(
-        "'cube' AS facet",
-        "l_returnflag AS k1",
-        "l_linestatus AS k2",
-        "n_lines AS n",
-        "total_qty AS x",
-        "CAST(NULL AS BIGINT) AS p1",
-        "CAST(NULL AS BIGINT) AS p2",
-        "CAST(NULL AS BIGINT) AS p3",
-    )
-    ro = relational.rollup_order_status(spark, sf_dir).selectExpr(
-        "'rollup' AS facet",
-        "o_orderstatus AS k1",
-        "o_orderpriority AS k2",
-        "n_orders AS n",
-        "total_price AS x",
-        "CAST(NULL AS BIGINT) AS p1",
-        "CAST(NULL AS BIGINT) AS p2",
-        "CAST(NULL AS BIGINT) AS p3",
-    )
-    pv = relational2.pivot_priority_by_status(spark, sf_dir).selectExpr(
-        "'pivot' AS facet",
-        "o_orderstatus AS k1",
-        "CAST(NULL AS STRING) AS k2",
-        "CAST(NULL AS BIGINT) AS n",
-        "CAST(NULL AS DOUBLE) AS x",
-        "urgent AS p1",
-        "high AS p2",
-        "low AS p3",
-    )
-    return gs.unionAll(cu).unionAll(ro).unionAll(pv)
+    return MULTI_GRAIN_PIVOT.build(spark, sf_dir)
+
+
+DISTRIBUTION_STATS = Federation(
+    "facet STRING, k STRING, n BIGINT, x1 DOUBLE, x2 DOUBLE, x3 DOUBLE, "
+    "x4 DOUBLE, x5 DOUBLE",
+    [
+        ("stats", "stats_lineitem_summary",
+         {"k": "l_returnflag", "x1": "sd_qty", "x2": "var_disc",
+          "x3": "corr_qty_price", "x4": "median_qty", "x5": "p90_price"}),
+        ("histogram", "histogram_order_totalprice",
+         {"k": "CAST(bucket AS STRING)", "n": "n_orders", "x1": "bucket_min",
+          "x2": "bucket_max"}),
+    ],
+)
 
 
 @query(
     "distribution_stats",
-    oracle=f"""
-SELECT 'stats' AS facet, l_returnflag AS k, {_NB} AS n,
-       sd_qty AS x1, var_disc AS x2, corr_qty_price AS x3,
-       median_qty AS x4, p90_price AS x5
-FROM ({_oracle('stats_lineitem_summary')}) st
-UNION ALL
-SELECT 'histogram', CAST(bucket AS VARCHAR), n_orders,
-       bucket_min, bucket_max, {_ND}, {_ND}, {_ND}
-FROM ({_oracle('histogram_order_totalprice')}) hi
-""",
+    oracle=DISTRIBUTION_STATS.oracle,
     tags=("relational", "statistics", "histogram"),
     exported=False,  # driver-visible via facets2.grains_distribution_stats
 )
@@ -203,54 +121,40 @@ def distribution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-bucket histogram of order totalprice: k = bucket, n = count,
     x1/x2 = bucket min/max). The histogram's min/max scalar is a
     1-row broadcast, never a driver round trip."""
-    st = relational2.stats_lineitem_summary(spark, sf_dir).selectExpr(
-        "'stats' AS facet",
-        "l_returnflag AS k",
-        "CAST(NULL AS BIGINT) AS n",
-        "sd_qty AS x1",
-        "var_disc AS x2",
-        "corr_qty_price AS x3",
-        "median_qty AS x4",
-        "p90_price AS x5",
-    )
-    hi = relational3.histogram_order_totalprice(spark, sf_dir).selectExpr(
-        "'histogram' AS facet",
-        "CAST(bucket AS STRING) AS k",
-        "n_orders AS n",
-        "bucket_min AS x1",
-        "bucket_max AS x2",
-        "CAST(NULL AS DOUBLE) AS x3",
-        "CAST(NULL AS DOUBLE) AS x4",
-        "CAST(NULL AS DOUBLE) AS x5",
-    )
-    return st.unionAll(hi)
+    return DISTRIBUTION_STATS.build(spark, sf_dir)
+
+
+# The asof facet's mapping, shared by both temporal federations.
+_ASOF = {
+    "id1": "purchase_id",
+    "id2": "user_id",
+    "ts1": "CAST(purchase_ts AS TIMESTAMP)",
+    "ts2": "CAST(prev_view_ts AS TIMESTAMP)",
+    "n": "gap_s",
+}
+
+EVENTS_ANALYTICS = Federation(
+    "facet STRING, key STRING, id1 BIGINT, id2 BIGINT, ts1 TIMESTAMP, "
+    "ts2 TIMESTAMP, n BIGINT, x1 DOUBLE, x2 DOUBLE, x3 DOUBLE",
+    [
+        ("json_props", "events_json_props",
+         {"key": "event_type", "n": "n_events", "x1": "avg_k", "x2": "min_k",
+          "x3": "max_k"}),
+        ("funnel", "funnel_view_to_purchase",
+         {"id1": "n_viewers", "id2": "n_converted", "x1": "conversion_rate",
+          "x2": "avg_seconds_to_convert"}),
+        ("zscore", "zscore_purchases_grouped",
+         {"id1": "user_id", "id2": "event_id", "x1": "z"}),
+        ("asof", "asof_purchase_prior_view", _ASOF),
+        ("range", "range_join_order_day_events",
+         {"id1": "o_orderkey", "n": "n_events", "x1": "sum_value"}),
+    ],
+)
 
 
 @query(
     "events_analytics",
-    oracle=f"""
-SELECT 'json_props' AS facet, event_type AS key, {_NB} AS id1, {_NB} AS id2,
-       {_NT} AS ts1, {_NT} AS ts2,
-       n_events AS n, avg_k AS x1, min_k AS x2, max_k AS x3
-FROM ({_oracle('events_json_props')}) jp
-UNION ALL
-SELECT 'funnel', {_NV}, n_viewers, n_converted, {_NT}, {_NT}, {_NB},
-       conversion_rate, avg_seconds_to_convert, {_ND}
-FROM ({_oracle('funnel_view_to_purchase')}) fu
-UNION ALL
-SELECT 'zscore', {_NV}, user_id, event_id, {_NT}, {_NT}, {_NB}, z,
-       {_ND}, {_ND}
-FROM ({_oracle('zscore_purchases_grouped')}) zs
-UNION ALL
-SELECT 'asof', {_NV}, purchase_id, user_id,
-       CAST(purchase_ts AS TIMESTAMP), CAST(prev_view_ts AS TIMESTAMP),
-       gap_s, {_ND}, {_ND}, {_ND}
-FROM ({_oracle('asof_purchase_prior_view')}) ao
-UNION ALL
-SELECT 'range', {_NV}, o_orderkey, {_NB}, {_NT}, {_NT}, n_events,
-       sum_value, {_ND}, {_ND}
-FROM ({_oracle('range_join_order_day_events')}) rj
-""",
+    oracle=EVENTS_ANALYTICS.oracle,
     tags=("relational", "events", "json", "funnel", "pandas_udf",
           "rangejoin", "asof"),
 )
@@ -270,81 +174,23 @@ def events_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     seconds), and `range` (events in each open order's 24 h window via
     the bucketed-grid equi-join — never a BroadcastNestedLoopJoin:
     id1 = order, n = event count, x1 = summed value)."""
-    jp = relational.events_json_props(spark, sf_dir).selectExpr(
-        "'json_props' AS facet",
-        "event_type AS key",
-        "CAST(NULL AS BIGINT) AS id1",
-        "CAST(NULL AS BIGINT) AS id2",
-        "CAST(NULL AS TIMESTAMP) AS ts1",
-        "CAST(NULL AS TIMESTAMP) AS ts2",
-        "n_events AS n",
-        "avg_k AS x1",
-        "min_k AS x2",
-        "max_k AS x3",
-    )
-    fu = windows.funnel_view_to_purchase(spark, sf_dir).selectExpr(
-        "'funnel' AS facet",
-        "CAST(NULL AS STRING) AS key",
-        "n_viewers AS id1",
-        "n_converted AS id2",
-        "CAST(NULL AS TIMESTAMP) AS ts1",
-        "CAST(NULL AS TIMESTAMP) AS ts2",
-        "CAST(NULL AS BIGINT) AS n",
-        "conversion_rate AS x1",
-        "avg_seconds_to_convert AS x2",
-        "CAST(NULL AS DOUBLE) AS x3",
-    )
-    zs = pandas_udfs.zscore_purchases_grouped(spark, sf_dir).selectExpr(
-        "'zscore' AS facet",
-        "CAST(NULL AS STRING) AS key",
-        "user_id AS id1",
-        "event_id AS id2",
-        "CAST(NULL AS TIMESTAMP) AS ts1",
-        "CAST(NULL AS TIMESTAMP) AS ts2",
-        "CAST(NULL AS BIGINT) AS n",
-        "z AS x1",
-        "CAST(NULL AS DOUBLE) AS x2",
-        "CAST(NULL AS DOUBLE) AS x3",
-    )
-    ao = asof.asof_purchase_prior_view(spark, sf_dir).selectExpr(
-        "'asof' AS facet",
-        "CAST(NULL AS STRING) AS key",
-        "purchase_id AS id1",
-        "user_id AS id2",
-        "purchase_ts AS ts1",
-        "prev_view_ts AS ts2",
-        "gap_s AS n",
-        "CAST(NULL AS DOUBLE) AS x1",
-        "CAST(NULL AS DOUBLE) AS x2",
-        "CAST(NULL AS DOUBLE) AS x3",
-    )
-    rj = rangejoin.range_join_order_day_events(spark, sf_dir).selectExpr(
-        "'range' AS facet",
-        "CAST(NULL AS STRING) AS key",
-        "o_orderkey AS id1",
-        "CAST(NULL AS BIGINT) AS id2",
-        "CAST(NULL AS TIMESTAMP) AS ts1",
-        "CAST(NULL AS TIMESTAMP) AS ts2",
-        "n_events AS n",
-        "sum_value AS x1",
-        "CAST(NULL AS DOUBLE) AS x2",
-        "CAST(NULL AS DOUBLE) AS x3",
-    )
-    return jp.unionAll(fu).unionAll(zs).unionAll(ao).unionAll(rj)
+    return EVENTS_ANALYTICS.build(spark, sf_dir)
+
+
+TEMPORAL_JOINS = Federation(
+    "facet STRING, id1 BIGINT, id2 BIGINT, ts1 TIMESTAMP, ts2 TIMESTAMP, "
+    "n BIGINT, x DOUBLE",
+    [
+        ("asof", "asof_purchase_prior_view", _ASOF),
+        ("range", "range_join_order_day_events",
+         {"id1": "o_orderkey", "n": "n_events", "x": "sum_value"}),
+    ],
+)
 
 
 @query(
     "temporal_joins",
-    oracle=f"""
-SELECT 'asof' AS facet, purchase_id AS id1, user_id AS id2,
-       CAST(purchase_ts AS TIMESTAMP) AS ts1,
-       CAST(prev_view_ts AS TIMESTAMP) AS ts2,
-       gap_s AS n, {_ND} AS x
-FROM ({_oracle('asof_purchase_prior_view')}) ao
-UNION ALL
-SELECT 'range', o_orderkey, {_NB}, {_NT}, {_NT}, n_events, sum_value
-FROM ({_oracle('range_join_order_day_events')}) rj
-""",
+    oracle=TEMPORAL_JOINS.oracle,
     tags=("rangejoin", "asof", "events", "join"),
     exported=False,  # driver-visible via events_analytics' asof/range facets
 )
@@ -356,56 +202,36 @@ def temporal_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     falling in each open order's 24 h window via the bucketed-grid
     equi-join — never a BroadcastNestedLoopJoin; id1 = order, n =
     event count, x = summed value)."""
-    ao = asof.asof_purchase_prior_view(spark, sf_dir).selectExpr(
-        "'asof' AS facet",
-        "purchase_id AS id1",
-        "user_id AS id2",
-        "purchase_ts AS ts1",
-        "prev_view_ts AS ts2",
-        "gap_s AS n",
-        "CAST(NULL AS DOUBLE) AS x",
-    )
-    rj = rangejoin.range_join_order_day_events(spark, sf_dir).selectExpr(
-        "'range' AS facet",
-        "o_orderkey AS id1",
-        "CAST(NULL AS BIGINT) AS id2",
-        "CAST(NULL AS TIMESTAMP) AS ts1",
-        "CAST(NULL AS TIMESTAMP) AS ts2",
-        "n_events AS n",
-        "sum_value AS x",
-    )
-    return ao.unionAll(rj)
+    return TEMPORAL_JOINS.build(spark, sf_dir)
+
+
+SCALAR_PREDICATE_FACETS = Federation(
+    "facet STRING, k BIGINT, s1 STRING, s2 STRING, s3 STRING, n1 BIGINT, "
+    "n2 BIGINT, n3 BIGINT, n4 BIGINT, x DOUBLE, t1 TIMESTAMP, t2 TIMESTAMP",
+    [
+        ("date_fns", "scalar_date_functions",
+         {"k": "o_orderkey", "n1": "CAST(o_year AS BIGINT)",
+          "n2": "CAST(o_quarter AS BIGINT)", "n3": "CAST(o_month AS BIGINT)",
+          "n4": "CAST(o_day AS BIGINT)", "t1": "CAST(due_date AS TIMESTAMP)",
+          "t2": "CAST(order_month AS TIMESTAMP)"}),
+        ("part_fns", "scalar_part_functions",
+         {"k": "p_partkey", "s1": "uname", "s2": "prefix", "s3": "brand_type",
+          "n1": "CAST(name_len AS BIGINT)", "n2": "CAST(size_dev AS BIGINT)",
+          "n3": "CAST(size_mod AS BIGINT)",
+          "n4": "CAST(price_sqrt_floor AS BIGINT)", "x": "taxed_price"}),
+        ("like_regexp", "like_regexp_filters",
+         {"k": "p_partkey", "s1": "p_name", "s2": "p_brand"}),
+        ("null_bucketing", "null_bucketing",
+         {"s1": "bal_bucket", "n1": "n", "x": "avg_bal"}),
+        ("minmax_by", "minmax_by_lookup",
+         {"s1": "n_name", "s2": "richest_customer", "x": "max_bal"}),
+    ],
+)
 
 
 @query(
     "scalar_predicate_facets",
-    oracle=f"""
-SELECT 'date_fns' AS facet, o_orderkey AS k,
-       {_NV} AS s1, {_NV} AS s2, {_NV} AS s3,
-       CAST(o_year AS BIGINT) AS n1, CAST(o_quarter AS BIGINT) AS n2,
-       CAST(o_month AS BIGINT) AS n3, CAST(o_day AS BIGINT) AS n4,
-       {_ND} AS x, CAST(due_date AS TIMESTAMP) AS t1,
-       CAST(order_month AS TIMESTAMP) AS t2
-FROM ({_oracle('scalar_date_functions')}) df
-UNION ALL
-SELECT 'part_fns', p_partkey, uname, prefix, brand_type,
-       CAST(name_len AS BIGINT), CAST(size_dev AS BIGINT),
-       CAST(size_mod AS BIGINT), CAST(price_sqrt_floor AS BIGINT),
-       taxed_price, {_NT}, {_NT}
-FROM ({_oracle('scalar_part_functions')}) pf
-UNION ALL
-SELECT 'like_regexp', p_partkey, p_name, p_brand, {_NV},
-       {_NB}, {_NB}, {_NB}, {_NB}, {_ND}, {_NT}, {_NT}
-FROM ({_oracle('like_regexp_filters')}) lr
-UNION ALL
-SELECT 'null_bucketing', {_NB}, bal_bucket, {_NV}, {_NV},
-       n, {_NB}, {_NB}, {_NB}, avg_bal, {_NT}, {_NT}
-FROM ({_oracle('null_bucketing')}) nb
-UNION ALL
-SELECT 'minmax_by', {_NB}, n_name, richest_customer, {_NV},
-       {_NB}, {_NB}, {_NB}, {_NB}, max_bal, {_NT}, {_NT}
-FROM ({_oracle('minmax_by_lookup')}) mm
-""",
+    oracle=SCALAR_PREDICATE_FACETS.oracle,
     tags=("relational", "functions", "predicates"),
     exported=False,  # driver-visible via facets2.scalar_setops_facets
 )
@@ -425,75 +251,4 @@ def scalar_predicate_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pure scan-projection facets stay narrow; the two aggregate facets
     shuffle on tiny key domains."""
-    d = relational.scalar_date_functions(spark, sf_dir).selectExpr(
-        "'date_fns' AS facet",
-        "o_orderkey AS k",
-        "CAST(NULL AS STRING) AS s1",
-        "CAST(NULL AS STRING) AS s2",
-        "CAST(NULL AS STRING) AS s3",
-        "CAST(o_year AS BIGINT) AS n1",
-        "CAST(o_quarter AS BIGINT) AS n2",
-        "CAST(o_month AS BIGINT) AS n3",
-        "CAST(o_day AS BIGINT) AS n4",
-        "CAST(NULL AS DOUBLE) AS x",
-        "CAST(due_date AS TIMESTAMP) AS t1",
-        "CAST(order_month AS TIMESTAMP) AS t2",
-    )
-    nt = F.lit(None).cast("timestamp")
-    p = relational.scalar_part_functions(spark, sf_dir).selectExpr(
-        "'part_fns' AS facet",
-        "p_partkey AS k",
-        "uname AS s1",
-        "prefix AS s2",
-        "brand_type AS s3",
-        "CAST(name_len AS BIGINT) AS n1",
-        "CAST(size_dev AS BIGINT) AS n2",
-        "CAST(size_mod AS BIGINT) AS n3",
-        "CAST(price_sqrt_floor AS BIGINT) AS n4",
-        "taxed_price AS x",
-        "CAST(NULL AS TIMESTAMP) AS t1",
-        "CAST(NULL AS TIMESTAMP) AS t2",
-    )
-    lr = relational2.like_regexp_filters(spark, sf_dir).selectExpr(
-        "'like_regexp' AS facet",
-        "p_partkey AS k",
-        "p_name AS s1",
-        "p_brand AS s2",
-        "CAST(NULL AS STRING) AS s3",
-        "CAST(NULL AS BIGINT) AS n1",
-        "CAST(NULL AS BIGINT) AS n2",
-        "CAST(NULL AS BIGINT) AS n3",
-        "CAST(NULL AS BIGINT) AS n4",
-        "CAST(NULL AS DOUBLE) AS x",
-        "CAST(NULL AS TIMESTAMP) AS t1",
-        "CAST(NULL AS TIMESTAMP) AS t2",
-    )
-    nb_ = relational2.null_bucketing(spark, sf_dir).selectExpr(
-        "'null_bucketing' AS facet",
-        "CAST(NULL AS BIGINT) AS k",
-        "bal_bucket AS s1",
-        "CAST(NULL AS STRING) AS s2",
-        "CAST(NULL AS STRING) AS s3",
-        "n AS n1",
-        "CAST(NULL AS BIGINT) AS n2",
-        "CAST(NULL AS BIGINT) AS n3",
-        "CAST(NULL AS BIGINT) AS n4",
-        "avg_bal AS x",
-        "CAST(NULL AS TIMESTAMP) AS t1",
-        "CAST(NULL AS TIMESTAMP) AS t2",
-    )
-    mm = relational2.minmax_by_lookup(spark, sf_dir).selectExpr(
-        "'minmax_by' AS facet",
-        "CAST(NULL AS BIGINT) AS k",
-        "n_name AS s1",
-        "richest_customer AS s2",
-        "CAST(NULL AS STRING) AS s3",
-        "CAST(NULL AS BIGINT) AS n1",
-        "CAST(NULL AS BIGINT) AS n2",
-        "CAST(NULL AS BIGINT) AS n3",
-        "CAST(NULL AS BIGINT) AS n4",
-        "max_bal AS x",
-        "CAST(NULL AS TIMESTAMP) AS t1",
-        "CAST(NULL AS TIMESTAMP) AS t2",
-    )
-    return d.unionAll(p).unionAll(lr).unionAll(nb_).unionAll(mm)
+    return SCALAR_PREDICATE_FACETS.build(spark, sf_dir)

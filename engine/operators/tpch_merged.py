@@ -4,9 +4,11 @@ The driver's correctness gate records ~50 entries, so TPC-H shapes
 with kindred structure are federated under facet columns: each facet
 is the UNCHANGED library query (relational*.py, still individually
 oracle-checked by the local gate via ``exported=False`` registration),
-re-projected onto a shared schema and unioned.  The oracle is built
-the same way — each component's oracle SQL wrapped as a subquery — so
-the cross-engine check still pins every component's values exactly.
+re-projected onto a shared schema and unioned.  Each federation is
+declared once as a ``registry.Federation``, which generates both the
+Spark union and the oracle — each component's oracle SQL wrapped as a
+subquery — so the cross-engine check still pins every component's
+values exactly.
 
 Structurally distinct shapes (q1 q2 q3 q5 q10 q13 q18 q22) keep their
 own registry rows.
@@ -15,33 +17,25 @@ own registry rows.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # Importing the component modules registers their specs (and their
-# oracles) before the lookups below run.
+# oracles) before the federations below look them up.
 from engine.operators import relational, relational2, relational3  # noqa: F401
-from engine.registry import _REGISTRY, query
+from engine.registry import Federation, query
 
-
-def _oracle(name: str) -> str:
-    return _REGISTRY[name].oracle
-
-
-_NULL_B = "CAST(NULL AS BIGINT)"
-_NULL_D = "CAST(NULL AS DOUBLE)"
-_NULL_V = "CAST(NULL AS VARCHAR)"
+ORDER_PRIORITY = Federation(
+    "facet STRING, key STRING, n1 BIGINT, n2 BIGINT",
+    [
+        ("q4", "q4_order_priority", {"key": "o_orderpriority", "n1": "order_count"}),
+        ("q12", "q12_priority_lines",
+         {"key": "l_linestatus", "n1": "high_line_count", "n2": "low_line_count"}),
+    ],
+)
 
 
 @query(
     "q4_q12_order_priority",
-    oracle=f"""
-SELECT 'q4' AS facet, o_orderpriority AS key,
-       order_count AS n1, {_NULL_B} AS n2
-FROM ({_oracle('q4_order_priority')}) q4
-UNION ALL
-SELECT 'q12', l_linestatus, high_line_count, low_line_count
-FROM ({_oracle('q12_priority_lines')}) q12
-""",
+    oracle=ORDER_PRIORITY.oracle,
     tags=("relational", "tpch", "exists", "aggregate"),
 )
 def q4_q12_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,36 +43,23 @@ def q4_q12_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority counts: key = priority, n1 = orders) and `q12` (shipmode
     line counts split by priority class: key = linestatus, n1/n2 =
     high/low counts)."""
-    q4 = relational.q4_order_priority(spark, sf_dir).selectExpr(
-        "'q4' AS facet",
-        "o_orderpriority AS key",
-        "order_count AS n1",
-        "CAST(NULL AS BIGINT) AS n2",
-    )
-    q12 = relational.q12_priority_lines(spark, sf_dir).selectExpr(
-        "'q12' AS facet",
-        "l_linestatus AS key",
-        "high_line_count AS n1",
-        "low_line_count AS n2",
-    )
-    return q4.unionAll(q12)
+    return ORDER_PRIORITY.build(spark, sf_dir)
+
+
+REVENUE = Federation(
+    "facet STRING, x DOUBLE, n BIGINT",
+    [
+        ("q6", "q6_forecast_revenue", {"x": "revenue", "n": "n_lines"}),
+        ("q14", "q14_promo_revenue", {"x": "promo_revenue_pct"}),
+        ("q17", "q17_small_quantity_revenue", {"x": "avg_yearly"}),
+        ("q19", "q19_disjunctive_revenue", {"x": "revenue", "n": "n_lines"}),
+    ],
+)
 
 
 @query(
     "q6_q14_q17_q19_revenue",
-    oracle=f"""
-SELECT 'q6' AS facet, revenue AS x, n_lines AS n
-FROM ({_oracle('q6_forecast_revenue')}) q6
-UNION ALL
-SELECT 'q14', promo_revenue_pct, {_NULL_B}
-FROM ({_oracle('q14_promo_revenue')}) q14
-UNION ALL
-SELECT 'q17', avg_yearly, {_NULL_B}
-FROM ({_oracle('q17_small_quantity_revenue')}) q17
-UNION ALL
-SELECT 'q19', revenue, n_lines
-FROM ({_oracle('q19_disjunctive_revenue')}) q19
-""",
+    oracle=REVENUE.oracle,
     tags=("relational", "tpch", "scan", "aggregate"),
 )
 def q6_q14_q17_q19_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,42 +68,26 @@ def q6_q14_q17_q19_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     `q17` (small-quantity avg-yearly via correlated per-part mean),
     `q19` (disjunctive bracket predicate). Each facet exercises a
     different filter/aggregation shape over lineitem."""
-    q6 = relational.q6_forecast_revenue(spark, sf_dir).selectExpr(
-        "'q6' AS facet",
-        "revenue AS x",
-        "n_lines AS n",
-    )
-    q14 = relational.q14_promo_revenue(spark, sf_dir).selectExpr(
-        "'q14' AS facet",
-        "promo_revenue_pct AS x",
-        "CAST(NULL AS BIGINT) AS n",
-    )
-    q17 = relational2.q17_small_quantity_revenue(spark, sf_dir).selectExpr(
-        "'q17' AS facet",
-        "avg_yearly AS x",
-        "CAST(NULL AS BIGINT) AS n",
-    )
-    q19 = relational2.q19_disjunctive_revenue(spark, sf_dir).selectExpr(
-        "'q19' AS facet",
-        "revenue AS x",
-        "n_lines AS n",
-    )
-    return q6.unionAll(q14).unionAll(q17).unionAll(q19)
+    return REVENUE.build(spark, sf_dir)
+
+
+NATION_TRADE = Federation(
+    "facet STRING, k1 STRING, k2 STRING, o_year BIGINT, x DOUBLE",
+    [
+        ("q7", "q7_nation_volume",
+         {"k1": "supp_nation", "k2": "cust_nation",
+          "o_year": "CAST(o_year AS BIGINT)", "x": "volume"}),
+        ("q8", "q8_market_share",
+         {"o_year": "CAST(o_year AS BIGINT)", "x": "mkt_share"}),
+        ("q9", "q9_product_profit",
+         {"k1": "nation", "o_year": "CAST(o_year AS BIGINT)", "x": "profit"}),
+    ],
+)
 
 
 @query(
     "q7_q8_q9_nation_trade",
-    oracle=f"""
-SELECT 'q7' AS facet, supp_nation AS k1, cust_nation AS k2,
-       CAST(o_year AS BIGINT) AS o_year, volume AS x
-FROM ({_oracle('q7_nation_volume')}) q7
-UNION ALL
-SELECT 'q8', {_NULL_V}, {_NULL_V}, CAST(o_year AS BIGINT), mkt_share
-FROM ({_oracle('q8_market_share')}) q8
-UNION ALL
-SELECT 'q9', nation, {_NULL_V}, CAST(o_year AS BIGINT), profit
-FROM ({_oracle('q9_product_profit')}) q9
-""",
+    oracle=NATION_TRADE.oracle,
     tags=("relational", "tpch", "join", "aggregate", "headline"),
 )
 def q7_q8_q9_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,45 +104,29 @@ def q7_q8_q9_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     trips of 30-300 ms each (profiled round 11); overlapped, the wall
     is roughly the longest facet. Each facet's result is a few hundred
     aggregated rows, recomputed per call."""
-    q7 = relational2.q7_nation_volume(spark, sf_dir).selectExpr(
-        "'q7' AS facet",
-        "supp_nation AS k1",
-        "cust_nation AS k2",
-        "CAST(o_year AS BIGINT) AS o_year",
-        "volume AS x",
-    )
-    q8 = relational3.q8_market_share(spark, sf_dir).selectExpr(
-        "'q8' AS facet",
-        "CAST(NULL AS STRING) AS k1",
-        "CAST(NULL AS STRING) AS k2",
-        "CAST(o_year AS BIGINT) AS o_year",
-        "mkt_share AS x",
-    )
-    q9 = relational2.q9_product_profit(spark, sf_dir).selectExpr(
-        "'q9' AS facet",
-        "nation AS k1",
-        "CAST(NULL AS STRING) AS k2",
-        "CAST(o_year AS BIGINT) AS o_year",
-        "profit AS x",
-    )
     from engine.plans import checkpoint_concurrently
 
     q7c, q8c, q9c = checkpoint_concurrently(
-        [("q7q8q9_q7", q7), ("q7q8q9_q8", q8), ("q7q8q9_q9", q9)]
+        [(f"q7q8q9_{tag}", df) for tag, df in NATION_TRADE.frames(spark, sf_dir)]
     )
     return q7c.unionAll(q8c).unionAll(q9c)
 
 
+PART_STATS = Federation(
+    "facet STRING, k1 STRING, k2 STRING, k3 BIGINT, n BIGINT, x DOUBLE",
+    [
+        ("q11", "q11_important_parts",
+         {"k3": "CAST(p_partkey AS BIGINT)", "x": "part_value"}),
+        ("q16", "q16_part_supplier_counts",
+         {"k1": "p_brand", "k2": "p_type", "k3": "CAST(p_size AS BIGINT)",
+          "n": "supplier_cnt"}),
+    ],
+)
+
+
 @query(
     "q11_q16_part_stats",
-    oracle=f"""
-SELECT 'q11' AS facet, {_NULL_V} AS k1, {_NULL_V} AS k2,
-       CAST(p_partkey AS BIGINT) AS k3, {_NULL_B} AS n, part_value AS x
-FROM ({_oracle('q11_important_parts')}) q11
-UNION ALL
-SELECT 'q16', p_brand, p_type, CAST(p_size AS BIGINT), supplier_cnt, {_NULL_D}
-FROM ({_oracle('q16_part_supplier_counts')}) q16
-""",
+    oracle=PART_STATS.oracle,
     tags=("relational", "tpch", "aggregate", "having"),
 )
 def q11_q16_part_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,38 +134,25 @@ def q11_q16_part_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts above a scalar-subquery threshold: k3 = partkey, x = stocked
     value) and `q16` (distinct-supplier counts per brand/type/size:
     k1/k2 = brand/type, k3 = size, n = suppliers)."""
-    q11 = relational3.q11_important_parts(spark, sf_dir).selectExpr(
-        "'q11' AS facet",
-        "CAST(NULL AS STRING) AS k1",
-        "CAST(NULL AS STRING) AS k2",
-        "CAST(p_partkey AS BIGINT) AS k3",
-        "CAST(NULL AS BIGINT) AS n",
-        "part_value AS x",
-    )
-    q16 = relational2.q16_part_supplier_counts(spark, sf_dir).selectExpr(
-        "'q16' AS facet",
-        "p_brand AS k1",
-        "p_type AS k2",
-        "CAST(p_size AS BIGINT) AS k3",
-        "supplier_cnt AS n",
-        "CAST(NULL AS DOUBLE) AS x",
-    )
-    return q11.unionAll(q16)
+    return PART_STATS.build(spark, sf_dir)
+
+
+SUPPLIER_AUDIT = Federation(
+    "facet STRING, s_name STRING, k STRING, n BIGINT, x DOUBLE",
+    [
+        ("q15", "q15_top_supplier",
+         {"s_name": "s_name", "n": "CAST(s_suppkey AS BIGINT)",
+          "x": "total_revenue"}),
+        ("q20", "q20_dominant_suppliers", {"s_name": "s_name", "k": "n_name"}),
+        ("q21", "q21_last_to_ship_suppliers",
+         {"s_name": "s_name", "n": "CAST(numwait AS BIGINT)"}),
+    ],
+)
 
 
 @query(
     "q15_q20_q21_supplier_audit",
-    oracle=f"""
-SELECT 'q15' AS facet, s_name, {_NULL_V} AS k,
-       CAST(s_suppkey AS BIGINT) AS n, total_revenue AS x
-FROM ({_oracle('q15_top_supplier')}) q15
-UNION ALL
-SELECT 'q20', s_name, n_name, {_NULL_B}, {_NULL_D}
-FROM ({_oracle('q20_dominant_suppliers')}) q20
-UNION ALL
-SELECT 'q21', s_name, {_NULL_V}, CAST(numwait AS BIGINT), {_NULL_D}
-FROM ({_oracle('q21_last_to_ship_suppliers')}) q21
-""",
+    oracle=SUPPLIER_AUDIT.oracle,
     tags=("relational", "tpch", "subquery", "exists"),
 )
 def q15_q20_q21_supplier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,25 +161,4 @@ def q15_q20_q21_supplier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue), `q20` (suppliers dominating a part's stock via nested IN
     subqueries: k = nation), `q21` (multi-EXISTS last-to-ship wait
     counts: n = waits)."""
-    q15 = relational2.q15_top_supplier(spark, sf_dir).selectExpr(
-        "'q15' AS facet",
-        "s_name",
-        "CAST(NULL AS STRING) AS k",
-        "CAST(s_suppkey AS BIGINT) AS n",
-        "total_revenue AS x",
-    )
-    q20 = relational3.q20_dominant_suppliers(spark, sf_dir).selectExpr(
-        "'q20' AS facet",
-        "s_name",
-        "n_name AS k",
-        "CAST(NULL AS BIGINT) AS n",
-        "CAST(NULL AS DOUBLE) AS x",
-    )
-    q21 = relational3.q21_last_to_ship_suppliers(spark, sf_dir).selectExpr(
-        "'q21' AS facet",
-        "s_name",
-        "CAST(NULL AS STRING) AS k",
-        "CAST(numwait AS BIGINT) AS n",
-        "CAST(NULL AS DOUBLE) AS x",
-    )
-    return q15.unionAll(q20).unionAll(q21)
+    return SUPPLIER_AUDIT.build(spark, sf_dir)

@@ -4,12 +4,15 @@ operator to (a) its Spark implementation and (b) its DuckDB oracle SQL.
 ``__spark_entry__.py`` exposes this registry to the driver; the judge
 checks it against SURVEY.md §2's operator inventory. Every operator
 module registers its queries at import time via the ``@query``
-decorator.
+decorator; a facet union over registered queries is declared once as a
+``Federation``, which generates its Spark union and its oracle.
 """
 
 from __future__ import annotations
 
+import functools
 import importlib
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -88,6 +91,89 @@ def query(
         return fn
 
     return deco
+
+
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+# A facet maps schema columns to expressions over its component's
+# output: one text for both engines, or a (spark, duckdb) pair where
+# the engines' function names differ.
+Expr = str | tuple[str, str]
+
+
+class Federation:
+    """A federated registry query declared once: the union's Spark DDL
+    ``schema`` plus ``facets``, a list of ``(tag, component, {column:
+    expr})`` entries, each reprojecting one registered component onto
+    the schema. Both engines' projections are generated from it:
+
+    - a schema column the facet does not map becomes ``CAST(NULL AS
+      <declared type>)`` (DuckDB accepts Spark's type names); an
+      unmapped ``facet`` column becomes the tag literal;
+    - a bare column name is quoted per engine (backtick / double
+      quote); any other expression is emitted verbatim on both.
+
+    ``oracle`` is the UNION ALL of the component oracles as
+    subqueries; ``project(tag, df)`` reprojects a frame the caller
+    built; ``frames`` runs every component and projects it; ``build``
+    unions the frames in spec order.
+    """
+
+    def __init__(self, schema: str, facets: list[tuple[str, str, dict[str, Expr]]]):
+        self.columns = [tuple(c.split(None, 1)) for c in schema.split(",")]
+        names = {name for name, _ in self.columns}
+        self.components: dict[str, str] = {}
+        self._spark: dict[str, list[str] | None] = {}
+        branches = []
+        for tag, component, mapping in facets:
+            if tag in self.components:
+                raise ValueError(f"duplicate facet tag {tag!r}")
+            if component not in _REGISTRY or _REGISTRY[component].oracle is None:
+                raise ValueError(f"facet {tag!r}: no oracled query {component!r}")
+            unknown = sorted(set(mapping) - names)
+            if unknown:
+                raise ValueError(f"facet {tag!r} maps {unknown}, not in the schema")
+            self.components[tag] = component
+            spark_cols, duck_cols = [], []
+            for name, typ in self.columns:
+                expr = mapping.get(name)
+                if expr is None:
+                    expr = f"'{tag}'" if name == "facet" else f"CAST(NULL AS {typ})"
+                spark_expr, duck_expr = (expr, expr) if isinstance(expr, str) else expr
+                spark_cols.append(_render(spark_expr, name, "`"))
+                duck_cols.append(_render(duck_expr, name, '"'))
+            # A facet that maps every column to itself already has the
+            # schema: it is passed through unprojected.
+            identity = all(mapping.get(name) == name for name in names)
+            self._spark[tag] = None if identity else spark_cols
+            branches.append(
+                f"SELECT {', '.join(duck_cols)}\n"
+                f"FROM ({_REGISTRY[component].oracle}) f{len(branches)}"
+            )
+        self.oracle = "\nUNION ALL\n".join(branches)
+
+    def project(self, tag: str, df: DataFrame) -> DataFrame:
+        cols = self._spark[tag]
+        return df if cols is None else df.selectExpr(*cols)
+
+    def frames(self, spark: SparkSession, sf_dir: str) -> list[tuple[str, DataFrame]]:
+        """Every facet's projected component frame, in spec order."""
+        return [
+            (tag, self.project(tag, _REGISTRY[component].fn(spark, sf_dir)))
+            for tag, component in self.components.items()
+        ]
+
+    def build(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        return functools.reduce(
+            DataFrame.unionAll, (df for _, df in self.frames(spark, sf_dir))
+        )
+
+
+def _render(expr: str, name: str, quote: str) -> str:
+    if not _IDENT.fullmatch(expr):
+        return f"{expr} AS {name}"
+    quoted = f"{quote}{expr}{quote}"
+    return quoted if expr == name else f"{quoted} AS {name}"
 
 
 def _load_all() -> None:

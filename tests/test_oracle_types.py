@@ -21,11 +21,24 @@ import duckdb
 import pytest
 
 from engine.io import TABLES, table_path
-from engine.registry import all_queries_including_library
+from engine.operators import facets, facets2, tpch_merged
+from engine.registry import Federation, all_queries_including_library
 from tests.conftest import SF_SMOKE
-from tools.check_oracle import unsafe_type_tokens
+from tools.check_oracle import (
+    _DUCK_FAMILY,
+    _SPARK_FAMILY,
+    _family,
+    unsafe_type_tokens,
+)
 
 SPECS = all_queries_including_library()
+_NAME_OF_ORACLE = {s.oracle: n for n, s in SPECS.items()}
+FEDERATIONS = {
+    _NAME_OF_ORACLE[v.oracle]: v
+    for module in (facets, facets2, tpch_merged)
+    for v in vars(module).values()
+    if isinstance(v, Federation)
+}
 
 
 @pytest.fixture(scope="module")
@@ -55,6 +68,23 @@ def test_oracle_result_types_are_fetch_safe(duck, name):
         "CAST the offending expression (e.g. sum(CASE ...) is HUGEINT → "
         "CAST(... AS BIGINT))."
     )
+
+
+@pytest.mark.parametrize("name", sorted(FEDERATIONS))
+def test_federation_oracle_binds_to_its_declared_schema(duck, name):
+    """A federation's generated oracle must bind to exactly its declared
+    column names, in order, each in the declared type's fetch family —
+    so a spec whose schema drifted from its components fails here,
+    without Spark and without running the oracle."""
+    fed = FEDERATIONS[name]
+    rel = duck.sql(fed.oracle)  # lazy: binds the plan, runs nothing
+    assert rel.columns == [col for col, _ in fed.columns]
+    drift = [
+        (col, typ, str(duck_type))
+        for (col, typ), duck_type in zip(fed.columns, rel.types)
+        if _family(_SPARK_FAMILY, typ.lower()) != _family(_DUCK_FAMILY, str(duck_type))
+    ]
+    assert not drift, f"{name}: declared vs DuckDB type families differ: {drift}"
 
 
 def test_gate_reports_timestamptz_as_one_token():

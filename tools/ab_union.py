@@ -25,35 +25,11 @@ def med(xs):
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from engine.operators import relational, relational2, relational3, similarity
+    from engine.operators import similarity
+    from engine.operators.tpch_merged import NATION_TRADE
     from engine.plans import checkpoint_concurrently
 
     spark = get_spark("ab")
-
-    def q789_parts(spark, sf_dir):
-        q7 = relational2.q7_nation_volume(spark, sf_dir).select(
-            F.lit("q7").alias("facet"),
-            F.col("supp_nation").alias("k1"),
-            F.col("cust_nation").alias("k2"),
-            F.col("o_year").cast("bigint").alias("o_year"),
-            F.col("volume").alias("x"),
-        )
-        nv = F.lit(None).cast("string")
-        q8 = relational3.q8_market_share(spark, sf_dir).select(
-            F.lit("q8").alias("facet"),
-            nv.alias("k1"),
-            nv.alias("k2"),
-            F.col("o_year").cast("bigint").alias("o_year"),
-            F.col("mkt_share").alias("x"),
-        )
-        q9 = relational2.q9_product_profit(spark, sf_dir).select(
-            F.lit("q9").alias("facet"),
-            F.col("nation").alias("k1"),
-            nv.alias("k2"),
-            F.col("o_year").cast("bigint").alias("o_year"),
-            F.col("profit").alias("x"),
-        )
-        return [("q7", q7), ("q8", q8), ("q9", q9)]
 
     def ann_parts(spark, sf_dir):
         cols = ["query_id", "neighbor_id", "cos_sim", "rn"]
@@ -64,7 +40,7 @@ def main() -> None:
             ("hardneg", similarity.hard_negative_topk(spark, sf_dir).select(F.lit("hardneg").alias("method"), *cols)),
         ]
 
-    for label, parts_fn in (("q7_q8_q9", q789_parts), ("ann_topk", ann_parts)):
+    for label, parts_fn in (("q7_q8_q9", NATION_TRADE.frames), ("ann_topk", ann_parts)):
         # warm both shapes
         for variant in ("seq", "conc"):
             parts = parts_fn(spark, SF_DIR)
