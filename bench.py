@@ -12,70 +12,30 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# perfbench's modules import each other flat; appended, it shadows nothing
+sys.path.append(os.path.join(ROOT, "perfbench"))
 
 from engine.registry import all_queries_including_library
 from engine.session import get_spark
+from measure import SparkStatus, summarize_jobs
+from tools.query_profile import keep_every_stage
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Executor-side signal (VERDICT r11 #7): at sf0.1 every headliner is
-# driver-latency-bound (8-core wall ≈ 32-core wall), so an executor-
-# side regression is invisible in the wall-time numbers. Enable the UI
-# status store for the bench session (measured overhead: within run-
-# to-run noise — the listener bus is on in every default Spark deploy)
-# and record, per query, the total executor run time of its measured
-# runs' stages from the REST API. Purely additive: the timed loop, the
-# one-line JSON contract and $SPARK_GRAFT_CPUS handling are unchanged;
-# set SPARK_GRAFT_UI=0 to drop the signal.
-os.environ.setdefault("SPARK_GRAFT_UI", "1")
 
-
-def _executor_run_ms(spark, t_start: float, t_end: float) -> float | None:
-    """Sum executorRunTime (ms) over the COMPLETE stages of every job
-    submitted in [t_start, t_end) (epoch seconds), via the UI REST
-    API. Time-window matching rather than job groups: facet jobs
-    submitted from checkpoint_concurrently's pool threads don't
-    inherit the main thread's group, and the bench loop is serial so
-    the window owns its jobs. None when the UI is off or any lookup
-    fails — the signal is best-effort and must never fail the bench."""
-    import datetime as _dt
-    import json as _json
-    import urllib.request
-
-    try:
-        base = spark.sparkContext.uiWebUrl
-        if not base:
-            return None
-        app = spark.sparkContext.applicationId
-
-        def get(path: str):
-            with urllib.request.urlopen(
-                f"{base}/api/v1/applications/{app}{path}", timeout=10
-            ) as r:
-                return _json.load(r)
-
-        stage_ids = set()
-        for job in get("/jobs"):
-            sub = job.get("submissionTime")
-            if not sub:
-                continue
-            # "2031-03-01T12:00:00.123GMT" → epoch
-            ts = (
-                _dt.datetime.strptime(
-                    sub.replace("GMT", "+0000"), "%Y-%m-%dT%H:%M:%S.%f%z"
-                ).timestamp()
-            )
-            if t_start <= ts < t_end:
-                stage_ids.update(job.get("stageIds", ()))
-        total = 0.0
-        for sid in sorted(stage_ids):
-            for att in get(f"/stages/{sid}"):
-                if att.get("status") == "COMPLETE":
-                    total += att.get("executorRunTime", 0)
-        return round(total, 1)
-    except Exception:
-        return None
+def _windowed(status: SparkStatus, group: str, op):
+    """Run ``op()`` inside a status-store job window that opens before
+    and closes after its timed interval; the window is read afterwards,
+    outside the timing. Returns op's result, its wall seconds and
+    ``summarize_jobs`` of the jobs it ran."""
+    win = status.window(group)
+    t0 = time.perf_counter()
+    out = op()
+    t1 = time.perf_counter()
+    status.close_window(win)
+    return out, t1 - t0, summarize_jobs(status.jobs(win), t0, t1)
 
 
 def _calibration(spark) -> dict:
@@ -124,7 +84,7 @@ def _calibration(spark) -> dict:
     return {"cpu_md5_sec": med(cpu), "spark_fixed_job_sec": med(job)}
 
 
-def _store_microbench(spark) -> dict:
+def _store_microbench(spark, status: SparkStatus) -> dict:
     """Versioned-store metadata-plane microbench (VERDICT r10 #5):
     the 13 headliners contain no store row, so a commit-path or
     stream-planning regression was invisible to BENCH round-over-
@@ -133,8 +93,9 @@ def _store_microbench(spark) -> dict:
     range files — then medians of the three operations a production
     refresh loop runs continuously: a one-key upsert commit (stage +
     plan + claim), head resolution (checkpoint/delta-chain read), and
-    one batch-CDF window read. Everything in a temp dir, removed
-    after."""
+    one batch-CDF window read. The commit and the CDF read also report
+    their median Spark job count, a noise-free counter next to the
+    seconds. Everything in a temp dir, removed after."""
     import shutil
     import tempfile
 
@@ -158,24 +119,36 @@ def _store_microbench(spark) -> dict:
         )
         vs.commit_overwrite(df, store, "part")
         commit_s, resolve_s, cdf_s = [], [], []
+        commit_jobs, cdf_jobs = [], []
+        keys = ["part", "k"]
         for i in range(5):
             chg = spark.createDataFrame(
                 [(str(i % 20), 4000 + i, f"new:{i}")],
                 "part string, k long, v string",
             )
-            t0 = time.perf_counter()
-            v = vs.commit_upsert(spark, store, chg, ["part", "k"])
-            commit_s.append(time.perf_counter() - t0)
+            v, dt, jobs = _windowed(
+                status,
+                "bench:upsert_commit",
+                lambda: vs.commit_upsert(spark, store, chg, keys),
+            )
+            commit_s.append(dt)
+            commit_jobs.append(jobs["jobs"])
             t0 = time.perf_counter()
             vs._read_manifest(store, v)
             resolve_s.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            vs.table_changes(spark, store, v - 1, v, ["part", "k"]).count()
-            cdf_s.append(time.perf_counter() - t0)
+            _, dt, jobs = _windowed(
+                status,
+                "bench:cdf_window",
+                lambda: vs.table_changes(spark, store, v - 1, v, keys).count(),
+            )
+            cdf_s.append(dt)
+            cdf_jobs.append(jobs["jobs"])
         return {
             "upsert_commit_sec": med(commit_s),
+            "upsert_commit_jobs": med(commit_jobs),
             "head_resolve_sec": med(resolve_s),
             "cdf_window_sec": med(cdf_s),
+            "cdf_window_jobs": med(cdf_jobs),
         }
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -197,6 +170,7 @@ def main() -> None:
     # cross-round numbers compare like for like.
     specs = all_queries_including_library()
     names = sys.argv[1:] or [n for n, s in specs.items() if "headline" in s.tags]
+    keep_every_stage()  # one sf0.1 run creates about 1,400 stages
     spark = get_spark("bench")
     # Warm the JVM once so per-query numbers measure the query, not
     # session startup: run every benched query at the tiny sf first
@@ -225,34 +199,40 @@ def main() -> None:
     # that build) and fully materializes via the noop sink — a bare
     # .count() would let Catalyst prune projections and under-measure
     # map-heavy queries.
+    # Executor-side signal (VERDICT r11 #7): at sf0.1 every headliner is
+    # driver-latency-bound, so an executor-side regression is invisible
+    # in wall time. Each run is its own job window on Spark's status
+    # store (kept with the UI off); its stages' executor run and CPU
+    # time are reported as the per-run mean (stages don't repeat
+    # identically enough across runs for a median to be meaningful).
     N_RUNS = 5
+    status = SparkStatus(spark)
     per_query: dict[str, float] = {}
-    per_query_exec_ms: dict[str, float] = {}
+    per_query_run_ms: dict[str, float] = {}
+    per_query_cpu_ms: dict[str, float] = {}
     for name in names:
-        spark.sparkContext.setJobDescription(f"bench:{name}")
-        t_q0 = time.time()
-        times = []
+        times, run_ms, cpu_ms = [], [], []
         for _ in range(N_RUNS):
-            t0 = time.time()
-            df = specs[name].fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            times.append(time.time() - t0)
+            _, dt, jobs = _windowed(
+                status,
+                f"bench:{name}",
+                lambda: specs[name].fn(spark, SF_DIR)
+                .write.format("noop")
+                .mode("overwrite")
+                .save(),
+            )
+            times.append(dt)
+            run_ms.append(jobs["run_ms"])
+            cpu_ms.append(jobs["cpu_ms"])
             spark.catalog.clearCache()
         per_query[name] = round(sorted(times)[N_RUNS // 2], 3)
-        exec_ms = _executor_run_ms(spark, t_q0, time.time())
-        if exec_ms is not None:
-            # total over N_RUNS → per-run mean (stages don't repeat
-            # identically enough across runs for a median to be
-            # meaningful at stage granularity)
-            per_query_exec_ms[name] = round(exec_ms / N_RUNS, 1)
+        per_query_run_ms[name] = round(sum(run_ms) / N_RUNS, 1)
+        per_query_cpu_ms[name] = round(sum(cpu_ms) / N_RUNS, 1)
         print(
             f"# {name}: median {per_query[name]}s of "
             + "/".join(f"{t:.3f}" for t in times)
-            + (
-                f" exec_ms/run={per_query_exec_ms[name]}"
-                if name in per_query_exec_ms
-                else ""
-            ),
+            + f" run_ms/run={per_query_run_ms[name]}"
+            + f" cpu_ms/run={per_query_cpu_ms[name]}",
             file=sys.stderr,
         )
 
@@ -279,7 +259,7 @@ def main() -> None:
     spark_scale = _REF_SPARK_ANCHOR / calibration["spark_fixed_job_sec"]
     cpu_scale = _REF_CPU_ANCHOR / calibration["cpu_md5_sec"]
     normalized = round(total * spark_scale, 3)
-    store_bench = _store_microbench(spark)
+    store_bench = _store_microbench(spark, status)
     print(f"# store: {store_bench}", file=sys.stderr)
     print(
         json.dumps(
@@ -300,13 +280,9 @@ def main() -> None:
                     for n, t in per_query.items()
                 },
                 "store": store_bench,
-                # mean executor run time per measured run (ms) — the
-                # executor-side signal; absent when the UI is disabled
-                **(
-                    {"queries_executor_run_ms": per_query_exec_ms}
-                    if per_query_exec_ms
-                    else {}
-                ),
+                # mean executor run and CPU time per measured run (ms)
+                "queries_executor_run_ms": per_query_run_ms,
+                "queries_executor_cpu_ms": per_query_cpu_ms,
                 "runs_per_query": N_RUNS,
                 "agg": "median",
                 "calibration": calibration,

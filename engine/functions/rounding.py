@@ -107,13 +107,13 @@ def duck_round_he(expr: str, ndigits: int) -> str:
 # inside F.expr()/selectExpr() strings. Why text: building a rounded
 # aggregate through the Column API costs ~15 Python<->JVM round trips
 # per output column (each operator call crosses py4j at ~1-3 ms on the
-# bench sandbox — measured round 11, tools/count_py4j.py), while one
-# F.expr ships the whole expression in a single parse. The `D` suffix
-# on literals is load-bearing: a bare `10000.0` parses as DECIMAL(6,1)
-# in Spark SQL (the Column path's F.lit(10000.0) is DOUBLE), which
-# would change the arithmetic. floor(DOUBLE) is BIGINT on both paths,
-# so the resolved expression trees — and therefore the values — are
-# identical to the Column versions.
+# bench sandbox — measured round 11; tools/query_profile.py counts
+# them), while one F.expr ships the whole expression in a single parse.
+# The `D` suffix on literals is load-bearing: a bare `10000.0` parses as
+# DECIMAL(6,1) in Spark SQL (the Column path's F.lit(10000.0) is
+# DOUBLE), which would change the arithmetic. floor(DOUBLE) is BIGINT on
+# both paths, so the resolved expression trees — and therefore the
+# values — are identical to the Column versions.
 
 
 def sql_round_he(expr: str, ndigits: int) -> str:

@@ -79,11 +79,11 @@ def normalize_fixture_ts(df: DataFrame) -> DataFrame:
 # data: every action on it still scans the parquet files. The point is
 # driver-side latency — building the scan costs ~10 Python↔JVM round
 # trips (read.parquet, dtypes, the ts normalization) at ~1-3 ms each on
-# the bench sandbox (measured round 11, tools/count_py4j.py), and a
-# federated query re-loads the same table per facet (q7_q8_q9 builds
-# 12 scans of 5 tables; the bench repeats that 5×). A WeakKeyDictionary
-# keeps a stopped/replaced session's entries collectable; a fresh
-# session wrapper simply re-misses.
+# the bench sandbox (measured round 11; tools/query_profile.py counts
+# them), and a federated query re-loads the same table per facet
+# (q7_q8_q9 builds 12 scans of 5 tables; the bench repeats that 5×). A
+# WeakKeyDictionary keeps a stopped/replaced session's entries
+# collectable; a fresh session wrapper simply re-misses.
 import weakref
 
 _SCAN_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (

@@ -55,12 +55,10 @@ def static_planning(
         spark.conf.set(sp_key, prev_sp)
 
 
-def _builder(app_name: str, shuffle_partitions: int | None = None) -> SparkSession.Builder:
-    """The engine's session builder, before ``getOrCreate``.
+def get_spark(app_name: str = "engine", shuffle_partitions: int | None = None) -> SparkSession:
+    """Build (or fetch) the engine's SparkSession.
 
-    ``get_spark`` is its one production caller; tools that need the
-    same engine with extra confs (the UI for ``tools/profile_query.py``)
-    add them to this builder instead of copying it.
+    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (default ``*``).
     """
     # Must run before the JVM launches: python workers inherit the
     # driver environment's PYTHONPATH, which is how the vendored
@@ -91,7 +89,7 @@ def _builder(app_name: str, shuffle_partitions: int | None = None) -> SparkSessi
             except ValueError:
                 n = os.cpu_count() or 32
             shuffle_partitions = max(8, n)
-    return (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -112,15 +110,7 @@ def _builder(app_name: str, shuffle_partitions: int | None = None) -> SparkSessi
         # "reduce performance slowdown" switch; query errors keep the
         # JVM stack trace, they just lose the Python-line pointer.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # UI (and with it the status store + REST API) stays off for
-        # leanness except where a caller needs task metrics — bench.py
-        # sets SPARK_GRAFT_UI=1 to record per-query executor run time
-        # (VERDICT r11 #7: at small SFs wall time is driver-latency-
-        # bound, so executor-side regressions need their own signal).
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # events.parquet stores TIMESTAMP(NANOS); Spark has no ns type —
         # read as long and convert in engine.io.load_table.
@@ -145,14 +135,7 @@ def _builder(app_name: str, shuffle_partitions: int | None = None) -> SparkSessi
         # ``__spark_entry__.entry`` receives, or a context started
         # before ``get_spark``) keeps Spark's 100.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .getOrCreate()
     )
-
-
-def get_spark(app_name: str = "engine", shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession.
-
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (default ``*``).
-    """
-    spark = _builder(app_name, shuffle_partitions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

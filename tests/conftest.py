@@ -6,6 +6,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from engine.session import get_spark
+from tools.query_profile import keep_every_stage
 
 # Slow-test manifest (see pytest.ini): node ids measured >= 4 s on a
 # quiet host get the `slow` marker at collection time and are
@@ -34,5 +35,8 @@ SF_CHECK = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
+    # test_query_profile.py reads status-store windows after about
+    # 4,500 stages of earlier tests (6,000 by the end of the suite)
+    keep_every_stage()
     s = get_spark("tests", shuffle_partitions=8)
     yield s

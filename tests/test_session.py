@@ -34,3 +34,8 @@ def test_repeated_queries_compile_nothing(spark):
     run()  # compiles only what earlier tests in this JVM did not
     assert _compiles(spark) > 0  # the counter counts
     assert run() == 0
+
+
+def test_session_runs_with_the_ui_off(spark):
+    assert spark.sparkContext.getConf().get("spark.ui.enabled") == "false"
+    assert spark.sparkContext.uiWebUrl is None
