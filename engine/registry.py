@@ -104,8 +104,10 @@ Expr = str | tuple[str, str]
 class Federation:
     """A federated registry query declared once: the union's Spark DDL
     ``schema`` plus ``facets``, a list of ``(tag, component, {column:
-    expr})`` entries, each reprojecting one registered component onto
-    the schema. Both engines' projections are generated from it:
+    expr})`` entries, each reprojecting one component onto the schema.
+    A component is a registered query's name or, for a facet with no
+    query of its own, its oracle SQL text; ``components`` maps tags to
+    names only. Both engines' projections are generated from it:
 
     - a schema column the facet does not map becomes ``CAST(NULL AS
       <declared type>)`` (DuckDB accepts Spark's type names); an
@@ -116,7 +118,8 @@ class Federation:
     ``oracle`` is the UNION ALL of the component oracles as
     subqueries; ``project(tag, df)`` reprojects a frame the caller
     built; ``frames`` runs every component and projects it; ``build``
-    unions the frames in spec order.
+    unions the frames in spec order. Both raise on a spec with an SQL
+    text component, whose frame only the caller can build.
     """
 
     def __init__(self, schema: str, facets: list[tuple[str, str, dict[str, Expr]]]):
@@ -126,14 +129,18 @@ class Federation:
         self._spark: dict[str, list[str] | None] = {}
         branches = []
         for tag, component, mapping in facets:
-            if tag in self.components:
+            if tag in self._spark:
                 raise ValueError(f"duplicate facet tag {tag!r}")
-            if component not in _REGISTRY or _REGISTRY[component].oracle is None:
-                raise ValueError(f"facet {tag!r}: no oracled query {component!r}")
+            oracle = component
+            if _IDENT.fullmatch(component):
+                spec = _REGISTRY.get(component)
+                if spec is None or spec.oracle is None:
+                    raise ValueError(f"facet {tag!r}: no oracled query {component!r}")
+                self.components[tag] = component
+                oracle = spec.oracle
             unknown = sorted(set(mapping) - names)
             if unknown:
                 raise ValueError(f"facet {tag!r} maps {unknown}, not in the schema")
-            self.components[tag] = component
             spark_cols, duck_cols = [], []
             for name, typ in self.columns:
                 expr = mapping.get(name)
@@ -148,7 +155,7 @@ class Federation:
             self._spark[tag] = None if identity else spark_cols
             branches.append(
                 f"SELECT {', '.join(duck_cols)}\n"
-                f"FROM ({_REGISTRY[component].oracle}) f{len(branches)}"
+                f"FROM ({oracle}) f{len(branches)}"
             )
         self.oracle = "\nUNION ALL\n".join(branches)
 
@@ -158,6 +165,8 @@ class Federation:
 
     def frames(self, spark: SparkSession, sf_dir: str) -> list[tuple[str, DataFrame]]:
         """Every facet's projected component frame, in spec order."""
+        if len(self.components) < len(self._spark):
+            raise ValueError("a facet's component is SQL text: project() its frame")
         return [
             (tag, self.project(tag, _REGISTRY[component].fn(spark, sf_dir)))
             for tag, component in self.components.items()

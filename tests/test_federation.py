@@ -3,8 +3,10 @@
 A federation declares its union schema and each facet's column mapping
 once; these tests pin what it generates from that: NULL padding in
 schema order with the declared types, per-engine quoting of bare
-column names, definition-time errors for a malformed spec, and an
-oracle that DuckDB binds to exactly the declared names and types.
+column names, definition-time errors for a malformed spec, a facet
+whose component is oracle SQL text rather than a registered query,
+and an oracle that DuckDB binds to exactly the declared names and
+types.
 """
 
 from __future__ import annotations
@@ -53,6 +55,8 @@ def _toy():
             ("scores", "toy_scores",
              {"facet": "concat('s_', grp)", "x": "x",
               "t": "CAST(day AS TIMESTAMP)"}),
+            ("flags", "SELECT TRUE AS flag, CAST(7 AS INTEGER) AS i",
+             {"ok": "flag", "i": "i"}),
         ],
     )
 
@@ -68,12 +72,36 @@ def test_unmapped_columns_are_padded_in_schema_order(components):
         "CAST(NULL AS BOOLEAN) AS ok",
         "CAST(NULL AS INT) AS i",
     ]
-    first = fed.oracle.split("\nUNION ALL\n")[1].splitlines()[0]
-    assert first == (
+    branches = fed.oracle.split("\nUNION ALL\n")
+    assert branches[1].splitlines()[0] == (
         "SELECT concat('s_', grp) AS facet, CAST(NULL AS STRING) AS k, "
         "CAST(NULL AS BIGINT) AS n, \"x\", CAST(day AS TIMESTAMP) AS t, "
         "CAST(NULL AS BOOLEAN) AS ok, CAST(NULL AS INT) AS i"
     )
+    # an SQL-text component is padded alike and embedded as the subquery
+    assert fed.project("flags", _Capture()) == [
+        "'flags' AS facet",
+        "CAST(NULL AS STRING) AS k",
+        "CAST(NULL AS BIGINT) AS n",
+        "CAST(NULL AS DOUBLE) AS x",
+        "CAST(NULL AS TIMESTAMP) AS t",
+        "`flag` AS ok",
+        "`i`",
+    ]
+    assert branches[2].splitlines()[1] == (
+        "FROM (SELECT TRUE AS flag, CAST(7 AS INTEGER) AS i) f2"
+    )
+    assert fed.components == {"counts": "toy_counts", "scores": "toy_scores"}
+
+
+def test_a_spec_with_an_sql_text_component_cannot_run_its_components(components):
+    """Only the caller can build an SQL-text facet's frame, so running
+    the components would drop that facet: frames() and build() raise."""
+    fed = _toy()
+    with pytest.raises(ValueError, match="SQL text"):
+        fed.frames(None, "")
+    with pytest.raises(ValueError, match="SQL text"):
+        fed.build(None, "")
 
 
 def test_bare_names_are_quoted_per_engine(components):
@@ -105,6 +133,7 @@ def test_a_facet_mapping_every_column_to_itself_is_not_projected(components):
     "facets, message",
     [
         ([("a", "toy_counts", {"nope": "value"})], r"maps \['nope'\]"),
+        # a bare name is a registry name, never SQL text
         ([("a", "no_such_query", {})], "no oracled query 'no_such_query'"),
         ([("a", "toy_counts", {}), ("a", "toy_scores", {})], "duplicate facet tag"),
     ],
@@ -122,5 +151,6 @@ def test_toy_oracle_binds_to_the_declared_schema(components):
     assert [str(t) for t in rel.types] == DUCK_TYPES
     assert sorted(rel.fetchall(), key=lambda row: row[0]) == [
         ("counts", "a", 3, None, None, None, None),
+        ("flags", None, None, None, None, True, 7),
         ("s_p", None, None, 0.5, dt.datetime(2024, 1, 2), None, None),
     ]

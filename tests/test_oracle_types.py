@@ -21,7 +21,7 @@ import duckdb
 import pytest
 
 from engine.io import TABLES, table_path
-from engine.operators import facets, facets2, tpch_merged
+from engine.operators import facets, facets2, tpch_merged, versioning
 from engine.registry import Federation, all_queries_including_library
 from tests.conftest import SF_SMOKE
 from tools.check_oracle import (
@@ -35,7 +35,7 @@ SPECS = all_queries_including_library()
 _NAME_OF_ORACLE = {s.oracle: n for n, s in SPECS.items()}
 FEDERATIONS = {
     _NAME_OF_ORACLE[v.oracle]: v
-    for module in (facets, facets2, tpch_merged)
+    for module in (facets, facets2, tpch_merged, versioning)
     for v in vars(module).values()
     if isinstance(v, Federation)
 }
