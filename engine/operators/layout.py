@@ -12,10 +12,8 @@ This module provides:
 
 * ``morton_z`` / grid normalization — pure JVM expressions (a 16-round
   ``aggregate`` HOF over bit shifts; no Python in the hot path).
-* ``zorder_write`` — the real writer: range-partition by the z-value
-  and sort within partitions, producing parquet whose ROW-GROUP
-  statistics are tight rectangles (proven physically in
-  tests/test_layout.py via pyarrow footer metadata).
+* ``with_zorder`` — grid coordinates and the z-value for two integer
+  columns, which the two-dimension audit lays files out by.
 * ``layout_zorder_skipping`` — the oracled audit: simulate the two
   layouts' file boundaries with deterministic equal-width cuts
   (exactly what ``repartitionByRange`` approximates), compute each
@@ -28,9 +26,11 @@ This module provides:
 100 TB shape: the audit scans two integer columns of the fact table
 (footer-pruned), computes z per row with JVM bit math, and aggregates
 to |layouts|×|files| rows; the probe join is a 16-row broadcast
-against that bounded file-stats table. The writer adds one range
-shuffle — the same cost as any clustered write — and nothing
-downstream pays it again.
+against that bounded file-stats table.
+
+The physical z-order writer is the versioned store's
+``compact_version(zorder_cols=…)``; its footer stats are checked in
+tests/test_versioning.py and tests/test_corpus_build.py.
 
 Reference parity note: the reference engine has no storage layout
 layer (it reads whole text files); this is Layer-B capability per
@@ -120,23 +120,6 @@ def with_zorder(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
         )
         .withColumn("z", F.expr(MORTON_SPARK).cast("bigint"))
         .drop("minx", "maxx", "miny", "maxy")
-    )
-
-
-def zorder_write(
-    df: DataFrame, x_col: str, y_col: str, path: str, n_files: int
-) -> None:
-    """Write ``df`` z-ordered on (x_col, y_col): range-partition by the
-    Morton value into ``n_files`` output tasks and sort within each, so
-    every written file's (x_col, y_col) footer stats form a tight
-    rectangle. One range shuffle — the standard clustered-write cost."""
-    (
-        with_zorder(df, x_col, y_col)
-        .repartitionByRange(n_files, "z")
-        .sortWithinPartitions("z")
-        .drop("gx", "gy", "z")
-        .write.mode("overwrite")
-        .parquet(path)
     )
 
 

@@ -14,8 +14,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from engine._vendor import ensure_vendor_path
-
 
 @contextlib.contextmanager
 def static_planning(
@@ -60,11 +58,6 @@ def get_spark(app_name: str = "engine", shuffle_partitions: int | None = None) -
 
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism (default ``*``).
     """
-    # Must run before the JVM launches: python workers inherit the
-    # driver environment's PYTHONPATH, which is how the vendored
-    # protobuf runtime (needed by transformWithStateInPandas' worker
-    # side) reaches them.
-    ensure_vendor_path()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")

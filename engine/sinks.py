@@ -1,7 +1,7 @@
-"""Plain-parquet sinks for the streaming and refresh paths: the
-whole-directory publish (stage in a sibling directory, swap it in by
-rename), the keyed CDC upsert built on it, and the two partition-scoped
-writes (dynamic partition overwrite and the changeset merge).
+"""Plain-parquet sinks for the refresh paths: the whole-directory
+publish (stage in a sibling directory, swap it in by rename) and the
+two partition-scoped writes (the changeset merge and the dynamic
+partition overwrite it is built on).
 
 Versioned tables — file-granular commits, compaction, z-order, key
 deletes, bloom skipping, time travel — live in engine.versioned_store.
@@ -50,65 +50,6 @@ def publish_dir(path: str, prefix: str, write: Callable[[str], _T]) -> _T:
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     return result
-
-
-def upsert_parquet(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    key_cols: list[str],
-    version_col: str,
-) -> int:
-    """Keyed upsert (CDC merge) into a plain parquet directory; returns
-    the row count of the published snapshot.
-
-    Semantics of ``MERGE INTO``'s upsert core without a table format:
-    for each key, the surviving row is the one with the highest
-    ``version_col`` (updates win ties, so a same-version republish is
-    idempotent). New keys insert, existing keys update.
-
-    Scale shape: one shuffle of base ∪ updates keyed by ``key_cols``
-    with a max_by per key — cost scales with snapshot size, the same
-    asymptotics as a table-format MERGE's full-partition rewrite path.
-    At 100 TB you'd partition the directory (e.g. by date) and merge
-    only partitions the updates touch; a transactional table format
-    (Iceberg/Delta) replaces the rename publish with a metadata commit.
-    Publication goes through :func:`publish_dir`: readers see the old
-    snapshot or the new one, never a partial directory.
-    """
-    from pyspark.sql import functions as F
-
-    tagged_updates = updates.withColumn("__src", F.lit(1))
-    if os.path.isdir(path):
-        base = spark.read.parquet(path).withColumn("__src", F.lit(0))
-        merged = base.unionByName(tagged_updates)
-    else:
-        merged = tagged_updates
-    others = [
-        c for c in merged.columns if c not in (*key_cols, version_col, "__src")
-    ]
-    # max_by over a (version, src, payload) struct: highest version
-    # wins, updates beat base on equal versions, and equal-version
-    # duplicates WITHIN a batch resolve by payload ordering — fully
-    # deterministic and order-independent (an ordering key of
-    # (version, src) alone would leave within-batch ties to Spark's
-    # arbitrary max_by pick).
-    pick = F.max_by(
-        F.struct(version_col, *others), F.struct(version_col, "__src", *others)
-    ).alias("__row")
-    snapshot = (
-        merged.groupBy(*key_cols)
-        .agg(pick)
-        .select(*key_cols, "__row.*")
-    )
-
-    def write(staging: str) -> int:
-        snapshot.write.mode("overwrite").parquet(staging)
-        # counted before the swap: the count is of exactly the rows
-        # published, even if another writer publishes right after
-        return spark.read.parquet(staging).count()
-
-    return publish_dir(path, "upsert", write)
 
 
 def apply_changeset_partitioned(

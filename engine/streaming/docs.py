@@ -2,33 +2,19 @@
 
 The ingestion-time twin of the batch corpus loaders: production points
 this at a crawl landing zone (or Kafka with a parquet/Avro payload);
-the fixture form streams `documents.parquet` itself. Mirrors
-`events.read_event_stream`'s directory-vs-single-file handling — the
-glob-filter variant silently streams ZERO rows from a directory-layout
-table (the round-5 bug class, regression-tested there).
+the fixture form streams `documents.parquet` itself.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from engine.streaming.events import _table_stream
 
 
 def read_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet as a file-source stream; schema from the file
     footer via a batch read so the reader tolerates any fixture
-    vintage (documents carries no timestamp column, so no ts
-    normalization is needed — kept symmetric with the events source
-    for the directory-layout handling alone)."""
-    from engine.io import table_path
-
-    p = table_path(sf_dir, "documents")
-    raw_schema = spark.read.parquet(p).schema
-    if os.path.isdir(p):
-        return spark.readStream.schema(raw_schema).parquet(p)
-    return (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    vintage. Documents carry no timestamp column, so unlike the events
+    stream there is no ``ts`` to normalize."""
+    return _table_stream(spark, sf_dir, "documents")

@@ -1,22 +1,14 @@
-"""Layout tests: the Morton math must be the textbook interleave, the
-audit's simulated layouts must show the z-order skipping win, and —
-the physical half — files written by ``zorder_write`` must carry
-footer statistics that a real reader would use to skip, measurably
-better than a single-key layout for cross-dimension predicates."""
+"""Layout tests: the Morton math must be the textbook interleave (two
+and N dimensions), and the audits' simulated layouts must show the
+z-order skipping win. The physical half, footer statistics of
+z-ordered files, is tested on the versioned store
+(tests/test_versioning.py::test_zorder_compaction_clusters_files) and
+on the published corpus (tests/test_corpus_build.py)."""
 
-import glob
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from engine.io import load_table
-from engine.operators.layout import (
-    GRID,
-    layout_zorder_skipping,
-    with_zorder,
-    zorder_write,
-)
-from tests.conftest import SF_CHECK, SF_SMOKE
+from engine.operators.layout import layout_zorder_skipping, with_zorder
+from tests.conftest import SF_SMOKE
 
 
 def _interleave(x: int, y: int) -> int:
@@ -52,57 +44,6 @@ def test_audit_shows_zorder_skipping_win(spark):
     # the whole point: mixed-dimension probes scan far fewer z-files
     assert zo.files_hit < lin.files_hit
     assert zo.rows_hit < lin.rows_hit
-
-
-def _rowgroup_hits(path: str, col: str, lo: int, hi: int) -> tuple[int, int]:
-    """(row groups whose [min,max] of ``col`` overlaps [lo,hi], total
-    row groups) across all files — read from the parquet FOOTERS, the
-    exact stats a real scan's predicate skipping uses."""
-    hit = total = 0
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}[col]
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            total += 1
-            if st.min <= hi and st.max >= lo:
-                hit += 1
-    return hit, total
-
-
-def test_written_files_skip_on_both_dimensions(spark, tmp_path):
-    li = load_table(spark, SF_CHECK, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    zpath, lpath = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    zorder_write(li, "l_orderkey", "l_partkey", zpath, 8)
-    (
-        li.repartitionByRange(8, "l_orderkey")
-        .sortWithinPartitions("l_orderkey")
-        .write.mode("overwrite")
-        .parquet(lpath)
-    )
-    bounds = li.agg(
-        F.min("l_partkey"), F.max("l_partkey"),
-        F.min("l_orderkey"), F.max("l_orderkey"),
-    ).collect()[0]
-    ymin, ymax, xmin, xmax = bounds
-    # a narrow partkey range (the dimension linear layout ignores):
-    # real footer stats must let the z-layout skip files, while the
-    # linear layout reads everything
-    ylo = ymin + (ymax - ymin) * 3 // 8
-    yhi = ymin + (ymax - ymin) * 4 // 8
-    z_hit, z_tot = _rowgroup_hits(zpath, "l_partkey", ylo, yhi)
-    l_hit, l_tot = _rowgroup_hits(lpath, "l_partkey", ylo, yhi)
-    assert z_tot >= 8 and l_tot >= 8
-    assert l_hit == l_tot  # single-key layout prunes nothing on y
-    assert z_hit < z_tot  # z-layout skips real files on y
-    # and the z layout still prunes on x (it trades, not surrenders,
-    # the clustered dimension)
-    xlo = xmin + (xmax - xmin) * 3 // 8
-    xhi = xmin + (xmax - xmin) * 4 // 8
-    zx_hit, zx_tot = _rowgroup_hits(zpath, "l_orderkey", xlo, xhi)
-    assert zx_hit < zx_tot
 
 
 def test_morton_n_dims_matches_reference_interleave(spark):

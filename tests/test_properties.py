@@ -167,49 +167,6 @@ def test_run_job_native_wordcount_equals_counter(
     assert got == want
 
 
-@given(
-    batches=st.lists(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=5),   # key
-                st.integers(min_value=0, max_value=9),   # version
-                st.text(alphabet="abc", min_size=1, max_size=3),
-            ),
-            min_size=1,
-            max_size=5,
-        ),
-        min_size=1,
-        max_size=3,
-    )
-)
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_upsert_parquet_equals_dict_model(spark, tmp_path_factory, batches):
-    """Sequential upserts == the dict model: per key, highest version
-    wins; the incoming batch beats the existing snapshot on version
-    ties; equal-version duplicates within a batch resolve by payload
-    ordering. Holds for ANY batch sequence."""
-    from engine.sinks import upsert_parquet
-
-    path = str(tmp_path_factory.mktemp("upsert") / "snap")
-    model = {}
-    for batch in batches:
-        df = spark.createDataFrame(batch, ["id", "ver", "val"])
-        upsert_parquet(spark, df, path, ["id"], "ver")
-        for key in {k for k, _, _ in batch}:
-            ver, val = max((v, s) for k, v, s in batch if k == key)
-            if key not in model or ver >= model[key][0]:
-                model[key] = (ver, val)
-    got = {
-        r["id"]: (r["ver"], r["val"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == model
-
-
 # -- qsum: order-independent double aggregation ----------------------------
 
 _vals = st.lists(

@@ -1,6 +1,6 @@
 """Sink tests: the staged rename publish (success, failed write, failed
-swap), the keyed parquet upsert, dynamic partition overwrite and the
-partition-scoped changeset merge."""
+swap), dynamic partition overwrite and the partition-scoped changeset
+merge."""
 
 import os
 from pathlib import Path
@@ -87,33 +87,6 @@ def test_publish_dir_failed_swap_rolls_back(tmp_path, monkeypatch):
     assert len(swaps) == 1
     assert _tree(path) == before
     assert os.listdir(tmp_path) == ["table"]
-
-
-def test_upsert_parquet_merge_semantics(spark, tmp_path):
-    """Insert + update + late-arriving stale version + idempotent
-    same-version republish."""
-    from engine.sinks import upsert_parquet
-
-    path = str(tmp_path / "snapshot")
-    v1 = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 10)], ["id", "val", "ver"]
-    )
-    assert upsert_parquet(spark, v1, path, ["id"], "ver") == 2
-
-    # key 2 updated, key 3 inserted, key 1 receives a STALE version
-    v2 = spark.createDataFrame(
-        [(2, "b2", 20), (3, "c", 20), (1, "stale", 5)], ["id", "val", "ver"]
-    )
-    assert upsert_parquet(spark, v2, path, ["id"], "ver") == 3
-    got = {r["id"]: (r["val"], r["ver"]) for r in spark.read.parquet(path).collect()}
-    assert got == {1: ("a", 10), 2: ("b2", 20), 3: ("c", 20)}
-
-    # same-version republish of key 2 wins over base (update beats base
-    # on ties) — rerunning a batch is a no-op state-wise
-    v2b = spark.createDataFrame([(2, "b2-rerun", 20)], ["id", "val", "ver"])
-    assert upsert_parquet(spark, v2b, path, ["id"], "ver") == 3
-    got = {r["id"]: r["val"] for r in spark.read.parquet(path).collect()}
-    assert got[2] == "b2-rerun"
 
 
 def test_dynamic_partition_overwrite(spark, tmp_path, monkeypatch):

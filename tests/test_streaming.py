@@ -57,199 +57,6 @@ def test_session_windows_match_batch_sessionizer(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
-def test_stateful_user_stats_match_batch(spark):
-    """applyInPandasWithState running stats must agree with the batch
-    groupBy over the same bounded input."""
-    from pyspark.sql import functions as F
-
-    from engine.io import load_table
-    from engine.streaming.events import streaming_user_value_stats
-
-    stream = read_event_stream(spark, SF_SMOKE)
-    got = {
-        r.user_id: (r.n_events, round(r.total_value, 6), r.max_value)
-        for r in run_available_now(
-            streaming_user_value_stats(stream), "t_stateful", output_mode="update"
-        ).collect()
-    }
-    want = {
-        r.user_id: (r.n_events, round(r.total_value, 6), r.max_value)
-        for r in (
-            load_table(spark, SF_SMOKE, "events")
-            .filter(F.col("event_type") == "purchase")
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("value").alias("total_value"),
-                F.max("value").alias("max_value"),
-            )
-        ).collect()
-    }
-    assert got == want
-
-
-def test_tws_stateful_user_stats_match_batch(spark):
-    """transformWithStateInPandas (arbitrary-state v2, RocksDB-backed)
-    running stats must agree with the batch groupBy — and with the v1
-    applyInPandasWithState twin, since the expected values are the
-    same. Plan construction is asserted unconditionally; RUNNING the
-    stream needs the protobuf package (the v2 state protocol), so the
-    execution half gates on HAS_PROTOBUF like the multimodal codecs."""
-    import pytest
-
-    from pyspark.sql import functions as F
-
-    from engine.io import load_table
-    from engine.streaming.events import (
-        HAS_PROTOBUF,
-        ROCKSDB_PROVIDER,
-        streaming_user_value_stats_tws,
-    )
-
-    # The lazy plan must always build (catches API drift even where
-    # protobuf is missing).
-    plan_df = streaming_user_value_stats_tws(read_event_stream(spark, SF_SMOKE))
-    assert [f.name for f in plan_df.schema.fields] == [
-        "user_id",
-        "n_events",
-        "total_value",
-        "max_value",
-    ]
-    if not HAS_PROTOBUF:
-        pytest.skip(
-            "transformWithState python worker needs protobuf"
-            " (not installed in this container; installs not allowed)"
-        )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        stream = read_event_stream(spark, SF_SMOKE)
-        got = {
-            r.user_id: (r.n_events, round(r.total_value, 6), r.max_value)
-            for r in run_available_now(
-                streaming_user_value_stats_tws(stream),
-                "t_stateful_tws",
-                output_mode="update",
-            ).collect()
-        }
-    finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
-    want = {
-        r.user_id: (r.n_events, round(r.total_value, 6), r.max_value)
-        for r in (
-            load_table(spark, SF_SMOKE, "events")
-            .filter(F.col("event_type") == "purchase")
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("value").alias("total_value"),
-                F.max("value").alias("max_value"),
-            )
-        ).collect()
-    }
-    assert got == want
-
-
-def test_tws_multi_state_bootstrap_matches_batch(spark):
-    """transformWithStateInPandas with the v2-exclusive surface:
-    MULTIPLE typed state variables (ValueState + MapState) and
-    INITIAL-STATE bootstrap. Backfill-then-stream: seed state from a
-    batch snapshot over the first half of events (by event_id parity),
-    stream only the second half — every user that appears in the
-    stream must report stats equal to the one-shot batch aggregate
-    over ALL events."""
-    import pytest
-
-    from engine.io import load_table
-    from engine.streaming.events import (
-        HAS_PROTOBUF,
-        ROCKSDB_PROVIDER,
-        streaming_user_profile_tws,
-        user_profile_snapshot,
-    )
-
-    if not HAS_PROTOBUF:
-        pytest.skip("transformWithState python worker needs protobuf")
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    part_a = ev.filter(F.col("event_id") % 2 == 0)
-    part_b = ev.filter(F.col("event_id") % 2 == 1)
-    snapshot = user_profile_snapshot(part_a)
-
-    # Stream = part B only, via a parquet round trip (readStream needs
-    # a file source).
-    import tempfile
-
-    src = tempfile.mkdtemp(prefix="tws-boot-")
-    part_b.write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(part_b.schema).parquet(src)
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        got = {
-            r.user_id: (
-                r.n_purchases,
-                round(r.total_value, 6),
-                r.n_event_types,
-                r.n_events,
-            )
-            for r in run_available_now(
-                streaming_user_profile_tws(stream, initial_snapshot=snapshot),
-                "t_tws_bootstrap",
-                output_mode="update",
-            ).collect()
-        }
-    finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
-
-    stream_users = {r.user_id for r in part_b.select("user_id").distinct().collect()}
-    want = {
-        r.user_id: (
-            r.n_purchases,
-            round(r.total_value, 6),
-            r.n_event_types,
-            r.n_events,
-        )
-        for r in (
-            ev.groupBy("user_id")
-            .agg(
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                ).alias("n_purchases"),
-                F.sum(
-                    F.when(
-                        F.col("event_type") == "purchase", F.col("value")
-                    ).otherwise(0.0)
-                ).alias("total_value"),
-                F.countDistinct("event_type").alias("n_event_types"),
-                F.count(F.lit(1)).alias("n_events"),
-            )
-        ).collect()
-        if r.user_id in stream_users
-    }
-    assert set(got) == stream_users
-    assert got == want
-    # The bootstrap actually mattered: at least one streaming user has
-    # part-A-only contributions folded into the final numbers.
-    b_only = {
-        r.user_id: r.n
-        for r in part_b.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert any(got[u][3] > b_only[u] for u in got)
-
-
 def test_stream_stream_join_matches_batch(spark):
     """Watermarked stream-stream view→purchase join must agree with the
     equivalent batch range join on the bounded input."""
@@ -284,22 +91,6 @@ def test_stream_stream_join_matches_batch(spark):
     assert got == want and len(got) > 0
 
 
-def test_parquet_sink_exactly_once_on_restart(spark, tmp_path):
-    """Restarting the same query over the same (fully-consumed) source
-    with the same checkpoint must be a no-op: no duplicate rows."""
-    from engine.streaming.events import write_stream_parquet
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    n_src = load_table(spark, SF_SMOKE, "events").count()
-
-    for _ in range(2):  # second run re-processes nothing
-        stream = read_event_stream(spark, SF_SMOKE)
-        q = write_stream_parquet(stream, out, ckpt, name="t_pq_sink")
-        q.awaitTermination()
-
-    assert spark.read.parquet(out).count() == n_src
-
-
 def test_stream_static_enrichment_matches_batch(spark):
     """Stream-static broadcast join == the same join done in batch."""
     from engine.io import load_table
@@ -323,186 +114,6 @@ def test_stream_static_enrichment_matches_batch(spark):
     assert expected.exceptAll(got).isEmpty()
     # left join keeps purchases with no matching customer (if any)
     assert got.filter(F.col("event_id").isNull()).count() == 0
-
-
-def test_stream_upsert_cdc_snapshot_and_replay(spark, tmp_path):
-    """foreachBatch CDC merge: the snapshot holds exactly the latest
-    version per key (events keyed by event_id, versioned by ts), and a
-    checkpointed restart over the fully-consumed source is a state
-    no-op — at-least-once replay + idempotent merge = effectively once."""
-    from engine.streaming.events import read_event_stream, write_stream_upsert
-
-    out, ckpt = str(tmp_path / "snap"), str(tmp_path / "ckpt")
-    src = load_table(spark, SF_SMOKE, "events").select(
-        "event_id", "user_id", "event_type", "ts"
-    )
-    expected = src.groupBy("event_id").count().count()
-
-    for _ in range(2):  # second run replays nothing, state unchanged
-        stream = read_event_stream(spark, SF_SMOKE).select(
-            "event_id", "user_id", "event_type", "ts"
-        )
-        q = write_stream_upsert(
-            stream, out, ckpt, ["event_id"], "ts", name="t_upsert_sink"
-        )
-        q.awaitTermination()
-        assert spark.read.parquet(out).count() == expected
-
-
-def test_incremental_rollup_matches_batch_and_survives_replay(spark, tmp_path):
-    """foreachBatch delta materialization: the folded view equals the
-    one-shot batch rollup bit-for-bit (integer-grid sums merge exactly),
-    a same-checkpoint rerun is a no-op, and a REPLAY (fresh checkpoint,
-    same sink) is idempotent because each batch owns its batch_id
-    partition under dynamic overwrite."""
-    from engine.operators.relational import events_daily_rollup
-    from engine.streaming.events import (
-        read_event_stream,
-        read_incremental_rollup,
-        write_stream_incremental_rollup,
-    )
-
-    # Multi-file copy of events so availableNow produces several batches.
-    src = str(tmp_path / "src")
-    load_table(spark, SF_SMOKE, "events").repartition(4).write.parquet(
-        str(tmp_path / "src" / "staging")
-    )
-    import glob
-    import os
-    import shutil
-
-    for i, f in enumerate(
-        sorted(glob.glob(str(tmp_path / "src" / "staging" / "part-*.parquet")))
-    ):
-        shutil.move(f, os.path.join(src, f"events_{i}.parquet"))
-    shutil.rmtree(str(tmp_path / "src" / "staging"))
-
-    def stream():
-        raw = (
-            spark.readStream.schema(
-                spark.read.parquet(src + "/events_0.parquet").schema
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        return raw
-
-    out = str(tmp_path / "rollup")
-    ckpt = str(tmp_path / "ckpt")
-    q = write_stream_incremental_rollup(stream(), out, ckpt, name="t_roll1")
-    q.awaitTermination()
-    import pyspark.sql.functions as SF
-
-    n_batches = (
-        spark.read.parquet(out).select("batch_id").distinct().count()
-    )
-    assert n_batches >= 2  # deltas actually arrived incrementally
-
-    def canon(df):
-        return sorted(
-            (str(r["day"]), r["event_type"], r["n_events"], r["total_value"])
-            for r in df.collect()
-        )
-
-    want = canon(events_daily_rollup(spark, SF_SMOKE))
-    assert canon(read_incremental_rollup(spark, out)) == want
-
-    # Same checkpoint: nothing new to process.
-    q = write_stream_incremental_rollup(stream(), out, ckpt, name="t_roll2")
-    q.awaitTermination()
-    assert canon(read_incremental_rollup(spark, out)) == want
-
-    # Replay from scratch (fresh checkpoint, same sink): batches rewrite
-    # their own partitions — still no double counting.
-    q = write_stream_incremental_rollup(
-        stream(), out, str(tmp_path / "ckpt2"), name="t_roll3"
-    )
-    q.awaitTermination()
-    assert canon(read_incremental_rollup(spark, out)) == want
-
-
-def test_incremental_dedup_stream_consistency_and_replay(spark, tmp_path):
-    """Streaming corpus dedup: verdicts are internally consistent with
-    the accumulated hash index (winner = min (batch_id, doc_id) per
-    content hash, every doc is exactly one of first/dup), and a replay
-    with a fresh checkpoint reproduces the same state."""
-    import glob
-    import os
-    import shutil
-
-    from engine.streaming.events import write_stream_incremental_dedup
-
-    src = str(tmp_path / "docs")
-    base = load_table(spark, SF_SMOKE, "documents")
-    # The fixture has no EXACT duplicates (only near-dups), so restamp
-    # a deterministic slice as higher-id copies to create them.
-    copies = base.filter(F.col("doc_id") % 7 == 0).withColumn(
-        "doc_id", F.col("doc_id") + 100000
-    )
-    base.unionByName(copies).repartition(4).write.parquet(
-        str(tmp_path / "docs" / "staging")
-    )
-    for i, f in enumerate(
-        sorted(glob.glob(str(tmp_path / "docs" / "staging" / "part-*.parquet")))
-    ):
-        shutil.move(f, os.path.join(src, f"docs_{i}.parquet"))
-    shutil.rmtree(str(tmp_path / "docs" / "staging"))
-
-    def stream():
-        return (
-            spark.readStream.schema(
-                spark.read.parquet(src + "/docs_0.parquet").schema
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-
-    index, dups, ckpt = (
-        str(tmp_path / "index"),
-        str(tmp_path / "dups"),
-        str(tmp_path / "ckpt"),
-    )
-    q = write_stream_incremental_dedup(stream(), index, dups, ckpt, "t_dd1")
-    q.awaitTermination()
-
-    docs = spark.read.parquet(src)
-    n_docs = docs.count()
-    idx_rows = spark.read.parquet(index).collect()
-    dup_rows = spark.read.parquet(dups).collect()
-    assert len(idx_rows) + len(dup_rows) == n_docs
-    assert len(dup_rows) > 0  # the fixture contains exact duplicates
-    assert spark.read.parquet(index).select("batch_id").distinct().count() >= 2
-
-    # Winner per hash = min (batch_id, doc_id); every dup's target is
-    # its hash's winner and the target hash matches the doc's hash.
-    sha = {
-        r["doc_id"]: r["h"]
-        for r in docs.select(
-            "doc_id", F.sha2("text", 256).alias("h")
-        ).collect()
-    }
-    batch_of = {r["first_id"]: r["batch_id"] for r in idx_rows}
-    dup_batch = {r["doc_id"]: r["batch_id"] for r in dup_rows}
-    winner = {r["content_hash"]: r["first_id"] for r in idx_rows}
-    assert len(winner) == len(idx_rows)  # one first per hash
-    for r in dup_rows:
-        assert r["duplicate_of"] == winner[sha[r["doc_id"]]]
-        assert sha[r["duplicate_of"]] == sha[r["doc_id"]]
-        # the winner arrived no later than the dup
-        w_b = batch_of[r["duplicate_of"]]
-        assert (w_b, r["duplicate_of"]) < (r["batch_id"], r["doc_id"])
-
-    # Replay (fresh checkpoint, same sinks): identical final state.
-    before = (sorted(map(tuple, idx_rows)), sorted(map(tuple, dup_rows)))
-    q = write_stream_incremental_dedup(
-        stream(), index, dups, str(tmp_path / "ckpt2"), "t_dd2"
-    )
-    q.awaitTermination()
-    after = (
-        sorted(map(tuple, spark.read.parquet(index).collect())),
-        sorted(map(tuple, spark.read.parquet(dups).collect())),
-    )
-    assert after == before
 
 
 def test_event_stream_reads_directory_layout_fixture(spark, tmp_path):
