@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from engine.functions.rounding import duck_round_he, round_he, sql_round_he
 from engine.io import load_table
 from engine.plans import audited_checkpoint, record_iteration_plan
-from engine.registry import query
+from engine.registry import Federation, query
 from engine.operators.textstats import DUCK_H60, SPARK_H60, ngram_idx
 
 JACCARD_THRESHOLD = 0.2
@@ -539,17 +539,25 @@ def min_label_components(pairs: DataFrame) -> DataFrame:
 # -- consolidated registry queries -----------------------------------------
 
 
-@query(
-    "dedup_exact_components",
-    oracle=f"""
-SELECT 'exact' AS facet, sha256(text) AS key,
-       CAST(min(doc_id) AS BIGINT) AS doc_id, count(*) AS n
+EXACT_COMPONENTS = Federation(
+    "facet STRING, key STRING, doc_id BIGINT, n BIGINT",
+    [
+        ("exact", """
+SELECT sha256(text) AS content_hash,
+       CAST(min(doc_id) AS BIGINT) AS keep_doc_id, count(*) AS n_copies
 FROM documents
 GROUP BY sha256(text)
-UNION ALL
-SELECT 'component', CAST(doc_id AS VARCHAR), canonical_id, CAST(NULL AS BIGINT)
-FROM ({_COMPONENTS_ORACLE.strip()}) cc
 """,
+         {"key": "content_hash", "doc_id": "keep_doc_id", "n": "n_copies"}),
+        ("component", _COMPONENTS_ORACLE,
+         {"key": "CAST(doc_id AS STRING)", "doc_id": "canonical_id"}),
+    ],
+)
+
+
+@query(
+    "dedup_exact_components",
+    oracle=EXACT_COMPONENTS.oracle,
     tags=("dedup", "exact", "connected-components"),
 )
 def dedup_exact_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -562,32 +570,27 @@ def dedup_exact_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     component's canonical minimum). The iterative propagation is the
     genuinely non-SQL-shaped operator here; the recursive-CTE oracle
     proves it exact."""
-    exact = dedup_exact(spark, sf_dir).select(
-        F.lit("exact").alias("facet"),
-        F.col("content_hash").alias("key"),
-        F.col("keep_doc_id").alias("doc_id"),
-        F.col("n_copies").alias("n"),
-    )
-    comp = dedup_canonical_components(spark, sf_dir).select(
-        F.lit("component").alias("facet"),
-        F.col("doc_id").cast("string").alias("key"),
-        F.col("canonical_id").alias("doc_id"),
-        F.lit(None).cast("bigint").alias("n"),
+    exact = EXACT_COMPONENTS.project("exact", dedup_exact(spark, sf_dir))
+    comp = EXACT_COMPONENTS.project(
+        "component", dedup_canonical_components(spark, sf_dir)
     )
     return exact.unionAll(comp)
 
 
+SIMHASH_DEDUP = Federation(
+    "facet STRING, doc_a BIGINT, doc_b BIGINT, hamming INT, simhash BIGINT",
+    [
+        ("fingerprint", f"WITH {_DUCK_SIMHASH}\nSELECT doc_id, simhash FROM simh",
+         {"doc_a": "doc_id", "simhash": "simhash"}),
+        ("near_pair", _SIMHASH_PAIRS_ORACLE_BODY,
+         {"doc_a": "doc_a", "doc_b": "doc_b", "hamming": "hamming"}),
+    ],
+)
+
+
 @query(
     "simhash_dedup",
-    oracle=f"""
-WITH {_DUCK_SIMHASH}
-SELECT 'fingerprint' AS facet, doc_id AS doc_a, CAST(NULL AS BIGINT) AS doc_b,
-       CAST(NULL AS INT) AS hamming, simhash
-FROM simh
-UNION ALL
-SELECT 'near_pair', doc_a, doc_b, hamming, CAST(NULL AS BIGINT)
-FROM ({_SIMHASH_PAIRS_ORACLE_BODY.strip()}) np
-""",
+    oracle=SIMHASH_DEDUP.oracle,
     tags=("dedup", "simhash", "lsh"),
     exported=False,  # driver-visible via facets2.doc_fingerprint_methods
 )
@@ -598,20 +601,8 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table feeds the pair search, so the federated query computes it
     once and shows both the index and its use."""
     simh = simhash_fingerprint(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    fp = simh.select(
-        F.lit("fingerprint").alias("facet"),
-        F.col("doc_id").alias("doc_a"),
-        F.lit(None).cast("bigint").alias("doc_b"),
-        F.lit(None).cast("int").alias("hamming"),
-        "simhash",
-    )
-    pairs = _simhash_pairs_from(simh).select(
-        F.lit("near_pair").alias("facet"),
-        "doc_a",
-        "doc_b",
-        "hamming",
-        F.lit(None).cast("bigint").alias("simhash"),
-    )
+    fp = SIMHASH_DEDUP.project("fingerprint", simh)
+    pairs = SIMHASH_DEDUP.project("near_pair", _simhash_pairs_from(simh))
     return fp.unionAll(pairs)
 
 
@@ -986,13 +977,16 @@ _SPANS_CTE = f"""spans AS (
   WHERE length(text) >= {SPAN_W}
 )"""
 
-_SPAN_ORACLE = f"""
-WITH {_SPANS_CTE},
+# The duplicated-span set that both facets of the reporter read.
+_DUP_SPANS_CTE = f"""{_SPANS_CTE},
 dup AS (
   SELECT h, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
          CAST(count(*) AS BIGINT) AS n_occurrences
   FROM spans GROUP BY h HAVING count(DISTINCT doc_id) >= 2
-),
+)"""
+
+_SPAN_DOC_ORACLE = f"""
+WITH {_DUP_SPANS_CTE},
 per_doc AS (
   SELECT s.doc_id,
          CAST(count(*) AS BIGINT) AS n_spans,
@@ -1003,12 +997,23 @@ per_doc AS (
   FROM spans s LEFT JOIN dup d ON s.h = d.h
   GROUP BY s.doc_id
 )
-SELECT 'doc' AS facet, doc_id AS id, n_spans, n_dup_spans, first_dup_start
-FROM per_doc WHERE n_dup_spans > 0
-UNION ALL
-SELECT 'span', h, n_docs, n_occurrences, CAST(NULL AS BIGINT)
-FROM (SELECT * FROM dup ORDER BY n_occurrences DESC, n_docs DESC, h LIMIT 20) t
+SELECT * FROM per_doc WHERE n_dup_spans > 0
 """
+
+SUBSTRING_SPANS = Federation(
+    "facet STRING, id BIGINT, n_spans BIGINT, n_dup_spans BIGINT,"
+    " first_dup_start BIGINT",
+    [
+        ("doc", _SPAN_DOC_ORACLE,
+         {"id": "doc_id", "n_spans": "n_spans", "n_dup_spans": "n_dup_spans",
+          "first_dup_start": "first_dup_start"}),
+        ("span", f"""
+WITH {_DUP_SPANS_CTE}
+SELECT * FROM dup ORDER BY n_occurrences DESC, n_docs DESC, h LIMIT 20
+""",
+         {"id": "h", "n_spans": "n_docs", "n_dup_spans": "n_occurrences"}),
+    ],
+)
 
 
 def _span_rows(docs: DataFrame) -> DataFrame:
@@ -1043,7 +1048,7 @@ def _span_rows(docs: DataFrame) -> DataFrame:
 
 @query(
     "dedup_substring_spans",
-    oracle=_SPAN_ORACLE,
+    oracle=SUBSTRING_SPANS.oracle,
     tags=("dedup", "substring", "span", "documents"),
     exported=False,
 )
@@ -1087,21 +1092,8 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(20)
     )
-    nb = F.lit(None).cast("bigint")
-    return per_doc.select(
-        F.lit("doc").alias("facet"),
-        F.col("doc_id").alias("id"),
-        "n_spans",
-        F.col("n_dup_spans"),
-        F.col("first_dup_start"),
-    ).unionAll(
-        top.select(
-            F.lit("span").alias("facet"),
-            F.col("h").alias("id"),
-            F.col("n_docs").alias("n_spans"),
-            F.col("n_occurrences").alias("n_dup_spans"),
-            nb.alias("first_dup_start"),
-        )
+    return SUBSTRING_SPANS.project("doc", per_doc).unionAll(
+        SUBSTRING_SPANS.project("span", top)
     )
 
 

@@ -20,16 +20,18 @@ set it low (e.g. 32) so an Arrow batch fits executor memory.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 from collections.abc import Iterator
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from engine.io import load_table
-from engine.registry import query
+from engine.registry import Federation, query
 from engine.operators.textstats import DUCK_H60
 
 META_SCHEMA = T.StructType(
@@ -780,200 +782,6 @@ def multimodal_resize_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- consolidated registry query -------------------------------------------
-
-
-@query(
-    "multimodal_facets",
-    oracle=f"""
-WITH meta AS (
-  SELECT doc_id,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         md5(text) AS checksum,
-         CAST({_H_CK} % 1920 + 1 AS INT) AS fake_width,
-         CAST(({_H_CK} // 1920) % 1080 + 1 AS INT) AS fake_height,
-         CAST({_H_CK} % 3 + 1 AS INT) AS fake_channels
-  FROM documents
-)
-SELECT 'meta' AS facet, doc_id, CAST(NULL AS INT) AS idx, n_bytes, checksum,
-       fake_width AS d1, fake_height AS d2, fake_channels AS d3,
-       CAST(NULL AS BIGINT) AS n2
-FROM meta
-UNION ALL
-SELECT 'frame', doc_id, CAST(i AS INT),
-       CAST((greatest(length(text) - {FRAME_LEN}, 0) * i)
-            // greatest({N_FRAMES} - 1, 1) + 1 AS BIGINT),
-       md5(substring(text,
-            CAST((greatest(length(text) - {FRAME_LEN}, 0) * i)
-                 // greatest({N_FRAMES} - 1, 1) + 1 AS INT),
-            {FRAME_LEN})),
-       CAST(NULL AS INT), CAST(NULL AS INT), CAST(NULL AS INT),
-       CAST(NULL AS BIGINT)
-FROM documents
-CROSS JOIN (SELECT unnest(range(0, {N_FRAMES})) AS i) f
-UNION ALL
-SELECT 'resize', doc_id, CAST(NULL AS INT), CAST(NULL AS BIGINT),
-       CAST(NULL AS VARCHAR),
-       CAST(greatest(fake_width * 224 // greatest(fake_width, fake_height), 1)
-            AS INT),
-       CAST(greatest(fake_height * 224 // greatest(fake_width, fake_height), 1)
-            AS INT),
-       CAST(NULL AS INT), CAST(NULL AS BIGINT)
-FROM meta
-UNION ALL
-SELECT 'audio', doc_id, chunk_idx, start_sample, CAST(NULL AS VARCHAR),
-       sample_rate, CAST(NULL AS INT), CAST(NULL AS INT), end_sample
-FROM ({_AUDIO_ORACLE}) au
-UNION ALL
-SELECT 'wav', doc_id, n_chunks, n_bytes, CAST(NULL AS VARCHAR),
-       sample_rate, CAST(NULL AS INT), CAST(NULL AS INT), n_samples
-FROM ({_WAV_ORACLE}) wp
-UNION ALL
-SELECT 'png', doc_id, CAST(NULL AS INT), n_raw, CAST(NULL AS VARCHAR),
-       width, height, channels, pix_sum
-FROM ({_PNG_ORACLE}) pp
-UNION ALL
-SELECT 'rszpix', doc_id, CAST(NULL AS INT), pix_sum, CAST(NULL AS VARCHAR),
-       width, height, channels, rs_sum
-FROM ({_RSZ_ORACLE}) rz
-""",
-    tags=("multimodal", "pandas_udf", "frames", "resize"),
-)
-def multimodal_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multimodal plumbing surface, three facets over the synthetic
-    binary payload column (UTF-8 text bytes standing in for image /
-    video bytes — real codecs are a container limitation, see module
-    docstring):
-
-    - `meta`:   Arrow-batched mapInPandas decode → (n_bytes, checksum,
-                fake WxHxC) — d1/d2/d3 = width/height/channels;
-    - `frame`:  1→N frame sampling (4 evenly-spaced 32-char slices,
-                checksummed) — idx = frame index, n_bytes = char_start;
-    - `resize`: fit-to-224 dimension planning from the decoded
-                metadata — d1/d2 = out_width/out_height;
-    - `audio`:  1-second audio segmentation (idx = chunk, n_bytes/n2 =
-                start/end sample, d1 = sample rate);
-    - `wav`:    REAL RIFF bytes, synthesized then decoded back with the
-                stdlib wave reader (idx = chunks, n_bytes = payload
-                size, d1 = decoded rate, n2 = decoded frames);
-    - `png`:    REAL PNG bytes, synthesized then decoded back with the
-                pure-stdlib parser (CRC walk + inflate + de-filter;
-                n_bytes = raw stream length, d1/d2/d3 = decoded
-                W/H/channels, n2 = decoded pixel sum);
-    - `rszpix`: round-6 PIXEL-level nearest-neighbor resize of decoded
-                2-D GRADIENT PNGs (n_bytes = full pixel sum, n2 =
-                resized-to-8x8 pixel sum — closed-form oracle on both
-                axes' floor-grid index mapping).
-
-    The oracle recomputes every facet in pure SQL, pinning the whole
-    Python/Arrow round trip byte-for-byte. Zero shuffle: every facet is
-    embarrassingly parallel over the scan."""
-    docs = load_table(spark, sf_dir, "documents")
-    with_blob = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    # meta feeds its own facet AND the resize facet — persist the
-    # mapInPandas output so the decode runs once per payload.
-    from pyspark import StorageLevel
-
-    meta = extract_blob_meta(with_blob, "doc_id", "payload").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    null_i = F.lit(None).cast("int")
-    null_b = F.lit(None).cast("bigint")
-    m = meta.select(
-        F.lit("meta").alias("facet"),
-        "doc_id",
-        null_i.alias("idx"),
-        "n_bytes",
-        "checksum",
-        F.col("fake_width").alias("d1"),
-        F.col("fake_height").alias("d2"),
-        F.col("fake_channels").alias("d3"),
-        null_b.alias("n2"),
-    )
-    fr = sample_frames(with_blob, "doc_id", "payload").select(
-        F.lit("frame").alias("facet"),
-        "doc_id",
-        F.col("frame_idx").alias("idx"),
-        F.col("char_start").alias("n_bytes"),
-        F.col("frame_checksum").alias("checksum"),
-        null_i.alias("d1"),
-        null_i.alias("d2"),
-        null_i.alias("d3"),
-        null_b.alias("n2"),
-    )
-    ow, oh = _resize_exprs()
-    rz = meta.select(
-        F.lit("resize").alias("facet"),
-        "doc_id",
-        null_i.alias("idx"),
-        F.lit(None).cast("bigint").alias("n_bytes"),
-        F.lit(None).cast("string").alias("checksum"),
-        ow.alias("d1"),
-        oh.alias("d2"),
-        null_i.alias("d3"),
-        null_b.alias("n2"),
-    )
-    au = chunk_audio(with_blob, "doc_id", "payload").select(
-        F.lit("audio").alias("facet"),
-        "doc_id",
-        F.col("chunk_idx").alias("idx"),
-        F.col("start_sample").alias("n_bytes"),
-        F.lit(None).cast("string").alias("checksum"),
-        F.col("sample_rate").alias("d1"),
-        null_i.alias("d2"),
-        null_i.alias("d3"),
-        F.col("end_sample").alias("n2"),
-    )
-    # `wav`: real RIFF bytes synthesized and decoded back (stdlib
-    # wave) — idx = chunk count, n_bytes = payload size, d1 = decoded
-    # rate, n2 = decoded frames. See the _WAV_ORACLE section comment.
-    wv = wav_probe(docs).select(
-        F.lit("wav").alias("facet"),
-        "doc_id",
-        F.col("n_chunks").alias("idx"),
-        "n_bytes",
-        F.lit(None).cast("string").alias("checksum"),
-        F.col("sample_rate").alias("d1"),
-        null_i.alias("d2"),
-        null_i.alias("d3"),
-        F.col("n_samples").alias("n2"),
-    )
-    # `png`: real PNG bytes synthesized and decoded back (pure-stdlib
-    # parser) — see the _PNG_ORACLE section comment.
-    pg = png_probe(docs).select(
-        F.lit("png").alias("facet"),
-        "doc_id",
-        null_i.alias("idx"),
-        F.col("n_raw").alias("n_bytes"),
-        F.lit(None).cast("string").alias("checksum"),
-        F.col("width").alias("d1"),
-        F.col("height").alias("d2"),
-        F.col("channels").alias("d3"),
-        F.col("pix_sum").alias("n2"),
-    )
-    # `rszpix`: pixel-level nearest-neighbor resize of decoded GRADIENT
-    # PNGs — see the _RSZ_ORACLE section comment.
-    rp = multimodal_resize_probe(spark, sf_dir).select(
-        F.lit("rszpix").alias("facet"),
-        "doc_id",
-        null_i.alias("idx"),
-        F.col("pix_sum").alias("n_bytes"),
-        F.lit(None).cast("string").alias("checksum"),
-        F.col("width").alias("d1"),
-        F.col("height").alias("d2"),
-        F.col("channels").alias("d3"),
-        F.col("rs_sum").alias("n2"),
-    )
-    return (
-        m.unionAll(fr)
-        .unionAll(rz)
-        .unionAll(au)
-        .unionAll(wv)
-        .unionAll(pg)
-        .unionAll(rp)
-    )
-
-
 AUDIO_CHUNK_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -1138,3 +946,121 @@ def multimodal_wav_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesize a genuine WAV per sampled doc, parse it back with the
     stdlib reader, report decoded (rate, frames) + chunk count."""
     return wav_probe(load_table(spark, sf_dir, "documents"))
+
+
+# -- consolidated registry query -------------------------------------------
+
+# The decoded metadata that both the `meta` and the `resize` facets read.
+_META_CTE = f"""meta AS (
+  SELECT doc_id,
+         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+         md5(text) AS checksum,
+         CAST({_H_CK} % 1920 + 1 AS INT) AS fake_width,
+         CAST(({_H_CK} // 1920) % 1080 + 1 AS INT) AS fake_height,
+         CAST({_H_CK} % 3 + 1 AS INT) AS fake_channels
+  FROM documents
+)"""
+
+_FRAME_START = (
+    f"(greatest(length(text) - {FRAME_LEN}, 0) * i)"
+    f" // greatest({N_FRAMES} - 1, 1) + 1"
+)
+
+MULTIMODAL_FACETS = Federation(
+    "facet STRING, doc_id BIGINT, idx INT, n_bytes BIGINT, checksum STRING,"
+    " d1 INT, d2 INT, d3 INT, n2 BIGINT",
+    [
+        ("meta", f"WITH {_META_CTE}\nSELECT * FROM meta",
+         {"doc_id": "doc_id", "n_bytes": "n_bytes", "checksum": "checksum",
+          "d1": "fake_width", "d2": "fake_height", "d3": "fake_channels"}),
+        ("frame", f"""
+SELECT doc_id, CAST(i AS INT) AS frame_idx,
+       CAST({_FRAME_START} AS BIGINT) AS char_start,
+       md5(substring(text, CAST({_FRAME_START} AS INT), {FRAME_LEN}))
+         AS frame_checksum
+FROM documents
+CROSS JOIN (SELECT unnest(range(0, {N_FRAMES})) AS i) f
+""",
+         {"doc_id": "doc_id", "idx": "frame_idx", "n_bytes": "char_start",
+          "checksum": "frame_checksum"}),
+        ("resize", f"""
+WITH {_META_CTE}
+SELECT doc_id,
+       CAST(greatest(fake_width * 224 // greatest(fake_width, fake_height), 1)
+            AS INT) AS out_width,
+       CAST(greatest(fake_height * 224 // greatest(fake_width, fake_height), 1)
+            AS INT) AS out_height
+FROM meta
+""",
+         {"doc_id": "doc_id", "d1": "out_width", "d2": "out_height"}),
+        ("audio", "multimodal_audio_chunks",
+         {"doc_id": "doc_id", "idx": "chunk_idx", "n_bytes": "start_sample",
+          "d1": "sample_rate", "n2": "end_sample"}),
+        ("wav", "multimodal_wav_probe",
+         {"doc_id": "doc_id", "idx": "n_chunks", "n_bytes": "n_bytes",
+          "d1": "sample_rate", "n2": "n_samples"}),
+        ("png", "multimodal_png_probe",
+         {"doc_id": "doc_id", "n_bytes": "n_raw", "d1": "width",
+          "d2": "height", "d3": "channels", "n2": "pix_sum"}),
+        ("rszpix", "multimodal_resize_probe",
+         {"doc_id": "doc_id", "n_bytes": "pix_sum", "d1": "width",
+          "d2": "height", "d3": "channels", "n2": "rs_sum"}),
+    ],
+)
+
+
+@query(
+    "multimodal_facets",
+    oracle=MULTIMODAL_FACETS.oracle,
+    tags=("multimodal", "pandas_udf", "frames", "resize"),
+)
+def multimodal_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The multimodal plumbing surface, three facets over the synthetic
+    binary payload column (UTF-8 text bytes standing in for image /
+    video bytes — real codecs are a container limitation, see module
+    docstring):
+
+    - `meta`:   Arrow-batched mapInPandas decode → (n_bytes, checksum,
+                fake WxHxC) — d1/d2/d3 = width/height/channels;
+    - `frame`:  1→N frame sampling (4 evenly-spaced 32-char slices,
+                checksummed) — idx = frame index, n_bytes = char_start;
+    - `resize`: fit-to-224 dimension planning from the decoded
+                metadata — d1/d2 = out_width/out_height;
+    - `audio`:  1-second audio segmentation (idx = chunk, n_bytes/n2 =
+                start/end sample, d1 = sample rate);
+    - `wav`:    REAL RIFF bytes, synthesized then decoded back with the
+                stdlib wave reader (idx = chunks, n_bytes = payload
+                size, d1 = decoded rate, n2 = decoded frames);
+    - `png`:    REAL PNG bytes, synthesized then decoded back with the
+                pure-stdlib parser (CRC walk + inflate + de-filter;
+                n_bytes = raw stream length, d1/d2/d3 = decoded
+                W/H/channels, n2 = decoded pixel sum);
+    - `rszpix`: round-6 PIXEL-level nearest-neighbor resize of decoded
+                2-D GRADIENT PNGs (n_bytes = full pixel sum, n2 =
+                resized-to-8x8 pixel sum — closed-form oracle on both
+                axes' floor-grid index mapping).
+
+    The oracle recomputes every facet in pure SQL, pinning the whole
+    Python/Arrow round trip byte-for-byte. Zero shuffle: every facet is
+    embarrassingly parallel over the scan."""
+    docs = load_table(spark, sf_dir, "documents")
+    with_blob = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
+    # meta feeds its own facet AND the resize facet — persist the
+    # mapInPandas output so the decode runs once per payload.
+    meta = extract_blob_meta(with_blob, "doc_id", "payload").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    ow, oh = _resize_exprs()
+    frames = [
+        ("meta", meta),
+        ("frame", sample_frames(with_blob, "doc_id", "payload")),
+        ("resize", meta.select("doc_id", ow.alias("out_width"), oh.alias("out_height"))),
+        ("audio", chunk_audio(with_blob, "doc_id", "payload")),
+        ("wav", wav_probe(docs)),
+        ("png", png_probe(docs)),
+        ("rszpix", multimodal_resize_probe(spark, sf_dir)),
+    ]
+    return functools.reduce(
+        DataFrame.unionAll,
+        (MULTIMODAL_FACETS.project(tag, df) for tag, df in frames),
+    )

@@ -30,7 +30,7 @@ from engine.functions.hashing import DUCK_H60, SPARK_H60
 from engine.functions.rounding import duck_round_he, round_he
 from engine.io import load_table
 from engine.plans import audited_checkpoint, record_iteration_plan
-from engine.registry import query
+from engine.registry import Federation, query
 from engine.operators.textstats import _QQ_QUALITY_DUCK, ngram_idx
 
 TEST_PCT = 5  # h60 buckets 0-4 of 100 → test
@@ -432,23 +432,33 @@ def pipeline_reservoir_per_source(spark: SparkSession, sf_dir: str) -> DataFrame
 # or packs contaminated documents.
 
 
-@query(
-    "pipeline_samplers",
-    oracle=f"""
-SELECT 'stratified' AS facet, lang AS grp, CAST(NULL AS BIGINT) AS doc_id,
-       count(*) AS n
+SAMPLERS = Federation(
+    "facet STRING, grp STRING, doc_id BIGINT, n BIGINT",
+    [
+        ("stratified", f"""
+SELECT lang, count(*) AS n_sampled
 FROM documents
 WHERE {DUCK_H60.format(x="'sample:' || CAST(doc_id AS VARCHAR)")} % 100
       < CASE lang WHEN 'en' THEN 10 WHEN 'de' THEN 30 ELSE 50 END
 GROUP BY lang
-UNION ALL
-SELECT 'reservoir', source, doc_id, CAST(n_chars AS BIGINT) FROM (
+""",
+         {"grp": "lang", "n": "n_sampled"}),
+        ("reservoir", f"""
+SELECT source, doc_id, n_chars FROM (
   SELECT source, doc_id, n_chars,
          row_number() OVER (PARTITION BY source ORDER BY {_RES_KEY_DUCK}, doc_id)
            AS rk
   FROM documents
 ) t WHERE rk <= {RESERVOIR_K}
 """,
+         {"grp": "source", "doc_id": "doc_id", "n": "CAST(n_chars AS BIGINT)"}),
+    ],
+)
+
+
+@query(
+    "pipeline_samplers",
+    oracle=SAMPLERS.oracle,
     tags=("pipeline", "sampling", "documents"),
     exported=False,  # driver-visible via facets2.pipeline_split_samplers
 )
@@ -459,31 +469,29 @@ def pipeline_samplers(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash priority, WindowGroupLimit plan — grp = source, one row per
     kept doc with n = n_chars). Both are deterministic hash machinery:
     no rand(), retry-safe, engine-reproducible."""
-    strat = pipeline_stratified_sample(spark, sf_dir).select(
-        F.lit("stratified").alias("facet"),
-        F.col("lang").alias("grp"),
-        F.lit(None).cast("bigint").alias("doc_id"),
-        F.col("n_sampled").alias("n"),
-    )
-    res = pipeline_reservoir_per_source(spark, sf_dir).select(
-        F.lit("reservoir").alias("facet"),
-        F.col("source").alias("grp"),
-        "doc_id",
-        F.col("n_chars").cast("bigint").alias("n"),
-    )
+    strat = SAMPLERS.project("stratified", pipeline_stratified_sample(spark, sf_dir))
+    res = SAMPLERS.project("reservoir", pipeline_reservoir_per_source(spark, sf_dir))
     return strat.unionAll(res)
 
 
-@query(
-    "pipeline_mix_funnel",
-    oracle=f"""
+MIX_FUNNEL = Federation(
+    "facet STRING, key STRING, n BIGINT, frac_bp BIGINT",
+    [
+        ("mix", f"""
 WITH sampled AS (
   SELECT source FROM documents
   WHERE {DUCK_H60.format(x="'mix:' || CAST(doc_id AS VARCHAR)")} % 1000
         < CASE source WHEN 'web' THEN 200 WHEN 'books' THEN 800
                       WHEN 'code' THEN 600 ELSE 400 END
-),
-m AS (
+)
+SELECT source, count(*) AS n_docs,
+       CAST((20000 * count(*) + (SELECT count(*) FROM sampled))
+            // (2 * (SELECT count(*) FROM sampled)) AS BIGINT) AS frac_bp
+FROM sampled GROUP BY source
+""",
+         {"key": "source", "n": "n_docs", "frac_bp": "frac_bp"}),
+        ("funnel", """
+WITH m AS (
   SELECT n_chars >= 200 AS c_len,
          100 * length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
            >= 82 * greatest(length(text), 1) AS c_alpha,
@@ -507,18 +515,19 @@ funnel AS (
               AS BIGINT) AS n_after_wordlen
   FROM m
 )
-SELECT 'mix' AS facet, source AS key, count(*) AS n,
-       CAST((20000 * count(*) + (SELECT count(*) FROM sampled))
-            // (2 * (SELECT count(*) FROM sampled)) AS BIGINT) AS frac_bp
-FROM sampled GROUP BY source
-UNION ALL
-SELECT 'funnel', stage, n, CAST(NULL AS BIGINT) FROM (
-  SELECT 'n_total' AS stage, n_total AS n FROM funnel
-  UNION ALL SELECT 'n_after_len', n_after_len FROM funnel
-  UNION ALL SELECT 'n_after_alpha', n_after_alpha FROM funnel
-  UNION ALL SELECT 'n_after_wordlen', n_after_wordlen FROM funnel
-) s
+SELECT 'n_total' AS key, n_total AS n FROM funnel
+UNION ALL SELECT 'n_after_len', n_after_len FROM funnel
+UNION ALL SELECT 'n_after_alpha', n_after_alpha FROM funnel
+UNION ALL SELECT 'n_after_wordlen', n_after_wordlen FROM funnel
 """,
+         {"key": "key", "n": "n"}),
+    ],
+)
+
+
+@query(
+    "pipeline_mix_funnel",
+    oracle=MIX_FUNNEL.oracle,
     tags=("pipeline", "sampling", "quality", "documents"),
 )
 def pipeline_mix_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,58 +538,63 @@ def pipeline_mix_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     attrition — key = stage name, n = surviving docs). The funnel's
     single wide row is unpivoted to rows so every number rides the
     same facet schema."""
-    mix = pipeline_source_mix(spark, sf_dir).select(
-        F.lit("mix").alias("facet"),
-        F.col("source").alias("key"),
-        F.col("n_docs").alias("n"),
-        "frac_bp",
-    )
+    mix = MIX_FUNNEL.project("mix", pipeline_source_mix(spark, sf_dir))
     funnel = pipeline_quality_funnel(spark, sf_dir).select(
         F.expr(
             "stack(4, 'n_total', n_total, 'n_after_len', n_after_len,"
             " 'n_after_alpha', n_after_alpha, 'n_after_wordlen', n_after_wordlen)"
         ).alias("key", "n")
-    ).select(
-        F.lit("funnel").alias("facet"),
-        "key",
-        "n",
-        F.lit(None).cast("bigint").alias("frac_bp"),
     )
-    return mix.unionAll(funnel)
+    return mix.unionAll(MIX_FUNNEL.project("funnel", funnel))
 
 
-@query(
-    "pipeline_scrub_chunks",
-    oracle=f"""
-WITH scrubbed AS (
+# The scrubbed text that both facets of pipeline_scrub_chunks read.
+_SCRUBBED_CTE = f"""scrubbed AS (
   SELECT doc_id, text,
          regexp_replace(regexp_replace(text, '{_URL_RE}', '<URL>', 'g'),
                         '{_EMAIL_RE}', '<EMAIL>', 'g') AS stext
   FROM documents
-),
-toks AS (
-  SELECT doc_id, string_split(stext, ' ') AS t FROM scrubbed
-)
-SELECT 'scrub' AS facet, doc_id, CAST(NULL AS BIGINT) AS chunk_id,
+)"""
+
+SCRUB_CHUNKS = Federation(
+    "facet STRING, doc_id BIGINT, chunk_id BIGINT, n1 BIGINT, n2 BIGINT,"
+    " n3 BIGINT, n4 BIGINT, txt STRING",
+    [
+        ("scrub", f"""
+WITH {_SCRUBBED_CTE}
+SELECT doc_id,
        CAST(length(text) AS BIGINT) AS n1,
        CAST(length(stext) AS BIGINT) AS n2,
        CAST(length(text) - length(regexp_replace(text, '{_URL_RE}', '', 'g'))
             AS BIGINT) AS n3,
        CAST(length(text) - length(regexp_replace(text, '{_EMAIL_RE}', '', 'g'))
-            AS BIGINT) AS n4,
-       CAST(NULL AS VARCHAR) AS txt
+            AS BIGINT) AS n4
 FROM scrubbed
-UNION ALL
-SELECT 'chunk', doc_id, CAST(c AS BIGINT),
-       CAST(c * {CHUNK_STRIDE} + 1 AS BIGINT),
-       CAST(least(c * {CHUNK_STRIDE} + {CHUNK_TOKENS}, len(t)) AS BIGINT),
-       CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
+""",
+         {c: c for c in ("doc_id", "n1", "n2", "n3", "n4")}),
+        ("chunk", f"""
+WITH {_SCRUBBED_CTE},
+toks AS (
+  SELECT doc_id, string_split(stext, ' ') AS t FROM scrubbed
+)
+SELECT doc_id, CAST(c AS BIGINT) AS chunk_id,
+       CAST(c * {CHUNK_STRIDE} + 1 AS BIGINT) AS n1,
+       CAST(least(c * {CHUNK_STRIDE} + {CHUNK_TOKENS}, len(t)) AS BIGINT) AS n2,
        array_to_string(t[c * {CHUNK_STRIDE} + 1 :
                          least(c * {CHUNK_STRIDE} + {CHUNK_TOKENS}, len(t))], ' ')
+         AS txt
 FROM toks
 CROSS JOIN unnest(range(0, greatest((len(t) - {CHUNK_TOKENS} + {CHUNK_STRIDE} - 1)
                                     // {CHUNK_STRIDE}, 0) + 1)) AS r(c)
 """,
+         {c: c for c in ("doc_id", "chunk_id", "n1", "n2", "txt")}),
+    ],
+)
+
+
+@query(
+    "pipeline_scrub_chunks",
+    oracle=SCRUB_CHUNKS.oracle,
     tags=("pipeline", "scrub", "chunking", "documents"),
 )
 def pipeline_scrub_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -594,11 +608,8 @@ def pipeline_scrub_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffle — the full pipeline is a narrow map at any scale."""
     docs = load_table(spark, sf_dir, "documents")
     scrubbed = docs.select("doc_id", "text", _scrub_expr().alias("stext"))
-    null_b = F.lit(None).cast("bigint")
     audit = scrubbed.select(
-        F.lit("scrub").alias("facet"),
         "doc_id",
-        null_b.alias("chunk_id"),
         F.length("text").cast("bigint").alias("n1"),
         F.length("stext").cast("bigint").alias("n2"),
         (F.length("text") - F.length(F.regexp_replace("text", _URL_RE, "")))
@@ -607,36 +618,42 @@ def pipeline_scrub_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.length("text") - F.length(F.regexp_replace("text", _EMAIL_RE, "")))
         .cast("bigint")
         .alias("n4"),
-        F.lit(None).cast("string").alias("txt"),
     )
     toks = scrubbed.select("doc_id", F.split("stext", " ").alias("t"))
     n_chunks, start, end = _chunk_exprs()
     chunks = (
         toks.select("doc_id", "t", F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("c"))
         .select(
-            F.lit("chunk").alias("facet"),
             "doc_id",
             F.col("c").cast("bigint").alias("chunk_id"),
             start.cast("bigint").alias("n1"),
             end.cast("bigint").alias("n2"),
-            null_b.alias("n3"),
-            null_b.alias("n4"),
             F.concat_ws(" ", F.slice("t", start, end - start + 1)).alias("txt"),
         )
     )
-    return audit.unionAll(chunks)
+    return SCRUB_CHUNKS.project("scrub", audit).unionAll(
+        SCRUB_CHUNKS.project("chunk", chunks)
+    )
 
 
-@query(
-    "pipeline_vocab_bigrams",
-    oracle=f"""
+VOCAB_BIGRAMS = Federation(
+    "facet STRING, gram STRING, freq BIGINT, token_id BIGINT",
+    [
+        ("vocab", f"""
 WITH tf AS (
   SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents
 ),
 counted AS (
   SELECT token, count(*) AS freq FROM tf WHERE token <> '' GROUP BY token
-),
-toks AS (
+)
+SELECT token, freq,
+       CAST(row_number() OVER (ORDER BY freq DESC, token) - 1 AS BIGINT)
+         AS token_id
+FROM counted WHERE freq >= {VOCAB_MIN_FREQ}
+""",
+         {"gram": "token", "freq": "freq", "token_id": "token_id"}),
+        ("bigram", """
+WITH toks AS (
   SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
 ),
 bi AS (
@@ -644,15 +661,18 @@ bi AS (
                 i -> t[i] || ' ' || t[i+1])) AS bigram
   FROM toks
 )
-SELECT 'vocab' AS facet, token AS gram, freq,
-       CAST(row_number() OVER (ORDER BY freq DESC, token) - 1 AS BIGINT)
-         AS token_id
-FROM counted WHERE freq >= {VOCAB_MIN_FREQ}
-UNION ALL
-SELECT 'bigram', bigram, count(*), CAST(NULL AS BIGINT)
+SELECT bigram, count(*) AS freq
 FROM bi WHERE bigram IS NOT NULL
 GROUP BY bigram HAVING count(*) >= 5
 """,
+         {"gram": "bigram", "freq": "freq"}),
+    ],
+)
+
+
+@query(
+    "pipeline_vocab_bigrams",
+    oracle=VOCAB_BIGRAMS.oracle,
     tags=("pipeline", "vocab", "ngram", "documents"),
 )
 def pipeline_vocab_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -661,25 +681,14 @@ def pipeline_vocab_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     global numbering — no single-partition window) and `bigram`
     (corpus bigram frequencies, min-count 5). One tokenize each, one
     count shuffle each; hot grams are the classic AQE-skew case."""
-    vocab = pipeline_vocab(spark, sf_dir).select(
-        F.lit("vocab").alias("facet"),
-        F.col("token").alias("gram"),
-        "freq",
-        "token_id",
-    )
-    bi = pipeline_bigram_counts(spark, sf_dir).select(
-        F.lit("bigram").alias("facet"),
-        F.col("bigram").alias("gram"),
-        "freq",
-        F.lit(None).cast("bigint").alias("token_id"),
-    )
+    vocab = VOCAB_BIGRAMS.project("vocab", pipeline_vocab(spark, sf_dir))
+    bi = VOCAB_BIGRAMS.project("bigram", pipeline_bigram_counts(spark, sf_dir))
     return vocab.unionAll(bi)
 
 
-@query(
-    "pipeline_decontam_pack",
-    oracle=f"""
-WITH toks AS (
+# The contaminated training docs, which the `decontam` facet reports
+# and the `pack` facet's clean set excludes.
+_CONTAMINATED_CTE = f"""toks AS (
   SELECT doc_id, {_DECON_EVAL_DUCK} AS is_eval,
          string_split(lower(text), ' ') AS t
   FROM documents
@@ -695,28 +704,43 @@ contaminated AS (
   FROM (SELECT doc_id, g FROM grams WHERE NOT is_eval) tr
   JOIN (SELECT DISTINCT g FROM grams WHERE is_eval) ev USING (g)
   GROUP BY tr.doc_id
-),
-clean AS (
-  SELECT doc_id,
-         {DUCK_H60.format(x="'pack:' || CAST(doc_id AS VARCHAR)")} % {PACK_BUCKETS}
-           AS bucket,
-         len(string_split(text, ' ')) AS n_tokens
-  FROM documents
-  WHERE NOT ({_DECON_EVAL_DUCK})
-    AND doc_id NOT IN (SELECT doc_id FROM contaminated)
+)"""
+
+# Tokens packed ahead of a doc in its bucket: the same window text on
+# both engines; only the integer division is spelled per engine.
+_PACK_CUM = (
+    "coalesce(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id"
+    " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
 )
-SELECT 'decontam' AS facet, doc_id, CAST(NULL AS BIGINT) AS bucket,
-       n_shared_grams AS n, CAST(NULL AS BIGINT) AS seq_id,
-       CAST(NULL AS BIGINT) AS seq_offset
-FROM contaminated
-UNION ALL
-SELECT 'pack', doc_id, CAST(bucket AS BIGINT), CAST(n_tokens AS BIGINT),
-       CAST(COALESCE(sum(n_tokens) OVER w, 0) // {PACK_CTX} AS BIGINT),
-       CAST(COALESCE(sum(n_tokens) OVER w, 0) % {PACK_CTX} AS BIGINT)
-FROM clean
-WINDOW w AS (PARTITION BY bucket ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+
+DECONTAM_PACK = Federation(
+    "facet STRING, doc_id BIGINT, bucket BIGINT, n BIGINT, seq_id BIGINT,"
+    " seq_offset BIGINT",
+    [
+        ("decontam", f"WITH {_CONTAMINATED_CTE}\nSELECT * FROM contaminated",
+         {"doc_id": "doc_id", "n": "n_shared_grams"}),
+        ("pack", f"""
+WITH {_CONTAMINATED_CTE}
+SELECT doc_id,
+       {DUCK_H60.format(x="'pack:' || CAST(doc_id AS VARCHAR)")} % {PACK_BUCKETS}
+         AS bucket,
+       len(string_split(text, ' ')) AS n_tokens
+FROM documents
+WHERE NOT ({_DECON_EVAL_DUCK})
+  AND doc_id NOT IN (SELECT doc_id FROM contaminated)
 """,
+         {"doc_id": "doc_id", "bucket": "CAST(bucket AS BIGINT)",
+          "n": "CAST(n_tokens AS BIGINT)",
+          "seq_id": (f"CAST({_PACK_CUM} / {PACK_CTX} AS BIGINT)",
+                     f"CAST({_PACK_CUM} // {PACK_CTX} AS BIGINT)"),
+          "seq_offset": f"CAST({_PACK_CUM} % {PACK_CTX} AS BIGINT)"}),
+    ],
+)
+
+
+@query(
+    "pipeline_decontam_pack",
+    oracle=DECONTAM_PACK.oracle,
     tags=("pipeline", "decontamination", "packing", "documents", "headline"),
 )
 def pipeline_decontam_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -755,14 +779,7 @@ def _pipeline_decontam_pack_plan(spark: SparkSession, sf_dir: str):
     contaminated = pipeline_decontaminate(spark, sf_dir).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    decon_facet = contaminated.selectExpr(
-        "'decontam' AS facet",
-        "doc_id",
-        "CAST(NULL AS BIGINT) AS bucket",
-        "n_shared_grams AS n",
-        "CAST(NULL AS BIGINT) AS seq_id",
-        "CAST(NULL AS BIGINT) AS seq_offset",
-    )
+    decon_facet = DECONTAM_PACK.project("decontam", contaminated)
     docs = load_table(spark, sf_dir, "documents")
     bucket_sql = (
         SPARK_H60.format(x="concat('pack:', cast(doc_id as string))")
@@ -777,18 +794,7 @@ def _pipeline_decontam_pack_plan(spark: SparkSession, sf_dir: str):
             "size(split(text, ' ')) AS n_tokens",
         )
     )
-    cum = (
-        "coalesce(sum(n_tokens) OVER (PARTITION BY bucket ORDER BY doc_id"
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
-    )
-    pack_facet = clean.selectExpr(
-        "'pack' AS facet",
-        "doc_id",
-        "CAST(bucket AS BIGINT) AS bucket",
-        "CAST(n_tokens AS BIGINT) AS n",
-        f"CAST({cum} / {PACK_CTX} AS BIGINT) AS seq_id",
-        f"CAST({cum} % {PACK_CTX} AS BIGINT) AS seq_offset",
-    )
+    pack_facet = DECONTAM_PACK.project("pack", clean)
     return decon_facet.unionAll(pack_facet), [contaminated]
 
 
@@ -1224,8 +1230,8 @@ _LS_NCASE = (
     f"WHEN {_SPLIT_BUCKET_DUCK} < {TEST_PCT + VAL_PCT} THEN 'val' "
     f"ELSE 'train' END"
 )
-_LEAKAGE_SPLIT_ORACLE = f"""
-WITH canon_map AS (
+# Every doc's canonical and naive split, which both facets read.
+_LS_SPLITS_CTE = f"""canon_map AS (
   SELECT d.doc_id, d.n_chars,
          COALESCE(cc.canonical_id, d.doc_id) AS canon
   FROM documents d
@@ -1236,34 +1242,47 @@ splits AS (
          {_LS_CCASE} AS csplit,
          {_LS_NCASE} AS nsplit
   FROM canon_map
-),
+)"""
+
+LEAKAGE_SAFE_SPLIT = Federation(
+    "facet STRING, key STRING, n1 BIGINT, n2 BIGINT, n3 BIGINT",
+    [
+        ("split", f"""
+WITH {_LS_SPLITS_CTE}
+SELECT csplit, count(*) AS n1,
+       count(DISTINCT canon) AS n2, CAST(sum(n_chars) AS BIGINT) AS n3
+FROM splits GROUP BY csplit
+""",
+         {"key": "csplit", "n1": "n1", "n2": "n2", "n3": "n3"}),
+        # Both audit rows, naive and canonical, in one component.
+        ("audit", f"""
+WITH {_LS_SPLITS_CTE},
 groups AS (
   SELECT canon, count(*) AS n_members,
          count(DISTINCT csplit) AS n_csplits,
          count(DISTINCT nsplit) AS n_nsplits
   FROM splits GROUP BY canon HAVING count(*) >= 2
 )
-SELECT 'split' AS facet, csplit AS key, count(*) AS n1,
-       count(DISTINCT canon) AS n2, CAST(sum(n_chars) AS BIGINT) AS n3
-FROM splits GROUP BY csplit
-UNION ALL
-SELECT 'audit', 'clusters_spanning_naive',
+SELECT 'clusters_spanning_naive' AS key,
        CAST(COALESCE(sum(CASE WHEN n_nsplits > 1 THEN 1 ELSE 0 END), 0)
-            AS BIGINT),
-       count(*), CAST(NULL AS BIGINT)
+            AS BIGINT) AS n1,
+       count(*) AS n2
 FROM groups
 UNION ALL
-SELECT 'audit', 'clusters_spanning_canonical',
+SELECT 'clusters_spanning_canonical',
        CAST(COALESCE(sum(CASE WHEN n_csplits > 1 THEN 1 ELSE 0 END), 0)
             AS BIGINT),
-       count(*), CAST(NULL AS BIGINT)
+       count(*)
 FROM groups
-"""
+""",
+         {"key": "key", "n1": "n1", "n2": "n2"}),
+    ],
+)
 
 
 @query(
     "pipeline_leakage_safe_split",
-    oracle=_LEAKAGE_SPLIT_ORACLE,
+    oracle=LEAKAGE_SAFE_SPLIT.oracle,
     tags=("pipeline", "split", "dedup", "documents"),
     exported=False,  # driver-visible via facets2.pipeline_split_samplers
 )
@@ -1306,7 +1325,7 @@ def pipeline_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n1"),
         F.countDistinct("canon").alias("n2"),
         F.sum("n_chars").cast("bigint").alias("n3"),
-    ).select(F.lit("split").alias("facet"), F.col("csplit").alias("key"), "n1", "n2", "n3")
+    )
     groups = (
         splits.groupBy("canon")
         .agg(
@@ -1325,21 +1344,18 @@ def pipeline_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("spc"),
         F.count(F.lit(1)).cast("bigint").alias("n_groups"),
     )
-    a1 = audit.select(
-        F.lit("audit").alias("facet"),
-        F.lit("clusters_spanning_naive").alias("key"),
-        F.col("spn").alias("n1"),
-        F.col("n_groups").alias("n2"),
-        F.lit(None).cast("bigint").alias("n3"),
+    # The audit facet's two rows, naive and canonical.
+    naive = audit.selectExpr(
+        "'clusters_spanning_naive' AS key", "spn AS n1", "n_groups AS n2"
     )
-    a2 = audit.select(
-        F.lit("audit").alias("facet"),
-        F.lit("clusters_spanning_canonical").alias("key"),
-        F.col("spc").alias("n1"),
-        F.col("n_groups").alias("n2"),
-        F.lit(None).cast("bigint").alias("n3"),
+    canonical = audit.selectExpr(
+        "'clusters_spanning_canonical' AS key", "spc AS n1", "n_groups AS n2"
     )
-    return per_split.unionAll(a1).unionAll(a2)
+    return (
+        LEAKAGE_SAFE_SPLIT.project("split", per_split)
+        .unionAll(LEAKAGE_SAFE_SPLIT.project("audit", naive))
+        .unionAll(LEAKAGE_SAFE_SPLIT.project("audit", canonical))
+    )
 
 
 # -- sequence-length bucketing (padding-waste accounting) -------------------

@@ -167,7 +167,7 @@ def salted_agg(
 from pyspark.sql import SparkSession  # noqa: E402
 
 from engine.io import load_table  # noqa: E402
-from engine.registry import query  # noqa: E402
+from engine.registry import Federation, query  # noqa: E402
 
 EVENT_WEIGHTS = [
     ("view", 1),
@@ -375,24 +375,24 @@ def _recommend_sql(div: str, imb: str) -> str:
     )
 
 
-_NBIG = "CAST(NULL AS BIGINT)"
 _P = SKEW_PROFILE_PARTS
 _IMB_DUCK = "CAST((20000 * maxpart * {p} + n_rows) // (2 * n_rows) AS BIGINT)"
 
-_SALTED_EVENTS_ORACLE = f"""
+_SALTED_AGG_ORACLE = """
 WITH w(event_type, weight) AS (VALUES
   ('view', 1), ('click', 2), ('purchase', 10), ('signup', 5), ('error', 0)
-),
-agg AS (
-  SELECT e.event_type,
-         count(*) AS n_events,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT) * weight)
-              AS BIGINT) AS weighted_cents,
-         CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users
-  FROM events e JOIN w USING (event_type)
-  GROUP BY e.event_type
-),
-kc AS (
+)
+SELECT e.event_type,
+       count(*) AS n_events,
+       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT) * weight)
+            AS BIGINT) AS weighted_cents,
+       CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users
+FROM events e JOIN w USING (event_type)
+GROUP BY e.event_type
+"""
+
+_SALT_SIZING_ORACLE = f"""
+WITH kc AS (
   SELECT COALESCE(CAST(event_type AS VARCHAR), '') AS k, count(*) AS cnt
   FROM events GROUP BY 1
 ),
@@ -438,21 +438,26 @@ post2 AS (
          {_IMB_DUCK.format(p=_P)} AS post_imb_bp
   FROM post
 )
-SELECT 'agg' AS facet, event_type, n_events, weighted_cents, n_users,
-       {_NBIG} AS n_salts, {_NBIG} AS pre_imb_bp, {_NBIG} AS post_imb_bp,
-       {_NBIG} AS pre_maxpart_load, {_NBIG} AS post_maxpart_load
-FROM agg
-UNION ALL
-SELECT 'salt_sizing', CAST(NULL AS VARCHAR), {_NBIG}, {_NBIG}, {_NBIG},
-       n_salts, pre_imb_bp, post_imb_bp, pre_maxpart_load,
-       post_maxpart_load
-FROM rec2 CROSS JOIN post2
+SELECT * FROM rec2 CROSS JOIN post2
 """
+
+SALTED_EVENTS = Federation(
+    "facet STRING, event_type STRING, n_events BIGINT, weighted_cents BIGINT,"
+    " n_users BIGINT, n_salts BIGINT, pre_imb_bp BIGINT, post_imb_bp BIGINT,"
+    " pre_maxpart_load BIGINT, post_maxpart_load BIGINT",
+    [
+        ("agg", _SALTED_AGG_ORACLE,
+         {c: c for c in ("event_type", "n_events", "weighted_cents", "n_users")}),
+        ("salt_sizing", _SALT_SIZING_ORACLE,
+         {c: c for c in ("n_salts", "pre_imb_bp", "post_imb_bp",
+                         "pre_maxpart_load", "post_maxpart_load")}),
+    ],
+)
 
 
 @query(
     "skew_salted_events",
-    oracle=_SALTED_EVENTS_ORACLE,
+    oracle=SALTED_EVENTS.oracle,
     tags=("skew", "join", "events", "sizing"),
 )
 def skew_salted_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -514,20 +519,6 @@ def skew_salted_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         salt_source="event_id",
     )
 
-    nb = F.lit(None).cast("bigint")
-    agg_rows = agg.select(
-        F.lit("agg").alias("facet"),
-        "event_type",
-        "n_events",
-        "weighted_cents",
-        "n_users",
-        nb.alias("n_salts"),
-        nb.alias("pre_imb_bp"),
-        nb.alias("post_imb_bp"),
-        nb.alias("pre_maxpart_load"),
-        nb.alias("post_maxpart_load"),
-    )
-
     keys = ev.select(
         F.coalesce(F.col("event_type").cast("string"), F.lit("")).alias("k")
     )
@@ -552,16 +543,6 @@ def skew_salted_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("imb_bp").alias("post_imb_bp"),
         F.col("maxpart_load").alias("post_maxpart_load"),
     )
-    sizing = rec.crossJoin(post).select(
-        F.lit("salt_sizing").alias("facet"),
-        F.lit(None).cast("string").alias("event_type"),
-        nb.alias("n_events"),
-        nb.alias("weighted_cents"),
-        nb.alias("n_users"),
-        "n_salts",
-        "pre_imb_bp",
-        "post_imb_bp",
-        "pre_maxpart_load",
-        "post_maxpart_load",
+    return SALTED_EVENTS.project("agg", agg).unionAll(
+        SALTED_EVENTS.project("salt_sizing", rec.crossJoin(post))
     )
-    return agg_rows.unionAll(sizing)

@@ -22,14 +22,18 @@ Boundary semantics pinned by the oracles:
 from __future__ import annotations
 
 import itertools
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.functions.rounding import duck_qsum_rounded
 from engine.io import load_table
-from engine.registry import query
+from engine.registry import Federation, query
 from engine.streaming.events import (
+    build_late_replay,
     read_event_stream,
     run_available_now,
     streaming_dedup,
@@ -156,20 +160,21 @@ def streaming_enriched_purchase_rows(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
+WINDOWED_COUNTS = Federation(
+    "facet STRING, day TIMESTAMP, event_type STRING, n BIGINT, x DOUBLE",
+    [
+        ("tumbling", "streaming_tumbling_daily",
+         {"day": "day", "event_type": "event_type", "n": "n_events",
+          "x": "total_value"}),
+        ("dedup", "streaming_dedup_counts",
+         {"event_type": "event_type", "n": "n_unique"}),
+    ],
+)
+
+
 @query(
     "streaming_windowed_counts",
-    oracle="""
-SELECT 'tumbling' AS facet,
-       CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS TIMESTAMP) AS day,
-       event_type,
-       count(*) AS n,
-       {sum2} AS x
-FROM events GROUP BY 2, 3
-UNION ALL
-SELECT 'dedup', CAST(NULL AS TIMESTAMP), event_type,
-       count(DISTINCT event_id), CAST(NULL AS DOUBLE)
-FROM events GROUP BY event_type
-""".format(sum2=duck_qsum_rounded("value", 2)),
+    oracle=WINDOWED_COUNTS.oracle,
     tags=("streaming", "window", "dedup", "events"),
     exported=False,  # driver-visible via facets2.streaming_enriched_windows
 )
@@ -180,21 +185,7 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily counts + value sums per event type) and `dedup`
     (watermark-bounded dropDuplicates on event_id, then per-type
     unique counts)."""
-    tumb = streaming_tumbling_daily(spark, sf_dir).select(
-        F.lit("tumbling").alias("facet"),
-        "day",
-        "event_type",
-        F.col("n_events").alias("n"),
-        F.col("total_value").alias("x"),
-    )
-    ded = streaming_dedup_counts(spark, sf_dir).select(
-        F.lit("dedup").alias("facet"),
-        F.lit(None).cast("timestamp").alias("day"),
-        "event_type",
-        F.col("n_unique").alias("n"),
-        F.lit(None).cast("double").alias("x"),
-    )
-    return tumb.unionAll(ded)
+    return WINDOWED_COUNTS.build(spark, sf_dir)
 
 
 @query(
@@ -424,24 +415,17 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped-late difference. Rows in still-open windows survive the
     late trigger; rows in windows the watermark already closed do not —
     the oracle derives both from the watermark rule."""
-    import os
-    import shutil
-    import tempfile
-
-    from engine.io import load_table
-    from engine.streaming.events import build_late_replay
-
-    replay = build_late_replay(spark, sf_dir, late_mod=LATE_MOD)
-    live = replay + ".live"
-    shutil.rmtree(live, ignore_errors=True)
-    os.makedirs(live)
-    schema = spark.read.parquet(replay).schema
-    ckpt = tempfile.mkdtemp(prefix="late-audit-ckpt-")
+    # One directory per call holds the replay, the live stream input and
+    # the checkpoint; it is removed when the two triggers are done.
+    root = tempfile.mkdtemp(prefix="late-audit-")
+    replay = os.path.join(root, "replay")
+    live = os.path.join(root, "live")
+    ckpt = os.path.join(root, "ckpt")
     # One update row per changed (day, type) key per trigger — bounded
     # by the key set, see the section comment.
     updates: list = []
 
-    def _run_trigger() -> None:
+    def _run_trigger(schema) -> None:
         agg = (
             spark.readStream.schema(schema)
             .parquet(live)
@@ -462,15 +446,17 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
 
     try:
+        build_late_replay(spark, sf_dir, replay, late_mod=LATE_MOD)
+        os.makedirs(live)
+        schema = spark.read.parquet(replay).schema
         for i in range(2):  # trigger 1: on-time; trigger 2: late
             shutil.copy(
                 os.path.join(replay, f"batch{i}.parquet"),
                 os.path.join(live, f"batch{i}.parquet"),
             )
-            _run_trigger()
+            _run_trigger(schema)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(live, ignore_errors=True)
+        shutil.rmtree(root, ignore_errors=True)
 
     # Counts only grow, so the final value per key is the max update.
     n_stream = (

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from engine.functions.rounding import duck_round_he, round_he, sql_round_he
 from engine.io import load_table
-from engine.registry import query
+from engine.registry import Federation, query
 
 # Tiny per-language stopword inventories for the n-gram/stopword
 # language-ID heuristic. Deterministic and engine-agnostic.
@@ -393,9 +393,10 @@ def text_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "term_rankings",
-    oracle=f"""
+TERM_RANKINGS = Federation(
+    "facet STRING, doc_id BIGINT, token STRING, x DOUBLE, rnk BIGINT",
+    [
+        ("tfidf", f"""
 WITH toks3 AS (
   SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
   FROM documents
@@ -407,8 +408,8 @@ tf AS (
 doclen AS (SELECT doc_id, sum(cnt) AS dl FROM tf GROUP BY 1),
 df AS (SELECT token, count(*) AS ndocs FROM tf GROUP BY 1),
 n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM tf)
-SELECT 'tfidf' AS facet, doc_id, token,
-       {duck_round_he("(cnt * 1.0 / dl) * ln(n_docs * 1.0 / ndocs)", 6)} AS x,
+SELECT doc_id, token,
+       {duck_round_he("(cnt * 1.0 / dl) * ln(n_docs * 1.0 / ndocs)", 6)} AS tfidf,
        CAST(rnk AS BIGINT) AS rnk
 FROM (
   SELECT tf.doc_id, tf.token, tf.cnt, doclen.dl, df.ndocs, n.n_docs,
@@ -419,9 +420,11 @@ FROM (
          ) AS rnk
   FROM tf JOIN doclen USING (doc_id) JOIN df USING (token) CROSS JOIN n
 ) t WHERE rnk <= 3
-UNION ALL
-SELECT 'token_topk', CAST(NULL AS BIGINT), token, CAST(cnt AS DOUBLE),
-       CAST(row_number() OVER (ORDER BY cnt DESC, token) AS BIGINT)
+""",
+         {"doc_id": "doc_id", "token": "token", "x": "tfidf", "rnk": "rnk"}),
+        ("token_topk", """
+SELECT token, cnt,
+       CAST(row_number() OVER (ORDER BY cnt DESC, token) AS BIGINT) AS rnk
 FROM (
   SELECT token, count(*) AS cnt
   FROM (SELECT unnest(string_split_regex(lower(text), '[ \t]')) AS token
@@ -431,6 +434,14 @@ FROM (
   LIMIT 20
 ) topk
 """,
+         {"token": "token", "x": "CAST(cnt AS DOUBLE)", "rnk": "rnk"}),
+    ],
+)
+
+
+@query(
+    "term_rankings",
+    oracle=TERM_RANKINGS.oracle,
     tags=("textstats", "tfidf", "topk"),
     exported=False,  # driver-visible via corpus_mining's tfidf/token_topk facets
 )
@@ -443,13 +454,7 @@ def term_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from engine.operators.mapreduce_queries import token_topk
 
-    tfidf = tfidf_top_terms(spark, sf_dir).select(
-        F.lit("tfidf").alias("facet"),
-        "doc_id",
-        "token",
-        F.col("tfidf").alias("x"),
-        "rnk",
-    )
+    tfidf = TERM_RANKINGS.project("tfidf", tfidf_top_terms(spark, sf_dir))
     # Rank the 20 top tokens WITHOUT a global window (the plan-audit
     # invariant): a broadcast self-join count over the post-LIMIT rows.
     # Persisted — it feeds both join sides and is the result of a full
@@ -463,15 +468,8 @@ def term_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
         tk.join(F.broadcast(other), ahead, "left")
         .groupBy("token", "cnt")
         .agg((F.count("o_token") + 1).cast("bigint").alias("rnk"))
-        .select(
-            F.lit("token_topk").alias("facet"),
-            F.lit(None).cast("bigint").alias("doc_id"),
-            "token",
-            F.col("cnt").cast("double").alias("x"),
-            "rnk",
-        )
     )
-    return tfidf.unionAll(topk)
+    return tfidf.unionAll(TERM_RANKINGS.project("token_topk", topk))
 
 
 _REPETITION_ORACLE = f"""

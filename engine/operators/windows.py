@@ -20,7 +20,7 @@ from engine.functions.rounding import (
     round_he,
 )
 from engine.io import load_table
-from engine.registry import query
+from engine.registry import Federation, query
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -310,30 +310,42 @@ def w_frames_navigation(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BAL = duck_round_he("s_acctbal", 2)
 
 
-@query(
-    "w_rankings",
-    oracle=f"""
+W_RANKINGS = Federation(
+    "facet STRING, grp STRING, key BIGINT, rnk BIGINT, rnk2 BIGINT, x DOUBLE",
+    [
+        ("top_customer", f"""
 WITH rev AS (
   SELECT c_custkey, c_nationkey,
          {duck_qsum_rounded("o_totalprice", 2)} AS total_spend
   FROM customer JOIN orders ON c_custkey = o_custkey
   GROUP BY c_custkey, c_nationkey
 )
-SELECT 'top_customer' AS facet, n_name AS grp, c_custkey AS key,
-       rnk, CAST(NULL AS BIGINT) AS rnk2, total_spend AS x
+SELECT n_name, c_custkey, total_spend, rnk
 FROM (
   SELECT n_name, c_custkey, total_spend,
          CAST(rank() OVER (PARTITION BY n_name
                            ORDER BY total_spend DESC, c_custkey) AS BIGINT) AS rnk
   FROM rev JOIN nation ON c_nationkey = n_nationkey
 ) t WHERE rnk <= 3
-UNION ALL
-SELECT 'supplier_balance', CAST(s_nationkey AS VARCHAR), s_suppkey,
-       CAST(dense_rank() OVER (ORDER BY {_BAL} DESC) AS BIGINT),
-       CAST(ntile(4) OVER (ORDER BY {_BAL} DESC, s_suppkey) AS BIGINT),
+""",
+         {"grp": "n_name", "key": "c_custkey", "rnk": "rnk", "x": "total_spend"}),
+        ("supplier_balance", f"""
+SELECT s_suppkey, s_nationkey,
+       CAST(dense_rank() OVER (ORDER BY {_BAL} DESC) AS BIGINT) AS balance_rank,
        {duck_round_he(f"percent_rank() OVER (ORDER BY {_BAL} DESC)", 6)}
+         AS balance_pctile,
+       CAST(ntile(4) OVER (ORDER BY {_BAL} DESC, s_suppkey) AS BIGINT) AS quartile
 FROM supplier
 """,
+         {"grp": "CAST(s_nationkey AS STRING)", "key": "s_suppkey",
+          "rnk": "balance_rank", "rnk2": "quartile", "x": "balance_pctile"}),
+    ],
+)
+
+
+@query(
+    "w_rankings",
+    oracle=W_RANKINGS.oracle,
     tags=("window", "rank"),
     exported=False,  # driver-visible via facets2.w_window_suite
 )
@@ -344,20 +356,6 @@ def w_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-partition + broadcast-offset machinery in globalrank.py).
     The oracle's plain OVER () windows are the semantics; the Spark
     plan never funnels rows through one task."""
-    top = w_top_customers_per_nation(spark, sf_dir).select(
-        F.lit("top_customer").alias("facet"),
-        F.col("n_name").alias("grp"),
-        F.col("c_custkey").alias("key"),
-        "rnk",
-        F.lit(None).cast("bigint").alias("rnk2"),
-        F.col("total_spend").alias("x"),
-    )
-    supp = w_supplier_rank_stats(spark, sf_dir).select(
-        F.lit("supplier_balance").alias("facet"),
-        F.col("s_nationkey").cast("string").alias("grp"),
-        F.col("s_suppkey").alias("key"),
-        F.col("balance_rank").alias("rnk"),
-        F.col("quartile").alias("rnk2"),
-        F.col("balance_pctile").alias("x"),
-    )
+    top = W_RANKINGS.project("top_customer", w_top_customers_per_nation(spark, sf_dir))
+    supp = W_RANKINGS.project("supplier_balance", w_supplier_rank_stats(spark, sf_dir))
     return top.unionAll(supp)

@@ -26,7 +26,6 @@ from engine.io import (
     pin_fixture_ts_confs,
     table_path,
 )
-from engine.sinks import publish_dir
 
 
 def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -196,23 +195,18 @@ def streaming_enriched_purchases(
 
 
 def build_late_replay(
-    spark: SparkSession, sf_dir: str, late_mod: int = 10
-) -> str:
-    """Materialize a deterministic TWO-BATCH replay of the events table
-    for late-data experiments: batch file 0 holds the on-time events,
-    batch file 1 the injected late arrivals (the h60 'late:' sample,
-    1/late_mod of the corpus, drawn from ALL days so genuinely-stale
-    and still-open windows both occur). File mtimes are pinned far
-    apart so the file stream source (oldest-first) always feeds the
-    on-time file as micro-batch 1 — which advances the watermark — and
-    the late file as micro-batch 2, where the watermark rule bites.
-    Returns the replay directory (rebuilt on every call; contents are a
-    pure function of the fixture)."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_late_replay",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
+    spark: SparkSession, sf_dir: str, out_dir: str, late_mod: int = 10
+) -> None:
+    """Write a deterministic TWO-BATCH replay of the events table into
+    ``out_dir`` for late-data experiments: batch file 0 holds the
+    on-time events, batch file 1 the injected late arrivals (the h60
+    'late:' sample, 1/late_mod of the corpus, drawn from ALL days so
+    genuinely-stale and still-open windows both occur). File mtimes are
+    pinned far apart so the file stream source (oldest-first) always
+    feeds the on-time file as micro-batch 1 — which advances the
+    watermark — and the late file as micro-batch 2, where the
+    watermark rule bites. The contents are a pure function of the
+    fixture."""
     ev = load_table(spark, sf_dir, "events")
     is_late = (
         F.expr(SPARK_H60.format(x="concat('late:', cast(event_id as string))"))
@@ -220,15 +214,11 @@ def build_late_replay(
         == 0
     )
 
-    def write(staging: str) -> None:
-        for i, part in enumerate((ev.filter(~is_late), ev.filter(is_late))):
-            tmp = os.path.join(staging, f"w{i}")
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            (src,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-            dst = os.path.join(staging, f"batch{i}.parquet")
-            os.rename(src, dst)
-            shutil.rmtree(tmp)
-            os.utime(dst, (1_000_000 * (i + 1), 1_000_000 * (i + 1)))
-
-    publish_dir(out, "replay", write)
-    return out
+    for i, part in enumerate((ev.filter(~is_late), ev.filter(is_late))):
+        tmp = os.path.join(out_dir, f"w{i}")
+        part.coalesce(1).write.mode("overwrite").parquet(tmp)
+        (src,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
+        dst = os.path.join(out_dir, f"batch{i}.parquet")
+        os.rename(src, dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (1_000_000 * (i + 1), 1_000_000 * (i + 1)))

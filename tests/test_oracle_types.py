@@ -15,14 +15,18 @@ type.  Anything DuckDB widens, narrows, or decimal-izes on fetch
 variants, ...) is rejected at bind time, before a single row runs.
 """
 
+import importlib
 import os
 
 import duckdb
 import pytest
 
 from engine.io import TABLES, table_path
-from engine.operators import facets, facets2, tpch_merged, versioning
-from engine.registry import Federation, all_queries_including_library
+from engine.registry import (
+    _OPERATOR_MODULES,
+    Federation,
+    all_queries_including_library,
+)
 from tests.conftest import SF_SMOKE
 from tools.check_oracle import (
     _DUCK_FAMILY,
@@ -35,7 +39,7 @@ SPECS = all_queries_including_library()
 _NAME_OF_ORACLE = {s.oracle: n for n, s in SPECS.items()}
 FEDERATIONS = {
     _NAME_OF_ORACLE[v.oracle]: v
-    for module in (facets, facets2, tpch_merged, versioning)
+    for module in map(importlib.import_module, _OPERATOR_MODULES)
     for v in vars(module).values()
     if isinstance(v, Federation)
 }

@@ -193,3 +193,15 @@ def test_late_data_audit_drops_stale_and_keeps_open_windows(spark):
     assert all(
         r.n_dropped_late == 0 for r in rows if r.day == last_day
     )
+
+
+def test_late_data_audit_leaves_no_temp_files(spark, tmp_path, monkeypatch):
+    """The replay, the live stream input and the checkpoint live in one
+    directory per call, which the audit removes before it returns."""
+    import tempfile
+
+    from engine.operators.streaming_queries import streaming_late_data_audit
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert streaming_late_data_audit(spark, SF_SMOKE).collect()
+    assert list(tmp_path.iterdir()) == []
