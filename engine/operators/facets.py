@@ -177,34 +177,6 @@ def events_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return EVENTS_ANALYTICS.build(spark, sf_dir)
 
 
-TEMPORAL_JOINS = Federation(
-    "facet STRING, id1 BIGINT, id2 BIGINT, ts1 TIMESTAMP, ts2 TIMESTAMP, "
-    "n BIGINT, x DOUBLE",
-    [
-        ("asof", "asof_purchase_prior_view", _ASOF),
-        ("range", "range_join_order_day_events",
-         {"id1": "o_orderkey", "n": "n_events", "x": "sum_value"}),
-    ],
-)
-
-
-@query(
-    "temporal_joins",
-    oracle=TEMPORAL_JOINS.oracle,
-    tags=("rangejoin", "asof", "events", "join"),
-    exported=False,  # driver-visible via events_analytics' asof/range facets
-)
-def temporal_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The two custom temporal-join operators, federated: `asof` (each
-    purchase matched to the same user's latest strictly-earlier view —
-    sort-merge within user partitions, no inequality-join explosion;
-    id1/id2 = purchase/user, n = gap seconds) and `range` (events
-    falling in each open order's 24 h window via the bucketed-grid
-    equi-join — never a BroadcastNestedLoopJoin; id1 = order, n =
-    event count, x = summed value)."""
-    return TEMPORAL_JOINS.build(spark, sf_dir)
-
-
 SCALAR_PREDICATE_FACETS = Federation(
     "facet STRING, k BIGINT, s1 STRING, s2 STRING, s3 STRING, n1 BIGINT, "
     "n2 BIGINT, n3 BIGINT, n4 BIGINT, x DOUBLE, t1 TIMESTAMP, t2 TIMESTAMP",

@@ -187,17 +187,6 @@ def extract_blob_meta(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
 _H_CK = DUCK_H60.format(x="md5(text)")
 
 
-def multimodal_blob_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end multimodal plumbing: synthesize the binary payload
-    column (UTF-8 bytes of text — stands in for image bytes), then run
-    Arrow-batched mapInPandas metadata extraction. The oracle recomputes
-    the same metadata in pure SQL, which checks the whole Python/Arrow
-    round trip including byte fidelity."""
-    docs = load_table(spark, sf_dir, "documents")
-    with_blob = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    return extract_blob_meta(with_blob, "doc_id", "payload")
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -252,21 +241,10 @@ def sample_frames(
     return df.select(id_col, blob_col).mapInPandas(batches, schema=FRAME_SCHEMA)
 
 
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Evenly-spaced frame sampling from binary payloads (text bytes as
-    the stand-in video): 4 frames × 32 chars, checksummed. The oracle
-    recomputes every frame slice in SQL, pinning the full
-    binary→decode→slice→hash round trip."""
-    docs = load_table(spark, sf_dir, "documents")
-    with_blob = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    return sample_frames(with_blob, "doc_id", "payload")
-
-
 def _resize_exprs():
     """(out_width, out_height) fit-to-224 integer planning expressions
-    over decoded (fake_width, fake_height) metadata — ONE definition
-    shared by multimodal_resize_dims and the multimodal_facets resize
-    facet so the two can't drift."""
+    over decoded (fake_width, fake_height) metadata — integer math only
+    (reproducible everywhere) — for the multimodal_facets resize facet."""
     longest = F.greatest("fake_width", "fake_height")
     ow = (
         F.greatest(F.expr("fake_width * 224") / longest, F.lit(1)).cast("int")
@@ -275,22 +253,6 @@ def _resize_exprs():
         F.greatest(F.expr("fake_height * 224") / longest, F.lit(1)).cast("int")
     )
     return ow, oh
-
-
-def multimodal_resize_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize-to-fit-224 dimension planning over the decoded metadata —
-    integer math only (reproducible everywhere); a real resize kernel
-    consumes (out_width, out_height) per payload in the same
-    mapInPandas pass as the decoder."""
-    meta = multimodal_blob_meta(spark, sf_dir)
-    ow, oh = _resize_exprs()
-    return meta.select(
-        "doc_id",
-        "fake_width",
-        "fake_height",
-        ow.alias("out_width"),
-        oh.alias("out_height"),
-    )
 
 
 # Fake audio metadata, derived deterministically from the payload

@@ -29,7 +29,7 @@ from pyspark.sql import Window as W
 from engine.functions.hashing import DUCK_H60, SPARK_H60
 from engine.functions.rounding import duck_round_he, round_he
 from engine.io import load_table
-from engine.plans import audited_checkpoint, record_iteration_plan
+from engine.plans import audited_checkpoint
 from engine.registry import Federation, query
 from engine.operators.textstats import _QQ_QUALITY_DUCK, ngram_idx
 
@@ -132,41 +132,15 @@ def pipeline_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _chunk_exprs():
     """(n_chunks, start, end) for the fixed-size overlapping chunk
-    grid over a tokenized column ``t`` with chunk index ``c`` — ONE
-    definition shared by the library form (pipeline_doc_chunks) and
-    the federated pipeline_scrub_chunks facet, so the chunk-count
-    formula cannot drift between them."""
+    grid (CHUNK_TOKENS tokens, stride CHUNK_STRIDE) over a tokenized
+    column ``t`` with chunk index ``c`` — the pipeline_scrub_chunks
+    `chunk` facet's window math."""
     n_chunks = F.expr(
         f"greatest(ceil((size(t) - {CHUNK_TOKENS}) / {CHUNK_STRIDE}), 0) + 1"
     ).cast("int")
     start = F.col("c") * CHUNK_STRIDE + 1
     end = F.least(F.col("c") * CHUNK_STRIDE + CHUNK_TOKENS, F.size("t"))
     return n_chunks, start, end
-
-
-def pipeline_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping fixed-size token windows ({CHUNK_TOKENS} tokens,
-    stride {CHUNK_STRIDE}) per document — the context-window packing
-    step. Tokenize once, explode a chunk-index sequence, slice the
-    token array: all JVM expressions, output rows ∝ corpus tokens /
-    stride."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    n_chunks, start, end = _chunk_exprs()
-    chunks = toks.select(
-        "doc_id",
-        "t",
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("c"),
-    )
-    return chunks.select(
-        "doc_id",
-        F.col("c").cast("bigint").alias("chunk_id"),
-        start.cast("bigint").alias("tok_start"),
-        end.cast("bigint").alias("tok_end"),
-        F.concat_ws(
-            " ", F.slice("t", start, end - start + 1)
-        ).alias("chunk_text"),
-    )
 
 
 def pipeline_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,30 +176,10 @@ _EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 
 
 def _scrub_expr(col: str = "text"):
-    """URL/EMAIL scrub expression — shared by pipeline_scrub_text and
-    the federated pipeline_scrub_chunks facet."""
+    """URL/EMAIL scrub expression (URLs → <URL>, emails → <EMAIL>) —
+    the pipeline_scrub_chunks facet's scrub step."""
     return F.regexp_replace(
         F.regexp_replace(col, _URL_RE, "<URL>"), _EMAIL_RE, "<EMAIL>"
-    )
-
-
-def pipeline_scrub_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII/URL scrubbing audit: URLs → <URL>, emails → <EMAIL>, with
-    per-document before/after char accounting. Pure regexp_replace —
-    JVM-side, narrow, no shuffle; the actual cleaned text column is the
-    same expression minus the length()."""
-    docs = load_table(spark, sf_dir, "documents")
-    scrubbed = _scrub_expr()
-    return docs.select(
-        "doc_id",
-        F.length("text").alias("n_chars_before"),
-        F.length(scrubbed).alias("n_chars_after"),
-        (F.length("text") - F.length(F.regexp_replace("text", _URL_RE, ""))).alias(
-            "url_chars"
-        ),
-        (
-            F.length("text") - F.length(F.regexp_replace("text", _EMAIL_RE, ""))
-        ).alias("email_chars"),
     )
 
 
@@ -305,57 +259,6 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ev, "g")
         .groupBy("doc_id")
         .agg(F.expr("count(1) AS n_shared_grams"))
-    )
-
-
-def _pack_bucket_expr():
-    """Deterministic pack-bucket assignment — shared by
-    pipeline_pack_sequences and the pipeline_decontam_pack facet."""
-    return (
-        F.expr(SPARK_H60.format(x="concat('pack:', cast(doc_id as string))"))
-        % PACK_BUCKETS
-    )
-
-
-def _pack_positions():
-    """(seq_id, seq_offset) over a (bucket, doc_id, n_tokens) frame —
-    the concat-and-split window math, defined once."""
-    w = (
-        W.partitionBy("bucket")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return (
-        (cum_before / PACK_CTX).cast("bigint"),
-        (cum_before % PACK_CTX).cast("bigint"),
-    )
-
-
-def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing (concat-and-split): documents are concatenated
-    in deterministic order within {PACK_BUCKETS} independent hash
-    buckets and cut into {PACK_CTX}-token training sequences; each doc
-    gets the sequence id and offset where it starts.
-
-    Scale shape: the running token total is a window partitioned by the
-    pack bucket — at 100 TB set PACK_BUCKETS ≈ total_cores so every
-    partition packs one bounded stream in parallel; no global window,
-    no driver state. Token counts, not token arrays, flow through the
-    shuffle."""
-    docs = load_table(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        _pack_bucket_expr().alias("bucket"),
-        F.size(F.split("text", " ")).alias("n_tokens"),
-    )
-    seq_id, seq_offset = _pack_positions()
-    return d.select(
-        F.col("bucket").cast("bigint").alias("bucket"),
-        "doc_id",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        seq_id.alias("seq_id"),
-        seq_offset.alias("seq_offset"),
     )
 
 
@@ -985,47 +888,6 @@ def pipeline_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cum_tokens") <= TOKEN_BUDGET_PER_SOURCE)
         .select("source", "doc_id", "n_tokens", "quality", "cum_tokens")
     )
-
-
-@query(
-    "pipeline_interleave_sources",
-    oracle="""
-WITH seq AS (
-  SELECT doc_id, source,
-         row_number() OVER (PARTITION BY source ORDER BY doc_id)
-           AS src_seq
-  FROM documents
-)
-SELECT doc_id, source, CAST(src_seq AS BIGINT) AS src_seq,
-       CAST(row_number() OVER (ORDER BY src_seq, source, doc_id)
-            AS BIGINT) AS train_pos
-FROM seq
-""",
-    tags=("pipeline", "ordering", "interleave"),
-    exported=False,
-)
-def pipeline_interleave_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic round-robin source interleaving — the training-
-    order primitive that keeps every data source uniformly present
-    throughout a run (epoch position must not correlate with source,
-    or late training skews to whichever source sorts last).
-
-    Each document gets a per-source sequence number (partitioned
-    window — parallel), then a GLOBAL training position in
-    (src_seq, source, doc_id) order: position 1..S are every source's
-    first doc, then every source's second, and so on. The global
-    numbering uses the range-partition + broadcast-offset machinery
-    (engine.operators.globalrank) — no single-partition window at any
-    corpus size."""
-    from engine.operators.globalrank import with_global_row_number
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    w = W.partitionBy("source").orderBy("doc_id")
-    seq = docs.withColumn("src_seq", F.row_number().over(w).cast("bigint"))
-    out, _total = with_global_row_number(
-        seq, ["src_seq", "source", "doc_id"], out_col="train_pos"
-    )
-    return out.select("doc_id", "source", "src_seq", "train_pos")
 
 
 EPOCHS = 2

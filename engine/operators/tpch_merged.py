@@ -95,21 +95,8 @@ def q7_q8_q9_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bilateral shipping volume: k1/k2 = supplier/customer nation),
     `q8` (market share of one nation within a region's imports), `q9`
     (product-line profit by producing nation). All are multi-join
-    star shapes with broadcast dims and one fact shuffle.
-
-    The three facets share no intermediate state, so they are
-    materialized CONCURRENTLY (checkpoint_concurrently — guide-§2.6
-    overlap): executed lazily as one union, their ~17 broadcast builds
-    and AQE stage materializations serialized into ~35 driver round
-    trips of 30-300 ms each (profiled round 11); overlapped, the wall
-    is roughly the longest facet. Each facet's result is a few hundred
-    aggregated rows, recomputed per call."""
-    from engine.plans import checkpoint_concurrently
-
-    q7c, q8c, q9c = checkpoint_concurrently(
-        [(f"q7q8q9_{tag}", df) for tag, df in NATION_TRADE.frames(spark, sf_dir)]
-    )
-    return q7c.unionAll(q8c).unionAll(q9c)
+    star shapes with broadcast dims and one fact shuffle."""
+    return NATION_TRADE.build(spark, sf_dir)
 
 
 PART_STATS = Federation(

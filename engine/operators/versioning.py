@@ -62,7 +62,6 @@ from engine.operators.corpus_build import (
     _ROW_H_SPARK,
     corpus_out_dir,
 )
-from engine.operators.dedup import MINHASH_K, _spark_shingles
 from engine.registry import Federation, query
 from engine.sinks import apply_changeset_partitioned, publish_dir
 from engine.sources.vstore_datasource import register_vstore
@@ -124,14 +123,6 @@ def _duck_digest(label: str) -> str:
         f"SELECT {label} AS facet, CAST(count(*) AS BIGINT) AS n,\n"
         "       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,\n"
         f"       CAST(bit_xor({_ROW_H_DUCK}) AS BIGINT) AS h"
-    )
-
-
-def _rollup_agg(df: DataFrame) -> DataFrame:
-    return df.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-        F.expr("bit_xor(h)").cast("bigint").alias("corpus_h"),
     )
 
 
@@ -547,21 +538,16 @@ def _land_batch(df: DataFrame, land: str, name: str) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _corpus_store_rows(df: DataFrame, keep_text: bool = False) -> DataFrame:
+def _corpus_store_rows(df: DataFrame) -> DataFrame:
     """The stored schema: content hash kept so later gates scan it
-    instead of re-reading text. ``keep_text`` stores the body too —
-    the shape consumers that derive text features from the CHANGE
-    FEED need (e.g. the incremental MinHash index)."""
-    cols = [
+    instead of re-reading text."""
+    return df.select(
         F.col("source"),
         F.col("doc_id"),
         F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
         F.sha2("text", 256).alias("content_hash"),
         F.expr(_ROW_H_SPARK).cast("bigint").alias("h"),
-    ]
-    if keep_text:
-        cols.insert(2, F.col("text"))
-    return df.select(*cols)
+    )
 
 
 def run_stream_refresh(
@@ -708,29 +694,22 @@ FROM u GROUP BY version, source
 """
 
 
-def _build_tt_store(
-    spark: SparkSession,
-    sf_dir: str,
-    keep_text: bool = False,
-    variant: str = "",
-) -> tuple[str, int, int]:
+def _build_tt_store(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
     """(Re)build the two-version demonstration store: base as v1, the
     exact-gated arrival winners upserted as v2. Recreated from scratch
     so version numbers — and every query over them — are deterministic.
-    Shared by corpus_time_travel and store_version_diff. ``keep_text``
-    stores the body column too (``variant`` keeps the two schemas in
-    separate store directories)."""
-    store = corpus_out_dir(sf_dir) + "_vstore" + variant
+    Shared by corpus_time_travel and store_version_diff."""
+    store = corpus_out_dir(sf_dir) + "_vstore"
     shutil.rmtree(store, ignore_errors=True)
 
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", "text"
     )
     is_new = F.expr(_IS_NEW_SPARK)
-    base_rows = _corpus_store_rows(docs.filter(~is_new), keep_text)
+    base_rows = _corpus_store_rows(docs.filter(~is_new))
     v1 = vs.commit_overwrite(base_rows, store, "source")
 
-    arr = _corpus_store_rows(docs.filter(is_new), keep_text)
+    arr = _corpus_store_rows(docs.filter(is_new))
     w = W.partitionBy("content_hash").orderBy("doc_id")
     winners = (
         arr.withColumn("rn", F.row_number().over(w))
@@ -862,7 +841,6 @@ FROM feed
 
 # images that ADD to an aggregate; the complement subtracts
 _CDF_POS = "_change_type IN ('insert', 'update_postimage')"
-_CDF_W = f"CASE WHEN {_CDF_POS} THEN 1 ELSE -1 END"
 
 
 _TIME_TRAVEL = Federation(
@@ -1140,181 +1118,27 @@ def streaming_refresh_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.unionAll(v)
 
 
-# -- z-ordered compaction (round 8) -------------------------------------------
-#
-# The store's OPTIMIZE ZORDER: churny upserts leave touched partitions
-# fragmented into one file per commit in arrival order — exactly the
-# layout whose footers prune nothing. `compact_version(zorder_cols=…)`
-# rewrites the CURRENT snapshot clustered on a Morton curve over the
-# named columns (engine/versioned_store.py docstring for the
-# mechanics). The query below pins the property that makes clustered
-# compaction SAFE to run automatically: content invariance. Per
-# source, (n_docs, n_tokens, xor'd row hash) computed from a PINNED
-# read of the compacted version must equal the oracle's relational
-# replay of the pre-compaction snapshot — z-ordering may only permute
-# rows across files. The physical clustering win (tight footer
-# rectangles, probe skipping on real pyarrow stats) is pinned by
-# tests/test_versioning.py::test_zorder_compaction_clusters_files.
-
-
-_ZC_ORACLE = f"""
-WITH lab AS (
-  SELECT source, doc_id, text, ({_IS_NEW_DUCK}) AS is_new FROM documents
-),
-base AS (SELECT source, doc_id, text FROM lab WHERE NOT is_new),
-bh AS (SELECT DISTINCT sha256(text) AS ch FROM base),
-arr AS (
-  SELECT source, doc_id, text, sha256(text) AS ch FROM lab WHERE is_new
-),
-win AS (
-  SELECT *, row_number() OVER (PARTITION BY ch ORDER BY doc_id) AS rn
-  FROM arr
-),
-keep AS (
-  SELECT source, doc_id, text FROM win
-  WHERE rn = 1 AND ch NOT IN (SELECT ch FROM bh)
-),
-fin AS (SELECT * FROM base UNION ALL SELECT * FROM keep)
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-       CAST(bit_xor({_ROW_H_DUCK}) AS BIGINT) AS corpus_h
-FROM fin GROUP BY source
-"""
-
-
-@query(
-    "store_zorder_compaction",
-    oracle=_ZC_ORACLE,
-    tags=("pipeline", "versioning", "layout", "sink", "documents"),
-    exported=False,  # library: compaction invariance, oracled at sf0.001+
-)
-def store_zorder_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-ordered compaction invariance (section comment): rebuild the
-    two-version store, compact v2 clustered on (doc_id, n_tokens) as
-    v3, and return the per-source content summary from a PINNED
-    read_version(v3). The oracle replays v2's logical content from the
-    raw table, so a hash match proves the clustered rewrite moved
-    every row and invented none — the safety property that lets a
-    maintenance job run OPTIMIZE ZORDER unattended."""
-    store, _v1, v2 = _build_tt_store(spark, sf_dir)
-    v3 = vs.compact_version(
-        spark, store, files_per_partition=2,
-        zorder_cols=["doc_id", "n_tokens"],
-    )
-    assert v3 == v2 + 1
-    return _rollup_agg(vs.read_version(spark, store, v3))
-
-
-# -- manifest-stats data skipping (round 8) -----------------------------------
-#
-# The read-side complement of z-ordered compaction: every commit now
-# records per-file numeric min/max in the manifest (from the staged
-# parquet footers — Delta's data-skipping stats), and
-# `read_version(range_filters=…)` prunes files catalog-side before
-# Spark lists anything, then applies the residual row filter in-plan
-# so the result is exactly the predicate's rows. The query pins the
-# COMPOSED path: z-order-compact the store on (doc_id, n_tokens), then
-# answer a doc_id-range query through the stats-pruned pinned read.
-# The oracle replays the same range over the relational reconstruction
-# of the snapshot — a hash match proves pruning dropped only provably
-# empty files. That the pruning actually bites (most files skipped on
-# the clustered dimension) is pinned by
-# tests/test_versioning.py::test_stats_pruned_read_skips_files.
-
-
-_SPR_ORACLE = f"""
-WITH lab AS (
-  SELECT source, doc_id, text, ({_IS_NEW_DUCK}) AS is_new FROM documents
-),
-base AS (SELECT source, doc_id, text FROM lab WHERE NOT is_new),
-bh AS (SELECT DISTINCT sha256(text) AS ch FROM base),
-arr AS (
-  SELECT source, doc_id, text, sha256(text) AS ch FROM lab WHERE is_new
-),
-win AS (
-  SELECT *, row_number() OVER (PARTITION BY ch ORDER BY doc_id) AS rn
-  FROM arr
-),
-keep AS (
-  SELECT source, doc_id, text FROM win
-  WHERE rn = 1 AND ch NOT IN (SELECT ch FROM bh)
-),
-fin AS (SELECT * FROM base UNION ALL SELECT * FROM keep),
-zb AS (SELECT CAST(min(doc_id) AS BIGINT) AS minid,
-              CAST(max(doc_id) AS BIGINT) AS maxid FROM fin),
-sel AS (
-  SELECT f.* FROM fin f CROSS JOIN zb
-  WHERE f.doc_id <= minid + ((maxid - minid + 1) // 8)
-)
-SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-       CAST(bit_xor({_ROW_H_DUCK}) AS BIGINT) AS corpus_h
-FROM sel GROUP BY source
-"""
-
-
-@query(
-    "store_stats_pruned_read",
-    oracle=_SPR_ORACLE,
-    tags=("pipeline", "versioning", "layout", "pruning", "documents"),
-    exported=False,  # library: data-skipping read path, oracled
-)
-def store_stats_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-skipping read through the versioned store (section
-    comment): rebuild the two-version store, z-order-compact on
-    (doc_id, n_tokens), then summarize per source the docs whose
-    doc_id falls in the lowest eighth of the snapshot's id span —
-    answered via ``read_version(range_filters=…)``, which prunes
-    files on the manifest's footer-recorded min/max before the scan
-    and filters residually in-plan. The oracle replays the identical
-    range relationally; the bounds come from the snapshot itself (one
-    1-row min/max read — at 100 TB, a catalog lookup), so both
-    engines derive the probe from shared data, not a constant that
-    could drift from the fixtures."""
-    store, _v1, v2 = _build_tt_store(spark, sf_dir)
-    v3 = vs.compact_version(
-        spark, store, files_per_partition=2,
-        zorder_cols=["doc_id", "n_tokens"],
-    )
-    lo, hi = (
-        vs.read_version(spark, store, v3)
-        .agg(F.min("doc_id"), F.max("doc_id"))
-        .collect()[0]
-    )
-    cut = lo + (hi - lo + 1) // 8
-    return _rollup_agg(
-        vs.read_version(spark, store, v3, range_filters={"doc_id": (None, cut)})
-    )
-
-
-# -- change data feed (round 8) ------------------------------------------------
+# -- the four-version store behind the change feed (round 8) -----------------
 #
 # version_diff answers "how much changed" per source; the change feed
 # answers "WHICH rows, with old and new images" — the read side Delta
-# calls Change Data Feed, and the piece that lets downstream consumers
-# (index refresh, incremental dedup gates, eval-set rebuilds) process
-# a version transition without rescanning the table. The query drives
-# the store through its full mutation vocabulary — v2 upsert-inserts
-# (the gate winners), v3 upsert-updates (a deterministic re-scrub of
-# every 7th base doc appends ' updated' to its text, shifting
+# calls Change Data Feed. corpus_time_travel's `cdf` facets drive the
+# store through its full mutation vocabulary — v2 upsert-inserts (the
+# gate winners), v3 upsert-updates (a deterministic re-scrub of every
+# 7th base doc appends ' updated' to its text, shifting
 # n_tokens/content_hash/h), v4 deletes (every 11th doc of the v3
-# state) — and returns the concatenated row-level feeds v1→v2, v2→v3,
-# v3→v4. The oracle restates each transition from the raw documents
-# table, so a hash match pins change typing, both update images, and
-# the only-unshared-files read underneath. Carried-forward rows must
-# emit NOTHING — any leak of an unchanged row into the feed breaks
-# the row-count match immediately.
+# state) — and aggregate the row-level feeds v1→v2, v2→v3, v3→v4.
+# `_CDF_ORACLE` restates each transition from the raw documents table,
+# so a hash match pins change typing, both update images, and the
+# only-unshared-files read underneath. Carried-forward rows must emit
+# NOTHING — any leak of an unchanged row into the feed breaks the
+# count match immediately.
 
 
-def _build_cdf_store(
-    spark: SparkSession,
-    sf_dir: str,
-    keep_text: bool = False,
-    variant: str = "",
-):
+def _build_cdf_store(spark: SparkSession, sf_dir: str):
     """Extend the two-version tt store with an update commit (v3) and
     a delete commit (v4) so the feed exercises every change type."""
-    store, v1, v2 = _build_tt_store(spark, sf_dir, keep_text, variant)
+    store, v1, v2 = _build_tt_store(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", "text"
     )
@@ -1324,8 +1148,7 @@ def _build_cdf_store(
         .withColumn("text", F.concat("text", F.lit(" updated")))
     )
     v3 = vs.commit_upsert(
-        spark, store, _corpus_store_rows(upd, keep_text),
-        ["source", "doc_id"],
+        spark, store, _corpus_store_rows(upd), ["source", "doc_id"],
     )
     doomed = (
         vs.read_version(spark, store, v3)
@@ -1334,648 +1157,6 @@ def _build_cdf_store(
     )
     v4 = vs.commit_delete(spark, store, doomed, ["source", "doc_id"])
     return store, (v1, v2, v3, v4)
-
-
-@query(
-    "store_change_feed",
-    oracle=_CDF_ORACLE,
-    tags=("pipeline", "versioning", "time-travel", "cdc", "documents"),
-    exported=False,  # library: row-level CDC read path, oracled
-)
-def store_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level change data feed over the versioned store (section
-    comment): build the four-version store (insert, update, delete
-    commits), then emit table_changes for each transition — every row
-    of every image crosses the driver's value hash, so the oracle
-    match pins change typing, pre/post update images, and that
-    carried-forward files contribute nothing."""
-    store, (v1, v2, v3, v4) = _build_cdf_store(spark, sf_dir)
-    out = None
-    for a, b in ((v1, v2), (v2, v3), (v3, v4)):
-        f = vs.table_changes(
-            spark, store, a, b, ["source", "doc_id"]
-        ).withColumn("step", F.lit(f"v{a}v{b}"))
-        out = f if out is None else out.unionByName(f)
-    return out.select(
-        "step", "_change_type", "source", "doc_id",
-        "n_tokens", "content_hash", "h",
-    )
-
-
-# -- incremental rollup maintenance from the change feed ------------------------
-#
-# WHY a change feed exists: a downstream aggregate (index stats,
-# billing rollup, corpus dashboard) should cost O(churn) to keep
-# current, not O(table) to recompute. This query maintains the
-# per-source rollup (n_docs, n_tokens, xor corpus hash) across the
-# four-version store's full mutation history using ONLY v1's baseline
-# plus the three change feeds — insert/update_postimage images count
-# +1, delete/update_preimage images count -1, and the xor hash is
-# self-inverse so every image just xors in — then emits it next to the
-# DIRECT aggregate of the final version. The oracle replays both
-# facets from their own definitions; they are equal by algebra, so a
-# driver match on both rows pins that feed-based maintenance
-# reproduces the ground truth exactly (the pytest additionally asserts
-# the two facets byte-equal each other).
-#
-# 100 TB shape: in production the baseline is the rollup you already
-# stored (O(groups) rows), so each refresh costs one scan of the FEED
-# (touched partitions only) plus an O(groups) merge — the table is
-# never rescanned. Here the baseline aggregate is computed once from
-# v1 because the query must be self-contained.
-
-_CRM_ORACLE = f"""
-WITH lab AS (
-  SELECT source, doc_id, text, ({_IS_NEW_DUCK}) AS is_new FROM documents
-),
-base AS (SELECT source, doc_id, text FROM lab WHERE NOT is_new),
-bh AS (SELECT DISTINCT sha256(text) AS ch FROM base),
-arr AS (
-  SELECT source, doc_id, text, sha256(text) AS ch FROM lab WHERE is_new
-),
-win AS (
-  SELECT *, row_number() OVER (PARTITION BY ch ORDER BY doc_id) AS rn
-  FROM arr
-),
-keep AS (
-  SELECT source, doc_id, text FROM win
-  WHERE rn = 1 AND ch NOT IN (SELECT ch FROM bh)
-),
-updated AS (
-  SELECT source, doc_id, text || ' updated' AS text
-  FROM base WHERE doc_id % 7 = 0
-),
-v3s AS (
-  SELECT source, doc_id, text FROM base WHERE doc_id % 7 <> 0
-  UNION ALL SELECT source, doc_id, text FROM updated
-  UNION ALL SELECT source, doc_id, text FROM keep
-),
-v4s AS (SELECT * FROM v3s WHERE doc_id % 11 <> 5),
-feed AS (
-  SELECT 'insert' AS _change_type, source, doc_id, text FROM keep
-  UNION ALL
-  SELECT 'update_preimage', source, doc_id, text
-  FROM base WHERE doc_id % 7 = 0
-  UNION ALL
-  SELECT 'update_postimage', source, doc_id, text FROM updated
-  UNION ALL
-  SELECT 'delete', source, doc_id, text FROM v3s WHERE doc_id % 11 = 5
-),
-m AS (
-  SELECT source, 1 AS w, doc_id, text FROM base
-  UNION ALL
-  SELECT source, {_CDF_W} AS w, doc_id, text FROM feed
-),
-facets AS (
-  SELECT 'direct' AS facet, source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-         CAST(bit_xor({_ROW_H_DUCK}) AS BIGINT) AS corpus_h
-  FROM v4s GROUP BY source
-  UNION ALL
-  SELECT 'maintained', source, CAST(sum(w) AS BIGINT),
-         CAST(sum(w * len(string_split(text, ' '))) AS BIGINT),
-         CAST(bit_xor({_ROW_H_DUCK}) AS BIGINT)
-  FROM m GROUP BY source
-)
-SELECT * FROM facets
-"""
-
-
-@query(
-    "store_cdf_rollup",
-    oracle=_CRM_ORACLE,
-    tags=("pipeline", "versioning", "cdc", "incremental", "documents"),
-    exported=False,  # library: CDC-driven aggregate maintenance, oracled
-)
-def store_cdf_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental rollup maintenance from the change feed (section
-    comment): per-source (n_docs, n_tokens, xor corpus hash)
-    maintained as v1's baseline plus signed feed images across
-    v1→v2→v3→v4, emitted next to the direct aggregate of v4 — the
-    driver hash pins that O(churn) maintenance reproduces the
-    recompute exactly."""
-    store, (v1, v2, v3, v4) = _build_cdf_store(spark, sf_dir)
-    cols = ("source", "n_tokens", "h")
-    baseline = vs.read_version(spark, store, v1).select(
-        F.lit(1).alias("w"), *cols
-    )
-    feed = None
-    for a, b in ((v1, v2), (v2, v3), (v3, v4)):
-        f = vs.table_changes(spark, store, a, b, ["source", "doc_id"])
-        feed = f if feed is None else feed.unionByName(f)
-    maintained = (
-        baseline.unionByName(
-            feed.select(F.expr(_CDF_W).alias("w"), *cols)
-        )
-        .groupBy("source")
-        .agg(
-            F.sum("w").cast("bigint").alias("n_docs"),
-            F.sum(F.col("w") * F.col("n_tokens"))
-            .cast("bigint")
-            .alias("n_tokens"),
-            F.expr("bit_xor(h)").cast("bigint").alias("corpus_h"),
-        )
-        .select(F.lit("maintained").alias("facet"), "*")
-    )
-    direct = _rollup_agg(vs.read_version(spark, store, v4)).select(
-        F.lit("direct").alias("facet"), "*"
-    )
-    return direct.unionByName(maintained)
-
-
-# -- streaming CDC consumption (round 8) ----------------------------------------
-#
-# The batch form (`store_cdf_rollup`) proves feed-maintenance algebra
-# in one plan; this proves it OPERATIONALLY, across triggers, with the
-# maintained state persisted between micro-batches — the
-# Delta-CDF-as-a-stream pattern. Each file-source trigger gates its
-# micro-batch against the CURRENT version and commits survivors;
-# batch 1 additionally carries a re-crawl that UPDATES every 13th
-# base doc (text + ' v2'), so the second feed holds inserts AND both
-# update images. After each commit the trigger reads ONLY
-# table_changes(prev, new) and merges the signed images into the
-# per-source rollup it persisted for the previous version (one
-# O(groups) full-outer merge; xor folds via ^). The result emits the
-# final persisted rollup next to the direct recompute of the final
-# version; the oracle replays the winner rule, the upsert, both feeds
-# and the maintenance arithmetic relationally. At 100 TB each trigger
-# therefore costs the micro-batch gate + touched-partition commit +
-# an O(churn) feed scan — the stored table is never rescanned to keep
-# the rollup current.
-
-_SCR_ORACLE = f"""
-WITH lab AS (
-  SELECT source, doc_id, text, ({_IS_NEW_DUCK}) AS is_new,
-         {_BATCH_NO_DUCK} AS batch_no
-  FROM documents
-),
-base AS (SELECT source, doc_id, text FROM lab WHERE NOT is_new),
-bh AS (SELECT DISTINCT sha256(text) AS ch FROM base),
-arr AS (
-  SELECT source, doc_id, text, batch_no, sha256(text) AS ch
-  FROM lab WHERE is_new
-),
-w0 AS (
-  SELECT *, row_number() OVER (PARTITION BY ch ORDER BY doc_id) AS rn
-  FROM arr WHERE batch_no = 0
-),
-k0 AS (
-  SELECT source, doc_id, text FROM w0
-  WHERE rn = 1 AND ch NOT IN (SELECT ch FROM bh)
-),
-v2 AS (SELECT * FROM base UNION ALL SELECT * FROM k0),
-v2h AS (SELECT DISTINCT sha256(text) AS ch FROM v2),
-b1 AS (
-  SELECT source, doc_id, text, ch FROM arr WHERE batch_no = 1
-  UNION ALL
-  SELECT source, doc_id, text || ' v2', sha256(text || ' v2')
-  FROM base WHERE doc_id % 13 = 2
-),
-w1 AS (
-  SELECT *, row_number() OVER (PARTITION BY ch ORDER BY doc_id) AS rn
-  FROM b1
-),
-k1 AS (
-  SELECT source, doc_id, text FROM w1
-  WHERE rn = 1 AND ch NOT IN (SELECT ch FROM v2h)
-),
-v3 AS (
-  SELECT * FROM v2 WHERE doc_id NOT IN (SELECT doc_id FROM k1)
-  UNION ALL SELECT * FROM k1
-),
-m AS (
-  SELECT source, 1 AS w, doc_id, text FROM base
-  UNION ALL SELECT source, 1, doc_id, text FROM k0
-  UNION ALL
-  SELECT v2.source, -1, v2.doc_id, v2.text
-  FROM v2 JOIN k1 ON v2.doc_id = k1.doc_id   -- update preimages
-  UNION ALL SELECT source, 1, doc_id, text FROM k1
-),
-facets AS (
-  SELECT 'direct' AS facet, source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-         CAST(bit_xor({_ROW_H_DUCK}) AS BIGINT) AS corpus_h
-  FROM v3 GROUP BY source
-  UNION ALL
-  SELECT 'maintained', source, CAST(sum(w) AS BIGINT),
-         CAST(sum(w * len(string_split(text, ' '))) AS BIGINT),
-         CAST(bit_xor({_ROW_H_DUCK}) AS BIGINT)
-  FROM m GROUP BY source
-)
-SELECT * FROM facets
-"""
-
-
-@query(
-    "streaming_cdf_rollup",
-    oracle=_SCR_ORACLE,
-    tags=(
-        "streaming", "versioning", "cdc", "incremental", "documents",
-    ),
-    exported=False,  # library: streaming CDC consumption, oracled
-)
-def streaming_cdf_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC consumption (section comment): two triggers gate
-    and commit micro-batches (batch 1 includes re-crawl UPDATES of
-    every 13th base doc), and each trigger maintains the persisted
-    per-source rollup from table_changes(prev, new) alone. Emits the
-    final persisted rollup ('maintained') next to the direct
-    recompute of the final version ('direct'); the oracle replays
-    gate, commits, feeds and maintenance arithmetic relationally."""
-    store = corpus_out_dir(sf_dir) + "_vcdfroll"
-    shutil.rmtree(store, ignore_errors=True)
-    rollup_dir = store + "_rollup"
-    shutil.rmtree(rollup_dir, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", "text"
-    )
-    is_new = F.expr(_IS_NEW_SPARK)
-    vs.commit_overwrite(_corpus_store_rows(docs.filter(~is_new)), store, "source")
-    _rollup_agg(vs.read_version(spark, store, 1)).write.parquet(
-        f"{rollup_dir}/v1"
-    )
-
-    arrivals = docs.filter(is_new).withColumn(
-        "batch_no", F.expr(_BATCH_NO_SPARK).cast("bigint")
-    )
-    recrawl = (
-        docs.filter(~is_new)
-        .filter(F.col("doc_id") % 13 == 2)
-        .withColumn("text", F.concat("text", F.lit(" v2")))
-        .withColumn("batch_no", F.lit(1).cast("bigint"))
-    )
-    batches = arrivals.unionByName(recrawl)
-    schema = docs.schema
-
-    def gate_commit_maintain(batch_df: DataFrame, _batch_id: int) -> None:
-        rows = _corpus_store_rows(batch_df)
-        w = W.partitionBy("content_hash").orderBy("doc_id")
-        winners = (
-            rows.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        prev = vs.current_version(store)
-        stored = (
-            vs.read_version(spark, store, prev)
-            .select("content_hash")
-            .distinct()
-        )
-        survivors = winners.join(stored, "content_hash", "left_anti").select(
-            "source", "doc_id", "n_tokens", "content_hash", "h"
-        )
-        new_v = vs.commit_upsert(spark, store, survivors, ["source", "doc_id"])
-        # maintenance: the feed is the ONLY store read; O(groups) merge
-        delta = (
-            vs.table_changes(spark, store, prev, new_v, ["source", "doc_id"])
-            .select(
-                "source",
-                F.when(F.expr(_CDF_POS), F.lit(1))
-                .otherwise(F.lit(-1))
-                .alias("w"),
-                "n_tokens",
-                "h",
-            )
-            .groupBy("source")
-            .agg(
-                F.sum("w").cast("bigint").alias("d_docs"),
-                F.sum(F.col("w") * F.col("n_tokens"))
-                .cast("bigint")
-                .alias("d_tokens"),
-                F.expr("bit_xor(h)").cast("bigint").alias("d_h"),
-            )
-        )
-        zero = F.lit(0).cast("bigint")
-        merged = (
-            spark.read.parquet(f"{rollup_dir}/v{prev}")
-            .join(delta, "source", "full_outer")
-            .select(
-                "source",
-                (F.coalesce("n_docs", zero) + F.coalesce("d_docs", zero))
-                .cast("bigint")
-                .alias("n_docs"),
-                (
-                    F.coalesce("n_tokens", zero)
-                    + F.coalesce("d_tokens", zero)
-                )
-                .cast("bigint")
-                .alias("n_tokens"),
-                F.expr(
-                    "coalesce(corpus_h, 0L) ^ coalesce(d_h, 0L)"
-                )
-                .cast("bigint")
-                .alias("corpus_h"),
-            )
-        )
-        merged.write.parquet(f"{rollup_dir}/v{new_v}")
-
-    land = tempfile.mkdtemp(prefix="vcdfroll-land-")
-    ckpt = tempfile.mkdtemp(prefix="vcdfroll-ckpt-")
-    try:
-        for i in (0, 1):
-            _land_batch(
-                batches.filter(F.col("batch_no") == i).drop("batch_no"),
-                land,
-                f"b{i}.parquet",
-            )
-            q = (
-                spark.readStream.schema(schema)
-                .parquet(land)
-                .writeStream.foreachBatch(gate_commit_maintain)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(land, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    final_v = vs.current_version(store)
-    maintained = spark.read.parquet(f"{rollup_dir}/v{final_v}").select(
-        F.lit("maintained").alias("facet"), "*"
-    )
-    direct = _rollup_agg(vs.read_version(spark, store, final_v)).select(
-        F.lit("direct").alias("facet"), "*"
-    )
-    return direct.unionByName(maintained)
-
-
-# -- bloom point-lookup through the store (round 8) -----------------------------
-#
-# The oracled composition for the bloom sidecar: commit the corpus
-# with a content_hash bloom, then answer a batch of point lookups
-# (every doc with doc_id % 1024 == 7 — probe keys a real caller would
-# hold) through read_version(point_filters=…), which prunes files on
-# the sidecar before Spark lists anything and applies exact equality
-# in-plan. The result is the looked-up rows themselves, so ANY bloom
-# false negative (a wrongly pruned file) drops a row and fails the
-# driver's row-count match — the oracle simply selects the probed
-# docs relationally. False positives only admit extra files, never
-# extra rows. That the pruning BITES is pinned separately by
-# tests/test_versioning.py::test_bloom_point_lookup_skips_files.
-
-
-_SBL_ORACLE = f"""
-SELECT source, doc_id,
-       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       CAST({_ROW_H_DUCK} AS BIGINT) AS h
-FROM documents WHERE doc_id % 1024 = 7
-ORDER BY doc_id LIMIT 16
-"""
-
-
-@query(
-    "store_bloom_lookup",
-    oracle=_SBL_ORACLE,
-    tags=("pipeline", "versioning", "pruning", "bloom", "documents"),
-    exported=False,  # library: bloom point-lookup read path, oracled
-)
-def store_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom point lookups through the versioned store (section
-    comment): commit the corpus bloomed on content_hash, then fetch
-    each probe key via a sidecar-pruned point read; returns the
-    looked-up rows (source, doc_id, n_tokens, h)."""
-    store = corpus_out_dir(sf_dir) + "_vbloom"
-    shutil.rmtree(store, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", "text"
-    )
-    v = vs.commit_overwrite(
-        _corpus_store_rows(docs), store, "source",
-        bloom_cols=["content_hash"],
-    )
-    # the probe keys a caller would hold — bounded DATA-INDEPENDENTLY
-    # (the 16 smallest matching ids): the lookup count is the user's,
-    # not the table's, so the probe must not grow with the corpus
-    probes = [
-        r.ch
-        for r in docs.filter(F.col("doc_id") % 1024 == 7)
-        .orderBy("doc_id")
-        .limit(16)
-        .select(F.sha2("text", 256).alias("ch"))
-        .collect()
-    ]
-    out = None
-    for ch in sorted(probes):
-        hit = vs.read_version(
-            spark, store, v, point_filters={"content_hash": ch}
-        ).select("source", "doc_id", "n_tokens", "h")
-        out = hit if out is None else out.unionByName(hit)
-    return out
-
-
-# -- incremental MinHash index maintenance from the change feed ------------------
-#
-# The CDC theme meeting the dedup theme: a production near-dup gate
-# keeps a STORED LSH band index (band, sig, doc_id) so arrivals probe
-# bucket-local candidates instead of rescanning the corpus. When the
-# corpus store mutates, that index must follow — and the change feed
-# is exactly the required input: drop index entries for
-# delete/update_preimage doc_ids, add freshly-computed bands for
-# insert/update_postimage texts (the store carries the body for this
-# consumer). The query maintains a REAL per-version index table
-# across the four-version store's full mutation history and emits its
-# final per-source summary (entries + xor'd entry hash) next to the
-# direct recompute over the final corpus; the oracle replays both
-# from three band chains (base / gate winners / re-scrubbed docs) —
-# a hash match pins minhash banding, feed application and the
-# equality of O(churn) maintenance with the O(corpus) rebuild.
-# At 100 TB each refresh re-bands only the feed's documents — the
-# dominant cost of index maintenance becomes proportional to churn.
-
-_IDX_H = "concat('idx:', cast(doc_id as string), ':', cast(band as string), ':', sig)"
-_IDX_EH_DUCK = DUCK_H60.format(
-    x="'idx:' || CAST(doc_id AS VARCHAR) || ':' || CAST(band AS VARCHAR) || ':' || sig"
-)
-
-
-def _bands_with_source(df: DataFrame) -> DataFrame:
-    """(source, doc_id, band, sig) LSH band index rows for documents
-    (source, doc_id, text) — the dedup module's single-shuffle MinHash
-    (min is duplicate-insensitive, so no shingle distinct), with
-    source carried through the aggregate."""
-    sh = _spark_shingles(df.select("doc_id", "text"), distinct=False).join(
-        df.select("doc_id", "source"), "doc_id"
-    )
-    mins = [
-        F.min(
-            F.expr(SPARK_H60.format(x=f"concat('{i}', '|', shingle)"))
-        ).alias(f"m{i}")
-        for i in range(MINHASH_K)
-    ]
-    n_bands = MINHASH_K // 2
-    return (
-        sh.groupBy("source", "doc_id")
-        .agg(*mins)
-        .select(
-            "source",
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(n_bands - 1))
-            ).alias("band"),
-            F.array(*[f"m{i}" for i in range(MINHASH_K)]).alias("sa"),
-        )
-        .withColumn(
-            "sig",
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.expr("cast(sa[band] as string)"),
-                    F.expr(f"cast(sa[band + {n_bands}] as string)"),
-                )
-            ),
-        )
-        .drop("sa")
-    )
-
-
-def _duck_band_chain(name: str, src: str) -> str:
-    """DuckDB twin of `_bands_with_source` over the CTE ``src``
-    (source, doc_id, text) — mirrors dedup.py's _DUCK_MINHASH."""
-    h = DUCK_H60.format(x="CAST(h.hi AS VARCHAR) || '|' || shingle")
-    return f"""
-tk_{name} AS (
-  SELECT source, doc_id, string_split(lower(text), ' ') AS t FROM {src}
-),
-sg_{name} AS (
-  SELECT source, doc_id,
-         unnest(list_transform(range(1, greatest(len(t) - 1, 1)),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-  FROM tk_{name}
-),
-mh_{name} AS (
-  SELECT source, doc_id, h.hi, min({h}) AS mh
-  FROM sg_{name}
-  CROSS JOIN (SELECT unnest(range(0, {MINHASH_K})) AS hi) h
-  GROUP BY source, doc_id, h.hi
-),
-bd_{name} AS (
-  SELECT source, doc_id, hi % {MINHASH_K // 2} AS band,
-         md5(string_agg(CAST(mh AS VARCHAR), ',' ORDER BY hi)) AS sig
-  FROM mh_{name} GROUP BY source, doc_id, hi % {MINHASH_K // 2}
-)"""
-
-
-_SMI_ORACLE = f"""
-WITH lab AS (
-  SELECT source, doc_id, text, ({_IS_NEW_DUCK}) AS is_new FROM documents
-),
-base AS (SELECT source, doc_id, text FROM lab WHERE NOT is_new),
-bh AS (SELECT DISTINCT sha256(text) AS ch FROM base),
-arr AS (
-  SELECT source, doc_id, text, sha256(text) AS ch FROM lab WHERE is_new
-),
-win AS (
-  SELECT *, row_number() OVER (PARTITION BY ch ORDER BY doc_id) AS rn
-  FROM arr
-),
-keep AS (
-  SELECT source, doc_id, text FROM win
-  WHERE rn = 1 AND ch NOT IN (SELECT ch FROM bh)
-),
-upd AS (
-  SELECT source, doc_id, text || ' updated' AS text
-  FROM base WHERE doc_id % 7 = 0
-),
-{_duck_band_chain("base", "base").lstrip()},
-{_duck_band_chain("keep", "keep").lstrip()},
-{_duck_band_chain("upd", "upd").lstrip()},
-bd_v3 AS (
-  SELECT * FROM bd_base WHERE doc_id % 7 <> 0
-  UNION ALL SELECT * FROM bd_upd
-  UNION ALL SELECT * FROM bd_keep
-),
-m AS (
-  SELECT source, doc_id, band, sig, 1 AS w FROM bd_base
-  UNION ALL SELECT source, doc_id, band, sig, 1 FROM bd_keep
-  UNION ALL
-  SELECT source, doc_id, band, sig, -1 FROM bd_base WHERE doc_id % 7 = 0
-  UNION ALL SELECT source, doc_id, band, sig, 1 FROM bd_upd
-  UNION ALL
-  SELECT source, doc_id, band, sig, -1 FROM bd_v3 WHERE doc_id % 11 = 5
-),
-facets AS (
-  SELECT 'direct' AS facet, source,
-         CAST(count(*) AS BIGINT) AS n_entries,
-         CAST(bit_xor({_IDX_EH_DUCK}) AS BIGINT) AS idx_h
-  FROM bd_v3 WHERE doc_id % 11 <> 5 GROUP BY source
-  UNION ALL
-  SELECT 'maintained', source, CAST(sum(w) AS BIGINT),
-         CAST(bit_xor({_IDX_EH_DUCK}) AS BIGINT)
-  FROM m GROUP BY source
-)
-SELECT * FROM facets
-"""
-
-
-@query(
-    "store_cdf_minhash_index",
-    oracle=_SMI_ORACLE,
-    tags=(
-        "pipeline", "versioning", "cdc", "dedup", "minhash",
-        "incremental", "documents",
-    ),
-    exported=False,  # library: CDC-maintained LSH index, oracled
-)
-def store_cdf_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC-maintained LSH band index (section comment): build the
-    four-version TEXT-carrying store, materialize the v1 band index,
-    apply each transition's change feed to the STORED index
-    (anti-join out removed doc_ids, append freshly-banded added
-    texts), and emit the final stored index's per-source summary next
-    to the direct recompute over v4."""
-    store, (v1, v2, v3, v4) = _build_cdf_store(
-        spark, sf_dir, keep_text=True, variant="_mhidx"
-    )
-    idx_dir = corpus_out_dir(sf_dir) + "_mhidx_index"
-    shutil.rmtree(idx_dir, ignore_errors=True)
-
-    _bands_with_source(
-        vs.read_version(spark, store, v1).select("source", "doc_id", "text")
-    ).write.parquet(f"{idx_dir}/v{v1}")
-    for a, b in ((v1, v2), (v2, v3), (v3, v4)):
-        feed = vs.table_changes(spark, store, a, b, ["source", "doc_id"])
-        removed = (
-            feed.filter(~F.expr(_CDF_POS)).select("doc_id").distinct()
-        )
-        added = feed.filter(F.expr(_CDF_POS)).select(
-            "source", "doc_id", "text"
-        )
-        (
-            spark.read.parquet(f"{idx_dir}/v{a}")
-            .join(removed, "doc_id", "left_anti")
-            .unionByName(_bands_with_source(added))
-            .write.parquet(f"{idx_dir}/v{b}")
-        )
-
-    eh = F.expr(SPARK_H60.format(x=_IDX_H)).cast("bigint")
-
-    def summary(df: DataFrame, facet: str) -> DataFrame:
-        return (
-            df.withColumn("eh", eh)
-            .groupBy("source")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_entries"),
-                F.expr("bit_xor(eh)").cast("bigint").alias("idx_h"),
-            )
-            .select(F.lit(facet).alias("facet"), "*")
-        )
-
-    direct = summary(
-        _bands_with_source(
-            vs.read_version(spark, store, v4).select(
-                "source", "doc_id", "text"
-            )
-        ),
-        "direct",
-    )
-    maintained = summary(
-        spark.read.parquet(f"{idx_dir}/v{v4}"), "maintained"
-    )
-    return direct.unionByName(maintained)
 
 
 # -- composite-partitioned store (round 8) --------------------------------------
@@ -2130,593 +1311,6 @@ def store_composite_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return total.unionByName(cell).unionByName(feed)
-
-
-# -- concurrent writers: optimistic rebase, driver-visible ----------------------
-#
-# WHY this is a query and not just a pytest: the rebase path rewrites
-# MANIFESTS, and a manifest bug shows up as wrong DATA (stale files
-# carried forward, winner's files dropped). Hashing the post-race
-# snapshot and its change feed against a relational replay pins the
-# end state of the whole protocol — claim, conflict check, carry-
-# forward surgery — not just the code path's exceptions. The race is
-# replayed deterministically by landing writer A inside writer B's
-# first claim attempt (the same interleave the unit and threaded tests
-# use; tests/test_versioning.py adds a true two-thread race and
-# tests/test_properties.py model-checks arbitrary racing pairs).
-#
-# 100 TB shape: per-source ingesters committing to disjoint partitions
-# serialize only through the O(1) manifest claim, never through data
-# recompute — the loser's rebase is manifest surgery over O(files)
-# driver metadata, with zero additional Spark jobs.
-
-_OCC_A_PRED = "source = 'src1' AND doc_id % 3 = 0"
-_OCC_B_UPD_PRED = "source = 'src2' AND doc_id % 3 = 1"
-_OCC_B_NEW_PRED = "source = 'src2' AND doc_id % 3 = 2"
-
-_OCC_ORACLE = f"""
-WITH rows0 AS (
-  SELECT source, doc_id, text FROM documents
-),
-chg_a AS (
-  SELECT source, doc_id, text || ' [a]' AS text
-  FROM rows0 WHERE {_OCC_A_PRED}
-),
-chg_b_upd AS (
-  SELECT source, doc_id, text || ' [b]' AS text
-  FROM rows0 WHERE {_OCC_B_UPD_PRED}
-),
-chg_b_new AS (
-  SELECT source, doc_id + 100000 AS doc_id, text || ' [bnew]' AS text
-  FROM rows0 WHERE {_OCC_B_NEW_PRED}
-),
-final AS (
-  SELECT * FROM rows0
-  WHERE NOT ({_OCC_A_PRED}) AND NOT ({_OCC_B_UPD_PRED})
-  UNION ALL SELECT * FROM chg_a
-  UNION ALL SELECT * FROM chg_b_upd
-  UNION ALL SELECT * FROM chg_b_new
-),
-feed AS (
-  SELECT 'update_preimage' AS t, source, doc_id, text
-  FROM rows0 WHERE ({_OCC_A_PRED}) OR ({_OCC_B_UPD_PRED})
-  UNION ALL SELECT 'update_postimage', source, doc_id, text FROM chg_a
-  UNION ALL SELECT 'update_postimage', source, doc_id, text FROM chg_b_upd
-  UNION ALL SELECT 'insert', source, doc_id, text FROM chg_b_new
-),
-facets AS (
-  {_duck_digest("'final:' || source")}
-  FROM final GROUP BY source
-  UNION ALL
-  {_duck_digest("'feed:' || t")}
-  FROM feed GROUP BY t
-  UNION ALL
-  SELECT 'meta:versions', CAST(3 AS BIGINT), CAST(1 AS BIGINT),
-         CAST(0 AS BIGINT)
-)
-SELECT * FROM facets
-"""
-
-
-@query(
-    "store_concurrent_writers",
-    oracle=_OCC_ORACLE,
-    tags=("pipeline", "versioning", "concurrency", "documents"),
-    exported=False,  # library: optimistic-concurrency end state, oracled
-)
-def store_concurrent_writers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two writers race the versioned store (section comment): both
-    prepare against v1 — A upserts src1, B upserts + inserts into src2
-    — and A lands first, inside B's claim attempt. B must rebase
-    (disjoint partitions) and land as v3 carrying A's files forward.
-    Facets: per-source summary of the FINAL snapshot (content equals
-    the serial A;B application — the serializability claim), the v1→v3
-    change feed per image type (both writers' updates and B's inserts,
-    nothing else), and the history shape (3 versions, v3 rebased from
-    base 1). Store recreated per run for deterministic versions."""
-    store = corpus_out_dir(sf_dir) + "_occ"
-    shutil.rmtree(store, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", "text"
-    )
-    vs.commit_overwrite(_corpus_store_rows(docs), store, "source")
-
-    chg_a = _corpus_store_rows(
-        docs.filter(F.expr(_OCC_A_PRED)).withColumn(
-            "text", F.concat("text", F.lit(" [a]"))
-        )
-    )
-    chg_b = _corpus_store_rows(
-        docs.filter(F.expr(_OCC_B_UPD_PRED))
-        .withColumn("text", F.concat("text", F.lit(" [b]")))
-        .unionByName(
-            docs.filter(F.expr(_OCC_B_NEW_PRED))
-            .withColumn("doc_id", F.col("doc_id") + F.lit(100000))
-            .withColumn("text", F.concat("text", F.lit(" [bnew]")))
-        )
-    )
-
-    # deterministic replay of the race: A lands immediately before B's
-    # first claim attempt, forcing B through the real rebase path
-    real = vs._claim_manifest
-    fired: list[int] = []
-
-    def hooked(store_, manifest):
-        if not fired:
-            fired.append(1)
-            vs.commit_upsert(spark, store, chg_a, ["source", "doc_id"])
-        return real(store_, manifest)
-
-    vs._claim_manifest = hooked
-    try:
-        v3 = vs.commit_upsert(
-            spark, store, chg_b, ["source", "doc_id"], max_retries=1
-        )
-    finally:
-        vs._claim_manifest = real
-
-    final_f = _digest(
-        vs.read_version(spark, store, v3),
-        F.concat(F.lit("final:"), "source"), "source",
-    )
-    feed_f = _digest(
-        vs.table_changes(spark, store, 1, v3, ["source", "doc_id"]),
-        F.concat(F.lit("feed:"), "_change_type"), "_change_type",
-    )
-    man3 = vs._read_manifest_raw(store, v3)
-    meta_f = spark.createDataFrame(
-        [
-            (
-                "meta:versions",
-                vs.current_version(store),
-                man3.get("rebased_from_base", -1),
-                0,
-            )
-        ],
-        _META_DDL,
-    )
-    return final_f.unionByName(feed_f).unionByName(meta_f)
-
-
-# -- commit-time expectations: the data contract, driver-visible ----------------
-#
-# WHY: a training-corpus store's quality gate belongs at COMMIT time
-# (Delta Live Tables' expectations) — after the fact, bad rows are
-# already in someone's training run. The store enforces row-level SQL
-# predicates on every changeset: 'fail' aborts the commit before a
-# file is staged; 'drop' commits the passing rows and records per-
-# expectation violation counts in the MANIFEST, making the quality
-# decision part of the table's history (the vstore history CLI prints
-# it). Cost: ONE aggregate pass over the changeset — the table is
-# never scanned, so at 100 TB the contract costs the arrival batch,
-# not the corpus.
-
-_EXP_PREDS = {
-    "hash_present": "content_hash is not null",
-    "tok_positive": "n_tokens > 0",
-}
-
-_EXP_ORACLE = f"""
-WITH src AS (
-  SELECT source, doc_id, text || ' [r]' AS text
-  FROM documents WHERE doc_id % 4 = 1
-),
-chg AS (
-  SELECT source, doc_id,
-         CASE WHEN doc_id % 12 = 1 THEN CAST(0 AS BIGINT)
-              ELSE CAST(len(string_split(text, ' ')) AS BIGINT)
-         END AS n_tokens,
-         CASE WHEN doc_id % 12 = 5 THEN NULL
-              ELSE sha256(text) END AS content_hash,
-         CAST({_ROW_H_DUCK} AS BIGINT) AS h
-  FROM src
-),
-pass AS (
-  SELECT * FROM chg WHERE n_tokens > 0 AND content_hash IS NOT NULL
-),
-base AS (
-  SELECT source, doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         CAST({_ROW_H_DUCK} AS BIGINT) AS h
-  FROM documents
-),
-final AS (
-  SELECT source, doc_id, n_tokens, h FROM base b
-  WHERE NOT EXISTS (
-    SELECT 1 FROM pass p
-    WHERE p.source = b.source AND p.doc_id = b.doc_id
-  )
-  UNION ALL SELECT source, doc_id, n_tokens, h FROM pass
-),
-facets AS (
-  SELECT 'final:' || source AS facet, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-         CAST(bit_xor(h) AS BIGINT) AS h
-  FROM final GROUP BY source
-  UNION ALL
-  SELECT 'dropped:hash_present', CAST(count(*) AS BIGINT),
-         CAST(coalesce(sum(n_tokens), 0) AS BIGINT),
-         CAST(coalesce(bit_xor(h), 0) AS BIGINT)
-  FROM chg WHERE NOT coalesce(content_hash IS NOT NULL, FALSE)
-  UNION ALL
-  SELECT 'dropped:tok_positive', CAST(count(*) AS BIGINT),
-         CAST(coalesce(sum(n_tokens), 0) AS BIGINT),
-         CAST(coalesce(bit_xor(h), 0) AS BIGINT)
-  FROM chg WHERE NOT coalesce(n_tokens > 0, FALSE)
-)
-SELECT * FROM facets
-"""
-
-
-@query(
-    "store_expectations",
-    oracle=_EXP_ORACLE,
-    tags=("pipeline", "versioning", "quality", "documents"),
-    exported=False,  # library: commit-time data contract, oracled
-)
-def store_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Commit-time expectations end to end (section comment): a
-    refresh changeset arrives with injected defects (every 12th doc's
-    token count zeroed, every 12th-offset-5 doc's content hash
-    nulled), the upsert enforces the contract with
-    ``on_violation='drop'``, and the facets pin (1) the final
-    snapshot per source — dropped rows must NOT have replaced their
-    base versions, passing rows must have — and (2) each
-    expectation's dropped-row summary, whose ``n`` comes from the
-    MANIFEST's recorded counts, so the driver hash verifies the
-    history records what was actually dropped. The oracle replays the
-    contract relationally (NULL predicate = violation)."""
-    store = corpus_out_dir(sf_dir) + "_expect"
-    shutil.rmtree(store, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", "text"
-    )
-    vs.commit_overwrite(_corpus_store_rows(docs), store, "source")
-
-    chg = (
-        _corpus_store_rows(
-            docs.filter(F.col("doc_id") % 4 == 1).withColumn(
-                "text", F.concat("text", F.lit(" [r]"))
-            )
-        )
-        .withColumn(
-            "n_tokens",
-            F.when(
-                F.col("doc_id") % 12 == 1, F.lit(0).cast("bigint")
-            ).otherwise(F.col("n_tokens")),
-        )
-        .withColumn(
-            "content_hash",
-            F.when(
-                F.col("doc_id") % 12 == 5, F.lit(None).cast("string")
-            ).otherwise(F.col("content_hash")),
-        )
-    )
-    v2 = vs.commit_upsert(
-        spark,
-        store,
-        chg,
-        ["source", "doc_id"],
-        expectations=_EXP_PREDS,
-        on_violation="drop",
-    )
-    man = vs._read_manifest(store, v2)
-
-    out = _digest(
-        vs.read_version(spark, store, v2),
-        F.concat(F.lit("final:"), "source"), "source",
-    )
-    for name, sql in sorted(_EXP_PREDS.items()):
-        viol = chg.filter(
-            ~F.coalesce(F.expr(sql).cast("boolean"), F.lit(False))
-        )
-        out = out.unionByName(
-            viol.agg(
-                F.coalesce(F.sum("n_tokens"), F.lit(0))
-                .cast("bigint")
-                .alias("n_tokens"),
-                F.coalesce(F.expr("bit_xor(h)"), F.lit(0))
-                .cast("bigint")
-                .alias("h"),
-            ).select(
-                F.lit(f"dropped:{name}").alias("facet"),
-                F.lit(man["expectations"][name]["violations"])
-                .cast("bigint")
-                .alias("n"),
-                "n_tokens",
-                "h",
-            )
-        )
-    return out
-
-
-# -- MERGE INTO: three clauses, one commit, driver-visible ----------------------
-#
-# `commit_merge` is the store's full MERGE (update-when-matched,
-# delete-when-matched-and, insert-when-not-matched) in ONE version —
-# upsert+delete used to cost two commits and expose an inconsistent
-# intermediate snapshot. The query drives all three clauses over two
-# source partitions and pins: the final snapshot for EVERY source
-# (untouched partitions must carry forward byte-identically), the
-# v1→v2 change feed per image type, and the manifest's recorded
-# clause counts — each against a relational replay.
-
-_MERGE_ORACLE = f"""
-WITH tsrc AS (
-  SELECT source, doc_id, text FROM documents
-  WHERE source IN ('src1', 'src2')
-),
-upd AS (
-  SELECT source, doc_id, text || ' [m]' AS text
-  FROM tsrc WHERE doc_id % 3 = 0
-),
-dead AS (SELECT source, doc_id, text FROM tsrc WHERE doc_id % 3 = 1),
-ins AS (
-  SELECT source, doc_id + 100000 AS doc_id, text || ' [new]' AS text
-  FROM tsrc WHERE doc_id % 3 = 2
-),
-base AS (SELECT source, doc_id, text FROM documents),
-final AS (
-  SELECT source, doc_id, text FROM base b
-  WHERE NOT EXISTS (
-      SELECT 1 FROM upd u
-      WHERE u.source = b.source AND u.doc_id = b.doc_id)
-    AND NOT EXISTS (
-      SELECT 1 FROM dead d
-      WHERE d.source = b.source AND d.doc_id = b.doc_id)
-  UNION ALL SELECT source, doc_id, text FROM upd
-  UNION ALL SELECT source, doc_id, text FROM ins
-),
-feed AS (
-  SELECT 'update_preimage' AS t, source, doc_id, text
-  FROM tsrc WHERE doc_id % 3 = 0
-  UNION ALL SELECT 'update_postimage', source, doc_id, text FROM upd
-  UNION ALL SELECT 'delete', source, doc_id, text FROM dead
-  UNION ALL SELECT 'insert', source, doc_id, text FROM ins
-),
-facets AS (
-  {_duck_digest("'final:' || source")}
-  FROM final GROUP BY source
-  UNION ALL
-  {_duck_digest("'feed:' || t")}
-  FROM feed GROUP BY t
-  UNION ALL
-  SELECT 'meta:merge', CAST((SELECT count(*) FROM upd) AS BIGINT),
-         CAST((SELECT count(*) FROM dead) AS BIGINT),
-         CAST((SELECT count(*) FROM ins) AS BIGINT)
-)
-SELECT * FROM facets
-"""
-
-
-@query(
-    "store_merge_clauses",
-    oracle=_MERGE_ORACLE,
-    tags=("pipeline", "versioning", "merge", "documents"),
-    exported=False,  # library: three-clause MERGE INTO, oracled
-)
-def store_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO end to end (section comment): the source carries
-    updates (every 3rd src1/src2 doc, text re-marked), tombstones
-    (doc_id%3=1, flagged by a negative token count — the
-    ``matched_delete_condition``), and inserts (doc_id%3=2, shifted
-    keys). One ``commit_merge`` applies all three; the facets hash the
-    final corpus per source, the change feed per image type, and the
-    manifest's clause counts against the relational replay."""
-    store = corpus_out_dir(sf_dir) + "_merge"
-    shutil.rmtree(store, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", "text"
-    )
-    vs.commit_overwrite(_corpus_store_rows(docs), store, "source")
-
-    tsrc = docs.filter(F.col("source").isin("src1", "src2"))
-    upd = _corpus_store_rows(
-        tsrc.filter(F.col("doc_id") % 3 == 0).withColumn(
-            "text", F.concat("text", F.lit(" [m]"))
-        )
-    )
-    tomb = _corpus_store_rows(
-        tsrc.filter(F.col("doc_id") % 3 == 1)
-    ).withColumn("n_tokens", F.lit(-1).cast("bigint"))
-    ins = _corpus_store_rows(
-        tsrc.filter(F.col("doc_id") % 3 == 2)
-        .withColumn("doc_id", F.col("doc_id") + F.lit(100000))
-        .withColumn("text", F.concat("text", F.lit(" [new]")))
-    )
-    v2 = vs.commit_merge(
-        spark,
-        store,
-        upd.unionByName(tomb).unionByName(ins),
-        ["source", "doc_id"],
-        matched_delete_condition="n_tokens < 0",
-    )
-    man = vs._read_manifest(store, v2)
-
-    final_f = _digest(
-        vs.read_version(spark, store, v2),
-        F.concat(F.lit("final:"), "source"), "source",
-    )
-    feed_f = _digest(
-        vs.table_changes(spark, store, 1, v2, ["source", "doc_id"]),
-        F.concat(F.lit("feed:"), "_change_type"), "_change_type",
-    )
-    meta_f = spark.createDataFrame(
-        [
-            (
-                "meta:merge",
-                man["merge"]["updated"],
-                man["merge"]["deleted"],
-                man["merge"]["inserted"],
-            )
-        ],
-        _META_DDL,
-    )
-    return final_f.unionByName(feed_f).unionByName(meta_f)
-
-
-# -- partial OPTIMIZE: fragmented-partition compaction, driver-visible ----------
-#
-# `compact_partitions` is the maintenance form of OPTIMIZE a 100 TB
-# store can actually run: rewrite ONLY partitions above the file
-# target (O(fragmented)), carry healthy partitions forward
-# manifest-only, and — because its touched set is exactly the
-# fragmented partitions — compose with optimistic concurrency so a
-# background OPTIMIZE never blocks ingest into other partitions
-# (tests/test_versioning.py pins the race). The oracled query pins
-# the SAFETY property: a fragmented store (range-partitioned 8-task
-# write → 8 files per source) compacts to one file per source with
-# content byte-invariant per source, and the manifest records the
-# rewrite's scope.
-
-_POPT_ORACLE = f"""
-WITH facets AS (
-  {_duck_digest("'final:' || source")}
-  FROM documents GROUP BY source
-  UNION ALL
-  SELECT 'meta:optimize',
-         CAST((SELECT count(DISTINCT source) FROM documents) AS BIGINT),
-         CAST((SELECT count(DISTINCT source) FROM documents) AS BIGINT),
-         CAST(0 AS BIGINT)
-)
-SELECT * FROM facets
-"""
-
-
-@query(
-    "store_partial_optimize",
-    oracle=_POPT_ORACLE,
-    tags=("pipeline", "versioning", "compaction", "documents"),
-    exported=False,  # library: partial OPTIMIZE safety, oracled
-)
-def store_partial_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial OPTIMIZE end to end (section comment): the corpus is
-    committed FRAGMENTED (repartitionByRange(8, doc_id) before the
-    partitioned write puts every source's docs in all 8 range tasks —
-    8 files per source, deterministically), then
-    ``compact_partitions(files_per_partition=1)`` rewrites every
-    fragmented source to one file. Facets pin per-source content
-    invariance through the rewrite (the safety property for
-    unattended maintenance) and the manifest-recorded scope: all
-    |sources| partitions rewritten, |sources| files after."""
-    store = corpus_out_dir(sf_dir) + "_popt"
-    shutil.rmtree(store, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", "text"
-    )
-    vs.commit_overwrite(
-        _corpus_store_rows(docs).repartitionByRange(8, "doc_id"),
-        store,
-        "source",
-    )
-    man1 = vs._read_manifest(store, 1)
-    assert max(
-        sum(1 for e in man1["files"] if e["partition"] == s)
-        for s in {e["partition"] for e in man1["files"]}
-    ) > 1, "fixture write was not fragmented"
-    v2 = vs.compact_partitions(spark, store, files_per_partition=1)
-    man2 = vs._read_manifest(store, v2)
-
-    final_f = _digest(
-        vs.read_version(spark, store, v2),
-        F.concat(F.lit("final:"), "source"), "source",
-    )
-    meta_f = spark.createDataFrame(
-        [
-            (
-                "meta:optimize",
-                man2["compacted_partitions"],
-                len(man2["files"]),
-                0,
-            )
-        ],
-        _META_DDL,
-    )
-    return final_f.unionByName(meta_f)
-
-
-# -- the store as a Spark data source, driver-visible ---------------------------
-#
-# engine/sources/vstore_datasource.py surfaces the store through
-# Spark 4's Python Data Source API: `spark.read.format("vstore")` /
-# `CREATE TEMPORARY VIEW ... USING vstore` with version pinning and
-# file pruning via OPTIONS (partitions / range / point — manifest
-# entries, per-file stats, bloom sidecars; options rather than
-# pushFilters because Spark 4.1 shares one Python read plan across a
-# relation's appearances, so filter-dependent pruning would leak
-# between a union's branches — see the module docstring), Arrow-batch
-# reads per file, and the store's additive + widening evolution at
-# the Arrow layer. This query runs the whole path in SQL — the
-# engine's own read_version never touches the result — and hashes it
-# against the relational replay.
-
-_DSRC_ORACLE = f"""
-WITH facets AS (
-  {_duck_digest("'full:' || source")}
-  FROM documents GROUP BY source
-  UNION ALL
-  {_duck_digest("'pruned'")}
-  FROM documents WHERE doc_id BETWEEN 100 AND 199
-)
-SELECT * FROM facets
-"""
-
-
-@query(
-    "store_sql_source",
-    oracle=_DSRC_ORACLE,
-    tags=("pipeline", "versioning", "datasource", "sql", "documents"),
-    exported=False,  # library: the vstore Python Data Source, oracled
-)
-def store_sql_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The vstore data source end to end (section comment): commit
-    the corpus doc_id-range-fragmented (so per-file stats give the
-    range option something to prune), register the format, create TWO
-    SQL views USING vstore — the full snapshot and a doc_id-range
-    slice whose `range` OPTION prunes files catalog-side with the
-    residual applied at the Arrow layer — and answer both facets in
-    PLAIN SQL. The pruning bite itself is pinned by
-    tests/test_vstore_datasource.py on the reader's partition list."""
-    store = corpus_out_dir(sf_dir) + "_dsrc"
-    shutil.rmtree(store, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", "text"
-    )
-    vs.commit_overwrite(
-        _corpus_store_rows(docs).repartitionByRange(8, "doc_id"),
-        store,
-        "source",
-    )
-    register_vstore(spark)
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY VIEW vstore_docs"
-        f" USING vstore OPTIONS (path '{store}')"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY VIEW vstore_docs_slice"
-        f" USING vstore OPTIONS (path '{store}',"
-        " range 'doc_id:100:199')"
-    )
-    return spark.sql(
-        """
-        SELECT concat('full:', source) AS facet,
-               cast(count(*) AS bigint) AS n,
-               cast(sum(n_tokens) AS bigint) AS n_tokens,
-               cast(bit_xor(h) AS bigint) AS h
-        FROM vstore_docs GROUP BY source
-        UNION ALL
-        SELECT 'pruned',
-               cast(count(*) AS bigint),
-               cast(sum(n_tokens) AS bigint),
-               cast(bit_xor(h) AS bigint)
-        FROM vstore_docs_slice
-        """
-    )
 
 
 # -- store_format_suite: the table format's lifecycle in the driver signal ------
@@ -3206,250 +1800,6 @@ def store_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_change_type",
     )
 
-
-# -- timestamp time travel, oracled ----------------------------------------------
-#
-# Round 9 adds Delta's `timestampAsOf`: every manifest records
-# `committed_at` at its claim (the commit point), and
-# `version_at_timestamp` / `read_version(as_of_timestamp=...)` / the
-# vstore source's `timestamp_as_of` OPTION resolve a wall-clock
-# instant to the latest version visible then — raising (never lying)
-# for instants before the oldest retained commit. The oracled query
-# commits two versions, reads BACK each version's own recorded commit
-# time from the store, resolves both instants plus a midpoint through
-# the real API, and facets the resolved snapshots' content — so the
-# hash pins resolution + pinned-read together while staying
-# deterministic (the timestamps come from the store, not the clock).
-
-_TST_ORACLE = f"""
-WITH rows0 AS (
-  SELECT source, doc_id, text FROM documents WHERE source = 'src9'
-),
-rev AS (
-  SELECT source, doc_id, text || ' [rev]' AS text
-  FROM rows0 WHERE doc_id % 2 = 0
-),
-v2 AS (
-  SELECT * FROM rows0 WHERE doc_id % 2 = 1
-  UNION ALL SELECT * FROM rev
-),
-facets AS (
-  {_duck_digest("'asof:v1'")}
-  FROM rows0
-  UNION ALL
-  {_duck_digest("'asof:mid'")}
-  FROM rows0
-  UNION ALL
-  {_duck_digest("'asof:v2'")}
-  FROM v2
-)
-SELECT * FROM facets
-"""
-
-
-@query(
-    "store_timestamp_travel",
-    oracle=_TST_ORACLE,
-    tags=("pipeline", "versioning", "time-travel", "documents"),
-    exported=False,  # library: timestampAsOf resolution, oracled
-)
-def store_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Timestamp time travel (section comment): two commits, three
-    instants resolved through the real API — v1's recorded commit
-    time, the v1/v2 midpoint (still v1: v2 is not yet visible), and
-    v2's — each read as-of and faceted. A midpoint that resolved to
-    v2 would double-hash-mismatch (row set AND facet label)."""
-    store = corpus_out_dir(sf_dir) + "_tstravel"
-    shutil.rmtree(store, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("source") == "src9"
-    ).select("source", "doc_id", "text")
-    vs.commit_overwrite(_corpus_store_rows(docs), store, "source")
-    vs.commit_upsert(
-        spark,
-        store,
-        _corpus_store_rows(
-            docs.filter(F.col("doc_id") % 2 == 0).withColumn(
-                "text", F.concat("text", F.lit(" [rev]"))
-            )
-        ),
-        ["source", "doc_id"],
-    )
-    t1 = vs._read_manifest(store, 1)["committed_at"]
-    t2 = vs._read_manifest(store, 2)["committed_at"]
-    # distinct instants by construction: the claim stamps strictly
-    # increasing wall-clock times per commit on any real filesystem;
-    # guard anyway so a theoretical equal-stamp run fails loudly here
-    # rather than as a confusing hash mismatch
-    assert t1 < t2, (t1, t2)
-
-    out: DataFrame | None = None
-    for label, ts in (
-        ("asof:v1", t1),
-        ("asof:mid", (t1 + t2) / 2),
-        ("asof:v2", t2),
-    ):
-        s = _digest(
-            vs.read_version(spark, store, as_of_timestamp=ts), F.lit(label)
-        )
-        out = s if out is None else out.unionByName(s)
-    return out
-
-
-# -- zero-copy clone, oracled -----------------------------------------------------
-#
-# `clone_store` (round 9): Delta's shallow clone without its dangling-
-# reference hazard — the clone's v1 HARD-LINKS the source snapshot's
-# files, so it costs O(files) metadata and zero data movement, yet
-# either side's vacuum/delete can never brick the other (links drop
-# independently; inodes live until both sides drop them). The oracled
-# query reads the CLONE — never the source — so the hash pins that a
-# zero-copy fork serves exactly the pinned snapshot's content; inode
-# identity and two-way independence are pinned byte-level in
-# tests/test_versioning.py::test_clone_store_is_zero_copy_and_independent.
-
-_CLONE_ORACLE = f"""
-{_duck_digest("'clone:' || source")}
-FROM documents WHERE source = 'src10' GROUP BY source
-"""
-
-
-@query(
-    "store_clone_read",
-    oracle=_CLONE_ORACLE,
-    tags=("pipeline", "versioning", "clone", "documents"),
-    exported=False,  # library: zero-copy clone content, oracled
-)
-def store_clone_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-copy clone (section comment): publish src10 as a store,
-    fork it with clone_store, then REVISE THE SOURCE (so a clone that
-    secretly read through to the source would hash-mismatch) and
-    answer the facet from the clone's pinned v1."""
-    src = corpus_out_dir(sf_dir) + "_clonesrc"
-    dst = corpus_out_dir(sf_dir) + "_clonedst"
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(dst, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("source") == "src10"
-    ).select("source", "doc_id", "text")
-    vs.commit_overwrite(_corpus_store_rows(docs), src, "source")
-    vs.clone_store(spark, src, dst)
-    # mutate the SOURCE after the fork: the clone must not see it
-    vs.commit_upsert(
-        spark,
-        src,
-        _corpus_store_rows(
-            docs.withColumn("text", F.concat("text", F.lit(" [mut]")))
-        ),
-        ["source", "doc_id"],
-    )
-    return _digest(
-        vs.read_version(spark, dst), F.concat(F.lit("clone:"), "source"), "source"
-    )
-
-
-# -- column-mapping rename, oracled -------------------------------------------------
-#
-# `rename_column` (round 10): Delta's column mapping — a rename is a
-# zero-copy metadata commit; data files keep the column's frozen
-# PHYSICAL name and the manifest's column_map carries
-# {logical: physical}, so readers translate, writers stage physical,
-# and stats/bloom pruning keeps working across the rename. The oracled
-# facets pin the full lifecycle: the OLD version still reads under the
-# old name, the renamed table reads (and keeps committing) under the
-# new one, and a range filter on the RENAMED column still prunes
-# through the map (a broken translation would silently skip pruning —
-# caught here because the residual filter result is hashed). File-level
-# invariants (empty delta, frozen physical names in new files' footers,
-# sidecar carry) are pinned byte-level in
-# tests/test_manifest_checkpointing.py::test_rename_column_lifecycle.
-
-_RENAME_ORACLE = f"""
-WITH v3 AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 2 = 1 THEN text || ' [rev]' ELSE text END AS text
-  FROM documents WHERE source = 'src11'
-), tok AS (
-  SELECT doc_id, text,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS tc
-  FROM v3
-)
-{_duck_digest("'v1:old_name'")}
-FROM documents WHERE source = 'src11'
-UNION ALL
-SELECT 'v3:new_name', CAST(count(*) AS BIGINT),
-       CAST(sum(tc) AS BIGINT), CAST(bit_xor({_ROW_H_DUCK}) AS BIGINT)
-FROM tok
-UNION ALL
-SELECT 'v3:pruned', CAST(count(*) AS BIGINT),
-       CAST(sum(tc) AS BIGINT), CAST(bit_xor({_ROW_H_DUCK}) AS BIGINT)
-FROM tok WHERE tc BETWEEN 30 AND 60
-UNION ALL
-SELECT 'v4:dropped', CAST(count(*) AS BIGINT),
-       CAST(sum(tc) AS BIGINT), CAST(bit_xor({_ROW_H_DUCK}) AS BIGINT)
-FROM tok
-"""
-
-
-@query(
-    "store_rename_lifecycle",
-    oracle=_RENAME_ORACLE,
-    tags=("pipeline", "versioning", "schema-evolution", "documents"),
-    exported=False,  # library: column-mapping rename lifecycle, oracled
-)
-def store_rename_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-mapping rename + drop lifecycle (section comment):
-    publish src11, rename n_tokens -> token_count (zero-copy), keep
-    committing under the NEW logical name, then DROP content_hash
-    (zero-copy tombstone), answering four facets — v1 under the old
-    name, the post-rename head under the new one, a stats-pruned
-    range read on the renamed column (the filter key must translate
-    to the files' physical name for pruning AND stay logical for the
-    residual row filter; either half broken hash-mismatches), and the
-    post-drop head (same rows, narrowed schema)."""
-    store = corpus_out_dir(sf_dir) + "_rename"
-    shutil.rmtree(store, ignore_errors=True)
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("source") == "src11"
-    ).select("source", "doc_id", "text")
-    vs.commit_overwrite(_corpus_store_rows(docs), store, "source")
-    vs.rename_column(store, "n_tokens", "token_count")
-    # post-rename upsert speaks the NEW logical name end to end
-    revised = _corpus_store_rows(
-        docs.filter(F.col("doc_id") % 2 == 1).withColumn(
-            "text", F.concat("text", F.lit(" [rev]"))
-        )
-    ).withColumnRenamed("n_tokens", "token_count")
-    v3 = vs.commit_upsert(spark, store, revised, ["source", "doc_id"])
-    # DROP a column zero-copy (rename's sibling): the head loses
-    # content_hash, the row hash h survives — the facet pins that a
-    # post-drop read serves exactly the pre-drop rows minus the column
-    v4 = vs.drop_column(store, "content_hash")
-
-    out = _digest(vs.read_version(spark, store, 1), F.lit("v1:old_name"))
-    out = out.unionByName(
-        _digest(
-            vs.read_version(spark, store, v3), F.lit("v3:new_name"),
-            tokens="token_count",
-        )
-    )
-    out = out.unionByName(
-        _digest(
-            vs.read_version(
-                spark, store, v3, range_filters={"token_count": (30, 60)}
-            ),
-            F.lit("v3:pruned"),
-            tokens="token_count",
-        )
-    )
-    head = vs.read_version(spark, store, v4)
-    assert "content_hash" not in head.columns, head.columns
-    return out.unionByName(
-        _digest(head, F.lit("v4:dropped"), tokens="token_count")
-    )
 
 
 # -- store_lifecycle_suite: DV delete, restore, auto-OPTIMIZE (round 11) --------

@@ -2331,8 +2331,8 @@ def read_version(
     the rows matching the predicate (never a superset). After a
     z-ordered ``compact_version`` the surviving-file set is small on
     any clustered dimension — the two features compose; the composed
-    effect is pinned by the ``store_stats_pruned_read`` oracle and
-    the pruning counts in tests/test_versioning.py.
+    effect (exact rows, most files pruned) is pinned by
+    tests/test_versioning.py::test_stats_pruned_read_skips_files.
 
     ``point_filters`` — ``{col: value}`` equality probes — prunes via
     the version's bloom sidecar when one exists (see the bloom

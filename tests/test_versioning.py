@@ -1043,23 +1043,6 @@ def test_table_changes_feed(spark, tmp_path):
         table_changes(spark, store, v1, v2, ["k"])
 
 
-def test_cdf_rollup_maintained_equals_direct(spark, monkeypatch, tmp_path):
-    """The feed-maintained rollup must byte-equal the direct recompute
-    of the final version — per source, including the xor corpus hash
-    (the oracle pins each facet against its own relational replay;
-    this pins the two facets against EACH OTHER)."""
-    from engine.operators.versioning import store_cdf_rollup
-    from tests.conftest import SF_SMOKE
-
-    monkeypatch.setenv("SPARK_GRAFT_CORPUS_OUT", str(tmp_path / "corpus"))
-    rows = store_cdf_rollup(spark, SF_SMOKE).collect()
-    facets = {"direct": {}, "maintained": {}}
-    for r in rows:
-        facets[r.facet][r.source] = (r.n_docs, r.n_tokens, r.corpus_h)
-    assert facets["direct"] == facets["maintained"]
-    assert facets["direct"], "empty rollup would vacuously pass"
-
-
 def test_string_stats_truncation_rounds_up(spark, tmp_path):
     """Delta's 32-char rule: a recorded string max longer than the
     truncation width must round UP (rightmost incrementable char
@@ -1100,43 +1083,6 @@ def test_string_stats_truncation_rounds_up(spark, tmp_path):
     assert [r.k for r in rows] == [2]
     # a probe provably above the rounded-up max still prunes
     assert _prune_entries([entry], {"s": ("n", None)}) == []
-
-
-def test_streaming_cdf_rollup_maintains_across_triggers(
-    spark, tmp_path, monkeypatch
-):
-    """The persisted rollup maintained per trigger from the change
-    feed must equal the direct recompute of the final version, the
-    second trigger's feed must contain real UPDATE images (the
-    re-crawl path), and the per-version rollup files must exist for
-    every committed version (state persisted BETWEEN micro-batches,
-    not recomputed at the end)."""
-    import os as _os
-
-    from engine.operators.corpus_build import corpus_out_dir
-    from engine.operators.versioning import streaming_cdf_rollup
-    from engine.versioned_store import current_version, table_changes
-    from tests.conftest import SF_SMOKE
-
-    monkeypatch.setenv("SPARK_GRAFT_CORPUS_OUT", str(tmp_path / "corpus"))
-    rows = streaming_cdf_rollup(spark, SF_SMOKE).collect()
-    facets = {"direct": {}, "maintained": {}}
-    for r in rows:
-        facets[r.facet][r.source] = (r.n_docs, r.n_tokens, r.corpus_h)
-    assert facets["direct"] == facets["maintained"]
-    assert facets["direct"]
-
-    store = corpus_out_dir(SF_SMOKE) + "_vcdfroll"
-    assert current_version(store) == 3
-    for v in (1, 2, 3):
-        assert _os.path.isdir(f"{store}_rollup/v{v}")
-    types = {
-        r._change_type
-        for r in table_changes(
-            spark, store, 2, 3, ["source", "doc_id"]
-        ).collect()
-    }
-    assert {"insert", "update_preimage", "update_postimage"} <= types
 
 
 def test_bloom_point_lookup_skips_files(spark, tmp_path):
@@ -1235,37 +1181,6 @@ def test_bloom_point_lookup_skips_files(spark, tmp_path):
     # null probes rejected
     with pytest.raises(ValueError, match="non-null"):
         read_version(spark, store, v3, point_filters={"ck": None})
-
-
-def test_cdf_minhash_index_maintained_equals_rebuild(
-    spark, tmp_path, monkeypatch
-):
-    """The CDC-maintained LSH band index must equal the full rebuild
-    per source (entries + xor'd entry hash), keep one stored index per
-    version, and hold no entries for deleted documents."""
-    from engine.operators.corpus_build import corpus_out_dir
-    from engine.operators.versioning import store_cdf_minhash_index
-    from tests.conftest import SF_SMOKE
-
-    monkeypatch.setenv("SPARK_GRAFT_CORPUS_OUT", str(tmp_path / "corpus"))
-    rows = store_cdf_minhash_index(spark, SF_SMOKE).collect()
-    facets = {"direct": {}, "maintained": {}}
-    for r in rows:
-        facets[r.facet][r.source] = (r.n_entries, r.idx_h)
-    assert facets["direct"] == facets["maintained"]
-    assert facets["direct"]
-
-    idx_dir = corpus_out_dir(SF_SMOKE) + "_mhidx_index"
-    final = spark.read.parquet(f"{idx_dir}/v4")
-    for v in (1, 2, 3):
-        assert spark.read.parquet(f"{idx_dir}/v{v}").count() > 0
-    assert final.filter("doc_id % 11 = 5").count() == 0
-    # updated docs are indexed under their NEW bands only: entry count
-    # per doc is exactly the band count (no stale duplicates)
-    dup = (
-        final.groupBy("doc_id", "band").count().filter("count > 1").count()
-    )
-    assert dup == 0
 
 
 def test_multicolumn_partitioned_store(spark, tmp_path):

@@ -23,24 +23,13 @@ def med(xs):
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
-    from engine.operators import similarity
+    from engine.operators.similarity import ann_tier_frames
     from engine.operators.tpch_merged import NATION_TRADE
     from engine.plans import checkpoint_concurrently
 
     spark = get_spark("ab")
 
-    def ann_parts(spark, sf_dir):
-        cols = ["query_id", "neighbor_id", "cos_sim", "rn"]
-        return [
-            ("brute", similarity.ann_cosine_topk(spark, sf_dir).select(F.lit("brute").alias("method"), *cols)),
-            ("ivf", similarity.ann_ivf_topk(spark, sf_dir).select(F.lit("ivf").alias("method"), *cols)),
-            ("hamming", similarity.ann_hamming_topk(spark, sf_dir).select(F.lit("hamming").alias("method"), *cols)),
-            ("hardneg", similarity.hard_negative_topk(spark, sf_dir).select(F.lit("hardneg").alias("method"), *cols)),
-        ]
-
-    for label, parts_fn in (("q7_q8_q9", NATION_TRADE.frames), ("ann_topk", ann_parts)):
+    for label, parts_fn in (("q7_q8_q9", NATION_TRADE.frames), ("ann_topk", ann_tier_frames)):
         # warm both shapes
         for variant in ("seq", "conc"):
             parts = parts_fn(spark, SF_DIR)
