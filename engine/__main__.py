@@ -212,7 +212,7 @@ def cmd_vstore(args: argparse.Namespace) -> int:
                 extras.append(
                     f"expect:{name}={st['violations']} {st['action']}ped"
                 )
-            if vs._read_bloom_sidecar(args.store, v):
+            if vs._bloom_config(args.store, v) is not None:
                 extras.append("bloomed")
             if "committed_at" in man:  # timestamp time-travel anchor
                 import datetime as _dt

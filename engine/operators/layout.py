@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.io import load_table
-from engine.registry import query
+from engine.registry import Federation, query
 
 GRID_BITS = 16  # per-dimension grid resolution (65536 cells)
 GRID = 1 << GRID_BITS
@@ -374,7 +374,7 @@ GROUP BY s.layout
     "layout_zorder3_skipping",
     oracle=_SKIP3_ORACLE,
     tags=("layout", "scale", "lineitem", "zorder"),
-    exported=False,  # driver-visible as layout_zorder_skipping's `zo3` facet
+    exported=False,  # ZORDER_SKIPPING's `zo3` facet
 )
 def layout_zorder3_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 3-dimensional skipping audit (section comment): grid
@@ -473,15 +473,20 @@ def layout_zorder3_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_AUDIT_COLS = ("layout", "n_files", "n_rows", "files_hit", "rows_hit")
+ZORDER_SKIPPING = Federation(
+    "facet STRING, layout STRING, n_files BIGINT, n_rows BIGINT,"
+    " files_hit BIGINT, rows_hit BIGINT",
+    [
+        ("zo2", _SKIP_ORACLE, {c: c for c in _AUDIT_COLS}),
+        ("zo3", "layout_zorder3_skipping", {c: c for c in _AUDIT_COLS}),
+    ],
+)
+
+
 @query(
     "layout_zorder_skipping",
-    oracle=f"""
-SELECT 'zo2' AS facet, layout, n_files, n_rows, files_hit, rows_hit
-FROM ({_SKIP_ORACLE}) a2
-UNION ALL
-SELECT 'zo3', layout, n_files, n_rows, files_hit, rows_hit
-FROM ({_SKIP3_ORACLE}) a3
-""",
+    oracle=ZORDER_SKIPPING.oracle,
     tags=("layout", "scale", "lineitem", "zorder"),
     # library since round 9 (driver-cap consolidation to admit
     # store_format_suite): these audits are pure relational arithmetic
@@ -502,20 +507,6 @@ def layout_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes). Per (facet, layout): file count, total rows, probe file
     hits, probe row hits — z-order's lower hit counts are the verified
     data-skipping win on BOTH dimensionalities."""
-    a2 = _zorder2_audit(spark, sf_dir).select(
-        F.lit("zo2").alias("facet"),
-        "layout",
-        "n_files",
-        "n_rows",
-        "files_hit",
-        "rows_hit",
-    )
-    a3 = layout_zorder3_skipping(spark, sf_dir).select(
-        F.lit("zo3").alias("facet"),
-        "layout",
-        "n_files",
-        "n_rows",
-        "files_hit",
-        "rows_hit",
-    )
-    return a2.unionAll(a3)
+    a2 = ZORDER_SKIPPING.project("zo2", _zorder2_audit(spark, sf_dir))
+    a3 = layout_zorder3_skipping(spark, sf_dir)
+    return a2.unionAll(ZORDER_SKIPPING.project("zo3", a3))

@@ -13,15 +13,15 @@ output schema → Arrow record batches in/out, no row-at-a-time Python.
 
 Scale notes: binary payloads ride the scan; metadata extraction is
 embarrassingly parallel with zero shuffle. Real decoders drop into
-``_fake_decode_meta``'s slot unchanged. Batch size is governed by
-``spark.sql.execution.arrow.maxRecordsPerBatch`` — for 10 MB images
-set it low (e.g. 32) so an Arrow batch fits executor memory.
+``extract_blob_meta``'s ``fake_decode`` slot unchanged. Batch size is
+governed by ``spark.sql.execution.arrow.maxRecordsPerBatch`` — for
+10 MB images set it low (e.g. 32) so an Arrow batch fits executor
+memory.
 """
 
 from __future__ import annotations
 
 import functools
-import hashlib
 from collections.abc import Iterator
 from typing import Any
 
@@ -124,22 +124,6 @@ def synth_wav(sr: int, n_samples: int) -> bytes:
         pattern = bytes(range(256))
         w.writeframes((pattern * (n_samples // 256 + 1))[:n_samples])
     return buf.getvalue()
-
-
-def _h60(s: str) -> int:
-    """The engine's shared 60-bit hash (same as SPARK_H60/DUCK_H60)."""
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
-def _fake_decode_meta(payload: bytes) -> tuple[int, str, int, int, int]:
-    """Deterministic stand-in for a decoder: metadata derived from the
-    payload checksum, so the DuckDB oracle can reproduce it exactly."""
-    checksum = hashlib.md5(payload).hexdigest()
-    h = _h60(checksum)
-    width = h % 1920 + 1
-    height = (h // 1920) % 1080 + 1
-    channels = h % 3 + 1
-    return len(payload), checksum, width, height, channels
 
 
 def extract_blob_meta(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
@@ -771,12 +755,13 @@ def chunk_audio(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
             rows = []
             for doc_id, payload in zip(pdf[id_col], pdf[blob_col]):
                 checksum = _hl.md5(bytes(payload)).hexdigest()
-                # Inline the shared 60-bit hash (== _h60) instead of
-                # calling the module-global: nested closures ship by
-                # value, but a referenced module-level function pickles
-                # by REFERENCE and would need the repo on executor
-                # PYTHONPATH — the self-containment rule the sibling
-                # image/frame closures already follow.
+                # Inline the shared 60-bit hash (SPARK_H60 in
+                # engine.functions.hashing) instead of importing it:
+                # nested closures ship by value, but a referenced
+                # module-level function pickles by REFERENCE and
+                # would need the repo on executor PYTHONPATH — the
+                # self-containment rule the sibling image/frame
+                # closures already follow.
                 h = int(_hl.md5(checksum.encode("utf-8")).hexdigest()[:15], 16)
                 sr = AUDIO_RATES[h % 3]
                 n_samples = h % AUDIO_MAX_EXTRA + AUDIO_MIN_SAMPLES

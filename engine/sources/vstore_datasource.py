@@ -10,7 +10,12 @@ SPARK-44076): the DRIVER-side planning resolves the manifest (schema
 from the recorded DDL, file list pruned catalog-side), emits ONE
 input partition per data file, and the EXECUTOR side reads each file
 with pyarrow and yields Arrow RecordBatches — the vectorized path, no
-per-row Python.
+per-row Python. Planning says each store rule through the helper
+``read_version`` uses — the version (``_resolve_version``), the
+snapshot DDL (``_snapshot_ddl``), the pruned entries
+(``_select_entries``) — and ``_read_file`` is the one Arrow file
+reader behind this source, the append stream and the change-feed diff
+(engine/sources/vstore_stream.py).
 
 Why this exists when ``read_version`` already does: a Spark-first
 engine should meet users where Spark's API is. The format string
@@ -44,10 +49,12 @@ relation the pruning is constant, which is exactly when sharing is
 sound.
 
 Schema evolution flows through: each file partition carries its Hive
-partition values; the reader appends them as constant Arrow columns
-and CASTS the batch to the table schema — missing columns null-fill
-(additive evolution) and narrow int32 files upcast to a bigint table
-column (type widening), identical to ``read_version``.
+partition values and the column map; ``_read_file`` appends the
+values as constant Arrow columns and CASTS each column to the table
+schema — missing columns null-fill (additive evolution), narrow int32
+files upcast to a bigint table column (type widening) and renamed
+columns read their frozen physical names, identical to
+``read_version``.
 
 Scale shape: planning is O(manifest) driver-side metadata — the same
 metadata the store already holds — and reading is one task per file
@@ -58,6 +65,7 @@ no pluggable source API (SURVEY.md §2.3); Layer-B capability.
 
 from __future__ import annotations
 
+import operator
 import os
 import uuid
 from typing import Iterator
@@ -69,49 +77,119 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from engine import versioned_store as vs
+
+_OPS = {"eq": operator.eq, "ge": operator.ge, "le": operator.le}
+
 
 class VStoreFilePartition(InputPartition):
+    """One data file for ``_read_file``: the path, its Hive partition
+    values, the column map ({logical: physical} — files always speak
+    physical names, engine/versioned_store.py round 10), its
+    deletion-vector positions (merge-on-read, round 11), the residual
+    row-level predicates — ``(op, column, value)`` with op in {eq, ge,
+    le}, snapshotted here so the executor side is self-contained — and,
+    for a stream's appended file, the version that added it."""
+
     def __init__(
         self,
-        path: str,
-        pvals: tuple,
+        store: str,
+        entry: dict,
         pcols: tuple,
+        cmap: dict,
         preds: tuple = (),
-        cmap: dict | None = None,
-        dv: tuple = (),
+        commit_version: int | None = None,
     ):
-        self.path = path
-        self.pvals = pvals
+        self.path = os.path.join(store, "data", entry["file"])
+        self.pvals = vs._norm_pval(entry["partition"])
         self.pcols = pcols
-        # residual row-level predicates from the pruning options,
-        # snapshotted into the partition so read() is self-contained:
-        # tuples of (op, column, value) with op in {eq, ge, le}
+        self.cmap = cmap
+        self.dv = tuple((entry.get("dv") or {}).get("pos", ()))
         self.preds = preds
-        # column-mapping rename state: {logical: physical} — files
-        # always speak physical (engine/versioned_store.py round 10)
-        self.cmap = cmap or {}
-        # deletion-vector positions (merge-on-read, round 11): sorted
-        # physical row indices read() must drop before anything else
-        self.dv = dv
+        self.commit_version = commit_version
 
 
-def _store_schema_ddl(man: dict) -> str:
-    """The snapshot's full DDL (data columns + string partition
-    columns). Returned as a STRING because the data source's planning
-    hooks run in a worker process with no SparkContext — Spark parses
-    it and hands the reader the resolved StructType."""
-    from engine.versioned_store import _norm_pcols
+def _read_file(p: VStoreFilePartition, target):
+    """The file's live rows as a table of the Arrow schema ``target``,
+    or None when a residual predicate proves that no row matches — the
+    one file reader behind the batch source, the append stream and the
+    change-feed diff.
 
-    ddl = man.get("columns")
-    if ddl is None:
-        raise ValueError(
-            "vstore source needs a manifest with a recorded schema"
-            " (store predates schema recording)"
-        )
-    pddl = ", ".join(
-        f"{c} string" for c in _norm_pcols(man["partition_col"])
-    )
-    return f"{ddl}, {pddl}" if ddl else pddl
+    Deletion-vector positions address PHYSICAL rows, so they drop
+    first: a DV'd file is read whole (row order == file order), masked,
+    then filtered; DV'd files are the point-delete tail, so losing the
+    row-group skipping below there is noise. Residual predicates follow
+    SQL semantics (a null comparison filters the row; pyarrow filter
+    expressions drop null comparisons the same way). A predicate on a
+    partition column compares the file's constant as a string (the
+    table schema types partition columns string, so the option parser
+    left the bound a string) — for all three ops, consistent with
+    ``read_version``'s residual on the restored string column. A
+    predicate on a column the file lacks (pre-evolution: all-null)
+    filters every row. Data-column residuals push into the parquet read
+    as pyarrow filters: exact row filtering PLUS row-group statistics
+    skipping inside each admitted file, one level finer than the
+    manifest's per-file stats.
+
+    Each target field is then the version constant (a stream's
+    ``_commit_version``), the partition constant, the physical column
+    CAST to the target type (widening evolution: an int32 file under a
+    bigint column; a safe cast, so an overflow raises instead of
+    truncating), or nulls (additive evolution)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    expr = None
+    if p.preds:
+        file_names = pq.read_schema(p.path).names
+        for op, col, value in p.preds:
+            if col in p.pcols:
+                if not _OPS[op](p.pvals[p.pcols.index(col)], str(value)):
+                    return None
+                continue
+            phys = p.cmap.get(col, col)
+            if phys not in file_names:
+                return None
+            cond = _OPS[op](pc.field(phys), value)
+            expr = cond if expr is None else expr & cond
+    if p.dv:
+        import numpy as np
+
+        table = pq.read_table(p.path)
+        mask = np.ones(table.num_rows, dtype=bool)
+        mask[list(p.dv)] = False
+        table = table.filter(pa.array(mask))
+        if expr is not None:
+            table = table.filter(expr)
+    else:
+        table = pq.read_table(p.path, filters=expr)
+    n = table.num_rows
+    cols = []
+    for field in target:
+        phys = p.cmap.get(field.name, field.name)
+        if p.commit_version is not None and field.name == "_commit_version":
+            cols.append(pa.array([p.commit_version] * n, type=field.type))
+        elif field.name in p.pcols:
+            cols.append(
+                pa.array(
+                    [p.pvals[p.pcols.index(field.name)]] * n, type=field.type
+                )
+            )
+        elif phys in table.column_names:
+            cols.append(table.column(phys).cast(field.type).combine_chunks())
+        else:
+            cols.append(pa.nulls(n, type=field.type))
+    return pa.table(cols, schema=target)
+
+
+def _file_batches(p: VStoreFilePartition, schema: StructType) -> Iterator:
+    """``_read_file`` as Arrow record batches of the Spark ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = _read_file(p, to_arrow_schema(schema))
+    if table is not None:
+        yield from table.to_batches(max_chunksize=1 << 16)
 
 
 def _parse_bound(raw: str, numeric: bool):
@@ -124,32 +202,19 @@ def _parse_bound(raw: str, numeric: bool):
 
 class VStoreReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType):
-        from engine.versioned_store import (
-            _bloom_prune,
-            _norm_pcols,
-            _norm_pval,
-            _prune_entries,
-            _read_bloom_sidecar,
-            _read_manifest,
-            current_version,
-        )
-
         self.store = options.get("path")
         if not self.store:
             raise ValueError("vstore source requires .load(<store path>)")
-        v = options.get("version")
-        ts = options.get("timestamp_as_of")
-        if v is not None:
-            self.version = int(v)
-        elif ts is not None:
-            # reachable only under a caller-supplied .schema(...)
-            # (otherwise DataSource.schema() resolved and pinned it)
-            from engine.versioned_store import version_at_timestamp
-
-            self.version = version_at_timestamp(self.store, float(ts))
-        else:
-            self.version = current_version(self.store)
-        self.man = _read_manifest(self.store, self.version)
+        # reached with an unresolved version only under a
+        # caller-supplied .schema(...) (otherwise DataSource.schema()
+        # resolved and pinned it)
+        self.version = vs._resolve_version(
+            self.store,
+            options.get("version"),
+            options.get("timestamp_as_of"),
+            ("version", "timestamp_as_of"),
+        )
+        man = vs._read_manifest(self.store, self.version)
         self.schema_ = schema
         numeric = {
             f.name
@@ -158,21 +223,16 @@ class VStoreReader(DataSourceReader):
             in ("byte", "short", "integer", "long", "float", "double")
         }
 
-        pcols = _norm_pcols(self.man["partition_col"])
-        entries = self.man["files"]
+        pcols = vs._norm_pcols(man["partition_col"])
+        wanted = None
         preds: list[tuple] = []
         if options.get("partitions"):
-            wanted = {
-                (p,) for p in options["partitions"].split(",")
-            }
             if len(pcols) != 1:
                 raise ValueError(
                     "the partitions option addresses single-column"
                     " stores; composite stores need range/point options"
                 )
-            entries = [
-                e for e in entries if _norm_pval(e["partition"]) in wanted
-            ]
+            wanted = {(p,) for p in options["partitions"].split(",")}
         ranges: dict[str, tuple] = {}
         for spec in filter(None, (options.get("range") or "").split(";")):
             col, lo, hi = spec.split(":")
@@ -189,136 +249,23 @@ class VStoreReader(DataSourceReader):
             col, raw = spec.split(":", 1)
             points[col] = _parse_bound(raw, col in numeric)
             preds.append(("eq", col, points[col]))
-        # manifest stats and bloom sidecars are keyed by the files'
-        # PHYSICAL column names — translate option keys through the
-        # column map before pruning (residual preds stay logical;
-        # read() re-translates per file)
-        cmap = self.man.get("column_map") or {}
-        if ranges:
-            entries = _prune_entries(
-                entries, {cmap.get(c, c): b for c, b in ranges.items()}
-            )
-        if points:
-            sidecar = _read_bloom_sidecar(self.store, self.version)
-            if sidecar is not None:
-                entries = _bloom_prune(
-                    entries,
-                    sidecar,
-                    {cmap.get(c, c): v for c, v in points.items()},
-                )
-        self._entries = entries
+        self._entries = vs._select_entries(
+            self.store, self.version, man, wanted, ranges, points
+        )
         self._pcols = tuple(pcols)
         self._preds = tuple(preds)
-        self._cmap = cmap
+        self._cmap = man.get("column_map") or {}
 
     def partitions(self):
-        from engine.versioned_store import _norm_pval
-
         return [
             VStoreFilePartition(
-                os.path.join(self.store, "data", e["file"]),
-                _norm_pval(e["partition"]),
-                self._pcols,
-                self._preds,
-                self._cmap,
-                tuple((e.get("dv") or {}).get("pos", ())),
+                self.store, e, self._pcols, self._cmap, self._preds
             )
             for e in self._entries
         ]
 
     def read(self, partition: VStoreFilePartition) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(self.schema_)
-        # residual row filter for the pruning options (SQL semantics:
-        # a null comparison filters the row — pyarrow filter
-        # expressions drop null comparisons the same way). Partition
-        # columns are constants here; columns missing from a
-        # pre-evolution file are all-null, so any predicate on them
-        # filters every row. Data-column residuals are pushed into the
-        # parquet read as pyarrow filters — exact row filtering PLUS
-        # row-group-level statistics skipping inside each admitted
-        # file, one level finer than the manifest's per-file stats.
-        row_filters = []
-        if partition.preds:
-            import pyarrow.compute as pc
-
-            ops = {
-                "eq": lambda f, v: f == v,
-                "ge": lambda f, v: f >= v,
-                "le": lambda f, v: f <= v,
-            }
-            file_schema = pq.read_schema(partition.path)
-            for op, col, value in partition.preds:
-                if col in partition.pcols:
-                    # partition columns are constants per file, typed
-                    # string in the table schema (so _parse_bound left
-                    # the bound a string): evaluate ALL three ops by
-                    # string compare, consistent with read_version's
-                    # residual F.col(col) >= lo on the restored string
-                    # column. (Pre-fix this admitted only eq, so a
-                    # range option naming a partition column silently
-                    # returned zero rows — ADVICE r8.)
-                    i = partition.pcols.index(col)
-                    pv, sv = partition.pvals[i], str(value)
-                    ok = (
-                        pv == sv
-                        if op == "eq"
-                        else pv >= sv if op == "ge" else pv <= sv
-                    )
-                    if not ok:
-                        return
-                    continue
-                phys = partition.cmap.get(col, col)
-                if phys not in file_schema.names:
-                    # pre-evolution file: the column is all-null, so
-                    # any predicate on it filters every row
-                    return
-                row_filters.append(ops[op](pc.field(phys), value))
-        expr = None
-        for f in row_filters:
-            expr = f if expr is None else expr & f
-        dv = getattr(partition, "dv", ())
-        if dv:
-            # deletion vector: positions address PHYSICAL rows, so
-            # the mask must apply before any row filter — read raw
-            # (row order == file order), drop DV'd positions, then
-            # filter. DV'd files are the point-delete tail, so losing
-            # read_table's row-group predicate skipping here is noise.
-            import numpy as np
-
-            table = pq.read_table(partition.path)
-            mask = np.ones(table.num_rows, dtype=bool)
-            mask[list(dv)] = False
-            table = table.filter(pa.array(mask))
-            if expr is not None:
-                table = table.filter(expr)
-        else:
-            table = pq.read_table(partition.path, filters=expr)
-        n = table.num_rows
-        cols = []
-        for field in target:
-            phys = partition.cmap.get(field.name, field.name)
-            if field.name in partition.pcols:
-                i = partition.pcols.index(field.name)
-                cols.append(
-                    pa.array([partition.pvals[i]] * n, type=field.type)
-                )
-            elif phys in table.column_names:
-                # CAST to the table schema: widening evolution (int32
-                # file -> bigint column) and exact types for the rest
-                cols.append(
-                    table.column(phys).cast(field.type).combine_chunks()
-                )
-            else:
-                # additive evolution: pre-evolution file null-fills
-                cols.append(pa.nulls(n, type=field.type))
-        yield from pa.table(
-            cols, schema=target
-        ).to_batches(max_chunksize=1 << 16)
+        return _file_batches(partition, self.schema_)
 
 
 # -- write path ----------------------------------------------------------------
@@ -347,9 +294,11 @@ class VStoreReader(DataSourceReader):
 # no session either (round-9 verdict #5): each TASK folds the values
 # it stages into per-file bloom words (`_update_blooms` — the Arrow
 # data is already in hand) and ships them in its commit message;
-# commit merges them with the carried files' blooms via
-# `_copy_carried_blooms`, so a sink-only store prunes point probes
-# from its first version.
+# commit writes them, with the carried files' blooms, through the
+# engine's one sidecar writer (`_sidecar_plan` + `_write_blooms`), so
+# a sink-only store prunes point probes from its first version. A
+# task's manifest entries are ordered by partition value, then by
+# creation order, so one input always records one manifest.
 #
 # Schema evolution matches the engine path: the staged DDL reconciles
 # with the head's via `_merge_ddl` (additive + widening; incompatible
@@ -380,24 +329,18 @@ class _VStoreWriteCommon:
     picklable and session-free."""
 
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
-        from engine.versioned_store import (
-            _norm_pcols,
-            _read_manifest_raw,
-            current_version,
-        )
-
         self.store = options.get("path")
         if not self.store:
             raise ValueError("vstore sink requires .save(<store path>)")
         self.overwrite = overwrite
         self.max_retries = int(options.get("max_retries", "20"))
-        head_v = current_version(self.store)
+        head_v = vs.current_version(self.store)
         opt_p = options.get("partition_col")
         # column-mapping rename state: appends must stage under the
         # store's frozen PHYSICAL names; an overwrite resets the map
         # (full rewrite materializes logical names physically)
         head_man = (
-            _read_manifest_raw(self.store, head_v) if head_v > 0 else {}
+            vs._read_manifest_raw(self.store, head_v) if head_v > 0 else {}
         )
         self.column_map = (
             {} if overwrite else dict(head_man.get("column_map") or {})
@@ -405,17 +348,11 @@ class _VStoreWriteCommon:
         self.dropped = (
             [] if overwrite else list(head_man.get("dropped_physical") or ())
         )
-        if self.column_map or self.dropped:
-            occupied = set(self.column_map.values()) | set(self.dropped)
-            for f in schema.fields:
-                if f.name not in self.column_map and f.name in occupied:
-                    raise ValueError(
-                        f"column name {f.name!r} is the physical name"
-                        " of a renamed or dropped column; pick a"
-                        " different name"
-                    )
+        vs._check_retired_names(
+            [f.name for f in schema.fields], self.column_map, self.dropped
+        )
         if head_v > 0:
-            store_p = _norm_pcols(head_man["partition_col"])
+            store_p = vs._norm_pcols(head_man["partition_col"])
             if opt_p is None:
                 pcols = store_p
             else:
@@ -444,11 +381,7 @@ class _VStoreWriteCommon:
         # provenance prefix for staged file names (opaque — only the
         # claimed manifest binds files to a version)
         self.stage_version = head_v + 1
-        self.columns_ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in schema.fields
-            if f.name not in self.pcols
-        )
+        self.columns_ddl = vs._columns_ddl(schema, self.pcols)
         # cap on simultaneously-open parquet writers per task (ADVICE
         # r9): a DataFrame not pre-repartitioned by the partition
         # column(s) can route hundreds of distinct partition values
@@ -470,8 +403,7 @@ class _VStoreWriteCommon:
         names = {f.name for f in schema.fields} - set(self.pcols)
         names_phys = {self.column_map.get(n, n) for n in names}
         if str(options.get("bloom", "")).lower() == "false":
-            self.bloom_cols: list[str] = []
-            self.bloom_bits = 0
+            self.bloom_cols, self.bloom_bits = [], 0
         elif options.get("bloom_cols"):
             self.bloom_cols = [
                 self.column_map.get(c.strip(), c.strip())
@@ -479,28 +411,13 @@ class _VStoreWriteCommon:
                 if c.strip() and c.strip() in names
             ]
             self.bloom_bits = int(options.get("bloom_bits", "8192"))
-            if self.bloom_bits <= 0 or self.bloom_bits % 64:
-                # words are 64-bit packed; a non-aligned size would
-                # index past the word list executor-side (review r10)
-                raise ValueError(
-                    "bloom_bits must be a positive multiple of 64"
-                    f" (got {self.bloom_bits})"
-                )
+            vs._check_bloom_bits(self.bloom_bits)
         else:
-            from engine.versioned_store import (
-                _read_bloom_sidecar,
-                versions,
-            )
-
-            self.bloom_cols, self.bloom_bits = [], 0
-            for v in reversed(versions(self.store)):
-                prev = _read_bloom_sidecar(self.store, v)
-                if prev is not None:
-                    self.bloom_cols = [
-                        c for c in prev["cols"] if c in names_phys
-                    ]
-                    self.bloom_bits = prev["bits"]
-                    break
+            _, prev = vs._newest_bloom_config(self.store, head_v + 1)
+            self.bloom_cols = [
+                c for c in (prev or {}).get("cols", ()) if c in names_phys
+            ]
+            self.bloom_bits = (prev or {}).get("bits", 0)
 
     # -- executor side -----------------------------------------------------
     def _update_blooms(self, file_blooms: dict, part) -> None:
@@ -512,9 +429,6 @@ class _VStoreWriteCommon:
         proportional to distinct values per chunk, not rows."""
         import pyarrow.compute as pc
 
-        from engine.functions.hashing import h60_py
-        from engine.versioned_store import _BLOOM_K
-
         words_n = self.bloom_bits // 64
         for c in self.bloom_cols:
             if c not in part.column_names:
@@ -523,8 +437,7 @@ class _VStoreWriteCommon:
             for v in pc.unique(part.column(c)).to_pylist():
                 if v is None:
                     continue  # nulls set no bits (engine parity)
-                for i in range(_BLOOM_K):
-                    p = h60_py(f"bf{i}:{v}") % self.bloom_bits
+                for p in vs._bloom_positions_py(v, self.bloom_bits):
                     words[p // 64] |= 1 << (p % 64)
 
     def write(self, iterator: Iterator) -> VStoreWriteMessage:
@@ -554,21 +467,19 @@ class _VStoreWriteCommon:
         import pyarrow.parquet as pq
         from collections import OrderedDict
 
-        from engine.versioned_store import _footer_stats, _man_pval
-
         data_dir = os.path.join(self.store, "data")
         os.makedirs(data_dir, exist_ok=True)
-        # pval -> [name, path, writer, n_rows]; insertion/move order is
-        # the LRU order for the open-writer cap
+        # pval -> [name, path, writer, n_rows, creation counter];
+        # insertion/move order is the LRU order for the open-writer cap
         open_w: "OrderedDict[tuple, list]" = OrderedDict()
-        done: list[tuple] = []  # (name, path, pval, n_rows)
+        done: list[tuple] = []  # (pval, counter, name, path, n_rows)
         blooms: dict[str, dict] = {}  # file name -> col -> words
         n_created = 0
         pcols = list(self.pcols)
 
         def _finish(key: tuple, w: list) -> None:
             w[2].close()
-            done.append((w[0], w[1], key, w[3]))
+            done.append((key, w[4], w[0], w[1], w[3]))
 
         try:
             for batch in iterator:
@@ -634,14 +545,15 @@ class _VStoreWriteCommon:
                             f"{uuid.uuid4().hex[:8]}-{n_created:04d}"
                             ".parquet"
                         )
-                        n_created += 1
                         path = os.path.join(data_dir, name)
                         w = [
                             name,
                             path,
                             pq.ParquetWriter(path, body.schema),
                             0,
+                            n_created,
                         ]
+                        n_created += 1
                         open_w[key] = w
                     else:
                         open_w.move_to_end(key)
@@ -661,7 +573,7 @@ class _VStoreWriteCommon:
                 except Exception:
                     pass
             for path in [w[1] for w in open_w.values()] + [
-                d[1] for d in done
+                d[3] for d in done
             ]:
                 try:
                     os.remove(path)
@@ -670,14 +582,16 @@ class _VStoreWriteCommon:
             raise
         for key, w in list(open_w.items()):
             _finish(key, w)
+        # manifest order is a function of the task's input: partition
+        # value, then creation order (file names are opaque and random)
         entries = []
-        for name, path, key, n_rows in sorted(done):
+        for key, _, name, path, n_rows in sorted(done):
             entry = {
                 "file": name,
-                "partition": _man_pval(key),
+                "partition": vs._man_pval(key),
                 "n_rows": n_rows,
                 "bytes": os.path.getsize(path),
-                "stats": _footer_stats(path),
+                "stats": vs._footer_stats(path),
             }
             b = blooms.get(name)
             if b:
@@ -694,19 +608,6 @@ class _VStoreWriteCommon:
         lost claim — blind appends rebase against any head), overwrite
         replaces them. Schema reconciliation re-runs per retry against
         whatever head won."""
-        from engine.versioned_store import (
-            CommitConflict,
-            _advance_current,
-            _claim_incremental,
-            _claim_manifest,
-            _copy_carried_blooms,
-            _man_pcol,
-            _merge_ddl,
-            _norm_pcols,
-            _read_manifest,
-            current_version,
-        )
-
         # executor-built blooms travel on the entries; they belong in
         # the version's SIDECAR, never the manifest (plain reads must
         # not pay for them)
@@ -717,15 +618,15 @@ class _VStoreWriteCommon:
                 new_blooms[e["file"]] = b
         retries = 0
         while True:
-            head_v = current_version(self.store)
+            head_v = vs.current_version(self.store)
             if self.overwrite or head_v == 0:
                 carried: list[dict] = []
                 columns = self.columns_ddl
             else:
-                head = _read_manifest(self.store, head_v)
-                store_p = tuple(_norm_pcols(head["partition_col"]))
+                head = vs._read_manifest(self.store, head_v)
+                store_p = tuple(vs._norm_pcols(head["partition_col"]))
                 if store_p != self.pcols:
-                    raise CommitConflict(
+                    raise vs.CommitConflict(
                         f"store re-partitioned to {list(store_p)} while"
                         f" this append (on {list(self.pcols)}) was staged;"
                         " recompute against the new head"
@@ -739,16 +640,18 @@ class _VStoreWriteCommon:
                     # _merge_ddl would misread the evolution as
                     # drop+add (resurrecting a dropped column) — fail
                     # loudly instead
-                    raise CommitConflict(
+                    raise vs.CommitConflict(
                         "store columns were renamed or dropped while"
                         " this write was staged; re-run the write"
                         " against the new head"
                     )
                 carried = head["files"]
-                columns = _merge_ddl(head.get("columns"), self.columns_ddl)
+                columns = vs._merge_ddl(
+                    head.get("columns"), self.columns_ddl
+                )
             manifest = {
                 "version": head_v + 1,
-                "partition_col": _man_pcol(list(self.pcols)),
+                "partition_col": vs._man_pcol(list(self.pcols)),
                 "columns": columns,
                 **extra,
             }
@@ -759,14 +662,14 @@ class _VStoreWriteCommon:
             try:
                 if self.overwrite or head_v == 0:
                     manifest["files"] = entries  # snapshot form
-                    _claim_manifest(self.store, manifest)
+                    vs._claim_manifest(self.store, manifest)
                 else:
                     # append: a pure-adds delta — commit I/O is
                     # O(this batch), never O(table) (round-10
                     # manifest checkpointing; the cadence checkpoint
                     # is plain pyarrow, fine in this sessionless
                     # commit worker)
-                    _claim_incremental(
+                    vs._claim_incremental(
                         self.store,
                         manifest,
                         head_v,
@@ -774,20 +677,26 @@ class _VStoreWriteCommon:
                         [],
                         carried + entries,
                     )
-            except CommitConflict:
+            except vs.CommitConflict:
                 if retries >= self.max_retries:
                     raise
                 retries += 1
                 continue
-            _copy_carried_blooms(
+            plan = vs._sidecar_plan(
                 self.store,
                 manifest["version"],
-                [e["file"] for e in carried],
-                new_blooms,
                 self.bloom_cols or None,
                 self.bloom_bits or None,
             )
-            _advance_current(self.store, manifest["version"])
+            if plan is not None:
+                vs._write_blooms(
+                    self.store,
+                    manifest["version"],
+                    plan,
+                    [e["file"] for e in carried],
+                    new_blooms,
+                )
+            vs._advance_current(self.store, manifest["version"])
             return manifest["version"]
 
     def _discard_staged(self, messages) -> None:
@@ -848,10 +757,8 @@ class VStoreStreamWriter(_VStoreWriteCommon, DataSourceStreamArrowWriter):
         compared exactly, so a writer_id containing ':' (writer 'a'
         scanning writer 'a:b's tag 'a:b:7') can neither crash the
         int() parse nor match another writer's tag (ADVICE r9)."""
-        from engine.versioned_store import _read_manifest_raw, versions
-
-        for v in reversed(versions(self.store)):
-            tag = _read_manifest_raw(self.store, v).get(
+        for v in reversed(vs.versions(self.store)):
+            tag = vs._read_manifest_raw(self.store, v).get(
                 "streaming_batch"
             )
             if not tag:
@@ -895,12 +802,6 @@ class VStoreDataSource(DataSource):
         return "vstore"
 
     def schema(self) -> str:
-        from engine.versioned_store import (
-            _norm_pcols,
-            _read_manifest,
-            current_version,
-        )
-
         store = self.options.get("path")
         if not store:
             raise ValueError("vstore source requires .load(<store path>)")
@@ -910,23 +811,12 @@ class VStoreDataSource(DataSource):
             # nets changes so per-commit attribution is undefined)
             from engine.sources.vstore_stream import _cdf_ddl
 
-            tv = self.options.get("to_version")
-            tts = self.options.get("to_timestamp")
-            if tv is not None and tts is not None:
-                # the reader's own guard is unreachable through this
-                # path (the resolver pops to_timestamp below), so the
-                # conflict must raise HERE, like from_*'s does
-                raise ValueError(
-                    "pass to_version or to_timestamp, not both"
-                )
-            if tv is not None:
-                v = int(tv)
-            elif tts is not None:
-                from engine.versioned_store import version_at_timestamp
-
-                v = version_at_timestamp(store, float(tts))
-            else:
-                v = current_version(store)
+            v = vs._resolve_version(
+                store,
+                self.options.get("to_version"),
+                self.options.get("to_timestamp"),
+                ("to_version", "to_timestamp"),
+            )
             # a batch window is addressed by version OR timestamp
             streaming = (
                 "from_version" not in self.options
@@ -939,9 +829,8 @@ class VStoreDataSource(DataSource):
                 # newer changes through an older resolved schema
                 self.options["to_version"] = str(v)
                 self.options.pop("to_timestamp", None)
-            man = _read_manifest(store, v)
-            cols = man.get("columns")
-            if cols is None:
+            man = vs._read_manifest(store, v)
+            if man.get("columns") is None:
                 # "" is a legitimate key-only table; None means the
                 # manifest predates schema recording — refuse like the
                 # snapshot path (a partition-cols-only CDF schema would
@@ -951,32 +840,33 @@ class VStoreDataSource(DataSource):
                     " recorded schema (store predates schema recording)"
                 )
             return _cdf_ddl(
-                cols,
-                _norm_pcols(man["partition_col"]),
-                streaming=streaming,
+                man["columns"], man["partition_col"], streaming=streaming
             )
-        v = self.options.get("version")
-        ts = self.options.get("timestamp_as_of")
-        if ts is not None:
-            if v is not None:
-                raise ValueError(
-                    "pass version or timestamp_as_of, not both"
-                )
-            from engine.versioned_store import version_at_timestamp
-
-            version = version_at_timestamp(store, float(ts))
-        else:
-            version = int(v) if v is not None else current_version(store)
+        version = vs._resolve_version(
+            store,
+            self.options.get("version"),
+            self.options.get("timestamp_as_of"),
+            ("version", "timestamp_as_of"),
+        )
         # PIN the resolved version into the options the reader sees:
         # schema() and the reader otherwise resolve current_version()
         # independently, so a commit landing between the two calls
         # would scan version N+1's manifest under version N's resolved
         # schema (new columns silently dropped — ADVICE r8). One read,
         # one snapshot. (A caller-supplied .schema(...) skips this
-        # hook; the reader then resolves the head itself, which is the
-        # only version available to pin.)
+        # hook; the reader then resolves the version itself.)
         self.options["version"] = str(version)
-        return _store_schema_ddl(_read_manifest(store, version))
+        self.options.pop("timestamp_as_of", None)
+        man = vs._read_manifest(store, version)
+        if man.get("columns") is None:
+            raise ValueError(
+                "vstore source needs a manifest with a recorded schema"
+                " (store predates schema recording)"
+            )
+        # a STRING: the planning hooks run in a worker process with no
+        # SparkContext — Spark parses it and hands the reader the
+        # resolved StructType
+        return vs._snapshot_ddl(man["columns"], man["partition_col"])
 
     def reader(self, schema: StructType) -> DataSourceReader:
         if str(self.options.get("read_changes", "")).lower() == "true":

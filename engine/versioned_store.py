@@ -82,6 +82,15 @@ commit — 507×; the parquet checkpoint is 5× smaller than the JSON
 form it replaces). Sidecars stay OUT of the manifest so plain reads
 never pay for them; they load only when a point lookup asks.
 
+The vstore Spark data source (engine/sources/vstore_datasource.py,
+vstore_stream.py) reads and writes through this module's rules rather
+than copies of them: ``_resolve_version`` (version or timestamp, else
+the head), ``_select_entries`` (partition, range-stats and bloom
+pruning), ``_snapshot_ddl``, ``_columns_ddl``,
+``_check_retired_names`` and the sidecar writer (``_sidecar_plan`` +
+``_write_blooms``; ``_maybe_write_blooms`` builds the blooms with
+Spark first, the sink's executors build their own).
+
 Reference parity note: the reference engine has no storage versioning
 (SURVEY.md §2.3); Layer-B capability per §6's production-pipeline
 mandate.
@@ -430,6 +439,23 @@ def version_at_timestamp(store: str, ts: float) -> int:
     raise ValueError(f"no retained version committed at or before {ts}")
 
 
+def _resolve_version(
+    store: str, version, timestamp, names: tuple[str, str], head: bool = True
+) -> int | None:
+    """The version a read addresses: ``version``, else the version
+    current at ``timestamp`` (``version_at_timestamp``), else the head
+    — or None when ``head`` is false and neither is set. ``names`` are
+    the caller's names for the two arguments, for the error raised
+    when both are set. Strings are accepted (data source options)."""
+    if timestamp is not None:
+        if version is not None:
+            raise ValueError(f"pass {names[0]} or {names[1]}, not both")
+        return version_at_timestamp(store, float(timestamp))
+    if version is not None:
+        return int(version)
+    return current_version(store) if head else None
+
+
 class CommitConflict(RuntimeError):
     """Another writer committed this version number first — the losing
     commit must re-read CURRENT and retry on top of the winner."""
@@ -715,19 +741,29 @@ def _apply_column_map(
     if not column_map and not dropped:
         return df
     column_map = column_map or {}
+    _check_retired_names(df.columns, column_map, dropped)
+    return df.select(
+        *(
+            F.col(c).alias(column_map[c]) if c in column_map else F.col(c)
+            for c in df.columns
+        )
+    )
+
+
+def _check_retired_names(
+    names: list[str], column_map: dict, dropped: list | None
+) -> None:
+    """Reject an unmapped column named like a retired physical name (a
+    renamed column's original, or a dropped column's tombstone)."""
     occupied = set(column_map.values()) | set(dropped or ())
-    cols = []
-    for c in df.columns:
-        p = column_map.get(c, c)
-        if p == c and c in occupied:
+    for c in names:
+        if c not in column_map and c in occupied:
             raise ValueError(
                 f"column name {c!r} is the physical name of a renamed"
                 " or dropped column; pick a different name (or"
                 " compact/overwrite to materialize the evolution"
                 " first)"
             )
-        cols.append(F.col(c).alias(p) if p != c else F.col(c))
-    return df.select(*cols)
 
 
 def _stage_files(
@@ -941,7 +977,7 @@ def _merge_ddl(prev_ddl: str | None, new_ddl: str) -> str:
     return ", ".join(f"{n} {t}" for n, t in out)
 
 
-def _columns_ddl(df: DataFrame, partition_col) -> str:
+def _columns_ddl(schema, partition_col) -> str:
     """DDL for the DATA-FILE schema (partition columns excluded — they
     live in the manifest entries), stored in every manifest so an
     empty snapshot (legitimately produced by a delete-everything
@@ -949,9 +985,16 @@ def _columns_ddl(df: DataFrame, partition_col) -> str:
     pcols = set(_norm_pcols(partition_col))
     return ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
+        for f in schema.fields
         if f.name not in pcols
     )
+
+
+def _snapshot_ddl(columns: str, partition_col) -> str:
+    """A snapshot's full DDL: the recorded data columns, then the
+    partition columns, which every reader restores as strings."""
+    pddl = ", ".join(f"{c} string" for c in _norm_pcols(partition_col))
+    return f"{columns}, {pddl}" if columns else pddl
 
 
 def _read_prev_manifest(store: str, prev_v: int, op: str) -> dict:
@@ -994,7 +1037,7 @@ def commit_overwrite(
         {
             "version": version,
             "partition_col": _man_pcol(pcols),
-            "columns": _columns_ddl(df, pcols),
+            "columns": _columns_ddl(df.schema, pcols),
             "files": entries,
             **exp_stats,
         },
@@ -1494,7 +1537,9 @@ def commit_upsert(
         merged = survivors.unionByName(changeset, allowMissingColumns=True)
     # reconcile the recorded schema BEFORE staging: an incompatible
     # type change raises here with zero orphan files written
-    columns = _merge_ddl(prev.get("columns"), _columns_ddl(merged, pcols))
+    columns = _merge_ddl(
+        prev.get("columns"), _columns_ddl(merged.schema, pcols)
+    )
     new_entries = _stage_files(
         merged.hint("rebalance", *pcols), store, version, pcols,
         prev.get("column_map"), prev.get("dropped_physical"),
@@ -1651,7 +1696,7 @@ def commit_merge(
                 winners, allowMissingColumns=True
             )
         columns = _merge_ddl(
-            prev.get("columns"), _columns_ddl(merged, pcols)
+            prev.get("columns"), _columns_ddl(merged.schema, pcols)
         )
         version = prev_v + 1
         new_entries = _stage_files(
@@ -2093,6 +2138,51 @@ def _build_blooms(
     return out
 
 
+def _newest_bloom_config(
+    store: str, below: int
+) -> tuple[int | None, dict | None]:
+    """``(version, {bits, k, cols})`` of the newest sidecar below
+    ``below`` — config only, never the file map. Not just below-1: a
+    version can legitimately lack a sidecar (a writer crashed between
+    claim and sidecar write, or a rebase landed before the racing
+    winner's sidecar did); inheriting only from the immediate
+    predecessor would silently sever the chain forever on a bloomed
+    store."""
+    for v in reversed(versions(store)):
+        if v < below:
+            config = _bloom_config(store, v)
+            if config is not None:
+                return v, config
+    return None, None
+
+
+def _check_bloom_bits(bits: int) -> None:
+    # bit positions are packed into 64-bit words: a non-aligned size
+    # would index past the word list on data-dependent hash values
+    # (review r10)
+    if bits <= 0 or bits % 64:
+        raise ValueError(
+            f"bloom_bits must be a positive multiple of 64 (got {bits})"
+        )
+
+
+def _sidecar_plan(
+    store: str, version: int, cols: list[str] | None, bits: int | None
+) -> tuple | None:
+    """``(cols, bits, prev)`` for the sidecar of ``version``, where
+    ``prev`` is ``_newest_bloom_config``'s pair; None when nothing is
+    bloomed. With no explicit ``cols`` the config is INHERITED from the
+    newest sidecar, so an upsert on a bloomed store keeps its sidecar
+    current without the caller re-asking."""
+    prev = _newest_bloom_config(store, version)
+    if cols is None and prev[1] is not None:
+        cols, bits = prev[1]["cols"], prev[1]["bits"]
+    if not cols:
+        return None
+    _check_bloom_bits(bits)
+    return cols, bits, prev
+
+
 def _maybe_write_blooms(
     spark: SparkSession,
     store: str,
@@ -2102,174 +2192,83 @@ def _maybe_write_blooms(
     bloom_cols: list[str] | None,
     bloom_bits: int,
 ) -> None:
-    """Build the version's bloom sidecar: new files get fresh blooms,
-    carried files copy theirs from the previous sidecar. With no
-    explicit ``bloom_cols`` the bloom config is INHERITED from the
-    NEWEST existing sidecar — not just version-1, because a version
-    can legitimately lack one (a writer crashed between claim and
-    sidecar write, or a rebase landed before the racing winner's
-    sidecar did); inheriting only from the immediate predecessor
-    would silently sever the chain forever on a bloomed store. Files
-    carried through such a sidecar-less version simply have no bloom
-    (point reads keep them — conservative) until a compaction
-    rebuilds everything.
-
-    Write shape (round 11, mirroring the manifest plane): with a
-    chainable predecessor (same bits/k), the sidecar is a DELTA —
-    this commit's NEW files' blooms plus a ``base`` pointer, O(new
-    files) I/O instead of re-serializing the whole table's blooms;
-    checkpoint-cadence versions instead materialize the resolved map,
-    restricted to the version's LIVE files, as a binary parquet
-    checkpoint (8 bytes/word vs 16 hex chars)."""
-    prev, pv = None, None
-    for v in reversed(versions(store)):
-        if v >= version:
-            continue
-        prev = _bloom_config(store, v)  # config only, never the map
-        if prev is not None:
-            pv = v
-            break
-    if bloom_cols is None and prev:
-        bloom_cols, bloom_bits = prev["cols"], prev["bits"]
-    if not bloom_cols:
+    """Build the new files' blooms with Spark (``_build_blooms``), then
+    write the version's sidecar (``_write_blooms``). Files carried
+    through a sidecar-less version simply have no bloom (point reads
+    keep them — conservative) until a compaction rebuilds everything."""
+    plan = _sidecar_plan(store, version, bloom_cols, bloom_bits)
+    if plan is None:
         return
-    if bloom_bits <= 0 or bloom_bits % 64:
-        # bit positions are packed into 64-bit words: a non-aligned
-        # size would index past the word list on data-dependent hash
-        # values (review r10)
-        raise ValueError(
-            f"bloom_bits must be a positive multiple of 64 (got"
-            f" {bloom_bits})"
-        )
-    new_blooms = _build_blooms(
-        spark, store, new_entries, bloom_cols, bloom_bits
+    cols, bits, _ = plan
+    _write_blooms(
+        store,
+        version,
+        plan,
+        [e["file"] for e in carried],
+        _build_blooms(spark, store, new_entries, cols, bits),
     )
-    chainable = (
-        prev is not None
-        and prev["bits"] == bloom_bits
-        and prev.get("k", _BLOOM_K) == _BLOOM_K
-    )
-    cols_out = (
-        sorted(set(prev["cols"]) | set(bloom_cols))
-        if chainable
-        else list(bloom_cols)
-    )
-    os.makedirs(_mdir(store), exist_ok=True)  # sidecar lands pre-manifest
-    if chainable and version % _CHECKPOINT_INTERVAL == 0:
-        resolved = _read_bloom_sidecar(store, pv)  # checkpoint only
-        live = dict(new_blooms)
-        for e in carried:
-            b = resolved["files"].get(e["file"])
-            if b and e["file"] not in live:
-                live[e["file"]] = b
-        _write_bloom_checkpoint(
-            store,
-            version,
-            {"bits": bloom_bits, "k": _BLOOM_K, "cols": cols_out,
-             "files": live},
-        )
-        return
-    payload: dict = {
-        "bits": bloom_bits,
-        "k": _BLOOM_K,
-        "cols": cols_out,
-        "files": new_blooms,
-    }
-    if chainable:
-        payload["base"] = pv
-    fd, tmp = tempfile.mkstemp(dir=_mdir(store))
-    with os.fdopen(fd, "w", encoding="utf-8") as f:
-        f.write(json.dumps(payload))
-    os.rename(tmp, _bloom_path(store, version))
 
 
-def _copy_carried_blooms(
+def _write_blooms(
     store: str,
     version: int,
+    plan: tuple,
     carried_files: list[str],
-    new_blooms: dict | None = None,
-    cols: list | None = None,
-    bits: int | None = None,
+    new_blooms: dict,
 ) -> None:
-    """Sidecar for a commit prepared WITHOUT a SparkSession (the
-    vstore data source's commit hook runs in Spark's sessionless
-    Python commit worker): carry the newest existing sidecar's blooms
-    for the files this version keeps and merge in ``new_blooms`` —
-    per-file blooms the sink's EXECUTORS built from the Arrow batches
-    they staged (round-9 verdict #5; before that, sink-written files
-    stayed unbloomed until the next engine-path commit, so a
-    sink-only store never pruned point probes). With no explicit
-    ``cols``/``bits`` the config is inherited from the newest
-    sidecar; carried blooms merge only when that sidecar used the
-    SAME config — carrying blooms built with different bit positions
-    would prune wrongly and silently drop rows."""
-    prev, pv = None, None
-    for v in reversed(versions(store)):
-        if v >= version:
-            continue
-        prev = _bloom_config(store, v)  # config only, never the map
-        if prev is not None:
-            pv = v
-            break
-    if cols is None and prev is not None:
-        cols, bits = prev["cols"], prev["bits"]
-    if not cols:
-        return
-    # blooms are PER COLUMN and their bit positions depend only on
-    # bits (and k): carried files' blooms stay valid whenever those
-    # match, even if this commit builds a different column SET (a
-    # subset-schema append must not discard the whole table's blooms
-    # nor narrow future inheritance — review r10). The recorded cols
-    # therefore UNION.
-    k_out = _BLOOM_K
-    out_cols = list(cols)
-    chainable = False
-    if prev and prev["bits"] == bits:
-        prev_k = prev.get("k", _BLOOM_K)
-        if not new_blooms:
-            k_out = prev_k  # pure carry keeps the previous k
-        if prev_k == k_out:
-            chainable = True
-            out_cols = sorted(set(prev["cols"]) | set(cols))
-    if chainable and version % _CHECKPOINT_INTERVAL == 0:
-        resolved = _read_bloom_sidecar(store, pv)  # checkpoint only
-        live = dict(new_blooms or {})
+    """Write the sidecar ``_sidecar_plan`` planned: ``new_blooms``
+    (file → {col: words}, built by Spark or by the vstore sink's
+    executors) plus the carried files' blooms from the newest sidecar.
+
+    Blooms are PER COLUMN and their bit positions depend only on bits
+    and k, so carried files' blooms stay valid whenever those match,
+    even if this commit builds a different column SET (a subset-schema
+    append must not discard the whole table's blooms nor narrow future
+    inheritance — review r10); the recorded cols therefore UNION. A
+    commit that builds no new bloom keeps the previous k and chains;
+    otherwise the sidecar is built with ``_BLOOM_K`` and chains only
+    to a sidecar of the same k — carrying blooms built with different
+    bit positions would prune wrongly and silently drop rows.
+
+    Write shape (round 11, mirroring the manifest plane): a chained
+    sidecar is a DELTA — the new files' blooms plus a ``base``
+    pointer, O(new files) I/O; checkpoint-cadence versions instead
+    materialize the resolved map, restricted to the version's LIVE
+    files, as a binary parquet checkpoint (8 bytes/word vs 16 hex
+    chars)."""
+    cols, bits, (pv, prev) = plan
+    k = _BLOOM_K
+    chained = False
+    if prev is not None and prev["bits"] == bits:
+        if not any(new_blooms.values()):
+            k = prev["k"]
+        if prev["k"] == k:
+            chained = True
+            cols = sorted(set(prev["cols"]) | set(cols))
+    sidecar = {"bits": bits, "k": k, "cols": list(cols),
+               "files": dict(new_blooms)}
+    if chained and version % _CHECKPOINT_INTERVAL == 0:
+        resolved = _read_bloom_sidecar(store, pv)["files"]
         for f in carried_files:
-            b = resolved["files"].get(f)
-            if b and f not in live:
-                live[f] = b
-        _write_bloom_checkpoint(
-            store,
-            version,
-            {"bits": bits, "k": k_out, "cols": out_cols, "files": live},
-        )
+            if f not in sidecar["files"] and resolved.get(f):
+                sidecar["files"][f] = resolved[f]
+        _write_bloom_checkpoint(store, version, sidecar)
         return
-    payload: dict = {
-        "bits": bits,
-        "k": k_out,
-        "cols": out_cols,
-        "files": dict(new_blooms or {}),
-    }
-    if chainable:
-        payload["base"] = pv  # delta: carried files resolve via base
-    fd, tmp = tempfile.mkstemp(dir=_mdir(store))
-    with os.fdopen(fd, "w", encoding="utf-8") as f:
-        f.write(json.dumps(payload))
-    os.rename(tmp, _bloom_path(store, version))
+    if chained:
+        sidecar["base"] = pv  # carried files resolve through the base
+    _write_bloom_json(store, version, sidecar)
 
 
-def _copy_bloom_sidecar(
-    store: str, version: int, bloom: dict | None
-) -> None:
-    """Verbatim sidecar copy for a version that SHARES its source
-    version's files (rollback, clone, rename): same files ⇒ same
-    blooms; one atomic JSON write (review r10: this was hand-rolled
-    at three call sites)."""
-    if bloom is None:
+def _write_bloom_json(store: str, version: int, sidecar: dict | None) -> None:
+    """Write ``version``'s JSON sidecar atomically (temp file, then
+    rename); a None sidecar writes nothing. Versions that SHARE their
+    source version's files (rollback, clone, rename, drop) pass that
+    version's resolved sidecar: same files ⇒ same blooms."""
+    if sidecar is None:
         return
     fd, tmp = tempfile.mkstemp(dir=_mdir(store))
     with os.fdopen(fd, "w", encoding="utf-8") as f:
-        f.write(json.dumps(bloom))
+        f.write(json.dumps(sidecar))
     os.rename(tmp, _bloom_path(store, version))
 
 
@@ -2303,6 +2302,41 @@ def _bloom_prune(
         if admit:
             kept.append(e)
     return kept
+
+
+def _select_entries(
+    store: str,
+    version: int,
+    man: dict,
+    partitions: set[tuple] | None = None,
+    range_filters: dict | None = None,
+    point_filters: dict | None = None,
+) -> list[dict]:
+    """The entries of ``version``'s manifest ``man`` that may hold rows
+    matching the filters: those whose partition value (a normalized
+    tuple) is in ``partitions``, then range-stats pruning
+    (``_prune_entries``), then bloom pruning through the version's
+    sidecar (``_bloom_prune``). Filter keys are logical names; stats and
+    bloom sidecars are keyed by the files' PHYSICAL names, so the keys
+    translate through the column map first. Residual row filters stay
+    the caller's."""
+    entries = man["files"]
+    if partitions is not None:
+        entries = [
+            e for e in entries if _norm_pval(e["partition"]) in partitions
+        ]
+    cmap = man.get("column_map") or {}
+    if range_filters:
+        entries = _prune_entries(
+            entries, {cmap.get(c, c): b for c, b in range_filters.items()}
+        )
+    if point_filters:
+        entries = _bloom_prune(
+            entries,
+            _read_bloom_sidecar(store, version),
+            {cmap.get(c, c): v for c, v in point_filters.items()},
+        )
+    return entries
 
 
 def read_version(
@@ -2340,43 +2374,24 @@ def read_version(
     high-cardinality unclustered keys. Exact equality is applied
     in-plan after pruning, so false positives cost only extra files
     read, never wrong rows."""
-    if as_of_timestamp is not None:
-        if version is not None:
-            raise ValueError(
-                "pass version or as_of_timestamp, not both"
-            )
-        version = version_at_timestamp(store, as_of_timestamp)
-    version = version if version is not None else current_version(store)
+    version = _resolve_version(
+        store, version, as_of_timestamp, ("version", "as_of_timestamp")
+    )
     man = _read_manifest(store, version)
     pcol = man["partition_col"]
-    pcols = _norm_pcols(pcol)
-    entries = man["files"]
+    wanted = None
     if partition_values is not None:
         # single-column: values; composite: value tuples/lists
         wanted = {
             (str(pv),) if isinstance(pv, str) else tuple(map(str, pv))
             for pv in partition_values
         }
-        entries = [
-            e for e in entries if _norm_pval(e["partition"]) in wanted
-        ]
-    # stats and bloom sidecars are keyed by the files' PHYSICAL
-    # column names; translate filter keys through the column map
-    # before pruning (the residual row filters below stay logical)
-    cmap = man.get("column_map") or {}
-    if range_filters:
-        entries = _prune_entries(
-            entries,
-            {cmap.get(c, c): b for c, b in range_filters.items()},
-        )
-    if point_filters:
-        entries = _bloom_prune(
-            entries,
-            _read_bloom_sidecar(store, version),
-            {cmap.get(c, c): v for c, v in point_filters.items()},
-        )
+    entries = _select_entries(
+        store, version, man, wanted, range_filters, point_filters
+    )
     out = _load_entries(
-        spark, store, entries, pcol, man.get("columns"), cmap
+        spark, store, entries, pcol, man.get("columns"),
+        man.get("column_map"),
     )
     if out is not None and range_filters:
         for col, (lo, hi) in range_filters.items():
@@ -2395,9 +2410,7 @@ def read_version(
         # an unknown/vacuumed version with a clear error.
         ddl = man.get("columns")
         if ddl is not None:
-            pddl = ", ".join(f"{c} string" for c in pcols)
-            full = f"{ddl}, {pddl}" if ddl else pddl
-            return _local_frame(spark, [], full)
+            return _local_frame(spark, [], _snapshot_ddl(ddl, pcol))
         raise ValueError(
             f"version {version} is an empty snapshot with no recorded"
             " schema (manifest predates schema recording)"
@@ -2556,7 +2569,7 @@ def clone_store(
     if man.get("dropped_physical"):
         manifest["dropped_physical"] = man["dropped_physical"]
     _claim_manifest(dst, manifest)
-    _copy_bloom_sidecar(dst, 1, _read_bloom_sidecar(src, version))
+    _write_bloom_json(dst, 1, _read_bloom_sidecar(src, version))
     _advance_current(dst, 1)
     return 1
 
@@ -2620,12 +2633,7 @@ def rollback(store: str, to_version: int) -> int:
         # sets are disjoint shapes — record the full snapshot
         manifest["files"] = man["files"]
         _claim_manifest(store, manifest)
-    bloom = _read_bloom_sidecar(store, to_version)
-    if bloom is not None:  # same files ⇒ same blooms: one JSON copy
-        fd, tmp = tempfile.mkstemp(dir=_mdir(store))
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(json.dumps(bloom))
-        os.rename(tmp, _bloom_path(store, version))
+    _write_bloom_json(store, version, _read_bloom_sidecar(store, to_version))
     _advance_current(store, version)
     return version
 
@@ -2707,12 +2715,10 @@ def rename_column(store: str, old: str, new: str) -> int:
     _claim_incremental(
         store, manifest, head_v, [], [], man["files"]
     )
-    bloom = _read_bloom_sidecar(store, head_v)
-    if bloom is not None:  # same files ⇒ same blooms (keys physical)
-        fd, tmp = tempfile.mkstemp(dir=_mdir(store))
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(json.dumps(bloom))
-        os.rename(tmp, _bloom_path(store, manifest["version"]))
+    # same files ⇒ same blooms (keys physical)
+    _write_bloom_json(
+        store, manifest["version"], _read_bloom_sidecar(store, head_v)
+    )
     _advance_current(store, manifest["version"])
     return manifest["version"]
 
@@ -2768,7 +2774,7 @@ def drop_column(store: str, col: str) -> int:
     # same files ⇒ same blooms; a bloom for the dead physical column
     # is unreachable (filters translate from the logical schema) and
     # harmless
-    _copy_bloom_sidecar(
+    _write_bloom_json(
         store, manifest["version"], _read_bloom_sidecar(store, head_v)
     )
     _advance_current(store, manifest["version"])
@@ -2921,14 +2927,12 @@ def table_changes(
     so the feed is "what changed between these two wall-clock
     moments". Mutually exclusive with the corresponding version
     argument."""
-    if va_timestamp is not None:
-        if va is not None:
-            raise ValueError("pass va or va_timestamp, not both")
-        va = version_at_timestamp(store, va_timestamp)
-    if vb_timestamp is not None:
-        if vb is not None:
-            raise ValueError("pass vb or vb_timestamp, not both")
-        vb = version_at_timestamp(store, vb_timestamp)
+    va = _resolve_version(
+        store, va, va_timestamp, ("va", "va_timestamp"), head=False
+    )
+    vb = _resolve_version(
+        store, vb, vb_timestamp, ("vb", "vb_timestamp"), head=False
+    )
     if va is None or vb is None:
         raise ValueError(
             "table_changes needs both endpoints (version or timestamp)"
@@ -3164,7 +3168,9 @@ def compact_partitions(
         prev,
         set(fragmented),
         new_entries,
-        _merge_ddl(prev.get("columns"), _columns_ddl(compacted, pcols)),
+        _merge_ddl(
+            prev.get("columns"), _columns_ddl(compacted.schema, pcols)
+        ),
         extra,
         max_retries,
     )
@@ -3308,7 +3314,9 @@ def optimize_auto(
         prev,
         tset,
         new_entries,
-        _merge_ddl(prev.get("columns"), _columns_ddl(compacted, pcols)),
+        _merge_ddl(
+            prev.get("columns"), _columns_ddl(compacted.schema, pcols)
+        ),
         extra,
         max_retries,
     )
@@ -3358,7 +3366,7 @@ def compact_version(
         prev.get("dropped_physical"),
     )
     manifest = {"version": version, "partition_col": _man_pcol(pcols),
-                "columns": _columns_ddl(compacted, pcols),
+                "columns": _columns_ddl(compacted.schema, pcols),
                 "files": entries, "compacted_from": prev_v}
     if prev.get("column_map"):
         manifest["column_map"] = prev["column_map"]
@@ -3521,7 +3529,7 @@ def commit_delete(
         survivors = base.join(
             F.broadcast(key_frame), key_cols, "left_anti"
         )
-        columns = _columns_ddl(survivors, pcols)
+        columns = _columns_ddl(survivors.schema, pcols)
         new_entries = _stage_files(
             survivors, store, version, pcols, prev.get("column_map"),
             prev.get("dropped_physical"),

@@ -159,6 +159,34 @@ def test_write_admission_respects_sidecar_k(spark, tmp_path, monkeypatch):
     assert 7 not in got and len(got) == 63
 
 
+def test_dv_commit_keeps_the_sidecar_k(spark, tmp_path, monkeypatch):
+    """A commit that builds no new bloom (a deletion-vector delete) on a
+    store whose newest sidecar has k != _BLOOM_K keeps that k and
+    chains to it, so the carried files' blooms survive — one rule for
+    the engine's commits and the sink's."""
+    store = str(tmp_path / "s")
+    monkeypatch.setattr(vs, "_BLOOM_K", 2)  # store written with k=2
+    _bloomed(spark, store)
+    monkeypatch.setattr(vs, "_BLOOM_K", 4)  # engine now defaults k=4
+    v2 = vs.commit_delete(
+        spark,
+        store,
+        spark.createDataFrame([("p", 7)], "part string, k long"),
+        ["part", "k"],
+        merge_on_read=True,
+    )
+    files = vs._read_manifest(store, v2)["files"]
+    assert any("dv" in e for e in files)
+    raw = json.load(open(vs._bloom_path(store, v2)))
+    assert raw["k"] == 2 and raw["base"] == 1 and raw["files"] == {}
+    resolved = vs._read_bloom_sidecar(store, v2)
+    assert {e["file"] for e in files} <= set(resolved["files"])
+    kept = vs._bloom_prune(files, resolved, {"k": 40})
+    assert 1 <= len(kept) < len(files)
+    got = vs.read_version(spark, store, v2, point_filters={"k": 8})
+    assert [r.v for r in got.collect()] == ["v:8"]
+
+
 def test_cdf_option_conflicts_raise(spark, tmp_path):
     """REGRESSION (review r11 #8): to_version+to_timestamp through
     the data source raises instead of silently preferring one."""

@@ -26,10 +26,6 @@ UNREACHED_ALLOWED = {
         "COVERAGE.md's logical z-order skipping proof; tests/test_layout.py "
         "checks it"
     ),
-    "layout_zorder3_skipping": (
-        "COVERAGE.md's three-dimension z-order proof; tests/test_layout.py "
-        "checks it"
-    ),
 }
 
 

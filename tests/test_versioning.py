@@ -2500,5 +2500,22 @@ def test_vstore_cli_clone_and_history_kinds(spark, tmp_path, capsys):
     assert cli(["vstore", "history", dst]) == 0
     out = capsys.readouterr().out
     assert "cloned_from=" in out and "at 2" in out  # ISO commit time
+    assert "bloomed" not in out
 
     assert cli(["vstore", "clone", src]) == 2  # --dest required
+
+    # "bloomed" marks exactly the versions that have a bloom sidecar
+    vs.commit_overwrite(
+        spark.createDataFrame([("a", 2)], "part string, k long"),
+        src,
+        "part",
+        bloom_cols=["k"],
+        bloom_bits=256,
+    )
+    capsys.readouterr()
+    assert cli(["vstore", "history", src]) == 0
+    lines = [
+        ln for ln in capsys.readouterr().out.splitlines()
+        if ln.startswith("v0")
+    ]
+    assert ["bloomed" in ln for ln in lines] == [False, True]

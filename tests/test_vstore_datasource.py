@@ -195,3 +195,23 @@ def test_schema_resolution_pins_the_reader_version(spark, vstore):
     assert reader.version == 2  # pinned, not the new head (3)
     files_v2 = {e["file"] for e in vs._read_manifest(vstore, 2)["files"]}
     assert {p.path.split("/")[-1] for p in reader.partitions()} == files_v2
+
+
+def test_caller_schema_keeps_the_both_set_check(spark, vstore):
+    """A caller-supplied .schema(...) skips DataSource.schema(), so the
+    reader itself must refuse version + timestamp_as_of instead of
+    silently reading the version."""
+    import time
+
+    from engine.sources.vstore_datasource import VStoreDataSource
+
+    ddl = VStoreDataSource(options={"path": vstore}).schema()
+    with pytest.raises(Exception, match="not both"):
+        (
+            spark.read.format("vstore")
+            .schema(ddl)
+            .option("version", 1)
+            .option("timestamp_as_of", time.time())
+            .load(vstore)
+            .collect()
+        )

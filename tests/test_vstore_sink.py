@@ -601,3 +601,30 @@ def test_bloom_bits_must_be_word_aligned(spark, tmp_path):
             df, str(tmp_path / "s2"), "part",
             bloom_cols=["k"], bloom_bits=100,
         )
+
+
+def test_sink_manifest_order_is_a_function_of_the_input(registered, tmp_path):
+    """One task's manifest entries are ordered by partition value, then
+    by creation order — never by the random part of the file names —
+    so one input written into fresh stores records one manifest."""
+    import engine.versioned_store as vs
+
+    spark = registered
+    df = spark.createDataFrame(
+        [(f"p{i % 5}", i, f"v{i}") for i in range(40)],
+        "part string, k long, v string",
+    ).coalesce(1)
+    seqs = []
+    for n in range(3):
+        store = str(tmp_path / f"s{n}")
+        df.write.format("vstore").option("partition_col", "part").mode(
+            "overwrite"
+        ).save(store)
+        seqs.append(
+            [
+                (e["partition"], e["n_rows"], e["stats"])
+                for e in vs._read_manifest(store, 1)["files"]
+            ]
+        )
+    assert seqs[0] == seqs[1] == seqs[2]
+    assert [p for p, _, _ in seqs[0]] == [f"p{i}" for i in range(5)]

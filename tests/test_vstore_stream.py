@@ -709,3 +709,182 @@ def test_admission_restart_does_not_regress_offset(spark, tmp_path):
     replay.partitions({"version": 4}, {"version": 2})  # pending replay
     assert replay._admitted == 4  # learned from START, not just end
     assert replay.latestOffset() == {"version": 6}  # min(head, 4+2)
+
+
+def test_one_file_reader_across_batch_cdf_and_stream(spark, tmp_path):
+    """One store through all three read surfaces, covering every branch
+    of the shared file reader: composite partitions, an int→bigint
+    widening append, an additive column, a rename and a deletion-vector
+    delete. The batch source equals read_version at every version;
+    batch CDF equals table_changes over each step (and, from v0, the
+    head as inserts); an append stream from v1 that skips the DV step
+    yields exactly the rows each append version added, under the
+    head's schema (the pre-rename files through the head's column
+    map). Steps, not one window: table_changes itself reads each side
+    under its own version's names, so a window across the rename is
+    not comparable."""
+    import engine.versioned_store as vs
+    from engine.sources.vstore_datasource import register_vstore
+
+    register_vstore(spark)
+    store = str(tmp_path / "x")
+    keys = ["part", "day", "k"]
+    v1 = [("a", "d1", 1, "x1"), ("a", "d1", 2, "x2"), ("a", "d1", 3, "x3"),
+          ("b", "d2", 4, "x4")]
+    vs.commit_overwrite(  # one file per partition: the delete keeps a DV
+        spark.createDataFrame(
+            v1, "part string, day string, k int, v string"
+        ).coalesce(1),
+        store,
+        ["part", "day"],
+    )
+    v2 = [("a", "d1", 2**40, "x5"), ("c", "d3", 6, "x6")]
+    spark.createDataFrame(
+        v2, "part string, day string, k long, v string"
+    ).write.format("vstore").mode("append").save(store)
+    v3 = [("b", "d2", 7, "x7", "w7")]
+    spark.createDataFrame(
+        v3, "part string, day string, k long, v string, w string"
+    ).write.format("vstore").mode("append").save(store)
+    vs.rename_column(store, "v", "val")
+    vs.commit_delete(
+        spark,
+        store,
+        spark.createDataFrame(
+            [("a", "d1", 2)], "part string, day string, k long"
+        ),
+        keys,
+        merge_on_read=True,
+    )
+    assert vs.current_version(store) == 5
+    assert any("dv" in e for e in vs._read_manifest(store, 5)["files"])
+
+    def rows(df, cols):
+        return sorted((tuple(r[c] for c in cols) for r in df.collect()),
+                      key=repr)
+
+    for v in range(1, 6):
+        want = vs.read_version(spark, store, v)
+        got = spark.read.format("vstore").option("version", v).load(store)
+        assert dict(got.dtypes) == dict(want.dtypes)
+        assert rows(got, want.columns) == rows(want, want.columns)
+
+    def feed(va, vb):
+        return (
+            spark.read.format("vstore")
+            .option("read_changes", "true")
+            .option("key_cols", ",".join(keys))
+            .option("from_version", va)
+            .option("to_version", vb)
+            .load(store)
+        )
+
+    head = vs.read_version(spark, store)
+    cols = head.columns + ["_change_type"]
+    assert rows(feed(0, 5), cols) == sorted(
+        (r + ("insert",) for r in rows(head, head.columns)), key=repr
+    )
+    for va in range(1, 5):
+        got = feed(va, va + 1)
+        want = vs.table_changes(spark, store, va, va + 1, keys)
+        assert sorted(got.columns) == sorted(want.columns)
+        assert rows(got, want.columns) == rows(want, want.columns)
+
+    got = _run_stream(
+        spark,
+        spark.readStream.format("vstore")
+        .option("starting_version", "1")
+        .option("skip_change_commits", "true")
+        .load(store),
+        "one_reader",
+        str(tmp_path / "ck"),
+    )
+    assert dict(got.dtypes) == dict(head.dtypes)
+    added = [r + (None,) for r in v1 + v2] + v3
+    assert rows(got, ["part", "day", "k", "val", "w"]) == sorted(
+        added, key=repr
+    )
+
+
+def test_streams_cross_an_overwrite_that_resets_the_column_map(
+    spark, tmp_path
+):
+    """A stream reads through the column map of the version its schema
+    was resolved at, but an overwrite RESETS the map: files it and later
+    commits write carry logical names physically. Rename v→val, start
+    an append and a CDF reader, then overwrite and append a row with a
+    NEW column named ``v``. The appended row keeps its ``val``, not the
+    new column's value, and the overwrite step's diff compares the old
+    and new files by logical name: no spurious update, in the stream
+    and in batch CDF."""
+    import pyarrow as pa
+
+    import engine.versioned_store as vs
+    from engine.sources.vstore_datasource import register_vstore
+    from engine.sources.vstore_stream import VStoreStreamReader
+
+    register_vstore(spark)
+    store = str(tmp_path / "m")
+    vs.commit_overwrite(
+        spark.createDataFrame(
+            [("a", 1, "x1")], "part string, k long, v string"
+        ),
+        store,
+        "part",
+    )
+    vs.rename_column(store, "v", "val")  # v2: {val: v}
+    append = VStoreStreamReader(
+        {"path": store, "version": "2", "skip_change_commits": "true"},
+        spark.readStream.format("vstore").load(store).schema,
+    )
+    cdf_opts = {"read_changes": "true", "key_cols": "part,k"}
+    cdf = VStoreStreamReader(
+        {"path": store, **cdf_opts},
+        spark.readStream.format("vstore").options(**cdf_opts)
+        .load(store).schema,
+    )
+    vs.commit_overwrite(  # v3: the map resets
+        spark.createDataFrame(
+            [("a", 1, "x1"), ("a", 2, "x2")],
+            "part string, k long, val string",
+        ),
+        store,
+        "part",
+    )
+    spark.createDataFrame(  # v4: a new column takes the old physical name
+        [("a", 3, "y3", "new")], "part string, k long, val string, v string"
+    ).write.format("vstore").mode("append").save(store)
+    assert vs._read_manifest_raw(store, 4).get("column_map") is None
+
+    # batch CDF across the break: v2's files lack the new column ``v``
+    got = (
+        spark.read.format("vstore").options(**cdf_opts)
+        .option("from_version", 2).load(store)
+    )
+    want = vs.table_changes(spark, store, 2, 4, ["part", "k"])
+    assert sorted(got.columns) == sorted(want.columns)
+    assert sorted(
+        map(tuple, got.select(*want.columns).collect()), key=repr
+    ) == sorted(map(tuple, want.collect()), key=repr)
+    assert sorted(map(tuple, want.collect()), key=repr) == [
+        ("a", 2, "x2", None, "insert"),
+        ("a", 3, "y3", "new", "insert"),
+    ]
+
+    def rows(reader):
+        parts = reader.partitions({"version": 2}, {"version": 4})
+        batches = [b for p in parts for b in reader.read(p)]
+        return sorted(
+            tuple(sorted(r.items()))
+            for r in pa.Table.from_batches(batches).to_pylist()
+        )
+
+    assert rows(append) == [
+        (("k", 3), ("part", "a"), ("val", "y3"))
+    ]
+    assert rows(cdf) == [
+        (("_change_type", "insert"), ("_commit_version", 3), ("k", 2),
+         ("part", "a"), ("val", "x2")),
+        (("_change_type", "insert"), ("_commit_version", 4), ("k", 3),
+         ("part", "a"), ("val", "y3")),
+    ]
