@@ -48,10 +48,10 @@ and deleted at v3 emits nothing for the window (1, 3], while the
 STREAM (per-version steps) emits both events; pick the surface that
 matches the consumer.
 
-Both modes plan a version step with one helper (``_plan_step``: the
-step's partition columns and removed/added entries) and read every
-file with the batch source's ``_read_file``, through the column map
-``_ReadMaps`` picks for the file's version.
+One planner serves all four change surfaces (both streams, batch CDF,
+``table_changes``/``version_diff``): ``vs._plan_step`` plans a window's
+removed/added entries, and each side reads through the column map
+``vs._ReadMaps`` picks; here every file reads with ``_read_file``.
 
 Schema evolution: the stream's schema is resolved once at query
 start; later widening steps upcast in-flight (safe casts only — an
@@ -290,101 +290,6 @@ class _ReadKernels:
         )
 
 
-class _ReadMaps:
-    """The column map each version's files read through, for a schema
-    resolved at version ``s``. A physical name is a column's identity,
-    so files of every version read through s's map (a file appended
-    before a rename still surfaces the renamed column) — up to a MAP
-    BREAK: a commit that changed the map without renaming or dropping
-    a column (an overwrite resets it, a rollback restores an older
-    one), after which a physical name may hold another column. Files
-    on the far side of a break from ``s`` read through their own
-    version's map and match the schema by LOGICAL name, a name their
-    version lacks reading null — as ``table_changes`` matches a
-    window's two sides. Two cursors walk away from ``s``, so each step
-    is checked once."""
-
-    def __init__(self, store: str, s: int):
-        self.store, self.s = store, s
-        raw = vs._read_manifest_raw(store, s) if s > 0 else {}
-        self.cmap = raw.get("column_map") or {}
-        self.names = [n for n, _ in vs._ddl_pairs(raw.get("columns"))]
-        # breaks in (_down, s] and (s, _up] are known
-        self._down = self._up = s
-        self._break_down: int | None = None  # the latest break <= s
-        self._break_up: int | None = None  # the first break > s
-
-    def _map(self, v: int) -> dict:
-        return vs._read_manifest_raw(self.store, v).get("column_map") or {}
-
-    def _is_break(self, t: int) -> bool:
-        if t < 2:
-            return False
-        raw = vs._read_manifest_raw(self.store, t)
-        return (
-            "renamed" not in raw
-            and "dropped" not in raw
-            and (raw.get("column_map") or {}) != self._map(t - 1)
-        )
-
-    def of(self, u: int) -> dict:
-        if u > self.s:
-            while self._break_up is None and self._up < u:
-                self._up += 1
-                if self._is_break(self._up):
-                    self._break_up = self._up
-            broken = self._break_up is not None and self._break_up <= u
-        else:
-            while self._break_down is None and self._down > u:
-                if self._is_break(self._down):
-                    self._break_down = self._down
-                self._down -= 1
-            broken = self._break_down is not None and self._break_down > u
-        if not broken:
-            return self.cmap
-        raw = vs._read_manifest_raw(self.store, u)
-        own = raw.get("column_map") or {}
-        logical = {n for n, _ in vs._ddl_pairs(raw.get("columns"))}
-        return {
-            n: own.get(n, n) if n in logical else None for n in self.names
-        }
-
-
-def _plan_step(
-    store: str, va: int, vb: int, repartitioned: str, vacuumed: str
-) -> tuple[tuple, list, list]:
-    """``(pcols, removed, added)`` for the version window va → vb: vb's
-    partition columns, and the entries each side holds that the other
-    does not. A single step over a delta-form manifest reads the
-    adds/removes the commit recorded, which ARE the unshared sets —
-    O(churn), no file list resolved (round-10 manifest checkpointing);
-    otherwise both manifests resolve and diff (``_unshared_entries``).
-    va == 0 is the empty pre-history: every vb row is an insert
-    (starting_version=1 / from_version=0 replay the full history).
-    Raises ValueError(``repartitioned``) when the endpoints' partition
-    columns differ and ValueError(``vacuumed``) when a manifest is
-    gone."""
-    try:
-        step = vs._step_delta(store, vb) if vb == va + 1 else None
-        if step is not None:
-            added, removed = step
-            mb = vs._read_manifest_raw(store, vb)
-            ma = vs._read_manifest_raw(store, va) if va > 0 else mb
-        else:
-            mb = vs._read_manifest(store, vb)
-            ma = (
-                vs._read_manifest(store, va)
-                if va > 0
-                else {"partition_col": mb["partition_col"], "files": []}
-            )
-            removed, added = vs._unshared_entries(ma, mb)
-    except FileNotFoundError as exc:
-        raise ValueError(vacuumed) from exc
-    if ma["partition_col"] != mb["partition_col"]:
-        raise ValueError(repartitioned)
-    return tuple(vs._norm_pcols(mb["partition_col"])), removed, added
-
-
 def _step_units(
     store: str,
     va: int,
@@ -392,14 +297,14 @@ def _step_units(
     key_cols,
     commit_version,
     max_rows: int | None = None,
-    maps: _ReadMaps | None = None,
+    maps: vs._ReadMaps | None = None,
 ) -> list[_CDFPartition]:
     """CDF partition units for ONE version window: unshared files
     grouped per storage partition value, sub-bucketed by key hash
     when a side exceeds ``max_rows`` manifest rows (memory bound).
     The removed files read through va's map in ``maps`` (default: for
     vb's schema), the added ones through vb's."""
-    pcols, removed, added = _plan_step(
+    pcols, removed, added = vs._plan_step(
         store,
         va,
         vb,
@@ -410,7 +315,7 @@ def _step_units(
         " version",
     )
     if maps is None:
-        maps = _ReadMaps(store, vb)
+        maps = vs._ReadMaps(store, vb)
     side_maps = (maps.of(va) if removed else {}, maps.of(vb))
     grouped: dict[tuple, tuple[list, list]] = {}
     for side, entries in enumerate((removed, added)):
@@ -523,7 +428,7 @@ class VStoreStreamReader(_ReadKernels, DataSourceStreamReader):
         # was resolved at (schema() pins it as "version"; else the
         # head), up to a map break — see _ReadMaps
         pinned = options.get("version")
-        self._maps = _ReadMaps(
+        self._maps = vs._ReadMaps(
             self.store,
             int(pinned) if pinned is not None
             else vs.current_version(self.store),
@@ -637,7 +542,7 @@ class VStoreStreamReader(_ReadKernels, DataSourceStreamReader):
                     )
                 )
                 continue
-            pcols, removed, added = _plan_step(
+            pcols, removed, added = vs._plan_step(
                 self.store,
                 v - 1,
                 v,

@@ -343,8 +343,8 @@ def _step_delta(store: str, version: int) -> tuple[list, list] | None:
     """(adds, removes) when ``version`` is a delta commit based on
     ``version - 1`` — the exact unshared-file sets vs its predecessor,
     read in O(delta) — else None (snapshot-form manifest, or a delta
-    against a different base). Removes entries carry {file, partition}
-    only; adds are full manifest entries."""
+    against a different base). Removes entries carry {file, partition,
+    n_rows, dv}; adds are full manifest entries."""
     raw = _read_manifest_raw(store, version)
     d = raw.get("delta")
     if d is not None and d["base"] == version - 1:
@@ -1767,8 +1767,13 @@ def _load_entries(
     if ddl:
         # column mapping: request the files' PHYSICAL names, surface
         # the logical ones (renames never rewrite files, so every
-        # file speaks physical)
-        cmap = column_map or {}
+        # file speaks physical); a column mapped to None — the far
+        # side of a map break (``_ReadMaps``) — requests a name no
+        # file holds, so the explicit schema null-fills it
+        cmap = {
+            n: phys or f"__vs_null_{n}"
+            for n, phys in (column_map or {}).items()
+        }
         read_ddl = (
             ", ".join(
                 f"{cmap.get(n, n)} {t}" for n, t in _ddl_pairs(ddl)
@@ -2798,36 +2803,24 @@ def version_diff(
     """
     from engine.operators.versioning import diff_frames
 
-    ma, mb = _read_manifest(store, va), _read_manifest(store, vb)
-    pcol = ma["partition_col"]
-    if not isinstance(pcol, str):
+    pcols, _, added, a_df, b_df = _window_sides(
+        spark, store, va, vb,
+        f"versions v{va}/v{vb} use different partition columns"
+        " ({pa} vs {pb}); diff across a re-partitioning boundary is not"
+        " defined",
+        f"version window v{va}..v{vb} includes a vacuumed (or"
+        " never-committed) version; diff retained versions",
+    )
+    if len(pcols) != 1:
         raise ValueError(
             "version_diff summarizes per single partition column"
             " (corpus-store shape); use table_changes for composite-"
-            f"partitioned stores (partition_col={pcol})"
+            f"partitioned stores (partition_col={list(pcols)})"
         )
-    if mb["partition_col"] != pcol:
-        raise ValueError(
-            f"versions v{va}/v{vb} use different partition columns"
-            f" ({pcol} vs {mb['partition_col']}); diff across a"
-            " re-partitioning boundary is not defined"
-        )
-    shared = {_entry_key(e) for e in ma["files"]} & {
-        _entry_key(e) for e in mb["files"]
-    }
-    a_only = [e for e in ma["files"] if _entry_key(e) not in shared]
-    b_only = [e for e in mb["files"] if _entry_key(e) not in shared]
+    (pcol,) = pcols
     schema = (
         "source string, n_added bigint, n_removed bigint, n_changed bigint,"
         " n_unchanged bigint, tok_delta bigint, diff_h bigint"
-    )
-    a_df = _load_entries(
-        spark, store, a_only, pcol, ma.get("columns"),
-        ma.get("column_map"),
-    )
-    b_df = _load_entries(
-        spark, store, b_only, pcol, mb.get("columns"),
-        mb.get("column_map"),
     )
     if a_df is None and b_df is None:
         d = _local_frame(spark, [], schema)
@@ -2835,22 +2828,21 @@ def version_diff(
         empty = _local_frame(
             spark, [], f"{pcol} string, doc_id long, n_tokens long, h long"
         )
-        cols = ["source", "doc_id", "n_tokens", "h"]
-        a_df = (a_df if a_df is not None else empty).withColumnRenamed(
-            pcol, "source"
-        ).select(*cols)
-        b_df = (b_df if b_df is not None else empty).withColumnRenamed(
-            pcol, "source"
-        ).select(*cols)
-        d = diff_frames(a_df, b_df)
-    # shared entries: all-unchanged, counted from manifest metadata
-    # alone (LIVE rows — a DV'd shared file counts its undeleted rows)
+        d = diff_frames(*(
+            (side if side is not None else empty)
+            .withColumnRenamed(pcol, "source")
+            .select("source", "doc_id", "n_tokens", "h")
+            for side in (a_df, b_df)
+        ))
+    # shared entries — vb's, less the ones only vb holds — are
+    # all-unchanged, counted from manifest metadata alone (LIVE rows:
+    # a DV'd shared file counts its undeleted rows)
+    b_only = {_entry_key(e) for e in added}
     shared_counts: dict[str, int] = {}
-    for e in ma["files"]:
-        if _entry_key(e) in shared:
-            shared_counts[e["partition"]] = (
-                shared_counts.get(e["partition"], 0) + _live_rows(e)
-            )
+    for e in _read_manifest(store, vb)["files"]:
+        if _entry_key(e) not in b_only:
+            p = e["partition"]
+            shared_counts[p] = shared_counts.get(p, 0) + _live_rows(e)
     if not shared_counts:
         return d
     sc = _local_frame(
@@ -2891,6 +2883,130 @@ def _unshared_entries(
     )
 
 
+class _ReadMaps:
+    """The column map each version's files read through, for a schema
+    resolved at version ``s``. A physical name is a column's identity,
+    so files of every version read through s's map (a file appended
+    before a rename still surfaces the renamed column) — up to a MAP
+    BREAK: a commit that changed the map without renaming or dropping
+    a column (an overwrite resets it, a rollback restores an older
+    one), after which a physical name may hold another column. Files
+    on the far side of a break from ``s`` read through their own
+    version's map and match the schema by LOGICAL name, a name their
+    version lacks reading null. Two cursors walk away from ``s``, so
+    each step is checked once."""
+
+    def __init__(self, store: str, s: int):
+        self.store, self.s = store, s
+        raw = _read_manifest_raw(store, s) if s > 0 else {}
+        self.cmap = raw.get("column_map") or {}
+        self.columns = raw.get("columns")
+        self.names = [n for n, _ in _ddl_pairs(self.columns)]
+        # breaks in (_down, s] and (s, _up] are known
+        self._down = self._up = s
+        self._break_down: int | None = None  # the latest break <= s
+        self._break_up: int | None = None  # the first break > s
+
+    def _map(self, v: int) -> dict:
+        return _read_manifest_raw(self.store, v).get("column_map") or {}
+
+    def _is_break(self, t: int) -> bool:
+        if t < 2:
+            return False
+        raw = _read_manifest_raw(self.store, t)
+        return (
+            "renamed" not in raw
+            and "dropped" not in raw
+            and (raw.get("column_map") or {}) != self._map(t - 1)
+        )
+
+    def of(self, u: int) -> dict:
+        if u > self.s:
+            while self._break_up is None and self._up < u:
+                self._up += 1
+                if self._is_break(self._up):
+                    self._break_up = self._up
+            broken = self._break_up is not None and self._break_up <= u
+        else:
+            while self._break_down is None and self._down > u:
+                if self._is_break(self._down):
+                    self._break_down = self._down
+                self._down -= 1
+            broken = self._break_down is not None and self._break_down > u
+        if not broken:
+            return self.cmap
+        raw = _read_manifest_raw(self.store, u)
+        own = raw.get("column_map") or {}
+        logical = {n for n, _ in _ddl_pairs(raw.get("columns"))}
+        return {
+            n: own.get(n, n) if n in logical else None for n in self.names
+        }
+
+
+def _plan_step(
+    store: str, va: int, vb: int, repartitioned: str, vacuumed: str
+) -> tuple[tuple, list, list]:
+    """``(pcols, removed, added)`` for the version window va → vb: vb's
+    partition columns, and the entries each side holds that the other
+    does not. A single step over a delta-form manifest reads the
+    adds/removes the commit recorded, which ARE the unshared sets —
+    O(churn), no file list resolved (round-10 manifest checkpointing);
+    otherwise both manifests resolve and diff (``_unshared_entries``).
+    va == 0 is the empty pre-history: every vb row is an insert
+    (starting_version=1 / from_version=0 replay the full history).
+    Raises ValueError(``repartitioned``, formatted with the endpoints'
+    partition columns as ``{pa}``/``{pb}``) when they differ and
+    ValueError(``vacuumed``) when a manifest is gone."""
+    try:
+        step = _step_delta(store, vb) if vb == va + 1 else None
+        if step is not None:
+            added, removed = step
+            mb = _read_manifest_raw(store, vb)
+            ma = _read_manifest_raw(store, va) if va > 0 else mb
+        else:
+            mb = _read_manifest(store, vb)
+            ma = _read_manifest(store, va) if va > 0 else {**mb, "files": []}
+            removed, added = _unshared_entries(ma, mb)
+    except FileNotFoundError as exc:
+        raise ValueError(vacuumed) from exc
+    pa, pb = ma["partition_col"], mb["partition_col"]
+    if pa != pb:
+        raise ValueError(repartitioned.format(pa=pa, pb=pb))
+    return tuple(_norm_pcols(pb)), removed, added
+
+
+def _window_sides(
+    spark: SparkSession,
+    store: str,
+    va: int,
+    vb: int,
+    repartitioned: str,
+    vacuumed: str,
+) -> tuple[tuple, str | None, list, DataFrame | None, DataFrame | None]:
+    """``(pcols, ddl, added, a_df, b_df)``: vb's partition columns and
+    DDL, the entries only vb holds, and the live rows only va (a_df)
+    and only vb (b_df) hold, None for an empty side — planned by
+    ``_plan_step`` and read through ``_ReadMaps(store, vb)`` as the
+    batch CDF does, so both sides carry vb's names (a-side types stay
+    va's, so a type change shows)."""
+    pcols, removed, added = _plan_step(
+        store, va, vb, repartitioned, vacuumed
+    )
+    maps = _ReadMaps(store, vb)
+    ddl, a_df = maps.columns, None
+    if removed:
+        amap = maps.of(va)
+        ra = _read_manifest_raw(store, va)
+        own = ra.get("column_map") or {}
+        types = {own.get(n, n): t for n, t in _ddl_pairs(ra.get("columns"))}
+        a_ddl = ddl and ", ".join(
+            f"{n} {types.get(amap.get(n, n), t)}" for n, t in _ddl_pairs(ddl)
+        )
+        a_df = _load_entries(spark, store, removed, pcols, a_ddl, amap)
+    b_df = _load_entries(spark, store, added, pcols, ddl, maps.of(vb))
+    return pcols, ddl, added, a_df, b_df
+
+
 def table_changes(
     spark: SparkSession,
     store: str,
@@ -2913,13 +3029,15 @@ def table_changes(
     tests/test_versioning.py::test_table_changes_feed).
 
     Scale shape: only files the versions do NOT share are opened
-    (``_unshared_entries`` — copy-on-write means that is the touched
+    (``_plan_step`` — copy-on-write means that is the touched
     partitions, never the table), then one full-outer join on the key
     over those rows. Key-uniqueness per version (enforced by the
     upsert path) guarantees a key living in a shared file cannot also
     appear in an unshared one, so skipping shared files loses nothing.
-    Additive schema evolution is handled by null-filling columns
-    missing from the older side.
+    Schema evolution: rows come under the window end's names, as in
+    the batch CDF (both sides read through ``_ReadMaps(store, vb)``):
+    a column renamed in the window surfaces once, a dropped one not at
+    all, an added one reads null on the older side.
 
     ``va_timestamp``/``vb_timestamp`` address the endpoints by commit
     time instead (Delta's starting/endingTimestamp): each resolves to
@@ -2937,57 +3055,37 @@ def table_changes(
         raise ValueError(
             "table_changes needs both endpoints (version or timestamp)"
         )
-    ma, mb = _read_manifest(store, va), _read_manifest(store, vb)
-    pcol = ma["partition_col"]
-    if mb["partition_col"] != pcol:
-        # a re-partitioning overwrite landed between the versions:
-        # each side's partition columns restore differently, so the
-        # feed is not defined across the boundary — feed up to the
-        # boundary and from it separately, or diff via full reads
-        raise ValueError(
-            f"versions v{va}/v{vb} use different partition columns"
-            f" ({pcol} vs {mb['partition_col']}); a change feed across"
-            " a re-partitioning boundary is not defined"
-        )
-    missing = [c for c in _norm_pcols(pcol) if c not in key_cols]
+    # across a re-partitioning overwrite each side restores its
+    # partition columns differently: feed up to it and from it instead
+    pcols, ddl, _, a_df, b_df = _window_sides(
+        spark, store, va, vb,
+        f"versions v{va}/v{vb} use different partition columns"
+        " ({pa} vs {pb}); a change feed across a re-partitioning"
+        " boundary is not defined",
+        f"version window v{va}..v{vb} includes a vacuumed (or"
+        " never-committed) version; feed from a retained version",
+    )
+    missing = [c for c in pcols if c not in key_cols]
     if missing:
         raise ValueError(
             f"key_cols {key_cols} must include the partition column(s)"
             f" {missing} (store keys are partition-scoped)"
         )
-    a_only, b_only = _unshared_entries(ma, mb)
-    a_df = _load_entries(
-        spark, store, a_only, pcol, ma.get("columns"),
-        ma.get("column_map"),
-    )
-    b_df = _load_entries(
-        spark, store, b_only, pcol, mb.get("columns"),
-        mb.get("column_map"),
-    )
     if a_df is None and b_df is None:
-        ddl = mb.get("columns") or ma.get("columns")
         if ddl is None:
             raise ValueError(
                 "identical file sets and no recorded schema: cannot"
                 " shape the empty feed (pre-schema-recording store)"
             )
-        pddl = ", ".join(
-            f"{c} string" for c in _norm_pcols(pcol)
-        )
         return _local_frame(
-            spark, [], f"{ddl}, {pddl}, _change_type string"
+            spark, [], f"{_snapshot_ddl(ddl, pcols)}, _change_type string"
         )
     if a_df is None or b_df is None:
-        # One-sided window (round 12, guide §2.4 — remove the shuffle
-        # outright): per-version key-uniqueness means a key in an
-        # unshared file of one side cannot also live in a file shared
-        # by both versions, so an empty a-side proves every b-side row
-        # is an INSERT (and an empty b-side, a DELETE) — the full-outer
-        # join would classify every row that way and filter nothing.
-        # Emit the feed join-free: this is the steady-state shape of an
-        # append-only refresh window (the planner rewrote no files), so
-        # at scale the feed costs one scan of the new files, no
-        # exchange. Values identical to the join path by construction.
+        # One-sided window: per-version key-uniqueness means a key in
+        # an unshared file of one side cannot also live in a shared
+        # file, so every row is an INSERT (or every row a DELETE) — the
+        # full-outer join would filter nothing. Emitted join-free: an
+        # append-only refresh window costs one scan of the new files.
         side, ct = (b_df, "insert") if a_df is None else (a_df, "delete")
         val_cols = [c for c in side.columns if c not in key_cols]
         return side.selectExpr(
@@ -2995,12 +3093,6 @@ def table_changes(
             *[f"`{c}`" for c in val_cols],
             f"'{ct}' AS _change_type",
         )
-    for f in b_df.schema.fields:
-        if f.name not in a_df.columns:
-            a_df = a_df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    for f in a_df.schema.fields:
-        if f.name not in b_df.columns:
-            b_df = b_df.withColumn(f.name, F.lit(None).cast(f.dataType))
     # across a type-widening boundary the two sides read the SAME
     # column at different widths (va's manifest: int, vb's: bigint);
     # align both to the wider type so the image structs compare —

@@ -1043,6 +1043,157 @@ def test_table_changes_feed(spark, tmp_path):
         table_changes(spark, store, v1, v2, ["k"])
 
 
+def _feed_rows(df, cols):
+    return sorted((tuple(r[c] for c in cols) for r in df.collect()), key=repr)
+
+
+def _batch_cdf(spark, store, va, vb, keys):
+    return (
+        spark.read.format("vstore")
+        .option("read_changes", "true")
+        .option("key_cols", ",".join(keys))
+        .option("from_version", va)
+        .option("to_version", vb)
+        .load(store)
+    )
+
+
+def test_table_changes_window_reads_under_the_window_end_names(
+    spark, tmp_path
+):
+    """REGRESSION: a ``table_changes`` window that spans a rename or a
+    drop reads both sides under the window end's names, like the batch
+    CDF. Across ``rename_column v→val`` the column appears once, as
+    ``val``, and the unchanged key of a rewritten file emits nothing;
+    across ``drop_column`` the dropped column is gone and the carried
+    rows of a rewritten file are no updates."""
+    import engine.versioned_store as vs
+    from engine.sources.vstore_datasource import register_vstore
+
+    register_vstore(spark)
+    store = str(tmp_path / "ren")
+    keys = ["part", "k"]
+    vs.commit_overwrite(
+        spark.createDataFrame(
+            [("a", 1, "x1"), ("a", 2, "x2")], "part string, k long, v string"
+        ),
+        store,
+        "part",
+    )
+    spark.createDataFrame(
+        [("b", 3, "x3")], "part string, k long, v string"
+    ).write.format("vstore").mode("append").save(store)
+    vs.rename_column(store, "v", "val")
+    vs.commit_upsert(
+        spark,
+        store,
+        spark.createDataFrame(
+            [("a", 2, "y2")], "part string, k long, val string"
+        ),
+        keys,
+    )
+    got = vs.table_changes(spark, store, 1, 4, keys)
+    assert got.columns == ["part", "k", "val", "_change_type"]
+    want = _batch_cdf(spark, store, 1, 4, keys)
+    assert _feed_rows(got, got.columns) == _feed_rows(want, got.columns) == [
+        ("a", 2, "x2", "update_preimage"),
+        ("a", 2, "y2", "update_postimage"),
+        ("b", 3, "x3", "insert"),
+    ]
+
+    v5 = vs.commit_upsert(  # an additive column in partition b
+        spark,
+        store,
+        spark.createDataFrame(
+            [("b", 4, "x4", "w4")], "part string, k long, val string, w string"
+        ),
+        keys,
+    )
+    vs.drop_column(store, "val")
+    v7 = vs.commit_upsert(  # rewrites b's file: k=3, k=4 carried as-is
+        spark,
+        store,
+        spark.createDataFrame(
+            [("b", 4, "w4"), ("b", 5, "w5")], "part string, k long, w string"
+        ),
+        keys,
+    )
+    got = vs.table_changes(spark, store, v5, v7, keys)
+    assert got.columns == ["part", "k", "w", "_change_type"]
+    want = _batch_cdf(spark, store, v5, v7, keys)
+    assert _feed_rows(got, got.columns) == _feed_rows(want, got.columns) == [
+        ("b", 5, "w5", "insert")
+    ]
+
+
+def test_table_changes_across_a_map_break_and_an_off_ladder_type(
+    spark, tmp_path
+):
+    """An overwrite after a rename RESETS the column map (a map break):
+    ``table_changes`` across it matches files by logical name, as the
+    batch CDF does, and a window from before the rename reads the name
+    its side lacks as null. An overwrite that changes a column's type
+    off the widening ladder makes a window across it raise."""
+    import engine.versioned_store as vs
+    from engine.sources.vstore_datasource import register_vstore
+
+    register_vstore(spark)
+    store = str(tmp_path / "brk")
+    keys = ["part", "k"]
+    vs.commit_overwrite(
+        spark.createDataFrame(
+            [("a", 1, "x1"), ("a", 2, "x2")], "part string, k long, v string"
+        ),
+        store,
+        "part",
+    )
+    vs.rename_column(store, "v", "val")  # v2: {val: v}
+    vs.commit_overwrite(  # v3: the map resets
+        spark.createDataFrame(
+            [("a", 1, "x1"), ("a", 2, "x2"), ("b", 3, "x3")],
+            "part string, k long, val string",
+        ),
+        store,
+        "part",
+    )
+    vs.commit_upsert(
+        spark,
+        store,
+        spark.createDataFrame(
+            [("a", 2, "y2")], "part string, k long, val string"
+        ),
+        keys,
+    )
+    for va in (1, 2, 3):
+        got = vs.table_changes(spark, store, va, 4, keys)
+        assert got.columns == ["part", "k", "val", "_change_type"]
+        want = _batch_cdf(spark, store, va, 4, keys)
+        assert _feed_rows(got, got.columns) == _feed_rows(want, got.columns)
+    assert _feed_rows(
+        vs.table_changes(spark, store, 2, 4, keys),
+        ["part", "k", "val", "_change_type"],
+    ) == [
+        ("a", 2, "x2", "update_preimage"),
+        ("a", 2, "y2", "update_postimage"),
+        ("b", 3, "x3", "insert"),
+    ]
+    assert {
+        r.val for r in vs.table_changes(spark, store, 1, 4, keys).collect()
+        if r._change_type == "update_preimage"
+    } == {None}  # v1 has no logical ``val``: its side reads null
+
+    vs.commit_overwrite(  # v5: val string -> int, off the ladder
+        spark.createDataFrame(
+            [("a", 1, 1), ("a", 2, 2), ("b", 3, 3)],
+            "part string, k long, val int",
+        ),
+        store,
+        "part",
+    )
+    with pytest.raises(ValueError, match="incompatible types"):
+        vs.table_changes(spark, store, 4, 5, keys)
+
+
 def test_string_stats_truncation_rounds_up(spark, tmp_path):
     """Delta's 32-char rule: a recorded string max longer than the
     truncation width must round UP (rightmost incrementable char

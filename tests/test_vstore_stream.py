@@ -716,13 +716,12 @@ def test_one_file_reader_across_batch_cdf_and_stream(spark, tmp_path):
     of the shared file reader: composite partitions, an int→bigint
     widening append, an additive column, a rename and a deletion-vector
     delete. The batch source equals read_version at every version;
-    batch CDF equals table_changes over each step (and, from v0, the
-    head as inserts); an append stream from v1 that skips the DV step
-    yields exactly the rows each append version added, under the
-    head's schema (the pre-rename files through the head's column
-    map). Steps, not one window: table_changes itself reads each side
-    under its own version's names, so a window across the rename is
-    not comparable."""
+    batch CDF equals table_changes over each step, over the whole
+    v1→v5 window and over v3→v5, which spans the rename and the DV
+    delete (and, from v0, the batch CDF is the head as inserts); an
+    append stream from v1 that skips the DV step yields exactly the
+    rows each append version added, under the head's schema (the
+    pre-rename files through the head's column map)."""
     import engine.versioned_store as vs
     from engine.sources.vstore_datasource import register_vstore
 
@@ -784,9 +783,9 @@ def test_one_file_reader_across_batch_cdf_and_stream(spark, tmp_path):
     assert rows(feed(0, 5), cols) == sorted(
         (r + ("insert",) for r in rows(head, head.columns)), key=repr
     )
-    for va in range(1, 5):
-        got = feed(va, va + 1)
-        want = vs.table_changes(spark, store, va, va + 1, keys)
+    for va, vb in [(1, 2), (2, 3), (3, 4), (4, 5), (1, 5), (3, 5)]:
+        got = feed(va, vb)
+        want = vs.table_changes(spark, store, va, vb, keys)
         assert sorted(got.columns) == sorted(want.columns)
         assert rows(got, want.columns) == rows(want, want.columns)
 
